@@ -4,10 +4,12 @@ properties, persistence round-trip (SURVEY §5 strategy)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from vers_spark.functions import vector as V
 from vers_spark.indexes.ivfflat import IVFFlatIndex
-from vers_spark.operators.knn import exact_knn
+from vers_spark.operators.knn import _ranked, exact_knn
 from vers_spark.sources.tables import load_table
 
 
@@ -42,28 +44,57 @@ def test_search_probe_all_equals_exact(spark, emb, index):
     assert gk == wk
 
 
-def test_search_blocked_matches_declarative(spark, emb, index):
-    """The blocked-BLAS path (scale serving) must reproduce the declarative
-    search exactly: same probe set (driver-side fill rule twin), same ids,
-    ranks, and — via the fold rescore — bit-identical distances."""
+def _declarative_search(index, queries, k, n_probes):
+    """The IVF probe plan written declaratively — window-ranked centroids by
+    the fold distance, the fill rule as a cumulative size sum, candidates
+    scored by the fold expression, ranked by (distance, id) — the spec the
+    one-pass search must reproduce bit for bit."""
+    sizes = index.assignments.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("c_size"))
+    cents = index.centroids.join(sizes, "cluster_id", "left").fillna(0)
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+    c_rank = F.row_number().over(
+        W.partitionBy("query_id").orderBy(
+            F.asc(V.sq_euclidean(F.col("q_vec"), F.col("centroid"))), F.asc("cluster_id")
+        )
+    )
+    wcum = W.partitionBy("query_id").orderBy("c_rank").rowsBetween(W.unboundedPreceding, -1)
+    probes = (
+        q.crossJoin(cents)
+        .withColumn("c_rank", c_rank)
+        .withColumn("cum_before", F.coalesce(F.sum("c_size").over(wcum), F.lit(0)))
+        .filter((F.col("c_rank") <= n_probes) | (F.col("cum_before") < k))
+    )
+    cands = (
+        probes.select("query_id", "q_vec", "cluster_id")
+        .join(index.assignments, "cluster_id")
+        .withColumn("_dist", V.sq_euclidean(F.col("q_vec"), F.col("embedding")))
+        .withColumnRenamed("id", "neighbour_id")
+    )
+    return _ranked(cands, "_dist", k)
+
+
+def test_search_matches_declarative(spark, emb, index):
+    """The one-pass search (driver-side probe rule, fold scored inside the
+    Arrow kernel) must reproduce the declarative plan exactly: same probe
+    set, same ids, ranks, and bit-identical distances."""
     q = emb.filter(F.col("vec_id") < 12)
     for n_probes in (1, 3, 16):
-        got = index.search_blocked(q, k=10, n_probes=n_probes).collect()
-        want = index.search(q, k=10, n_probes=n_probes).collect()
+        got = index.search(q, k=10, n_probes=n_probes).collect()
+        want = _declarative_search(index, q, k=10, n_probes=n_probes).collect()
         gk = {(r["query_id"], r["rank"]): (r["neighbour_id"], r["distance"]) for r in got}
         wk = {(r["query_id"], r["rank"]): (r["neighbour_id"], r["distance"]) for r in want}
         assert gk == wk, f"n_probes={n_probes}"
 
 
-def test_search_blocked_fill_rule_when_k_exceeds_probes(spark, emb, index):
+def test_search_fill_rule_when_k_exceeds_probes(spark, emb, index):
     """k larger than any single posting list forces the driver-side fill
     rule to expand the probe set exactly like the declarative cumsum (and
     with k > corpus/2 it must expand well past n_probes=1)."""
     q = emb.filter(F.col("vec_id") < 3)
     n = emb.count()
     k = n // 2
-    got = index.search_blocked(q, k=k, n_probes=1).collect()
-    want = index.search(q, k=k, n_probes=1).collect()
+    got = index.search(q, k=k, n_probes=1).collect()
+    want = _declarative_search(index, q, k=k, n_probes=1).collect()
     gk = {(r["query_id"], r["rank"]): (r["neighbour_id"], r["distance"]) for r in got}
     wk = {(r["query_id"], r["rank"]): (r["neighbour_id"], r["distance"]) for r in want}
     assert gk == wk
@@ -73,13 +104,13 @@ def test_search_blocked_fill_rule_when_k_exceeds_probes(spark, emb, index):
     assert set(per_q.values()) == {k}
 
 
-def test_search_blocked_tie_break_at_boundary(spark):
+def test_search_tie_break_at_boundary(spark):
     """Duplicate vectors: every corpus row ties at distance 0, so the
     per-batch truncation boundary falls INSIDE the tied group. The composite
-    (distance, id) key must decide who survives — argpartition on distance
+    (distance, id) key must decide who survives — a truncation on distance
     alone could keep whichever tying rows the batch happened to order first
     (corpus built descending-id to expose exactly that). Bit-exact parity
-    with the declarative search is the contract."""
+    with the declarative plan is the contract."""
     n = 300
     vec = [1.0] * 8
     corpus = spark.createDataFrame(
@@ -87,8 +118,8 @@ def test_search_blocked_tie_break_at_boundary(spark):
     ).coalesce(1)
     idx = IVFFlatIndex.build(corpus, num_clusters=2, max_iterations=2, seed=3)
     q = spark.createDataFrame([(0, vec)], "vec_id long, embedding array<float>")
-    got = idx.search_blocked(q, k=10, n_probes=1).collect()
-    want = idx.search(q, k=10, n_probes=1).collect()
+    got = idx.search(q, k=10, n_probes=1).collect()
+    want = _declarative_search(idx, q, k=10, n_probes=1).collect()
     gk = {(r["query_id"], r["rank"]): (r["neighbour_id"], r["distance"]) for r in got}
     wk = {(r["query_id"], r["rank"]): (r["neighbour_id"], r["distance"]) for r in want}
     assert gk == wk

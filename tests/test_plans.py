@@ -53,10 +53,61 @@ def test_exact_knn_broadcasts_queries(spark, sf_dir):
     assert not audit.has_sort_merge_join(df)
 
 
+def test_exact_knn_unhinted_above_broadcast_cap(spark, sf_dir, monkeypatch):
+    """Above the query-count cap exact_knn must not force a broadcast of a
+    caller-supplied frame: the hint is gone from the logical plan (the
+    planner may still choose a broadcast from its own size estimate), and
+    the result is unchanged."""
+    import vers_spark.operators.knn as K
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 5)
+
+    def hinted(df):
+        return "ResolvedHint (strategy=broadcast)" in df._jdf.queryExecution().logical().toString()
+
+    under = exact_knn(q, emb, k=10)
+    assert hinted(under)
+    monkeypatch.setattr(K, "_BROADCAST_QUERY_CAP", 4)
+    over = exact_knn(q, emb, k=10)
+    assert not hinted(over)
+    assert sorted(map(tuple, over.collect())) == sorted(map(tuple, under.collect()))
+
+
+def test_blocked_knn_and_ivf_search_job_counts(spark, sf_dir, tmp_path):
+    """Serving an 8-query batch starts at most 4 Spark jobs, for
+    exact_knn_blocked and for a search on a file-loaded IVF index (its
+    per-instance centroid and size caches warm, as in steady serving): the
+    bounded query collect, then one Arrow pass and its ranking window."""
+    from vers_spark.indexes.ivfflat import IVFFlatIndex
+    from vers_spark.operators.knn import exact_knn_blocked
+
+    sc = spark.sparkContext
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 8)
+    IVFFlatIndex.build(emb, num_clusters=8, seed=1).save(str(tmp_path / "ivf"))
+    loaded = IVFFlatIndex.load(spark, str(tmp_path / "ivf"))
+    loaded.search(q, k=10, n_probes=2).collect()  # warms the per-instance caches
+
+    def jobs(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            call().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("test_jobs_exact_blocked", lambda: exact_knn_blocked(q, emb, k=10)) <= 4
+    assert jobs("test_jobs_ivf_search", lambda: loaded.search(q, k=10, n_probes=2)) <= 4
+
+
 def test_ivf_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
-    """A search against the SAVED index must hit the cluster_id-partitioned
-    posting lists with dynamic partition pruning — the Spark analogue of
-    scanning only the probed posting lists (ivfflat.rs:166-195)."""
+    """A search against the SAVED index must read only the probed
+    cluster_id partitions of the posting lists — the Spark analogue of
+    scanning only the probed posting lists (ivfflat.rs:166-195). The probe
+    set is resolved on the driver, so the pruning is static: a literal
+    ``cluster_id IN (…)`` partition filter on the scan."""
     from vers_spark.indexes.ivfflat import IVFFlatIndex
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -66,14 +117,14 @@ def test_ivf_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
     res = loaded.search(emb.filter(F.col("vec_id") < 3), k=5, n_probes=2)
     a_rows = res.collect()  # collect FIRST: metrics live on this plan
     plan = audit.executed_plan(res)
-    assert "dynamicpruning" in plan  # probe list prunes posting-list files
+    # the probe list prunes posting-list directories at planning time
+    part_filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert any(re.search(r"cluster_id#\d+ IN \(", f) for f in part_filters), part_filters
     # runtime metrics, not just the plan string (BASELINE §r12): the
     # posting-list scan must read ≤ the probed-cluster union (≤ 3 queries
     # × 2 probes = 6 of 8 partitions) — cluster_id is a single partition
-    # column, so per-column DPP is exact here
-    # the token also matches the (unpartitioned) centroids scan, which has
-    # no numPartitions metric — the partitioned posting-list scan is the
-    # one that must show pruning
+    # column, so the partition filter is exact here; only a partitioned
+    # scan reports numPartitions, and it is the one that must show pruning
     scans = [
         s
         for s in audit.scan_runtime_metrics(res, "cluster_id#")

@@ -38,3 +38,19 @@ def test_result_neutral(spark):
         cpu_spread(df).groupBy("k").agg(F.sum("id").alias("s")).orderBy("k").collect()
     )
     assert plain == spread
+
+
+def test_unreadable_parallelism_returns_input_unchanged(spark, monkeypatch):
+    """When the gate cannot read the frame's parallelism it must not fall
+    back to a repartition — that would shuffle an input of unknown size."""
+    from vers_spark.plans import audit
+
+    df = spark.range(100).coalesce(1)
+
+    def unreadable(self):
+        raise RuntimeError("parallelism unavailable")
+
+    monkeypatch.setattr(type(df), "rdd", property(unreadable))
+    out = cpu_spread(df)
+    assert out is df
+    assert "Exchange" not in audit.executed_plan(out)

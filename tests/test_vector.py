@@ -268,3 +268,65 @@ def test_dedup_vectors_bitexact_distinguishes_signed_zero(spark):
     )
     assert loose == [1, 3]
     assert strict == [1, 2, 3]
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+def test_fold_distances_bit_equal_to_expression_kernels(spark, dtype):
+    """vector_np.fold_distances is the declarative fold computed in numpy:
+    equal with ``==`` (and in the sign of zero), never approximately, for
+    every metric — aligned rows and one query broadcast over the rows. The
+    last row's products are all -0.0, where a fold that skipped the 0.0
+    initial accumulator would return the wrong signed zero for ``dot``."""
+    from pyspark.sql import functions as F
+
+    from vers_spark.functions import vector_np as VN
+
+    rng = np.random.default_rng(7)
+    d = 24
+    A = (rng.standard_normal((40, d)) * rng.choice([1e-3, 1.0, 1e3], (40, 1))).astype(dtype)
+    B = rng.standard_normal((40, d)).astype(dtype)
+    A[-1], B[-1] = -0.0, 1.0
+    elem = "float" if dtype == np.float32 else "double"
+    df = spark.createDataFrame(
+        [(i, A[i].tolist(), B[i].tolist()) for i in range(len(A))],
+        f"id int, a array<{elem}>, b array<{elem}>",
+    )
+    for metric, fn in V.DISTANCE_FNS.items():
+        # the last row's a is the zero vector, which has no cosine
+        n = len(A) - 1 if metric == "cosine" else len(A)
+        a, b = A[:n], B[:n]
+        rows = (
+            df.filter(F.col("id") < n)
+            .select("id", fn(F.col("a"), F.col("b")).alias("d"))
+            .orderBy("id")
+            .collect()
+        )
+        want = np.array([r["d"] for r in rows])
+        got = VN.fold_distances(a, b, metric)
+        assert got.tolist() == want.tolist(), metric
+        assert np.signbit(got).tolist() == np.signbit(want).tolist(), metric
+        one = VN.fold_distances(a[0], b, metric)  # one query against every row
+        want_one = (
+            spark.createDataFrame([(r.tolist(),) for r in b], f"b array<{elem}>")
+            .select(fn(F.lit(a[0].tolist()).cast(f"array<{elem}>"), F.col("b")).alias("d"))
+            .collect()
+        )
+        assert one.tolist() == [r["d"] for r in want_one], metric
+
+
+def test_fold_distances_cosine_zero_vector_raises_like_the_expression(spark):
+    """A zero vector has no cosine: the expression raises DIVIDE_BY_ZERO
+    under the session's ANSI mode, and the numpy twin raises too instead of
+    inventing a distance."""
+    from pyspark.sql import functions as F
+
+    from vers_spark.functions import vector_np as VN
+
+    zero, other = [0.0, 0.0, 0.0], [1.0, -2.0, 0.5]
+    df = spark.createDataFrame([(zero, other)], "a array<double>, b array<double>")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        df.select(V.cosine_distance(F.col("a"), F.col("b"))).collect()
+    with pytest.raises(ZeroDivisionError):
+        VN.fold_distances(np.array(zero), np.array([other]), "cosine")
+    with pytest.raises(ZeroDivisionError):
+        VN.fold_distances(np.array(other), np.array([zero]), "cosine")

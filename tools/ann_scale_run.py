@@ -150,11 +150,9 @@ def main() -> None:
         ivf.assignments.count()  # materialize the build
         out["ivf_build_sec"] = round(time.perf_counter() - t0, 1)
         t0 = time.perf_counter()
-        # blocked-BLAS serving path (parity-gated vs the declarative search
-        # in tests/test_ivfflat.py): the declarative 300-dim fold measured
-        # 4.5-6 s/query at this scale; the GEMM path is the one a deployment
-        # would run
-        res = ivf.search_blocked(queries, k=10, n_probes=4)
+        # one-Arrow-pass serving path (parity-gated vs the declarative plan
+        # in tests/test_ivfflat.py)
+        res = ivf.search(queries, k=10, n_probes=4)
         out["ivf_recall_at_10"] = recall(res)
         out["ivf_search_batch_sec"] = round(time.perf_counter() - t0, 1)
         out["ivf_search_per_query_ms"] = round(
@@ -163,7 +161,7 @@ def main() -> None:
         # warm repeat = the serving number: posting sizes cached on the
         # index, OS page cache hot — what a resident index actually costs
         t0 = time.perf_counter()
-        ivf.search_blocked(queries, k=10, n_probes=4).select(
+        ivf.search(queries, k=10, n_probes=4).select(
             F.count(F.lit(1))
         ).collect()
         out["ivf_search_warm_sec"] = round(time.perf_counter() - t0, 1)

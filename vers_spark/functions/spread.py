@@ -26,12 +26,18 @@ def cpu_spread(df: DataFrame) -> DataFrame:
     current RDD parallelism is below it; identity otherwise. Result-neutral
     for any deterministic DataFrame program (round-robin repartition is
     sort-guarded by ``spark.sql.execution.sortBeforeRepartition``, on by
-    default, so retried tasks reproduce the same placement)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    default, so retried tasks reproduce the same placement).
+
+    The gate reads ``df.rdd``, which plans the frame physically. Under AQE
+    that finalizes the adaptive plan: a frame that already contains a
+    shuffle has its shuffle stages run by the probe, as jobs of their own,
+    and the later action plans the frame again. A frame whose parallelism
+    cannot be read is returned unchanged — the spread is an optimization,
+    and an unconditional repartition of an input of unknown size could be
+    a full extra shuffle."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        if df.rdd.getNumPartitions() >= target:
-            return df
+        n = df.rdd.getNumPartitions()
     except Exception:
-        pass
-    return df.repartition(target)
+        return df
+    return df if n >= target else df.repartition(target)

@@ -545,7 +545,7 @@ class HNSWIndex:
             cluster_sizes = None
             if boundary_eps > 0 and num_shards >= 2:
                 # top-2 assignment via one GEMM per Arrow batch (the
-                # search_blocked pattern): primary rows + boundary replicas
+                # blocked-kernel pattern): primary rows + boundary replicas
                 assignments = _assign_top2(
                     data, np.array(cent_rows, dtype=np.float64), float(boundary_eps)
                 ).localCheckpoint(eager=False)

@@ -22,13 +22,13 @@ Build: Lloyd's k-means. Two backends:
 Multi-restart (`num_attempts`, `ivfflat.rs:102-136`): independent seeded runs,
 keep argmin inertia.
 
-Search (`ivfflat.rs:153-198`): rank centroids per query (broadcast), take the
+Search (`ivfflat.rs:153-198`): rank centroids per query, take the
 ``n_probes`` nearest clusters PLUS the reference's underflow fill rule —
 expand to further clusters only until the cumulative posting-list size reaches
-k — expressed declaratively as a cumulative sum over ranked cluster sizes, so
-the whole query batch resolves in one plan (no driver loop). Candidates are
-fetched by cluster-id filter (partition-pruned), exact-ranked by the f64
-expression kernels, per-query top-k.
+k — on the driver over the (k-row) centroid table for the collected query
+batch. Candidates are fetched by a literal cluster-id filter (partition-pruned
+on a saved store) and scored in one Arrow pass with the numpy twin of the f64
+fold kernels, per-query top-k.
 
 The reference's ``add`` ignores the caller's vec_id (`ivfflat.rs:200-213`
 shadowing bug) — ours honors it.
@@ -60,14 +60,6 @@ _LOCAL_KMEANS_MAX_ROWS = 1_000_000
 # representative subset — same discipline as pca.py's sample-fit). ~100k x
 # dim 300 f64 ≈ 240 MB, a bounded driver footprint at any corpus scale.
 _LOCAL_KMEANS_SAMPLE_ROWS = 100_000
-
-# Broadcast-hint cap for search()'s probe/query-vector joins, in queries per
-# batch — the (query_id, cluster_id) probe side and the dim-wide q_vec side
-# are broadcast below it (the shape that keeps dynamic partition pruning on
-# the cluster_id-partitioned saved posting lists), plain shuffle joins
-# above it. Same rationale and value as lsh._BROADCAST_QUERY_CAP.
-_BROADCAST_QUERY_CAP = 65536
-
 
 def _kmeans_numpy(X: np.ndarray, k: int, max_iter: int, seed: int):
     """Driver-local Lloyd mirroring reference semantics (ivfflat.rs:73-100):
@@ -138,6 +130,14 @@ def _assign_partial_sums(centroids: np.ndarray):
     return fn
 
 
+def _posting_sizes(assignments: DataFrame) -> dict[int, int]:
+    """cluster_id → posting-list length, one aggregate collected."""
+    return {
+        r["cluster_id"]: r["n"]
+        for r in assignments.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+
+
 @dataclass
 class IVFFlatIndex:
     spark: SparkSession
@@ -150,8 +150,8 @@ class IVFFlatIndex:
 
         A freshly built index's ``assignments`` is lineage through the
         cluster-assignment UDF — left lazy, every search re-assigns the whole
-        corpus (at 1M×300 that's a ~10 s GEMM+Arrow pass, and the cold
-        blocked search paid it three times: sizes, candidates, rescore). The
+        corpus (at 1M×300 that's a ~10 s GEMM+Arrow pass, and a cold search
+        reads it twice: sizes, candidates). The
         first search localCheckpoints it, so the assign pass runs ONCE — the
         Spark analogue of the reference holding posting lists in RAM
         (ivfflat.rs:8-15). A file-loaded index skips this: its assignments
@@ -172,13 +172,7 @@ class IVFFlatIndex:
         ``add`` by constructing a fresh index instance."""
         cached = self.params.get("_sizes_cache")
         if cached is None:
-            cached = {
-                r["cluster_id"]: r["n"]
-                for r in self._serving_assignments()
-                .groupBy("cluster_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            cached = _posting_sizes(self._serving_assignments())
             self.params["_sizes_cache"] = cached
         return cached
 
@@ -245,7 +239,7 @@ class IVFFlatIndex:
             # cpu_spread the ASSIGNMENT input only (r15): a single-split
             # corpus otherwise leaves the assignment — and, through the
             # localCheckpoint in _serving_assignments, every downstream
-            # serving GEMM (search_blocked / range_join_blocked) — running
+            # serving Arrow pass (search / range_join_blocked) — running
             # in ONE Python task (profiled 1.18 s single-task stage in
             # ivf_range_search at sf0.1). The TRAIN sample collect above
             # must NOT be spread: _kmeans_numpy's result depends on the
@@ -338,6 +332,20 @@ class IVFFlatIndex:
 
     # ---------------- search ----------------
 
+    def _centroid_matrix(self) -> tuple[np.ndarray, np.ndarray]:
+        """(cluster ids, centroid matrix) in cluster_id order — collected
+        once per index instance (k rows; invalidated with the instance,
+        like ``_cluster_sizes``)."""
+        cached = self.params.get("_cents_cache")
+        if cached is None:
+            rows = self.centroids.orderBy("cluster_id").collect()
+            cached = (
+                np.array([r["cluster_id"] for r in rows], dtype=np.int64),
+                np.array([r["centroid"] for r in rows], dtype=np.float64),
+            )
+            self.params["_cents_cache"] = cached
+        return cached
+
     def search(
         self,
         queries: DataFrame,
@@ -349,95 +357,99 @@ class IVFFlatIndex:
     ) -> DataFrame:
         """ANN search. Probes the ``n_probes`` nearest clusters per query and
         always applies the reference's fill rule (expand to further clusters
-        while cumulative candidate count < k, ivfflat.rs:166-195).
+        while cumulative candidate count < k, ivfflat.rs:166-195). Returns
+        (query_id, neighbour_id, distance, rank), ties by ascending id.
+
+        Bounded-batch contract: the query batch is collected to the driver
+        (at most ``validate.MAX_QUERY_BATCH_ROWS`` rows, ``QueryBatchTooLarge``
+        above) and broadcast; query ids must be integral. One path serves
+        in-session and file-loaded indexes in one Arrow pass:
+
+        - the driver ranks the cached centroid table per query by the fold
+          distance (cluster_id breaks ties) and applies the fill rule on
+          the cached posting-list sizes — the included set is a rank prefix;
+        - the posting lists are filtered with a literal ``cluster_id IN``
+          over the union of probed clusters, which on a saved
+          ``partitionBy(cluster_id)`` store is static partition pruning;
+        - one ``mapInPandas`` scores each probed member against the queries
+          probing its cluster with ``vector_np.fold_distances`` (bit-equal
+          to the declarative kernel) and emits each query's per-batch
+          (distance, id) top-k; a ranking window takes the global top-k.
+
+        Same fold, order and fill rule as the declarative plan, so probing
+        every cluster equals :func:`~vers_spark.operators.knn.exact_knn`
+        bit for bit.
 
         ``candidate_ids`` (a DataFrame with an ``id`` column) is metadata-
         filtered search — the capability the reference lacks entirely: the
         posting lists are semi-joined down to the allowed ids BEFORE ranking,
-        so cluster sizes, the fill rule, and top-k all operate on the
-        filtered corpus (≡ searching an index built on the filtered subset);
-        the predicate prunes candidate I/O instead of post-filtering
-        results."""
+        so cluster sizes (one aggregate), the fill rule, and top-k all
+        operate on the filtered corpus (≡ searching an index built on the
+        filtered subset); the predicate prunes candidate I/O instead of
+        post-filtering results."""
+        from vers_spark.functions import vector_np as VN
+        from vers_spark.operators.knn import RESULT_SCHEMA, _query_block, _ranked
+
+        block = _query_block(queries, query_id, query_vec, "ivf_search")
+        if block is None:
+            return self.spark.createDataFrame([], RESULT_SCHEMA)
+        q_ids, q_mat = block
+
         assignments = self._serving_assignments()
         if candidate_ids is not None:
             assignments = assignments.join(
                 candidate_ids.select(F.col("id").cast("long").alias("id")), "id", "left_semi"
             )
-        q = queries.select(F.col(query_id).alias("query_id"), F.col(query_vec).alias("q_vec"))
-        if self.params.get("_source") == "files":
-            # The file-loaded branch below sizes its broadcast decision with
-            # a count() and then joins q twice (ranking + candidate join);
-            # checkpoint lazily so the sizing count MATERIALIZES a plan the
-            # later joins reuse instead of re-executing the query source per
-            # consumer (mirrors lsh.search_multiprobe's checkpointed qp).
-            q = q.localCheckpoint(eager=False)
-        if candidate_ids is not None:
-            # filtered search: the fill rule must see FILTERED posting sizes
-            sizes = assignments.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("c_size"))
+            # the fill rule must see FILTERED posting sizes
+            sizes = _posting_sizes(assignments)
         else:
-            sizes = self.spark.createDataFrame(
-                [(int(c), int(n)) for c, n in self._cluster_sizes().items()],
-                "cluster_id int, c_size long",
-            )
-        cents = F.broadcast(self.centroids.join(F.broadcast(sizes), "cluster_id", "left").fillna(0))
+            sizes = self._cluster_sizes()
+        c_ids, c_mat = self._centroid_matrix()
+        # fill rule: keep the cluster at rank r iff r <= n_probes OR the
+        # better-ranked clusters hold < k members; cum_before only grows,
+        # so the kept set is a rank prefix — stop at the first exclusion
+        probe_map: dict[int, list[int]] = {}  # cluster_id → probing query rows
+        for qi in range(len(q_ids)):
+            order = np.lexsort((c_ids, VN.fold_distances(q_mat[qi], c_mat, "sq_euclidean")))
+            cum_before = 0
+            for rank0, ci in enumerate(order):
+                if rank0 >= n_probes and cum_before >= k:
+                    break
+                cid = int(c_ids[ci])
+                probe_map.setdefault(cid, []).append(qi)
+                cum_before += sizes.get(cid, 0)
 
-        ranked = q.crossJoin(cents).withColumn(
-            "c_rank",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(
-                    F.asc(V.sq_euclidean(F.col("q_vec"), F.col("centroid"))), F.asc("cluster_id")
-                )
-            ),
-        )
-        # fill rule: keep cluster at rank r iff rank <= n_probes OR the
-        # cumulative size of better-ranked clusters is still < k
-        wcum = W.partitionBy("query_id").orderBy("c_rank").rowsBetween(W.unboundedPreceding, -1)
-        probes = ranked.withColumn("cum_before", F.coalesce(F.sum("c_size").over(wcum), F.lit(0))).filter(
-            (F.col("c_rank") <= n_probes) | (F.col("cum_before") < k)
-        )
+        bc = self.spark.sparkContext.broadcast((q_ids, q_mat, probe_map, k))
 
-        if self.params.get("_source") == "files":
-            # File-loaded store — join shape mirrors LSH's probe join
-            # (BASELINE §r12/§r13): the NARROW probe side —
-            # (query_id, cluster_id), no vectors — is broadcast into the
-            # posting lists, so the cluster_id-partitioned scan is the
-            # STREAM side and dynamic partition pruning reads only the
-            # probed clusters (measured-gated in test_plans). Left to its
-            # own stats Spark picks the posting lists as build side
-            # whenever the store looks small, which flips the DPP subquery
-            # into a no-op and scans every partition. The dim-wide q_vec
-            # joins AFTER candidate selection, and both hints drop for
-            # corpus-sized query batches (Spark's broadcast hard limits;
-            # same cap rationale as lsh._BROADCAST_QUERY_CAP).
-            n_queries = q.count()
-            bcast = (
-                F.broadcast if n_queries <= _BROADCAST_QUERY_CAP else (lambda df: df)
-            )
-            cands = (
-                bcast(probes.select("query_id", "cluster_id"))
-                .join(assignments, "cluster_id")
-                .join(bcast(q), ["query_id"])
-            )
-        else:
-            # in-session index: the checkpointed assignments carry no
-            # partition column, so there is nothing to prune — keep the
-            # single-join shape and skip the sizing count
-            cands = probes.select("query_id", "q_vec", "cluster_id").join(
-                assignments, "cluster_id"
-            )
-        dist = V.sq_euclidean(F.col("q_vec"), F.col("embedding"))
-        w = W.partitionBy("query_id").orderBy(F.asc("_dist"), F.asc("id"))
-        return (
-            cands.withColumn("_dist", dist)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select(
-                "query_id",
-                F.col("id").alias("neighbour_id"),
-                F.col("_dist").alias("distance"),
-                F.col("rn").alias("rank"),
-            )
+        def member_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            ids, mat, pmap, kk = bc.value
+            for pdf in batches:
+                out = []
+                for cid, grp in pdf.groupby("cluster_id"):
+                    b_ids = grp["id"].to_numpy(dtype=np.int64)
+                    b_mat = np.array(grp["embedding"].tolist(), dtype=np.float64)
+                    for qi in pmap.get(int(cid), ()):
+                        dist = VN.fold_distances(mat[qi], b_mat, "sq_euclidean")
+                        sel = np.lexsort((b_ids, dist))[:kk]
+                        out.append(
+                            pd.DataFrame(
+                                {
+                                    "query_id": np.full(len(sel), ids[qi]),
+                                    "neighbour_id": b_ids[sel],
+                                    "_dist": dist[sel],
+                                }
+                            )
+                        )
+                if out:
+                    yield pd.concat(out, ignore_index=True)
+
+        members = assignments.filter(F.col("cluster_id").isin(sorted(probe_map))).select(
+            "id", "cluster_id", "embedding"
         )
+        candidates = members.mapInPandas(
+            member_topk, "query_id long, neighbour_id long, _dist double"
+        )
+        return _ranked(candidates, "_dist", k)
 
     def range_search(
         self,
@@ -587,141 +599,6 @@ class IVFFlatIndex:
             .filter(F.col("distance") <= F.lit(float(r2)))
             .select("query_id", "neighbour_id", "distance")
         )
-
-    def search_blocked(
-        self,
-        queries: DataFrame,
-        k: int,
-        n_probes: int = 1,
-        query_id: str = "vec_id",
-        query_vec: str = "embedding",
-        rescore: bool = True,
-        margin: int = 2,
-    ) -> DataFrame:
-        """Blocked-BLAS IVF search — the scale path for small query batches
-        over large corpora (same dual as exact_knn vs exact_knn_blocked,
-        operators/knn.py): semantics identical to :meth:`search` (n_probes
-        nearest clusters + the ivfflat.rs:166-195 underflow fill rule, global
-        per-query top-k, ties by ascending id), but the per-candidate
-        distance is a numpy GEMM per Arrow batch instead of the declarative
-        300-element fold — at 1M x 300 the fold measured ~4.5-6 s/query while
-        the exact blocked scan of the FULL corpus runs 100 queries in ~13 s.
-
-        Physical shape: centroid ranking + fill rule resolve driver-side on
-        the collected (k-row) centroid table; the posting lists are filtered
-        to the union of probed clusters (partition-pruned when loaded from
-        the partitionBy(cluster_id) layout), scanned once via mapInPandas
-        emitting only per-(batch, query) partial top-k rows; final top-k is
-        a window over O(batches x Q x k) candidate rows. Nothing shuffles
-        except candidates.
-
-        ``rescore=True`` recomputes the widened margin*k pool with the
-        declarative f64 fold so the k/k+1 boundary matches :meth:`search`
-        bit-exactly (same contract as exact_knn_blocked's rescore).
-        """
-        import pandas as pd
-
-        from vers_spark.functions import vector_np as VN
-        from vers_spark.functions.validate import bounded_collect
-        from vers_spark.operators.knn import _ranked
-
-        spark = self.spark
-        q_rows = bounded_collect(queries.select(query_id, query_vec), "ivf_search_blocked")
-        if not q_rows:
-            return spark.createDataFrame(
-                [], "query_id long, neighbour_id long, distance double, rank int"
-            )
-        q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-        q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-
-        cent_rows = self.centroids.orderBy("cluster_id").collect()
-        c_ids = np.array([r["cluster_id"] for r in cent_rows], dtype=np.int64)
-        c_mat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-        sizes = self._cluster_sizes()
-        # rank clusters per query (distance asc, cluster_id asc) and apply the
-        # fill rule: the included set is a rank-prefix (cum_before only grows),
-        # so iterate in rank order and stop at the first exclusion
-        d = VN.pairwise_distances(q_mat, c_mat, "sq_euclidean")  # (Q, C)
-        probe_map: dict[int, list[int]] = {}
-        for qi in range(len(q_ids)):
-            order = np.lexsort((c_ids, d[qi]))
-            cum_before = 0
-            for rank0, ci in enumerate(order):
-                if rank0 >= n_probes and cum_before >= k:
-                    break
-                cid = int(c_ids[ci])
-                probe_map.setdefault(cid, []).append(qi)
-                cum_before += sizes.get(cid, 0)
-
-        eff_k = k * max(1, margin) if rescore else k
-        bc = spark.sparkContext.broadcast((q_ids, q_mat, probe_map, eff_k))
-        probed = sorted(probe_map)
-        cands_src = self._serving_assignments().filter(F.col("cluster_id").isin(probed))
-
-        def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ids, mat, pmap, kk = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                out = []
-                for cid, grp in pdf.groupby("cluster_id"):
-                    qis = pmap.get(int(cid))
-                    if not qis:
-                        continue
-                    b_ids = grp["id"].to_numpy(dtype=np.int64)
-                    b_mat = np.array(grp["embedding"].tolist(), dtype=np.float64)
-                    dd = VN.pairwise_distances(mat[qis], b_mat, "sq_euclidean")
-                    take = min(kk, dd.shape[1])
-                    if take < dd.shape[1]:
-                        part = np.argpartition(dd, take - 1, axis=1)[:, :take]
-                    else:
-                        part = np.tile(np.arange(dd.shape[1]), (dd.shape[0], 1))
-                    for row, qi in enumerate(qis):
-                        cols = part[row]
-                        # argpartition selected by distance alone; ties at the
-                        # take-boundary could drop a smaller-id neighbour and
-                        # break the bit-exact parity with search(). Re-admit
-                        # every candidate tying the boundary distance, then
-                        # truncate on the composite (distance, id) key.
-                        thr = dd[row, cols].max()
-                        cand = np.nonzero(dd[row] <= thr)[0]
-                        if len(cand) < take:  # NaN distances → fixed width
-                            cand = cols
-                        order = np.lexsort((b_ids[cand], dd[row, cand]))
-                        sel = cand[order][:take]
-                        out.append(
-                            pd.DataFrame(
-                                {
-                                    "query_id": np.full(take, ids[qi]),
-                                    "neighbour_id": b_ids[sel],
-                                    "_dist": dd[row, sel],
-                                }
-                            )
-                        )
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        candidates = cands_src.mapInPandas(
-            partial_topk, "query_id long, neighbour_id long, _dist double"
-        )
-        if not rescore:
-            return _ranked(candidates, "_dist", k)
-        # fold-exact rescore of the widened pool (cf. exact_knn_blocked): one
-        # more probe of the PRUNED posting lists via broadcast join, then the
-        # declarative kernel decides the boundary
-        pool = _ranked(candidates, "_dist", eff_k)
-        q_df = spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in zip(q_ids, q_mat)],
-            "query_id long, q_vec array<double>",
-        )
-        dist = V.sq_euclidean(F.col("q_vec"), F.col("embedding"))
-        rejoined = (
-            cands_src.select(F.col("id").alias("neighbour_id"), "embedding")
-            .join(F.broadcast(pool.select("query_id", "neighbour_id")), "neighbour_id")
-            .join(F.broadcast(q_df), "query_id")
-            .withColumn("_dist", dist)
-        )
-        return _ranked(rejoined, "_dist", k)
 
     # ---------------- maintenance ----------------
 

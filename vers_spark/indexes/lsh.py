@@ -913,13 +913,13 @@ class LSHForestIndex:
 
     def _sides_blocked(self, pairs: DataFrame) -> DataFrame:
         """Blocked-BLAS twin of the declarative per-plane fold (the
-        search_blocked pattern, ivfflat.py): q_bit and q_margin for every
+        knn.exact_knn_blocked pattern): q_bit and q_margin for every
         (query, inner node) via ONE GEMM per Arrow batch of hyperplanes
         against the collected query batch. At 1M×300 the declarative fold
         costs ~µs per element — 100 queries × 163k inner nodes ≈ 16M folds
         ≈ 6 s/query (BASELINE.md); the GEMM does the same work in one BLAS
         call per batch. Queries ride the bounded-batch serving contract
-        (driver-collect + broadcast, same as IVF's search_blocked); the
+        (driver-collect + broadcast, same as IVFFlatIndex.search); the
         hyperplane table never leaves the executors. Same summation caveat
         as every blocked twin: BLAS pairwise sums differ from the fold in
         the last ulp, so probe ORDER parity (not margin-value parity) is
@@ -1062,9 +1062,12 @@ class LSHForestIndex:
         not last-ulp: the fold is a sequential left sum over (xᵢ−yᵢ)² in
         f64, and np.cumsum's running sum accumulates in the same index
         order, so the final prefix equals the fold exactly (gated in
-        test_lsh_backup.test_multiprobe_rerank_blocked_bitexact). Input
-        (query_id, q_vec, id, embedding) → (query_id, id, _dist)."""
+        test_lsh_backup.test_multiprobe_rerank_blocked_bitexact; the kernel
+        is vector_np.fold_distances). Input (query_id, q_vec, id, embedding)
+        → (query_id, id, _dist)."""
         import pandas as pd
+
+        from vers_spark.functions.vector_np import fold_distances
 
         def fn(batches):
             for pdf in batches:
@@ -1072,12 +1075,7 @@ class LSHForestIndex:
                     continue
                 q = np.array(pdf["q_vec"].tolist(), dtype=np.float64)
                 e = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                d = (q - e) ** 2
-                dist = (
-                    np.cumsum(d, axis=1)[:, -1]
-                    if d.shape[1]
-                    else np.zeros(len(pdf), dtype=np.float64)
-                )
+                dist = fold_distances(q, e, "sq_euclidean")
                 yield pd.DataFrame(
                     {
                         "query_id": pdf["query_id"].astype("int64"),

@@ -298,7 +298,7 @@ def ivfpq_search_residual(
     residual against THAT cluster's centroid — so LUTs key on
     (query_id, cluster_id): Q × ~n_probes rows, driver-computed like
     luts_df and broadcast. Probing/fill-rule resolve driver-side on the
-    collected centroid table (the search_blocked twin, ivfflat.rs:166-195
+    collected centroid table (IVFFlatIndex.search's probe rule, ivfflat.rs:166-195
     semantics); candidates come off the cluster-pruned code store with a
     literal isin filter (static partition pruning on the
     persist_codes_partitioned layout); the per-candidate ADC stays a pure

@@ -2,33 +2,68 @@
 against (reference `search_exhaustive`, vers/src/utils.rs:68-82).
 
 Two physical strategies, one logical semantics (top-k per query, distance
-ascending, ties broken by ascending corpus id):
+ascending, ties broken by ascending corpus id, distances from the left-fold
+f64 kernels of :mod:`vers_spark.functions.vector`):
 
 - ``exact_knn`` — declarative: crossJoin + distance expression + ranking
-  window. Catalyst handles it; bit-deterministic (left-fold f64 kernels), so
-  it IS the DuckDB-oracle path. Fine for query batches × corpora that fit a
-  shuffle; the window's per-query group limit (Spark ≥3.5 WindowGroupLimit)
-  keeps the sort bounded.
+  window. Catalyst handles it; bit-deterministic, so it IS the DuckDB-oracle
+  path. Fine for query batches × corpora that fit a shuffle; the window's
+  per-query group limit (Spark ≥3.5 WindowGroupLimit) keeps the sort bounded.
+  The query side is broadcast only while it has at most
+  ``_BROADCAST_QUERY_CAP`` rows; a larger caller-supplied frame gets a plain
+  join instead of a forced broadcast through driver memory.
 
-- ``exact_knn_blocked`` — block nested loop for scale: broadcast the query
-  block (small side), stream the corpus through ``mapInPandas`` computing a
-  BLAS distance matrix per Arrow batch and keeping only the per-batch top-k
-  (partial), then a global per-query top-k (final). The classic partial/final
-  aggregate shape: corpus is scanned once, never shuffled; only
-  O(batches × Q × k) candidate rows move. This is the 100 TB path — at 1000
-  executors each scans its split, and the shuffle is candidates only.
+- ``exact_knn_blocked`` — block nested loop for scale, one Arrow pass: the
+  query block is collected under the bounded-batch contract
+  (``validate.bounded_collect``: ``QueryBatchTooLarge`` above the cap) and
+  broadcast; the corpus streams through ``mapInPandas``. Per Arrow batch a
+  BLAS distance matrix shortlists candidates, the fold kernel's numpy twin
+  (``vector_np.fold_distances``, bit-equal) re-scores them in the same
+  kernel, and the batch emits its per-query top-k (partial); a ranking
+  window takes the global top-k (final). The corpus is scanned once, never
+  shuffled, never joined back; only O(batches × Q × k) candidate rows move.
+  This is the 100 TB path — at 1000 executors each scans its split, and the
+  shuffle is candidates only.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from vers_spark.functions import vector as V
 from vers_spark.functions import vector_np as VN
+
+# Queries per exact_knn call up to which the query side is broadcast. Above
+# it the join is left unhinted: a caller-supplied frame must not be pulled
+# through driver memory by a forced broadcast. Same value as the index
+# serving paths' cap (lsh._BROADCAST_QUERY_CAP).
+_BROADCAST_QUERY_CAP = 65536
+
+# exact_knn_blocked's BLAS shortlist per query and Arrow batch, in multiples
+# of k: the fold decides the final order among these candidates.
+_PREFILTER_MARGIN = 2
+
+RESULT_SCHEMA = "query_id long, neighbour_id long, distance double, rank int"
+
+
+def _query_block(queries: DataFrame, query_id: str, query_vec: str, what: str):
+    """The serving paths' query batch under the bounded-batch contract
+    (``validate.bounded_collect``): (int64 ids ``(Q,)``, f64 vectors
+    ``(Q, d)``), or None for an empty batch."""
+    from vers_spark.functions.validate import bounded_collect
+
+    rows = bounded_collect(queries.select(query_id, query_vec), what)
+    if not rows:
+        return None
+    return (
+        np.array([r[0] for r in rows], dtype=np.int64),
+        np.array([r[1] for r in rows], dtype=np.float64),
+    )
 
 
 def _ranked(joined: DataFrame, dist_col: str, k: int) -> DataFrame:
@@ -60,7 +95,11 @@ def exact_knn(
     at sf0.1); the fold work lives on the corpus side's partitions, so
     that side must be the streamed one. Results are identical — the cross
     product is the same row set and the rank window's
-    (distance, neighbour_id) order is total per query."""
+    (distance, neighbour_id) order is total per query.
+
+    The broadcast hint is bounded: one ``limit(cap + 1).count()`` sizes the
+    query side, and above ``_BROADCAST_QUERY_CAP`` rows the cross join is
+    left to the planner."""
     if metric not in V.DISTANCE_FNS:
         raise ValueError(f"unknown metric {metric!r}; expected {sorted(V.DISTANCE_FNS)}")
     from vers_spark.functions.spread import cpu_spread
@@ -70,7 +109,9 @@ def exact_knn(
         corpus.select(F.col(corpus_id).alias("neighbour_id"), F.col(corpus_vec).alias("c_vec"))
     )
     dist = V.DISTANCE_FNS[metric](F.col("q_vec"), F.col("c_vec"))
-    joined = c.crossJoin(F.broadcast(q)).withColumn("_dist", dist)
+    if q.limit(_BROADCAST_QUERY_CAP + 1).count() <= _BROADCAST_QUERY_CAP:
+        q = F.broadcast(q)
+    joined = c.crossJoin(q).withColumn("_dist", dist)
     return _ranked(joined, "_dist", k)
 
 
@@ -83,41 +124,30 @@ def exact_knn_blocked(
     query_vec: str = "embedding",
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    rescore: bool = True,
-    margin: int = 2,
 ) -> DataFrame:
     """Block-nested-loop exact KNN (the scale path; see module docstring).
 
-    The query block is collected and broadcast — callers keep it small
-    (≤ ~10⁵ × dim floats); the corpus side is never materialized on the
-    driver.
+    Bounded-batch contract: the query block is collected (at most
+    ``validate.MAX_QUERY_BATCH_ROWS`` rows, ``QueryBatchTooLarge`` above) and
+    broadcast; the corpus side is never materialized on the driver. Query
+    ids must be integral.
 
-    ``rescore=True`` (default) widens each batch's BLAS partial top-k to
-    ``margin·k`` candidates, recomputes their distances with the declarative
-    left-fold f64 kernel, and takes the final top-k on the FOLD values — so
-    a last-ulp disagreement between BLAS pairwise summation and the fold at
-    the k/k+1 boundary cannot change the reported id-set (the fold decides
-    the boundary; BLAS would have to misrank a true top-k candidate past
-    rank margin·k within one batch to lose it, ~margin·k ulp-ties deep).
-    The OUTPUT therefore matches :func:`exact_knn` under the assumption
-    that no true top-k neighbour sits more than (margin−1)·k ulp-level
-    BLAS ties beyond the boundary — in practice always, and what lets the
-    blocked path share the exact path's DuckDB oracle. Cost: one broadcast
-    join of the margin·k·Q candidate rows back against corpus + queries —
-    negligible next to the scan.
+    Per Arrow batch, BLAS shortlists ``_PREFILTER_MARGIN·k`` candidates per
+    query plus every row tying the shortlist's boundary distance; the fold
+    kernel (``vector_np.fold_distances``, bit-equal to the declarative one)
+    then recomputes their distances and the batch emits its top-k on the
+    (fold distance, id) key. The final top-k therefore reads fold values
+    only, and the output equals :func:`exact_knn` unless BLAS misranks a
+    true top-k neighbour more than (_PREFILTER_MARGIN−1)·k places deep
+    within one batch — a ulp-level tie that deep, never seen in practice.
     """
-    import numpy as np
-
+    if metric not in V.DISTANCE_FNS:
+        raise ValueError(f"unknown metric {metric!r}; expected {sorted(V.DISTANCE_FNS)}")
     spark = corpus.sparkSession
-    from vers_spark.functions.validate import bounded_collect
-
-    q_rows = bounded_collect(queries.select(query_id, query_vec), "exact_knn_blocked")
-    if not q_rows:
-        return spark.createDataFrame([], "query_id long, neighbour_id long, distance double, rank int")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    eff_k = k * max(1, margin) if rescore else k
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, metric, eff_k))
+    block = _query_block(queries, query_id, query_vec, "exact_knn_blocked")
+    if block is None:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    bc = spark.sparkContext.broadcast((*block, metric, k))
 
     def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, mat, m, kk = bc.value
@@ -127,25 +157,22 @@ def exact_knn_blocked(
             c_ids = pdf["neighbour_id"].to_numpy(dtype=np.int64)
             c_mat = np.array(pdf["c_vec"].tolist(), dtype=np.float64)
             d = VN.pairwise_distances(mat, c_mat, m)  # (Q, B)
-            take = min(kk, d.shape[1])
-            # per-query partial top-k inside the batch: argpartition, then
-            # re-admit candidates tying the boundary distance (duplicate
-            # vectors tie exactly; argpartition alone would keep an
-            # arbitrary one and could drop the smaller-id neighbour) and
-            # truncate on the (distance, id) composite key
+            take = min(_PREFILTER_MARGIN * kk, d.shape[1])
             part = np.argpartition(d, take - 1, axis=1)[:, :take]
             out_q, out_c, out_d = [], [], []
             for qi in range(d.shape[0]):
                 cols = part[qi]
-                thr = d[qi, cols].max()
-                cand = np.nonzero(d[qi] <= thr)[0]
+                # re-admit every row tying the shortlist boundary: duplicate
+                # vectors tie exactly, and argpartition alone keeps an
+                # arbitrary one of them
+                cand = np.nonzero(d[qi] <= d[qi, cols].max())[0]
                 if len(cand) < take:  # NaN distances → keep the fixed width
                     cand = cols
-                order = np.lexsort((c_ids[cand], d[qi, cand]))
-                sel = cand[order][:take]
-                out_q.append(np.full(take, ids[qi]))
-                out_c.append(c_ids[sel])
-                out_d.append(d[qi, sel])
+                exact = VN.fold_distances(mat[qi], c_mat[cand], m)
+                sel = np.lexsort((c_ids[cand], exact))[:kk]
+                out_q.append(np.full(len(sel), ids[qi]))
+                out_c.append(c_ids[cand][sel])
+                out_d.append(exact[sel])
             yield pd.DataFrame(
                 {
                     "query_id": np.concatenate(out_q),
@@ -158,22 +185,4 @@ def exact_knn_blocked(
         F.col(corpus_id).cast("long").alias("neighbour_id"), F.col(corpus_vec).alias("c_vec")
     )
     candidates = c.mapInPandas(partial_topk, "query_id long, neighbour_id long, _dist double")
-    if not rescore:
-        return _ranked(candidates, "_dist", k)
-    # Exact rescoring join: the WIDENED pool (Q×margin·k rows, still tiny) is
-    # broadcast against the corpus — the corpus is probed, not shuffled —
-    # then against the already-collected query block. The fold distance
-    # replaces the BLAS one BEFORE the final top-k, so the k/k+1 boundary is
-    # decided by the fold kernel, not BLAS.
-    pool = _ranked(candidates, "_dist", eff_k)
-    q_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in zip(q_ids, q_mat)],
-        "query_id long, q_vec array<double>",
-    )
-    dist = V.DISTANCE_FNS[metric](F.col("q_vec"), F.col("c_vec"))
-    rejoined = (
-        c.join(F.broadcast(pool.select("query_id", "neighbour_id")), "neighbour_id")
-        .join(F.broadcast(q_df), "query_id")
-        .withColumn("_dist", dist)
-    )
-    return _ranked(rejoined, "_dist", k)
+    return _ranked(candidates, "_dist", k)

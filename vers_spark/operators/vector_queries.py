@@ -80,9 +80,10 @@ def knn_exact_euclidean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def knn_blocked_euclidean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Block-nested-loop KNN (scale path) — same logical result as
-    knn_exact_euclidean. BLAS picks the candidates; the exact-rescore join
-    (knn.py rescore=True) re-emits fold-order distances, so the output is
-    bit-identical to the declarative path and shares its DuckDB oracle."""
+    knn_exact_euclidean. BLAS shortlists candidates inside each Arrow batch
+    and the same kernel re-scores them with the fold's numpy twin
+    (vector_np.fold_distances), so the output is bit-identical to the
+    declarative path and shares its DuckDB oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     return K.exact_knn_blocked(
         emb.filter(F.col("vec_id") % 97 == 0),
@@ -608,8 +609,8 @@ ORACLE_SQL: dict[str, str] = {
         k=10,
         dist=_D_SQE.format(a="qv", b="cv"),
     ),
-    # The blocked scale path rescores its survivors with the same fold
-    # kernel, so it shares the exact path's oracle verbatim.
+    # The blocked scale path scores its candidates with the fold kernel's
+    # bit-equal numpy twin, so it shares the exact path's oracle verbatim.
     "knn_blocked_euclidean": _KNN_SQL.format(
         qfilter="vec_id % 97 = 0",
         cfilter="vec_id % 97 <> 0",
