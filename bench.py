@@ -101,21 +101,9 @@ def _clear_state(spark) -> None:
     memoized index objects must go too: their DataFrames sit on the
     checkpointed RDDs being unpersisted here, and a rebuild is exactly what
     cold timing means."""
-    from vers_spark.operators import _qcache, index_queries
+    from vers_spark.operators import _qcache
 
-    index_queries._IVF_CACHE.clear()
-    index_queries._LSH_CACHE.clear()
-    index_queries._HNSW_CACHE.clear()
-    index_queries._PQ_CACHE.clear()
-    index_queries._FIXED_CACHE.clear()
-    index_queries._PQF_CACHE.clear()
-    index_queries._PQF_STORE.clear()  # persisted-code-store memo (parquet stays on disk)
-    index_queries._LSH_SAVED.clear()  # saved-LSH-store memo (cold = build+save+load)
-    from vers_spark.operators import bpe, relational
-
-    bpe._TRAIN_CACHE.clear()
-    relational._ZSTORE.clear()  # Z-order store memo (cold = rewrite + scan)
-    _qcache._CACHE.clear()  # cross-query cached DataFrames (pairs/components)
+    _qcache.clear()  # every memoized build: indexes, codebooks, stores, staged dirs
     spark.catalog.clearCache()
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()

@@ -207,15 +207,18 @@ def test_range_search_exact_and_pruning_engages(spark):
     assert probes < 0.5 * len(qv) * len(cents), (probes, len(qv), len(cents))
 
 
-def test_lloyd_backend_and_multirestart(spark, emb):
-    i1 = IVFFlatIndex.build(emb, num_clusters=8, max_iterations=5, seed=1, backend="lloyd")
-    i3 = IVFFlatIndex.build(
-        emb, num_clusters=8, max_iterations=5, seed=1, num_attempts=3, backend="lloyd"
-    )
+def test_multirestart_keeps_lowest_cost(spark, emb):
+    i1 = IVFFlatIndex.build(emb, num_clusters=8, max_iterations=5, seed=1)
+    i3 = IVFFlatIndex.build(emb, num_clusters=8, max_iterations=5, seed=1, num_attempts=3)
     assert i3.params["cost"] <= i1.params["cost"]  # argmin over restarts incl. seed=1
     assert i1.cluster_stats().count() <= 8
     total = i1.cluster_stats().agg(F.sum("n_vectors")).collect()[0][0]
     assert total == emb.count()
+
+
+def test_unknown_backend_raises(spark, emb):
+    with pytest.raises(ValueError, match="unknown backend"):
+        IVFFlatIndex.build(emb, num_clusters=8, backend="lloyd")
 
 
 def test_save_load_roundtrip(spark, emb, index, tmp_path):

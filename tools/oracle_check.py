@@ -8,10 +8,12 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from vers_spark.session import get_spark  # noqa: E402
 

@@ -1,8 +1,10 @@
-"""Dump `.explain("formatted")` for headline queries into plans/r15/.
+"""Dump `.explain("formatted")` for headline queries into plans/<round>/.
 
-Usage: python tools/r15_plan_dump.py <suffix> [query ...]
-  suffix: "before" | "after" (writes plans/r15/<query>_<suffix>.txt)
-  With no query args, dumps every bench headline line.
+Usage: python tools/plan_dump.py <round> <suffix> [query ...]
+  round:  directory under plans/ ("r15", "r16", ...)
+  suffix: "before" | "after" (writes plans/<round>/<query>_<suffix>.txt)
+  With no query args, dumps every bench headline line. The corpus is
+  bench.py's ``$SPARK_GRAFT_SF_DIR``.
 
 The LSH/IVF/HNSW serving queries execute driver-side probe logic inside the
 query function, so the captured plan is the plan of the RETURNED DataFrame —
@@ -14,24 +16,23 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
-    from bench import HEADLINE, _clear_state
+    round_name, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
+    from bench import HEADLINE, SF_DIR, _clear_state
 
     import __spark_entry__ as entry
     from vers_spark.session import get_spark
 
-    spark = get_spark(app_name="r15_plan_dump")
+    spark = get_spark(app_name=f"{round_name}_plan_dump")
     qmap = entry.queries()
     if not names:
         names = list(HEADLINE)
-    outdir = os.path.join("/root/repo", "plans", "r15")
+    outdir = os.path.join(REPO, "plans", round_name)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         try:

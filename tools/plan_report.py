@@ -15,7 +15,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
@@ -122,7 +123,7 @@ def main() -> None:
         " block cache dedupe them at runtime, so those columns overstate"
         " actual IO for the two iterative rows."
     )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n" + "\n".join(details))
     print(f"wrote PLANS.md ({len(QUERIES)} queries)")
 

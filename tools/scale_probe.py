@@ -29,7 +29,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -163,9 +164,10 @@ def _probes():
         # pin the INCREMENTAL trainer (the scale path) at both scales so the
         # factor measures its scan-bound growth, not the auto-dispatch
         # crossover (recount is job-bound and wins under 100k vocab types)
-        from vers_spark.operators.bpe import _TRAIN_CACHE, train_merges
+        from vers_spark.operators import _qcache
+        from vers_spark.operators.bpe import train_merges
 
-        _TRAIN_CACHE.clear()
+        _qcache.clear()
         merges, _ = train_merges(spark, sf_dir, mode="incremental")
         return spark.createDataFrame(
             [(s, l, r, c) for s, l, r, c in merges],

@@ -5,14 +5,12 @@ whose parquet file is a few MB arrives as ONE scan partition, so every
 codegen- or interpreter-heavy chain downstream (tokenize+shingle, fold
 distance kernels, higher-order array lambdas) runs on one core of a 32-core
 box. One tiny round-robin shuffle buys full parallelism — measured 9.2× on
-the sf0.1 bigram tokenize pass (r15 A/B, /tmp/ab_spread.py).
+the sf0.1 bigram tokenize pass (r15 A/B).
 
-Unlike the unconditional ``text_dedup._cpu_spread`` (whose call sites are
-document pipelines that always want the spread), this helper is GATED on
-the input's actual plan parallelism: at real scale a corpus scan already
-carries ≥ cores splits and the repartition would be a pure extra shuffle of
-the whole input — the gate makes the operators scale-adaptive instead of
-tuned for local mode (optimization-guide rule: no constants tuned for
+The spread is GATED on the input's actual plan parallelism: at real scale a
+corpus scan already carries ≥ cores splits and the repartition would be a
+pure extra shuffle of the whole input — the gate makes the operators
+scale-adaptive instead of tuned for local mode (no constants tuned for
 either regime).
 """
 

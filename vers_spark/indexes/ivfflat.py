@@ -9,15 +9,17 @@ RAM (`ivfflat.rs:8-15`). Here the index IS two DataFrames:
   becomes parquet partition pruning (the Spark analogue of scanning only the
   chosen posting lists, `ivfflat.rs:166-195`).
 
-Build: Lloyd's k-means. Two backends:
-- ``mllib``  — `pyspark.ml.clustering.KMeans` (fast path).
-- ``lloyd``  — hand-rolled loop mirroring reference semantics
-  (`ivfflat.rs:73-100`): seeded random-row init, argmin-by-sq-euclidean
-  assignment, per-cluster mean update, bit-exact centroid fixpoint stop.
-  Each iteration is ONE distributed pass: mapInPandas emits per-Arrow-batch
-  partial sums (cluster_id, count, sum_vec) — the map-side combine — and only
-  k·batches tiny rows shuffle to the final mean. Empty cluster → zero vector
-  (`ivfflat.rs:47-71`).
+Build: Lloyd's k-means on a training set, then one distributed assignment
+pass over the whole corpus. Two trainers, chosen by ``backend``:
+- ``local`` (the default below ``_LOCAL_KMEANS_MAX_ROWS`` rows) — the
+  reference's own single-node loop (`ivfflat.rs:73-100`) in numpy on the
+  driver over a collected, capped sample: seeded random-row init,
+  argmin-by-sq-euclidean assignment, per-cluster mean, empty cluster → zero
+  vector (`ivfflat.rs:47-71`), bit-exact centroid fixpoint stop.
+- ``mllib`` (the default above it) — `pyspark.ml.clustering.KMeans`,
+  distributed.
+The engine-exact distributed Lloyd, whose centroids the DuckDB oracles
+restate, is ``lloyd_fixed`` below; it is a separate builder, not a backend.
 
 Multi-restart (`num_attempts`, `ivfflat.rs:102-136`): independent seeded runs,
 keep argmin inertia.
@@ -47,8 +49,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from vers_spark.functions import vector as V
-
-_PARTIAL_SCHEMA = "cluster_id int, n long, sum_vec array<double>, cost double"
 
 # Below this row count the k-means training set is collected to the driver and
 # Lloyd's loop runs in numpy — the build's ~30 per-iteration Spark jobs
@@ -96,38 +96,6 @@ def _kmeans_numpy(X: np.ndarray, k: int, max_iter: int, seed: int):
             break
         cents = new
     return cents, cost
-
-
-def _assign_partial_sums(centroids: np.ndarray):
-    """mapInPandas closure: per batch, assign rows to nearest centroid and
-    emit k partial rows (count, vector sum, inertia contribution)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = centroids
-        cc = np.einsum("ij,ij->i", c, c)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            d = np.maximum(
-                np.einsum("ij,ij->i", x, x)[:, None] + cc[None, :] - 2.0 * (x @ c.T), 0.0
-            )
-            best = d.argmin(axis=1)
-            cost = d[np.arange(len(x)), best]
-            rows = []
-            for cid in np.unique(best):
-                m = best == cid
-                rows.append(
-                    {
-                        "cluster_id": int(cid),
-                        "n": int(m.sum()),
-                        "sum_vec": x[m].sum(axis=0).tolist(),
-                        "cost": float(cost[m].sum()),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return fn
 
 
 def _posting_sizes(assignments: DataFrame) -> dict[int, int]:
@@ -189,14 +157,18 @@ class IVFFlatIndex:
         seed: int = 42,
         backend: str = "auto",
     ) -> "IVFFlatIndex":
-        """backend: ``"mllib"`` (MLlib KMeans), ``"lloyd"`` (distributed
-        reference-shaped loop), ``"local"`` (driver-side numpy Lloyd — the
-        reference IS a single-node build, `ivfflat.rs:73-136`; right whenever
-        the training sample fits on the driver), or ``"auto"`` (local below
-        ``_LOCAL_KMEANS_MAX_ROWS`` rows, else mllib). At 100 TB you train
-        centroids on a driver-sized SAMPLE (k-means only needs a
-        representative subset) and the corpus-wide ``_assign`` pass stays
-        fully distributed either way."""
+        """Train ``num_clusters`` centroids (best of ``num_attempts`` seeded
+        restarts by inertia, seeds ``seed``, ``seed+1``, ...) and assign
+        every corpus row to its nearest one.
+
+        backend: ``"auto"`` (default) counts the rows and picks ``"local"``
+        at or below ``_LOCAL_KMEANS_MAX_ROWS``, else ``"mllib"``;
+        ``"local"`` is the driver-side numpy Lloyd over a sample capped at
+        ``_LOCAL_KMEANS_SAMPLE_ROWS`` (the reference IS a single-node build,
+        `ivfflat.rs:73-136`); ``"mllib"`` is MLlib KMeans. Anything else
+        raises ``ValueError``. At 100 TB centroids train on a driver-sized
+        sample (k-means only needs a representative subset) and the
+        corpus-wide ``_assign`` pass stays fully distributed either way."""
         spark = corpus.sparkSession
         data = corpus.select(
             F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("embedding")
@@ -223,8 +195,6 @@ class IVFFlatIndex:
                 s = seed + attempt
                 if backend == "mllib":
                     cents, cost = IVFFlatIndex._kmeans_mllib(data, num_clusters, max_iterations, s)
-                elif backend == "lloyd":
-                    cents, cost = IVFFlatIndex._kmeans_lloyd(data, num_clusters, max_iterations, s)
                 elif backend == "local":
                     cents, cost = _kmeans_numpy(local_X, num_clusters, max_iterations, s)
                 else:
@@ -283,35 +253,6 @@ class IVFFlatIndex:
             cost = float(model.summary.trainingCost)
         finally:
             feat.unpersist()
-        return cents, cost
-
-    @staticmethod
-    def _kmeans_lloyd(data: DataFrame, k: int, max_iter: int, seed: int):
-        """Reference-shaped Lloyd loop (ivfflat.rs:73-100): driver iterates,
-        each step is one distributed partial-sum pass."""
-        spark = data.sparkSession
-        init = data.orderBy(F.rand(seed)).limit(k).select("embedding").collect()
-        cents = np.array([r[0] for r in init], dtype=np.float64)
-        cost = float("inf")
-        for _ in range(max_iter):
-            partials = data.mapInPandas(_assign_partial_sums(cents), _PARTIAL_SCHEMA)
-            agg = (
-                partials.groupBy("cluster_id")
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.array(*[F.sum(F.element_at("sum_vec", i + 1)) for i in range(cents.shape[1])]).alias("s"),
-                    F.sum("cost").alias("cost"),
-                )
-                .collect()
-            )
-            new = np.zeros_like(cents)  # empty cluster -> zero vector (ivfflat.rs:64-69)
-            cost = 0.0
-            for row in agg:
-                new[row["cluster_id"]] = np.array(row["s"]) / row["n"]
-                cost += row["cost"]
-            if np.array_equal(new, cents):  # bit-exact fixpoint (ivfflat.rs:84-91)
-                break
-            cents = new
         return cents, cost
 
     @staticmethod

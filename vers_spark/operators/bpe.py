@@ -97,9 +97,6 @@ def _apply_merge(vocab: DataFrame, left: str, right: str) -> DataFrame:
     return vocab.withColumn("seq", merged)
 
 
-_TRAIN_CACHE: dict[tuple, tuple] = {}
-
-
 def _vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _vocab_from_docs(load_table(spark, sf_dir, "documents"))
 
@@ -238,13 +235,15 @@ def train_merges(
     training run. mode="auto" picks recount below _RECOUNT_MAX_VOCAB
     distinct types (job-count-bound locally) and incremental above
     (scan-bound at scale); both are parity-identical (test-gated)."""
-    key = (sf_dir, k, mode)
-    if key not in _TRAIN_CACHE:
+    from vers_spark.operators._qcache import memo
+
+    def build() -> tuple[list, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
         vocab = None
+        train_mode = mode
         if mode == "auto":
             n_types = _vocab_from_docs(docs).count()
-            mode = "recount" if n_types <= _RECOUNT_MAX_VOCAB else "incremental"
+            train_mode = "recount" if n_types <= _RECOUNT_MAX_VOCAB else "incremental"
             # r15: recount mode ⟹ the vocab is bounded (≤ _RECOUNT_MAX_VOCAB
             # rows), yet its aggregate inherits all spark.sql.shuffle
             # partitions — every one of the K per-round pair-count stages
@@ -252,14 +251,15 @@ def train_merges(
             # launch (not work) dominates the round. Coalesce (no shuffle)
             # to ~_VOCAB_ROWS_PER_TASK rows/task, capped at the core count;
             # sized by the measured row count, not a local-mode constant.
-            if mode == "recount":
+            if train_mode == "recount":
                 parts = max(1, min(
                     spark.sparkContext.defaultParallelism,
                     -(-n_types // _VOCAB_ROWS_PER_TASK),
                 ))
                 vocab = _vocab_from_docs(docs).coalesce(parts)
-        _TRAIN_CACHE[key] = train_merges_on(docs, k, mode=mode, vocab=vocab)
-    return _TRAIN_CACHE[key]
+        return train_merges_on(docs, k, mode=train_mode, vocab=vocab)
+
+    return memo(("bpe_train", sf_dir, k, mode), build)
 
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

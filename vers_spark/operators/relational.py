@@ -670,9 +670,6 @@ def _evt_hll_oracle() -> str:
     """
 
 
-_ZSTORE: dict[str, str] = {}
-
-
 def evt_zorder_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-dimensional data clustering as a certified query: events are
     written ONCE Z-ORDERED by (user_id, unix_micros(ts)) — the Morton-key
@@ -686,15 +683,18 @@ def evt_zorder_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout-invariant, so the DuckDB twin runs the same predicate on the
     raw events view — the hash oracle certifies the rewrite+read path end
     to end."""
+    from vers_spark.operators._qcache import memo
     from vers_spark.sources.layout import write_zordered
     from vers_spark.streaming.events import scratch_dir
 
     ev = load_table(spark, sf_dir, "events")
-    if sf_dir not in _ZSTORE:
+
+    def build() -> str:
         path = scratch_dir("vs_zorder_") + "/events_z"
         write_zordered(ev, path, "user_id", "unix_micros(ts)", num_files=16)
-        _ZSTORE[sf_dir] = path
-    z = spark.read.parquet(_ZSTORE[sf_dir])
+        return path
+
+    z = spark.read.parquet(memo(("zorder_store", sf_dir), build))
     ucap = ev.agg(F.max("user_id")).collect()[0][0] // 10
     return (
         z.filter(

@@ -482,8 +482,9 @@ def doc_hll_distinct(
     per-token-hash window (functions.text.shingle_hashes — one base hash
     per token + integer window sums; the shingle string is never built),
     and the CPU-heavy scan fans across all cores first (file splits are
-    sized by BYTES; this corpus is small in bytes but hash-bound, the
-    text_dedup._cpu_spread trap). Combined x10 effect: 243 s → ~11 s.
+    sized by BYTES; this corpus is small in bytes but hash-bound — the
+    single-split trap functions/spread.py describes). Combined x10 effect:
+    243 s → ~11 s.
     Hash space is ~2^41 (three 31-bit token hashes × 31-weights):
     collisions ~n²/2^42 shift both engines' counts together."""
     docs = load_table(spark, sf_dir, "documents")

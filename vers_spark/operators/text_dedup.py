@@ -23,18 +23,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vers_spark.functions import text as TX
+from vers_spark.functions.spread import cpu_spread
 
 BAND_SIZE = 4
 BAND_POWERS = [1, 31, 961, 29791]  # weight of position h_idx % 4 inside a band
 SIMHASH_BITS = 32
 SIMHASH_CHUNKS = 4
-
-
-def _cpu_spread(df: DataFrame) -> DataFrame:
-    """Fan a small-in-bytes but CPU-heavy input across all cores: file splits
-    and AQE coalescing are sized by BYTES, which leaves md5/regex-bound
-    stages running on 1-2 partitions. One tiny shuffle buys full parallelism."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def shingle_array(
@@ -55,7 +49,7 @@ def shingle_array(
     split/trim/lower chain, word_shingles a null-propagating transform)."""
     toks = TX.ws_tokens(F.col(text_col))
     return (
-        _cpu_spread(docs)
+        cpu_spread(docs)
         .filter(F.col(text_col).isNotNull())
         .select(
             F.col(id_col).alias("doc_id"),
@@ -234,8 +228,8 @@ def minhash_neardup_pairs(
     # columnar cache builder does a per-value UnsafeArrayData copy for
     # nested array<string> columns, measured ~20% slower end-to-end than
     # storing the task outputs as serialized rows (r14 variants study,
-    # tools/r14_minhash_variants.py; no-materialization is 4× worse — the
-    # md5-bound chain would run once per consumer).
+    # tools/r14_minhash_variants.py as of commit f1b3580; no-materialization
+    # is 4× worse — the md5-bound chain would run once per consumer).
     sets = shingle_array(docs, n_shingle).localCheckpoint(eager=True)
     wide = _sig_wide(sets, num_hashes, hash_backend)
     n_bands = num_hashes // BAND_SIZE
@@ -356,7 +350,7 @@ def simhash(
     multiplicity — per-bit ±1 vote weighted by term frequency, bit set iff
     the vote sum is strictly positive. ``hash_backend``: see
     functions.text.base_hash (md5 = oracle path, xxhash64 = deployment)."""
-    toks = _cpu_spread(docs).select(
+    toks = cpu_spread(docs).select(
         F.col(id_col).alias("doc_id"), F.explode(TX.ws_tokens(F.col(text_col))).alias("t")
     )
     hv = TX.base_hash(F.col("t"), hash_backend)

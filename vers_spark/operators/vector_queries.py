@@ -115,31 +115,30 @@ def vec_corpus_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_knn(q, c, k=10)
 
 
-_VEC_STAGE: dict[str, str] = {}
-
-
 def _stage_vec_file(spark: SparkSession, sf_dir: str) -> str:
     """Write the first _VEC_ROUNDTRIP_ROWS embeddings as a .vec text file
     (driver-side, bounded by the ONE constant; memoized per sf_dir so the
-    two roundtrip queries share the staged file)."""
+    two roundtrip queries share the staged file, and re-staged if the
+    memoized file has been removed since)."""
     import os
 
-    if sf_dir in _VEC_STAGE and os.path.exists(_VEC_STAGE[sf_dir]):
-        return _VEC_STAGE[sf_dir]
-    emb = load_table(spark, sf_dir, "embeddings").orderBy("vec_id").limit(
-        _VEC_ROUNDTRIP_ROWS
-    )
-    rows = emb.collect()
-    dim = len(rows[0]["embedding"])
+    from vers_spark.operators._qcache import memo
     from vers_spark.sources.staging import staging_dir
 
-    path = os.path.join(staging_dir(spark, "vecfile", sf_dir), "corpus.vec")
-    with open(path, "w") as f:
-        f.write(f"{len(rows)} {dim}\n")
-        for r in rows:
-            f.write("w%d %s\n" % (r["vec_id"], " ".join(repr(float(x)) for x in r["embedding"])))
-    _VEC_STAGE[sf_dir] = path
-    return path
+    def build() -> str:
+        emb = load_table(spark, sf_dir, "embeddings").orderBy("vec_id").limit(
+            _VEC_ROUNDTRIP_ROWS
+        )
+        rows = emb.collect()
+        dim = len(rows[0]["embedding"])
+        path = os.path.join(staging_dir(spark, "vecfile", sf_dir), "corpus.vec")
+        with open(path, "w") as f:
+            f.write(f"{len(rows)} {dim}\n")
+            for r in rows:
+                f.write("w%d %s\n" % (r["vec_id"], " ".join(repr(float(x)) for x in r["embedding"])))
+        return path
+
+    return memo(("vec_stage", sf_dir), build, fresh=os.path.exists)
 
 
 def vec_corpus_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:

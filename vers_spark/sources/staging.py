@@ -61,7 +61,7 @@ def staging_dir(spark: SparkSession, kind: str, token: str) -> str:
                 # mtime alone can mis-mark a LIVE owner as stale: its mtime
                 # only refreshes when IT calls staging_dir for this same
                 # (kind, token), so a long-running app holding a memoized
-                # staged path (e.g. _VEC_STAGE) could have files deleted
+                # staged path (e.g. the .vec stage) could have files deleted
                 # mid-read. The dir name embeds the owner's pid — skip
                 # siblings whose process is still alive.
                 if _owner_alive(sib):

@@ -87,18 +87,17 @@ class _stream_conf:
         return False
 
 
-_STAGE_CACHE: dict[str, str] = {}
-
-
 def _stage_dir(sf_dir: str, name: str) -> str:
     """FileStreamSource needs a DIRECTORY; testdata ships single files (and is
     read-only), so stage a tempdir holding a symlink to the parquet file."""
-    key = f"{sf_dir}/{name}"
-    if key not in _STAGE_CACHE:
+    from vers_spark.operators._qcache import memo
+
+    def build() -> str:
         d = scratch_dir(f"vs_stream_{name}_")
         os.symlink(f"{sf_dir}/{name}.parquet", f"{d}/{name}_000.parquet")
-        _STAGE_CACHE[key] = d
-    return _STAGE_CACHE[key]
+        return d
+
+    return memo(("stream_stage", sf_dir, name), build)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
