@@ -420,6 +420,42 @@ def test_saved_pack_loads_and_is_bit_equal_with_rebuilt(spark, forest, emb, tmp_
     assert got == want
 
 
+def test_pack_without_leaf_sizes_is_recollected(spark, forest, emb, tmp_path, monkeypatch):
+    """A pack.npz without ``lsizes`` (saved before leaf sizes rode the pack)
+    is treated as absent: the loaded index re-collects its pack from the
+    stores — leaf sizes equal to the leaf table's — and serves the same
+    rows as the in-session index."""
+    import numpy as np
+
+    path = str(tmp_path / "lsh_old_pack")
+    forest.save(path)
+    with np.load(f"{path}/pack.npz") as z:
+        assert "lsizes" in z.files
+        old = {k: z[k] for k in z.files if k != "lsizes"}
+    np.savez(f"{path}/pack.npz", **old)
+    loaded = LSHForestIndex.load(spark, path)
+    calls = []
+    collect = LSHForestIndex._pack_arrays
+    monkeypatch.setattr(
+        LSHForestIndex, "_pack_arrays", lambda self: calls.append(1) or collect(self)
+    )
+    pack = loaded._planes_pack()
+    assert pack is not None and calls == [1]
+    want = {
+        (r["tree_id"], r["path"]): r["count"]
+        for r in forest.leaves.groupBy("tree_id", "path").count().collect()
+    }
+    got = {
+        (t, format(int(key), "b")[1:]): int(n)
+        for t in range(pack.trees)
+        for key, n in zip(pack.trie[5][t], pack.leaf_sizes[t])
+    }
+    assert got == want
+    q = emb.filter(F.col("vec_id") < 5)
+    a = sorted(map(tuple, loaded.search(q, k=5).collect()))
+    assert a == sorted(map(tuple, forest.search(q, k=5).collect())) and a
+
+
 def test_migrate_rewrites_v2_store_in_place(spark, forest, emb, tmp_path):
     """A v2-grammar store (prefix-only _pp, round 7) is refused by load()
     but migrate() rewrites it to the tree-fused v3 layout WITHOUT the

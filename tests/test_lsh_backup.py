@@ -4,6 +4,8 @@ reference's budgeted recursion over the SAME planes/leaves."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -257,23 +259,80 @@ def test_degenerate_oracle_unchanged_by_fill(spark, emb):
     assert gk == wk
 
 
+@contextmanager
+def _declarative(idx):
+    """Serve ``idx`` through the declarative plans: a cached None pack makes
+    _planes_pack() return None on this instance, so search() takes
+    _search_declarative (join descent, declarative fill)."""
+    saved = idx.__dict__.pop("_planes_pack_cache", None)
+    idx._planes_pack_cache = None
+    try:
+        yield idx
+    finally:
+        del idx._planes_pack_cache
+        if saved is not None:
+            idx._planes_pack_cache = saved
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 def test_backup_fill_frontier_parity(spark, emb, small_forest):
-    """The budgeted underflow fill must return IDENTICAL rows whether its
-    leaf enumeration runs exhaustively (_leaf_order) or via the frontier
+    """The planned search (driver walk of the plane pack) must return the
+    IDENTICAL rows as the declarative plan whose fill enumerates leaves
+    exhaustively (_leaf_order) and as the one that uses the frontier
     descent with n_probes=k (exact for budgeted admission: every admitted
     leaf holds >= 1 member, so the admitted set lives within the k
-    best-ordered leaves). The auto switch keys on the memoized leaf count;
-    forcing it exercises the frontier engine on this corpus."""
+    best-ordered leaves) — in both probe orders, and with ``allowed_ids``,
+    where the planner's sizes come from the filtered leaves and an empty
+    leaf neither contributes nor ends the walk. The declarative engine
+    switch keys on the memoized leaf count; forcing it exercises both."""
     queries = emb.filter(F.col("vec_id") < 15)
-    for mode in ("dfs", "margin"):
-        small_forest._leaf_path_count = 1  # force exhaustive
-        full = sorted(map(tuple, small_forest.search(
-            queries, k=10, backup_fill=True, probe_mode=mode).collect()))
-        small_forest._leaf_path_count = 10**9  # force frontier
-        frontier = sorted(map(tuple, small_forest.search(
-            queries, k=10, backup_fill=True, probe_mode=mode).collect()))
-        small_forest._leaf_path_count = None
-        assert frontier == full, mode
+    keep = emb.filter(F.col("label") % 3 == 0).select("vec_id")
+    for allowed in (None, keep):
+        for mode in ("dfs", "margin"):
+            kw = dict(k=10, backup_fill=True, probe_mode=mode, allowed_ids=allowed)
+            planned = _rows(small_forest.search(queries, **kw))
+            with _declarative(small_forest):
+                small_forest._leaf_path_count = 1  # force exhaustive
+                full = _rows(small_forest.search(queries, **kw))
+                small_forest._leaf_path_count = 10**9  # force frontier
+                frontier = _rows(small_forest.search(queries, **kw))
+                small_forest._leaf_path_count = None
+            assert full == planned, (mode, allowed is not None)
+            assert frontier == planned, (mode, allowed is not None)
+            assert len({r[0] for r in planned}) == 15
+
+
+def test_planned_search_equals_declarative_plan(spark, emb, small_forest, tmp_path):
+    """Beyond the in-session forced-fill forest above: the planned search
+    equals the declarative plan (pack disabled on the same instance) —
+    rows and distance bits — on a FILE-LOADED store (literal _pp pruning
+    plus the planned-pair filter), without backup fill, and on depth-0
+    forests, which pack as an empty trie whose only leaf is the root."""
+    queries = emb.filter(F.col("vec_id") < 15)
+    keep = emb.filter(F.col("label") % 3 == 0).select("vec_id")
+    small_forest.save(str(tmp_path / "small"))
+    loaded = LSHForestIndex.load(spark, str(tmp_path / "small"))
+    deg = LSHForestIndex.build(emb, num_trees=1, max_node_size=10**9)
+    assert deg.params["depth"] == 0 and deg._planes_pack() is not None
+    deg.save(str(tmp_path / "deg"))
+    deg_loaded = LSHForestIndex.load(spark, str(tmp_path / "deg"))
+    cases = [
+        (loaded, dict(probe_mode="dfs")),
+        (loaded, dict(probe_mode="margin", allowed_ids=keep)),
+        (loaded, dict(backup_fill=False)),
+        (small_forest, dict(backup_fill=False, allowed_ids=keep)),
+        (deg, dict()),
+        (deg_loaded, dict(allowed_ids=keep)),
+    ]
+    for idx, kw in cases:
+        planned = _rows(idx.search(queries, k=10, **kw))
+        with _declarative(idx):
+            want = _rows(idx.search(queries, k=10, **kw))
+        assert planned == want, kw
+        assert planned, kw
 
 
 def test_multiprobe_parity_above_auto_threshold(spark, sf_oracle_dir):

@@ -74,6 +74,17 @@ def test_exact_knn_unhinted_above_broadcast_cap(spark, sf_dir, monkeypatch):
     assert sorted(map(tuple, over.collect())) == sorted(map(tuple, under.collect()))
 
 
+def _collect_in_group(sc, group, call):
+    """Collect ``call()`` under its own job group: (rows, jobs started)."""
+    sc.setJobGroup(group, group)
+    try:
+        rows = call().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_blocked_knn_and_ivf_search_job_counts(spark, sf_dir, tmp_path):
     """Serving an 8-query batch starts at most 4 Spark jobs, for
     exact_knn_blocked and for a search on a file-loaded IVF index (its
@@ -90,16 +101,34 @@ def test_blocked_knn_and_ivf_search_job_counts(spark, sf_dir, tmp_path):
     loaded.search(q, k=10, n_probes=2).collect()  # warms the per-instance caches
 
     def jobs(group, call):
-        sc.setJobGroup(group, group)
-        try:
-            call().collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return _collect_in_group(sc, group, call)[1]
 
     assert jobs("test_jobs_exact_blocked", lambda: exact_knn_blocked(q, emb, k=10)) <= 4
     assert jobs("test_jobs_ivf_search", lambda: loaded.search(q, k=10, n_probes=2)) <= 4
+
+
+def test_lsh_search_job_counts(spark, sf_dir, tmp_path):
+    """An 8-query search on a file-loaded LSH store starts at most 4 Spark
+    jobs, with the plane pack warmed as in steady serving: the bounded
+    query collect, then one Arrow pass over the planned leaves and its
+    ranking. Both for a forest whose main leaves mostly fill k and for a
+    forced-fill forest (max_node_size < k), whose backup fill is planned
+    on the driver instead of running as extra jobs."""
+    from vers_spark.indexes.lsh import LSHForestIndex
+
+    sc = spark.sparkContext
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 8)
+    for name, max_node in (("filled", 64), ("forced_fill", 8)):
+        path = str(tmp_path / name)
+        LSHForestIndex.build(emb, num_trees=4, max_node_size=max_node, seed=3).save(path)
+        loaded = LSHForestIndex.load(spark, path)
+        assert loaded._planes_pack() is not None  # warm: the persisted pack
+        rows, n_jobs = _collect_in_group(
+            sc, f"test_jobs_lsh_search_{name}", lambda: loaded.search(q, k=10)
+        )
+        assert len(rows) == 80, name
+        assert n_jobs <= 4, name
 
 
 def test_ivf_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
@@ -628,7 +657,10 @@ def test_lsh_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
     res = loaded.search(q, k=5, backup_fill=False)
     a = sorted(map(tuple, res.collect()))  # collect FIRST: metrics live here
     plan = audit.executed_plan(res)
-    assert "dynamicpruning" in plan, plan[:2000]
+    # the main leaves are planned on the driver, so the pruning is static:
+    # a literal _pp IN (…) partition filter on the leaf scan
+    part_filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert any(re.search(r"_pp#\d+ IN \(", f) for f in part_filters), part_filters
     # measured pruning on the MAIN search path too (BASELINE §r13: the
     # un-hinted shape read 128/128 partitions at the 1M store): ≤ 3
     # queries × 2 trees = 6 main-leaf buckets of 32
@@ -659,10 +691,16 @@ def test_lsh_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
     )
     bm = sorted(map(tuple, idx.search_multiprobe(q, k=5, n_probes=2).collect()))
     assert am == bm
-    # the backup-fill path checkpoints `main`, so its FINAL plan can't show
-    # the pruning expression (it fires inside the checkpoint job) — gate
-    # results parity only
-    af = sorted(map(tuple, loaded.search(q, k=5).collect()))
+    # the backup-fill path reads its planned leaves in the same one scan,
+    # so the same runtime bound holds there
+    fill = loaded.search(q, k=5)
+    af = sorted(map(tuple, fill.collect()))
+    fscans = [
+        s
+        for s in audit.scan_runtime_metrics(fill, "_pp#")
+        if "numPartitions" in s
+    ]
+    assert fscans and all(0 < s["numPartitions"] <= 6 for s in fscans), fscans
     bf = sorted(map(tuple, idx.search(q, k=5).collect()))
     assert af == bf
 

@@ -17,15 +17,20 @@ compute planes driver-side (2 rows per node is all that leaves the executors),
 broadcast them back, append one bit to each row's path. Rows are deduplicated
 by vector value first (`lsh.rs:113-130`).
 
-Search (`lsh.rs:163-216`): queries descend by folding plane tests — one
-broadcast join per level on (tree_id, path) — then a semi-join against
-``leaves`` on the final (tree_id, path) collects candidates from all trees,
-deduplicates, and exact-re-ranks by squared Euclidean (`lsh.rs:271-281`).
-The reference's backup-branch backtracking (`lsh.rs:203-215`) is implemented
-declaratively (``backup_fill``): underfilled (query, tree) pairs re-rank the
-tree's leaves by deviation-string order — provably the reference recursion's
-visit order — with cumulative-size admission and per-leaf budget caps;
-bit-parity with a local replay of the reference recursion is gated in tests.
+Search (`lsh.rs:163-216`) is planned on the driver from the PLANE PACK — the
+hyperplane trie and the leaf catalog (keys and sizes) as numpy arrays,
+collected once per index (or read from the saved ``pack.npz``): a vectorized
+per-tree descent gives each query its main leaf, and a (query, tree) pair
+whose main leaf holds fewer than k members runs the reference's
+backup-branch visit (`lsh.rs:203-215`) as a best-first walk of the trie in
+deviation-string order — provably the reference recursion's visit order —
+with each visited leaf capped at its remaining budget (bit-parity with a
+local replay of the reference recursion is gated in tests). The planned
+leaves are then read ONCE: a literal partition filter on a saved store, one
+Arrow pass folding each leaf against its queries (exact squared Euclidean,
+`lsh.rs:271-281`), one exchange for the per-leaf caps, the cross-tree dedup
+and the top-k. Tries the pack cannot hold keep the declarative plan
+(per-level join descent, window-ranked fill), which returns the same rows.
 
 Degenerate config (1 tree, max_node_size ≥ n) ≡ exact brute force — the
 oracle check.
@@ -38,16 +43,21 @@ level (only the current level's planes broadcast).
 
 from __future__ import annotations
 
+import heapq
 import json
 import os
 from dataclasses import dataclass
+from itertools import islice
+from typing import NamedTuple
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from vers_spark.functions import vector as V
 from vers_spark.operators.dedup import dedup_exact
+from vers_spark.operators.knn import RESULT_SCHEMA, _query_block, _ranked
 
 
 def _plane_side(vec_col, coeff_col, const_col):
@@ -59,13 +69,13 @@ def _plane_side(vec_col, coeff_col, const_col):
 # the tree id with the path's first pp_len bits (default _PP_LEN),
 # 'z'-padded so short/root paths get their own distinct value
 # ('01' → '01zz' ≠ '0100'): _pp = 'p<tree>_<prefix>'. Bounded directory
-# fan-out (≤ T × 2^pp_len + shorter-path buckets) and the serving joins
-# key on _pp too, so Spark's dynamic partition pruning scans only the
-# probed buckets — the LSH analogue of IVF's partitionBy(cluster_id)
-# posting lists (ivfflat.py save). The width is a save() parameter
-# recorded in the manifest; the probe side must derive _pp at the SAME
-# width or the equi-join never matches, so every serving call reads it
-# from params.
+# fan-out (≤ T × 2^pp_len + shorter-path buckets) and the serving plans
+# filter or join on _pp too, so only the probed buckets are scanned (a
+# literal _pp IN filter in search, dynamic partition pruning in the join
+# plans) — the LSH analogue of IVF's partitionBy(cluster_id) posting lists
+# (ivfflat.py save). The width is a save() parameter recorded in the
+# manifest; the probe side must derive _pp at the SAME width or it never
+# matches, so every serving call reads it from params.
 #
 # WHY the tree id is fused into the value (v3, round 13): DPP prunes each
 # partition column INDEPENDENTLY — with the old (tree_id, _pp-sans-tree)
@@ -192,6 +202,146 @@ _FRONTIER_MIN_LEAVES = 4096
 # row objects, ~2-4 KB/row at typical dims, and T tree tasks run concurrently
 # — so the level-synchronous distributed build takes over.
 _LOCAL_BUILD_MAX_ROWS = 500_000
+
+
+class _Pack(NamedTuple):
+    """The plane pack of one index instance: the trie arrays
+    ``(tree_keys, tree_rows, W, B, M, leaf_keys)`` held on the driver and
+    broadcast to the executors, plus per-tree leaf sizes aligned with
+    ``leaf_keys`` (driver-only: the serving planner reads them)."""
+
+    bc: object
+    depth: int
+    trees: int
+    trie: tuple
+    leaf_sizes: list
+
+
+def _descend(X, K, R, W, B, depth: int):
+    """Main-leaf keys of one tree for every row of ``X`` (n × d, f64):
+    each row folds the plane test at its current node until it reaches a
+    node without a plane. ``K``/``R`` are the tree's sorted inner-node keys
+    and their rows in ``W``/``B``; a key is the path as a '1'-prefixed
+    binary integer (root '' → 1, child = key·2 + bit).
+
+    BIT-EXACT with the declarative descent: Spark's V.dot is a left fold of
+    f64 products, and ``np.cumsum`` over the f64 product row is the same
+    sequential accumulation (pinned in
+    tests/test_lsh.py::test_assign_paths_pandas_equals_join_descent), so
+    build-time routing and query-time descent never disagree on a
+    boundary."""
+    key = np.ones(len(X), dtype=np.int64)
+    alive = np.arange(len(X))
+    for _ in range(depth):
+        if not len(K) or not len(alive):
+            break
+        ka = key[alive]
+        pos = np.searchsorted(K, ka)
+        pos[pos == len(K)] = 0  # safe index; miss-checked next
+        has = K[pos] == ka
+        if not has.any():
+            break
+        alive = alive[has]
+        pr = R[pos[has]]
+        dots = np.cumsum(W[pr] * X[alive], axis=1)[:, -1]
+        key[alive] = (key[alive] << 1) | ((dots + B[pr]) >= 0)
+    return key
+
+
+def _key_path(key) -> str:
+    """A node key back to its path bit-string."""
+    return format(int(key), "b")[1:]
+
+
+def _best_first(q, K, R, W, B, M, LK, dfs: bool):
+    """The leaves of one tree in probe order for query ``q``, as
+    ``(index into LK, dev, cost)``: a heap-ordered best-first walk of the
+    trie that pops the least (cost, dev) node (dfs: least dev), yields it if
+    it is a leaf, else pushes both children with the margin accumulated as
+    the declarative engines do (ascending-level f64 left fold; margin =
+    |dot+const| / ‖coeffs‖ with the cumsum kernel, bit-exact with
+    V.dot/V.magnitude). Both keys are MONOTONE along descent — cost adds
+    ≥ 0, dev only extends — so the pop order IS the global probe order:
+    the first n yields are exactly `_leaf_order`'s top n (parity pinned in
+    tests/test_lsh.py::test_leaf_order_pack_matches_full). In dfs order
+    the main leaf (all-agree deviation string) comes first."""
+    heap = [("", 1, 0.0)] if dfs else [(0.0, "", 1)]
+    while heap:
+        if dfs:
+            dev, key, cost = heapq.heappop(heap)
+        else:
+            cost, dev, key = heapq.heappop(heap)
+        p = int(np.searchsorted(LK, key))
+        if p < len(LK) and LK[p] == key:
+            yield p, dev, cost
+            continue
+        p = int(np.searchsorted(K, key))
+        if p >= len(K) or K[p] != key:
+            continue  # empty child side: neither leaf nor inner
+        pr = int(R[p])
+        dot = float(np.cumsum(W[pr] * q)[-1]) + float(B[pr])
+        qbit = dot >= 0.0
+        margin = abs(dot) / float(M[pr])
+        for cbit in (0, 1):
+            agree = (cbit == 1) == qbit
+            cdev = dev + ("0" if agree else "1")
+            ccost = cost if agree else cost + margin
+            ckey = (key << 1) | cbit
+            heapq.heappush(heap, (cdev, ckey, ccost) if dfs else (ccost, cdev, ckey))
+
+
+def _plan_leaves(
+    q_mat, pack: _Pack, sizes: list, k: int, backup_fill: bool, dfs: bool
+) -> dict:
+    """The serving plan of one query batch, on the driver: ``{(tree_id,
+    path): [(query row, cap), …]}`` — which leaves to read and how many of
+    their nearest members each query keeps from each.
+
+    Per tree a vectorized descent gives every query its main leaf. A
+    (query, tree) pair whose main leaf holds ≥ k members (``sizes``), or
+    any pair without ``backup_fill``, reads the main leaf with cap k. An
+    underfilled pair walks the leaves in probe order (``_best_first``)
+    until the leaves taken hold ≥ k members; each takes
+    ``cap = k − cum_before`` — the reference's budgeted backup recursion
+    (lsh.rs:203-215): in deviation-string order a member is admitted iff
+    its within-leaf rank ≤ k − Σ sizes of earlier leaves. Leaves of size 0
+    (no allowed member under ``allowed_ids``) are skipped and do not end
+    the walk. A main leaf's cap of k drops nothing: a member beyond the
+    k nearest of its own leaf cannot be among a query's k nearest."""
+    tree_keys, tree_rows, W, B, M, leaf_keys = pack.trie
+    plan: dict = {}
+    for t in range(pack.trees):
+        K, R, LK, LS = tree_keys[t], tree_rows[t], leaf_keys[t], sizes[t]
+        main = _descend(q_mat, K, R, W, B, pack.depth)
+        pos = np.minimum(np.searchsorted(LK, main), max(len(LK) - 1, 0))
+        for qi, key in enumerate(main.tolist()):
+            n_main = int(LS[pos[qi]]) if len(LK) and LK[pos[qi]] == key else 0
+            if n_main >= k or not backup_fill:
+                if n_main:
+                    plan.setdefault((t, _key_path(key)), []).append((qi, k))
+                continue
+            cum = 0
+            for p, _dev, _cost in _best_first(q_mat[qi], K, R, W, B, M, LK, dfs):
+                n = int(LS[p])
+                if not n:
+                    continue
+                plan.setdefault((t, _key_path(LK[p])), []).append((qi, k - cum))
+                cum += n
+                if cum >= k:
+                    break
+    return plan
+
+
+def _leaf_sizes_of(leaves: DataFrame, pack: _Pack) -> list:
+    """Per-tree member counts of ``leaves`` (a filtered leaf table) aligned
+    with the pack's leaf keys, from one aggregate; a leaf with no row
+    left counts 0."""
+    leaf_keys = pack.trie[5]
+    sizes = [np.zeros(len(lk), dtype=np.int64) for lk in leaf_keys]
+    for t, path, n in leaves.groupBy("tree_id", "path").agg(F.count(F.lit(1))).collect():
+        sizes[t][np.searchsorted(leaf_keys[t], int("1" + path, 2))] = n
+    return sizes
+
 
 def _local_build_schema(emb_type: str) -> str:
     """Output schema preserves the INPUT embedding element type — forcing a
@@ -522,10 +672,10 @@ class LSHForestIndex:
 
     # ---------------- search ----------------
 
-    # broadcast-size cap for the single-pass descent's plane pack (bytes of
-    # coeffs); above it fall back to the per-level join descent, whose
-    # memory is bounded regardless of forest size. Depth is capped by the
-    # int64 path encoding (≤ 62 bits) — deeper trees also fall back.
+    # broadcast-size cap for the plane pack (bytes of coeffs); above it the
+    # index serves through the declarative plans, whose memory is bounded
+    # regardless of forest size. Depth is capped by the int64 path encoding
+    # (≤ 62 bits) — deeper trees also fall back.
     _PACK_MAX_BYTES = 512 * 1024 * 1024
 
     def _pack_arrays(self) -> dict | None:
@@ -533,54 +683,62 @@ class LSHForestIndex:
         arrays (row order = collect order): W (n_planes × dim float64 —
         exact for both float- and double-typed coeffs), B/M (f64), tids,
         '1'-prefixed binary path keys, and the leaf catalog's (ltids,
-        lkeys). This is the expensive leg of pack construction (the Arrow
-        collect — 19-87 s cold at the 1M file-loaded store, BASELINE §r12)
-        and the exact payload :meth:`save` persists as ``pack.npz`` so
-        cold serving stops paying it per session. Returns None when the
-        trie is empty/too deep or exceeds the broadcast cap — callers
-        fall back to the per-level join descent.
+        lkeys, lsizes) — lsizes is each leaf's member count, which the
+        serving planner's fill rule reads. This is the expensive leg of
+        pack construction (the Arrow collect — 19-87 s cold at the 1M
+        file-loaded store, BASELINE §r12) and the exact payload
+        :meth:`save` persists as ``pack.npz`` so cold serving stops paying
+        it per session. A depth-0 forest packs as an empty trie whose only
+        leaf is the root. Returns None when the trie is too deep or
+        exceeds the broadcast cap — callers fall back to the declarative
+        plans.
 
         f64 ALWAYS: in-session forests carry array<double> coeffs (the
         b−a splits are computed in f64) and a float32 pack would silently
         quantize every dot — caught by the leaf-order cost parity test;
         f32-at-rest coeffs widen exactly, so f64 is exact for both
         storage types."""
-        depth = int(self.params["depth"])
-        if not 0 < depth <= 62:
+        if int(self.params["depth"]) > 62:
             return None
         # Arrow collect: 126k coeff rows arrive as numpy cells in ~2 s
         # where the py4j row path took ~20 s at the 1M forest
         pdf = self.hyperplanes.select(
             "tree_id", "path", "coeffs", "constant"
         ).toPandas()
-        if not len(pdf) or len(pdf) * len(pdf["coeffs"].iloc[0]) * 8 > self._PACK_MAX_BYTES:
+        dim = len(pdf["coeffs"].iloc[0]) if len(pdf) else 0
+        if len(pdf) * dim * 8 > self._PACK_MAX_BYTES:
             return None
-        W = np.array(pdf["coeffs"].tolist(), dtype=np.float64)
+        W = np.array(pdf["coeffs"].tolist(), dtype=np.float64).reshape(len(pdf), dim)
         B = pdf["constant"].to_numpy(dtype=np.float64)
         # plane magnitudes for the multiprobe margin — the same
         # f64 left-fold-then-sqrt as V.magnitude (cumsum = fold)
-        M = np.sqrt(np.cumsum(W * W, axis=1)[:, -1])
+        M = np.sqrt(np.cumsum(W * W, axis=1)[:, -1]) if len(W) else np.zeros(0)
         tids = pdf["tree_id"].to_numpy(dtype=np.int32)
         keys = np.fromiter(
             (int("1" + p, 2) for p in pdf["path"]),
             dtype=np.int64,
             count=len(pdf),
         )
-        # leaf-path keys per tree (settle detection for the packed
-        # leaf-order engine) — slim distinct over the leaf catalog
-        lp = self.leaves.select("tree_id", "path").distinct().toPandas()
+        # leaf-path keys and sizes per tree — one slim aggregate over the
+        # leaf catalog
+        lp = (
+            self.leaves.groupBy("tree_id", "path")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .toPandas()
+        )
         lkeys = np.fromiter(
             (int("1" + p, 2) for p in lp["path"]),
             dtype=np.int64,
             count=len(lp),
         )
         ltids = lp["tree_id"].to_numpy(dtype=np.int32)
+        lsizes = lp["n"].to_numpy(dtype=np.int64)
         return {
             "W": W, "B": B, "M": M, "tids": tids, "keys": keys,
-            "ltids": ltids, "lkeys": lkeys,
+            "ltids": ltids, "lkeys": lkeys, "lsizes": lsizes,
         }
 
-    def _assemble_pack(self, arrs: dict):
+    def _assemble_pack(self, arrs: dict) -> _Pack:
         """Per-tree sorted node-key structures + broadcast, from the flat
         arrays (collected or ``pack.npz``-loaded — identical assembly, so
         a persisted pack is bit-equal with a rebuilt one; parity-gated in
@@ -591,7 +749,6 @@ class LSHForestIndex:
         keys/tree instead of the 134M dense heap slots a direct
         node-index table would need."""
         T = int(self.params["num_trees"])
-        depth = int(self.params["depth"])
         tids, keys = arrs["tids"], arrs["keys"]
         tree_keys, tree_rows = [], []
         for t in range(T):
@@ -599,32 +756,41 @@ class LSHForestIndex:
             order = np.argsort(keys[mask], kind="stable")
             tree_keys.append(keys[mask][order])
             tree_rows.append(np.nonzero(mask)[0][order].astype(np.int64))
-        ltids, lkeys = arrs["ltids"], arrs["lkeys"]
-        leaf_keys = [np.sort(lkeys[ltids == t]) for t in range(T)]
-        return (
-            self.spark.sparkContext.broadcast(
-                (tree_keys, tree_rows, arrs["W"], arrs["B"], arrs["M"], leaf_keys)
-            ),
-            depth,
+        ltids, lkeys, lsizes = arrs["ltids"], arrs["lkeys"], arrs["lsizes"]
+        leaf_keys, leaf_sizes = [], []
+        for t in range(T):
+            mask = ltids == t
+            order = np.argsort(lkeys[mask], kind="stable")
+            leaf_keys.append(lkeys[mask][order])
+            leaf_sizes.append(lsizes[mask][order])
+        trie = (tree_keys, tree_rows, arrs["W"], arrs["B"], arrs["M"], leaf_keys)
+        return _Pack(
+            self.spark.sparkContext.broadcast(trie),
+            int(self.params["depth"]),
             T,
+            trie,
+            leaf_sizes,
         )
 
-    def _planes_pack(self):
+    def _planes_pack(self) -> _Pack | None:
         """Build + broadcast the hyperplane trie pack ONCE per index
         instance. A file-loaded store with a persisted ``pack.npz`` (see
         :meth:`save`) skips the Arrow collect entirely — a local numpy
-        read replaces the 19-87 s cold rebuild. Returns None when the
-        pack exceeds the broadcast cap or the trie is empty — callers
-        fall back to the per-level join descent. Amortizes the driver
-        collect + broadcast across every assign_paths call on this
+        read replaces the 19-87 s cold rebuild; a ``pack.npz`` written
+        without leaf sizes counts as absent and is re-collected. Returns
+        None when the pack exceeds the broadcast cap or the trie is too
+        deep — callers fall back to the declarative plans. Amortizes the
+        driver collect + broadcast across every serving call on this
         instance (VERDICT r10 #5)."""
         if hasattr(self, "_planes_pack_cache"):
             return self._planes_pack_cache
+        arrs = None
         pack_path = getattr(self, "_pack_path", None)
         if pack_path is not None and os.path.exists(pack_path):
             with np.load(pack_path) as z:
-                arrs = {k: z[k] for k in z.files}
-        else:
+                if "lsizes" in z.files:
+                    arrs = {k: z[k] for k in z.files}
+        if arrs is None:
             arrs = self._pack_arrays()
         pack = self._assemble_pack(arrs) if arrs is not None else None
         self._planes_pack_cache = pack
@@ -643,7 +809,7 @@ class LSHForestIndex:
         executor-resident pack per retired instance (ADVICE r11)."""
         pack = self.__dict__.pop("_planes_pack_cache", None)
         if pack is not None:
-            pack[0].unpersist(blocking=False)
+            pack.bc.unpersist(blocking=False)
 
     def assign_paths(
         self,
@@ -659,18 +825,14 @@ class LSHForestIndex:
         broadcast plane trie — the per-level shape scheduled ``depth``
         sequential join stages (~13 at the 1M/T16 config), and for a
         100-query serving batch the stage latency dwarfed the ~6 M flops of
-        actual plane math. The numpy kernel is BIT-EXACT with the
-        declarative fold it replaces: Spark's V.dot is a left fold of
-        f64(x)·f64(y) products, and ``np.cumsum`` over the f64 product row
-        is the same sequential accumulation (pinned bit-equal in
-        tests/test_lsh.py::test_assign_paths_pandas_equals_join_descent),
-        so build-time routing and query-time descent can never disagree on
-        a boundary. Falls back to the per-level join descent when the trie
-        exceeds the dense broadcast cap."""
+        actual plane math. The numpy kernel (:func:`_descend`, shared with
+        the serving planner) is BIT-EXACT with the declarative fold it
+        replaces. Falls back to the per-level join descent when the trie
+        exceeds the pack's broadcast cap or depth."""
         pack = self._planes_pack()
         if pack is None:
             return self._assign_paths_joins(df, id_col, vec_col)
-        bc, depth, T = pack
+        bc, depth, T = pack.bc, pack.depth, pack.trees
         emb_t = df.schema[vec_col].dataType.simpleString()
         id_t = df.schema[id_col].dataType.simpleString()
         src = df.select(
@@ -686,46 +848,17 @@ class LSHForestIndex:
                 if pdf.empty:
                     continue
                 X = np.array(pdf["q_vec"].tolist(), dtype=np.float64)
-                n = len(pdf)
-                out_q, out_v, out_t, out_p = [], [], [], []
-                for t in range(T):
-                    K, R = tree_keys[t], tree_rows[t]
-                    key = np.ones(n, dtype=np.int64)  # root path '' → 1
-                    alive = np.arange(n)
-                    bits = np.full((n, depth), -1, dtype=np.int8)
-                    for lvl in range(depth):
-                        if len(K) == 0:
-                            break
-                        ka = key[alive]
-                        pos = np.searchsorted(K, ka)
-                        pos[pos == len(K)] = 0  # safe index; miss-checked next
-                        has = K[pos] == ka
-                        if not has.any():
-                            break
-                        alive = alive[has]
-                        pr = R[pos[has]]
-                        # bit-exact V.dot twin: f64 products on the f64
-                        # pack, then cumsum = the same sequential left
-                        # fold Spark's aggregate performs
-                        prod = W[pr] * X[alive]
-                        dots = np.cumsum(prod, axis=1)[:, -1]
-                        side = (dots + B[pr]) >= 0
-                        bits[alive, lvl] = side
-                        key[alive] = (key[alive] << 1) | side
-                    paths = [
-                        "".join("1" if b == 1 else "0" for b in row if b >= 0)
-                        for row in bits
-                    ]
-                    out_q.append(pdf["query_id"])
-                    out_v.append(pdf["q_vec"])
-                    out_t.append(np.full(n, t, dtype=np.int32))
-                    out_p.append(paths)
+                paths = [
+                    _key_path(key)
+                    for t in range(T)
+                    for key in _descend(X, tree_keys[t], tree_rows[t], W, B, depth).tolist()
+                ]
                 yield pd.DataFrame(
                     {
-                        "query_id": pd.concat(out_q, ignore_index=True),
-                        "q_vec": pd.concat(out_v, ignore_index=True),
-                        "tree_id": np.concatenate(out_t),
-                        "path": [p for ps in out_p for p in ps],
+                        "query_id": pd.concat([pdf["query_id"]] * T, ignore_index=True),
+                        "q_vec": pd.concat([pdf["q_vec"]] * T, ignore_index=True),
+                        "tree_id": np.repeat(np.arange(T, dtype=np.int32), len(pdf)),
+                        "path": paths,
                     }
                 )
 
@@ -774,50 +907,167 @@ class LSHForestIndex:
         allowed_ids: DataFrame | None = None,
         backup_fill: bool = True,
         probe_mode: str = "dfs",
-        rerank: str = "blocked",
     ) -> DataFrame:
-        """Descend every tree, union leaf candidates, exact re-rank top-k.
+        """ANN search: per query the k nearest members (squared Euclidean,
+        ties by ascending id) of the leaves it reaches in every tree.
+        Returns (query_id, neighbour_id, distance, rank).
+
+        Bounded-batch contract: the query batch is collected to the driver
+        (at most ``validate.MAX_QUERY_BATCH_ROWS`` rows,
+        ``QueryBatchTooLarge`` above); query ids must be integral and come
+        back as long. With the plane pack (every trie up to 62 levels whose
+        coeffs fit ``_PACK_MAX_BYTES``) the search is one Arrow pass:
+
+        - the driver plans from the pack (:func:`_plan_leaves`): a
+          vectorized descent gives each (query, tree) its main leaf, and a
+          pair whose main leaf holds fewer than k members walks the leaves
+          in ``probe_mode`` order until the leaves taken hold ≥ k, each
+          capped at its remaining budget;
+        - the leaves are read once, through a literal ``_pp IN (…)``
+          filter (static partition pruning on a saved store) and a filter
+          on the planned (tree_id, path) pairs;
+        - one ``mapInPandas`` folds each planned leaf against its queries
+          (``vector_np.fold_distances``, bit-equal to the declarative
+          kernel) and emits each batch's top-``cap`` rows per leaf and
+          query; one exchange on query_id feeds the per-leaf cap window,
+          the (query, id) dedup across trees (the reference's DashSet
+          union, lsh.rs:266-270) and the top-k ranking.
+
+        Deeper or larger tries take :meth:`_search_declarative`, which
+        returns the same rows.
 
         ``backup_fill`` implements the reference's backup-branch rule
         (lsh.rs:203-215): per tree, the search is a BUDGETED depth-first
         visit — main branch first at every node, and whenever the visit has
         accumulated fewer than k candidates, the sibling (backup) subtree of
-        the deepest unvisited divergence is taken next, recursively. Each
+        the deepest unvisited divergence is taken next, recursively; each
         visited leaf contributes its ``remaining-budget`` nearest members
-        (lsh.rs:170-200). Declaratively: leaves sort per (query, tree) by
-        their DEVIATION STRING (bit i = 0 iff the leaf path agrees with the
-        query's plane side at ancestor level i — lexicographic order IS the
-        reference's DFS visit order), cumulative leaf sizes gate admission
-        (cum_before < k), and a within-leaf rank caps each leaf at its
-        remaining budget. Only underfilled (query, tree) pairs — main leaf
-        smaller than k — pay for this; filled pairs keep the single
-        main-leaf path.
+        (lsh.rs:170-200). ``backup_fill=False`` reads main leaves only.
 
         ``allowed_ids`` composes a metadata predicate INTO the candidate set
-        (broadcast semi-join BEFORE counting/fill, so underflow and budgets
-        operate on the filtered corpus ≡ an index built on the subset) —
-        with the degenerate 1-tree/unbounded-leaf config this is provably
-        the exact filtered KNN, the same pre-filter contract as IVF's
-        candidate_ids.
+        (semi-join BEFORE sizing/fill, so underflow and budgets operate on
+        the filtered corpus ≡ an index built on the subset; the filtered
+        leaf sizes come from one aggregate) — with the degenerate
+        1-tree/unbounded-leaf config this is provably the exact filtered
+        KNN, the same pre-filter contract as IVF's candidate_ids.
 
         ``probe_mode`` orders the budgeted visit of non-main leaves:
         - ``"dfs"`` (default): deviation-string lexicographic order — the
           reference recursion's exact visit order (lsh.rs:203-215).
         - ``"margin"``: multi-probe order (Lv et al. 2007, "Multi-Probe
           LSH"): leaves sort by the TOTAL QUERY MARGIN of their disagreeing
-          ancestor planes, Σ |coeffs·q + const| over levels where the leaf
-          took the opposite side. A small margin means the query sat near
-          that hyperplane, so the sibling subtree is the likeliest to hold
-          true neighbours — the same candidate budget buys higher recall
-          than blind DFS order. The main leaf costs 0 and still sorts
-          first; the deviation string is the deterministic tie-break."""
-        qp = self.assign_paths(queries, query_id, query_vec)
+          ancestor planes, Σ |coeffs·q + const| / ‖coeffs‖ over levels
+          where the leaf took the opposite side. A small margin means the
+          query sat near that hyperplane, so the sibling subtree is the
+          likeliest to hold true neighbours. The main leaf costs 0 and
+          still sorts first; the deviation string is the deterministic
+          tie-break."""
+        if probe_mode not in ("dfs", "margin"):
+            raise ValueError(f"unknown probe_mode {probe_mode!r}")
+        from vers_spark.functions import vector_np as VN
+
+        block = _query_block(queries, query_id, query_vec, "lsh_search")
+        if block is None:
+            return self.spark.createDataFrame([], RESULT_SCHEMA)
         leaves = self.leaves
         if allowed_ids is not None:
             keep = allowed_ids.select(
                 F.col(allowed_ids.columns[0]).cast("long").alias("id")
             )
             leaves = leaves.join(F.broadcast(keep), "id", "left_semi")
+        pack = self._planes_pack()
+        if pack is None:
+            return self._search_declarative(
+                queries, k, query_id, query_vec, leaves, backup_fill, probe_mode
+            )
+        q_ids, q_mat = block
+        sizes = pack.leaf_sizes if allowed_ids is None else _leaf_sizes_of(leaves, pack)
+        plan = _plan_leaves(q_mat, pack, sizes, k, backup_fill, probe_mode == "dfs")
+        if not plan:
+            return self.spark.createDataFrame([], RESULT_SCHEMA)
+
+        # the filters go in as SQL text — one parse instead of a py4j call
+        # per literal; paths are bit strings and _pp values 'p<tree>_<bits
+        # or z>', so quoting them is safe
+        by_tree: dict[int, list[str]] = {}
+        for t, path in sorted(plan):
+            by_tree.setdefault(t, []).append(f"'{path}'")
+        if "_pp" in leaves.columns:
+            w = self._pp_len()
+            pps = sorted({f"'p{t}_{(path + 'z' * w)[:w]}'" for t, path in plan})
+            leaves = leaves.filter(F.expr(f"_pp IN ({', '.join(pps)})"))
+        planned = F.expr(
+            " OR ".join(
+                f"(tree_id = {t} AND path IN ({', '.join(paths)}))"
+                for t, paths in by_tree.items()
+            )
+        )
+        bc = self.spark.sparkContext.broadcast((q_ids, q_mat, plan))
+
+        def leaf_topk(batches):
+            ids, mat, pl = bc.value
+            for pdf in batches:
+                out = []
+                for (t, path), grp in pdf.groupby(["tree_id", "path"]):
+                    b_ids = grp["id"].to_numpy(dtype=np.int64)
+                    b_mat = np.array(grp["embedding"].tolist(), dtype=np.float64)
+                    for qi, cap in pl.get((int(t), path), ()):
+                        dist = VN.fold_distances(mat[qi], b_mat, "sq_euclidean")
+                        sel = np.lexsort((b_ids, dist))[:cap]
+                        out.append(
+                            pd.DataFrame(
+                                {
+                                    "query_id": np.full(len(sel), ids[qi]),
+                                    "tree_id": np.full(len(sel), t, dtype=np.int32),
+                                    "path": path,
+                                    "neighbour_id": b_ids[sel],
+                                    "_dist": dist[sel],
+                                    "_cap": np.full(len(sel), cap, dtype=np.int32),
+                                }
+                            )
+                        )
+                if out:
+                    yield pd.concat(out, ignore_index=True)
+
+        cands = (
+            leaves.filter(planned)
+            .select("tree_id", "path", "id", "embedding")
+            .mapInPandas(
+                leaf_topk,
+                "query_id long, tree_id int, path string, neighbour_id long, "
+                "_dist double, _cap int",
+            )
+            .repartition("query_id")
+        )
+        wleaf = W.partitionBy("query_id", "tree_id", "path").orderBy(
+            F.asc("_dist"), F.asc("neighbour_id")
+        )
+        capped = (
+            cands.withColumn("_lr", F.row_number().over(wleaf))
+            .filter(F.col("_lr") <= F.col("_cap"))
+            .select("query_id", "neighbour_id", "_dist")
+            .dropDuplicates(["query_id", "neighbour_id"])
+        )
+        return _ranked(capped, "_dist", k)
+
+    def _search_declarative(
+        self,
+        queries: DataFrame,
+        k: int,
+        query_id: str,
+        query_vec: str,
+        leaves: DataFrame,
+        backup_fill: bool,
+        probe_mode: str,
+    ) -> DataFrame:
+        """:meth:`search` as a declarative plan, for tries the plane pack
+        cannot hold (deeper than 62 levels or coeffs above
+        ``_PACK_MAX_BYTES``): the per-level join descent, a leaf join for
+        the main leaves, and for underfilled (query, tree) pairs the
+        budgeted fill of :meth:`_backup_fill_candidates`. ``leaves`` is the
+        leaf table after the ``allowed_ids`` semi-join. Returns the same
+        rows as the planned path (gated in tests/test_lsh_backup.py)."""
+        qp = self.assign_paths(queries, query_id, query_vec)
 
         if backup_fill or "_pp" in self.leaves.columns:
             # backup_fill: three consumers below (count, filled-branch,
@@ -889,27 +1139,8 @@ class LSHForestIndex:
             cands = main.select("query_id", "q_vec", "id", "embedding").dropDuplicates(
                 ["query_id", "id"]  # DashSet union across trees (lsh.rs:266-270)
             )
-        # exact rerank: vectorized Arrow twin by default (bit-equal to the
-        # fold — see _rerank_blocked; same contract as search_multiprobe)
-        if rerank == "blocked":
-            scored = self._rerank_blocked(cands)
-        elif rerank == "fold":
-            scored = cands.withColumn(
-                "_dist", V.sq_euclidean(F.col("q_vec"), F.col("embedding"))
-            ).select("query_id", "id", "_dist")
-        else:
-            raise ValueError(f"unknown rerank {rerank!r}")
-        w = W.partitionBy("query_id").orderBy(F.asc("_dist"), F.asc("id"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select(
-                "query_id",
-                F.col("id").alias("neighbour_id"),
-                F.col("_dist").alias("distance"),
-                F.col("rn").alias("rank"),
-            )
-        )
+        scored = self._rerank_blocked(cands).withColumnRenamed("id", "neighbour_id")
+        return _ranked(scored, "_dist", k)
 
     def _sides_blocked(self, pairs: DataFrame) -> DataFrame:
         """Blocked-BLAS twin of the declarative per-plane fold (the
@@ -1113,15 +1344,9 @@ class LSHForestIndex:
         """Best-first multiprobe leaf enumeration INSIDE the plane pack —
         the r11 serving engine: one mapInPandas pass, zero join rounds.
 
-        Per (query, tree) row, a heap-ordered best-first walk of the trie:
-        pop the least (cost, dev) node (dfs mode: least dev), settle it if
-        its path is a leaf, else expand both children with the margin
-        accumulated exactly as the declarative engines do (ascending-level
-        f64 left fold; margin = |dot+const| / ‖coeffs‖ with the cumsum
-        kernel, bit-exact with V.dot/V.magnitude). Both keys are MONOTONE
-        along descent — cost adds ≥ 0, dev only extends (lexicographic
-        prefix < extension) — so the pop order IS the global probe order
-        and the first ``n_probes`` settles are EXACTLY `_leaf_order`'s
+        Per (query, tree) row, the first ``n_probes`` leaves of the
+        best-first trie walk :func:`_best_first` (the serving planner's
+        backup fill walks the same function) — EXACTLY `_leaf_order`'s
         top-``n_probes`` (no beam, no approximation guard; parity pinned
         in tests/test_lsh.py::test_leaf_order_pack_matches_full). Work is
         O(pairs × visited nodes × dim) inside numpy/heapq — the frontier
@@ -1130,14 +1355,12 @@ class LSHForestIndex:
         pack = self._planes_pack()
         if pack is None:
             raise RuntimeError("_leaf_order_pack requires the plane pack")
-        bc, depth, T = pack
+        bc = pack.bc
         id_t = pairs.schema["query_id"].dataType.simpleString()
         src = pairs.select("query_id", "tree_id", "q_vec")
         dfs = probe_mode == "dfs"
 
         def enumerate_best(batches):
-            import heapq
-
             import numpy as np
             import pandas as pd
 
@@ -1149,42 +1372,18 @@ class LSHForestIndex:
                 for qid, t, qv in zip(
                     pdf["query_id"], pdf["tree_id"], pdf["q_vec"]
                 ):
-                    q = np.asarray(qv, dtype=np.float64)
                     t = int(t)
-                    K, R, LK = tree_keys[t], tree_rows[t], leaf_keys[t]
-                    heap = [("", 1, 0.0)] if dfs else [(0.0, "", 1)]
-                    settled = 0
-                    while heap and settled < n_probes:
-                        if dfs:
-                            dev, key, cost = heapq.heappop(heap)
-                        else:
-                            cost, dev, key = heapq.heappop(heap)
-                        p = int(np.searchsorted(LK, key))
-                        if p < len(LK) and LK[p] == key:
-                            oq.append(qid)
-                            ot.append(t)
-                            op.append(format(key, "b")[1:])
-                            od.append(dev)
-                            oc.append(cost)
-                            settled += 1
-                            continue
-                        p = int(np.searchsorted(K, key))
-                        if p >= len(K) or K[p] != key:
-                            continue  # empty child side: neither leaf nor inner
-                        pr = int(R[p])
-                        prod = W[pr] * q
-                        dot = float(np.cumsum(prod)[-1]) + float(B[pr])
-                        qbit = dot >= 0.0
-                        margin = abs(dot) / float(M[pr])
-                        for cbit in (0, 1):
-                            agree = (cbit == 1) == qbit
-                            cdev = dev + ("0" if agree else "1")
-                            ccost = cost if agree else cost + margin
-                            ckey = (key << 1) | cbit
-                            heapq.heappush(
-                                heap,
-                                (cdev, ckey, ccost) if dfs else (ccost, cdev, ckey),
-                            )
+                    LK = leaf_keys[t]
+                    walk = _best_first(
+                        np.asarray(qv, dtype=np.float64),
+                        tree_keys[t], tree_rows[t], W, B, M, LK, dfs,
+                    )
+                    for p, dev, cost in islice(walk, n_probes):
+                        oq.append(qid)
+                        ot.append(t)
+                        op.append(_key_path(LK[p]))
+                        od.append(dev)
+                        oc.append(cost)
                 yield pd.DataFrame(
                     {
                         "query_id": oq,
@@ -1570,7 +1769,9 @@ class LSHForestIndex:
     def _backup_fill_candidates(
         self, under: DataFrame, leaves: DataFrame, k: int, probe_mode: str = "dfs"
     ) -> DataFrame:
-        """Budgeted whole-tree visit for underfilled (query, tree) pairs.
+        """Budgeted whole-tree visit for underfilled (query, tree) pairs —
+        the fill leg of :meth:`_search_declarative` (the planned search
+        walks the pack instead, :func:`_plan_leaves`).
 
         The reference's recursion (lsh.rs:203-215) visits leaves in
         lexicographic order of their deviation string and takes
@@ -1598,14 +1799,7 @@ class LSHForestIndex:
         sizes = leaves.groupBy("tree_id", "path").agg(F.count(F.lit(1)).alias("leaf_n"))
         order = [F.asc("dev")] if probe_mode == "dfs" else [F.asc("cost"), F.asc("dev")]
         wdev = W.partitionBy("query_id", "tree_id").orderBy(*order)
-        if self._planes_pack() is not None and leaves is self.leaves:
-            # packed engine: exact, join-free (leaves must be the index's
-            # own — the pack's leaf-key sets were built from them; the
-            # filtered-leaves call path keeps the declarative engines)
-            ordered = self._leaf_order_pack(
-                under, probe_mode, n_probes=k, keep_keys=True
-            )
-        elif self._n_leaf_paths() >= _FRONTIER_MIN_LEAVES:
+        if self._n_leaf_paths() >= _FRONTIER_MIN_LEAVES:
             ordered = self._leaf_order_frontier(
                 under, leaves, probe_mode, n_probes=k, keep_keys=True
             )

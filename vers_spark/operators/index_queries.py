@@ -248,10 +248,10 @@ def _pq_fixed(spark: SparkSession, sf_dir: str) -> list:
     path) and only the FINAL 8 centroids are collected (value-exact f64
     round-trip through Python floats) and cached as plain values: the
     codebook is k·dsub doubles, so serving embeds it as LITERAL expressions
-    instead of joining against a centroid table. The four subspace builds
-    run CONCURRENTLY (driver threads — each build's jobs underfill 32
-    cores, so the scheduler interleaves them; wall ≈ one subspace). This is
-    the train-once/serve-many materialization a real deployment does by
+    instead of joining against a centroid table. The four subspace codebooks
+    train together in ONE fused ``lloyd_fixed_multi`` chain on the calling
+    thread (each Lloyd iteration scans the corpus once for all four). This
+    is the train-once/serve-many materialization a real deployment does by
     writing the codebook to disk. Returns [[(cluster_id, [floats]), ...] per
     subspace], each sorted by cluster_id."""
     from vers_spark.indexes.ivfflat import lloyd_fixed_multi

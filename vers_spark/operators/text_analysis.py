@@ -487,8 +487,11 @@ def doc_hll_distinct(
     243 s → ~11 s.
     Hash space is ~2^41 (three 31-bit token hashes × 31-weights):
     collisions ~n²/2^42 shift both engines' counts together."""
-    docs = load_table(spark, sf_dir, "documents")
-    spread = docs.repartition(spark.sparkContext.defaultParallelism)
+    from vers_spark.functions.spread import cpu_spread
+
+    # gated spread: HLL registers are a max over distinct hashes, so the
+    # result cannot depend on partitioning
+    spread = cpu_spread(load_table(spark, sf_dir, "documents"))
     # ONE tokenize+hash pass, then every consumer (registers, histogram,
     # exact count) derives from the DISTINCT hash table: bucket and rho
     # are functions of h, so max-per-bucket over distinct h equals max

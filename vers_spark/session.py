@@ -43,6 +43,28 @@ _JIT_FLAGS = (
 )
 
 
+# The driver heap of the local harness when SPARK_GRAFT_DRIVER_MEM is unset:
+# the large-scale (1M×300, T=16) builds need 48g, but a fixed 48g cap on a
+# smaller host lets G1 grow the single JVM past physical memory and the
+# kernel OOM-kills it mid-run. Half of the host's memory leaves room for the
+# Python workers and the page cache; hosts with 96 GB or more keep 48g.
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def _driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: SPARK_GRAFT_DRIVER_MEM when set, else
+    min(48g, half of ``MemTotal``); 48g when ``meminfo`` cannot be read."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{_MAX_DRIVER_MEM_MB}m"
+    return f"{min(_MAX_DRIVER_MEM_MB, total_kb // 2048)}m"
+
+
 def _jvm_alive() -> bool | None:
     """True if any OTHER process looks like a JVM (java argv[0] or an
     org.apache.spark class anywhere on the command line — catches renamed
@@ -134,7 +156,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.driver.extraJavaOptions", _JIT_FLAGS)
         .config("spark.local.dir", _local_dirs())
         .config("spark.ui.enabled", "false")
