@@ -75,3 +75,23 @@ def test_incremental_counts_equal_full_recount(spark, sf_dir):
     inc = {r["token"]: r["seq"] for r in v_inc.collect()}
     full = {r["token"]: r["seq"] for r in v_full.collect()}
     assert inc == full
+
+
+@pytest.mark.parametrize("recount_max", [bpe._RECOUNT_MAX_VOCAB, 0])
+def test_vocab_tokenized_once_per_training(spark, sf_dir, monkeypatch, recount_max):
+    """Auto mode sizes the vocab and then trains on it: one
+    ``_vocab_from_docs`` pass per training, whichever mode the probe picks
+    (recount for this corpus; incremental with the bound forced to 0), and
+    the merges equal an explicit-mode run."""
+    from vers_spark.operators import _qcache
+    from vers_spark.sources.tables import load_table
+
+    monkeypatch.setattr(_qcache, "_CACHE", {})
+    monkeypatch.setattr(bpe, "_RECOUNT_MAX_VOCAB", recount_max)
+    calls = []
+    real = bpe._vocab_from_docs
+    monkeypatch.setattr(bpe, "_vocab_from_docs", lambda docs: calls.append(1) or real(docs))
+    merges, _ = bpe.train_merges(spark, sf_dir, k=3)
+    assert len(calls) == 1
+    mode = "recount" if recount_max else "incremental"
+    assert merges == bpe.train_merges_on(load_table(spark, sf_dir, "documents"), 3, mode=mode)[0]

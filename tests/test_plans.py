@@ -227,8 +227,9 @@ def test_band_candidates_bucket_cap(spark, sf_dir):
 
 def test_minhash_pipeline_shapes(spark, sf_dir):
     """The near-dup pipeline must never degrade to a cartesian product (the
-    band join is equi on (band_id, band_key)) and its signature aggregate
-    must have a map-side partial."""
+    band join is equi on (band_id, band_key)) and its band-candidate dedup
+    aggregate (``band_candidates``' dropDuplicates) must have a map-side
+    partial."""
     from vers_spark.operators.text_dedup import minhash_neardup_pairs
 
     docs = load_table(spark, sf_dir, "documents")
@@ -236,6 +237,21 @@ def test_minhash_pipeline_shapes(spark, sf_dir):
     plan = audit.executed_plan(df)
     assert "CartesianProduct" not in plan
     assert audit.has_partial_aggregate(df)
+
+
+def test_dedup_signatures_row_local(spark, sf_dir):
+    """MinHash and SimHash signatures depend on one document each, so both
+    are computed by the row-local Arrow kernel: no aggregate and no
+    exchange keyed on doc_id anywhere in the executed plan (the spread's
+    round-robin exchange is the only shuffle)."""
+    from vers_spark.operators.text_dedup import minhash_signatures, simhash
+
+    docs = load_table(spark, sf_dir, "documents")
+    for df in (minhash_signatures(docs), simhash(docs)):
+        plan = audit.executed_plan(df)
+        assert "HashAggregate" not in plan, plan
+        assert not re.search(r"Exchange hashpartitioning\(doc_id", plan), plan
+        assert "MapInPandas" in plan, plan
 
 
 def test_simhash_pipeline_shapes(spark, sf_dir):

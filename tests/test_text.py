@@ -845,3 +845,110 @@ def test_leakage_split_no_cross_pairs_and_covers_corpus(spark, sf_dir):
     assert sum(r["n_docs"] for r in rows) == total
     train = next(r for r in rows if r["split"] == "train")
     assert 0.7 <= train["n_docs"] / total <= 0.9
+
+
+# ----------------------------------------------- dedup kernel bit-equality
+#
+# The expression chain the Arrow kernel (functions.text_np) replaced, kept as
+# the reference: ws_tokens → word_shingles → array_distinct → base_hash →
+# minhash_value min-aggregates, and the 32-vote SimHash aggregate.
+
+
+def _chain_shingles(docs, n=3):
+    from vers_spark.functions import text as TX
+
+    toks = TX.ws_tokens(F.col("text"))
+    return docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", F.array_distinct(TX.word_shingles(toks, n)).alias("shingles")
+    )
+
+
+def _chain_signatures(docs, backend):
+    from vers_spark.functions import text as TX
+
+    sh = _chain_shingles(docs).select("doc_id", F.explode("shingles").alias("shingle"))
+    base = TX.base_hash(F.col("shingle"), backend)
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min(TX.minhash_value(base, a, b)).alias(f"h{i}")
+            for i, (a, b) in enumerate(TX.MINHASH_COEFFS)
+        ]
+    )
+
+
+def _chain_simhash(docs, backend):
+    from vers_spark.functions import text as TX
+
+    toks = docs.select("doc_id", F.explode(TX.ws_tokens(F.col("text"))).alias("t"))
+    hv = TX.base_hash(F.col("t"), backend)
+    votes = [
+        F.sum(F.when(F.shiftright(hv, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{b}")
+        for b in range(32)
+    ]
+    sim = sum(
+        (F.when(F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
+         for b in range(32)),
+        F.lit(0).cast("long"),
+    )
+    return toks.groupBy("doc_id").agg(*votes).select("doc_id", sim.alias("simhash"))
+
+
+# NULL text (no row), empty and blank docs, one and two tokens (the n=3
+# short-doc rule), leading/trailing spaces and tabs, CR/LF/VT/FF, NBSP and
+# U+2028 (not in Java's \s), U+001C, and case mappings that differ between
+# naive implementations: dotted/dotless i, final sigma, capital sharp s,
+# titlecase digraphs, ligatures, the Kelvin sign, astral-plane emoji.
+DEDUP_EDGE_TEXTS = [
+    None, "", " ", "   ", "one", "one two", "  a b c  ", "\tlead tab", "trail tab\t",
+    " \t mixed \t lead", "cr\r\nlf line", "vt\x0bff\x0c x y", "nb sp here now",
+    "ls sep a b", "\x1cfs a b", "İstanbul ıi İİ", "ΟΔΟΣ ΣΑΣ ΣΑΣ.", "STRASSE ẞ ß",
+    "Ǆ ǅ ǆ Ǳ", "ﬁ ﬂ ligature ﬃ", "K kelvin K", "emoji 😀 here 😀 here",
+    "dup dup dup dup dup", "A A A B A A A", "tail space ", "x\n", "\n",
+]
+
+
+def _kernel_inputs(spark, sf_oracle_dir):
+    return {
+        "documents": spark.read.parquet(f"{sf_oracle_dir}/documents.parquet").select("doc_id", "text"),
+        "edge": spark.createDataFrame(
+            list(enumerate(DEDUP_EDGE_TEXTS)), "doc_id long, text string"
+        ),
+    }
+
+
+@pytest.mark.parametrize("which", ["documents", "edge"])
+def test_dedup_kernel_bit_equal_to_expression_chain(spark, sf_oracle_dir, which):
+    """The Arrow kernel's shingle arrays (first-seen order), all 16 MinHash
+    minima and the SimHash equal the expression chain's on the sf0.01
+    documents and on the edge fixture, for both hash backends."""
+    from vers_spark.operators.text_dedup import minhash_signatures, shingle_array, simhash
+
+    docs = _kernel_inputs(spark, sf_oracle_dir)[which]
+    n_docs = docs.filter(F.col("text").isNotNull()).count()
+    want = {r["doc_id"]: list(r["shingles"]) for r in _chain_shingles(docs).collect()}
+    got = {r["doc_id"]: list(r["shingles"]) for r in shingle_array(docs).collect()}
+    assert len(got) == n_docs and got == want
+    for backend in ("md5", "xxhash64"):
+        want = {r["doc_id"]: tuple(r[1:]) for r in _chain_signatures(docs, backend).collect()}
+        long_form = minhash_signatures(docs, hash_backend=backend).collect()
+        got: dict = {}
+        for r in sorted(long_form, key=lambda r: (r["doc_id"], r["h_idx"])):
+            got[r["doc_id"]] = got.get(r["doc_id"], ()) + (r["min_hash"],)
+        assert len(got) == n_docs and got == want, backend
+        want = {r["doc_id"]: r["simhash"] for r in _chain_simhash(docs, backend).collect()}
+        got = {r["doc_id"]: r["simhash"] for r in simhash(docs, hash_backend=backend).collect()}
+        assert len(got) == n_docs and got == want, backend
+
+
+def test_xxhash64_kernel_equals_spark(spark):
+    """The pure-Python XXH64 (seed 42) is Spark's xxhash64 over UTF-8 bytes
+    at every tail shape (0–3 single bytes, a 4-byte word, 8-byte lanes, the
+    32-byte stripe loop) and on multibyte text; base_hashes applies abs."""
+    from vers_spark.functions import text_np as TN
+
+    strs = ["x" * n for n in (0, 1, 3, 4, 7, 8, 9, 31, 32, 33)]
+    strs += ["héllo wörld", "日本語テキスト" * 3, "😀" * 9, "ΣΑΣ ẞ İ", "a b c" * 5]
+    df = spark.createDataFrame([(s,) for s in strs], "s string")
+    rows = df.select(F.xxhash64("s").alias("h"), F.abs(F.xxhash64("s")).alias("a")).collect()
+    assert [TN.xxhash64(s.encode()) for s in strs] == [r["h"] for r in rows]
+    assert TN.base_hashes(strs, "xxhash64").tolist() == [r["a"] for r in rows]

@@ -3,7 +3,9 @@ quality features — the LLM-training-data-pipeline surface (SURVEY.md §2.E
 "text analysis" north star; no counterpart in the reference, which is
 vectors-only).
 
-All pure column expressions (JVM codegen). Hashing discipline: the cross-
+All pure column expressions (JVM codegen); the dedup hashing (shingles,
+MinHash, SimHash) runs as their bit-equal Arrow kernel in
+:mod:`vers_spark.functions.text_np`. Hashing discipline: the cross-
 engine deterministic base hash is the first 15 hex chars of md5 folded to a
 60-bit integer — Spark ``conv(substr(md5(x),1,15),16,10)`` and DuckDB
 ``list_reduce`` over hex digits produce identical values, so every

@@ -239,10 +239,13 @@ def train_merges(
 
     def build() -> tuple[list, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
-        vocab = None
+        vocab = _vocab_from_docs(docs)
         train_mode = mode
         if mode == "auto":
-            n_types = _vocab_from_docs(docs).count()
+            # tokenize once: the size probe counts the same materialized
+            # vocab the rounds then train on (either mode)
+            vocab = vocab.localCheckpoint(eager=True)
+            n_types = vocab.count()
             train_mode = "recount" if n_types <= _RECOUNT_MAX_VOCAB else "incremental"
             # r15: recount mode ⟹ the vocab is bounded (≤ _RECOUNT_MAX_VOCAB
             # rows), yet its aggregate inherits all spark.sql.shuffle
@@ -256,7 +259,7 @@ def train_merges(
                     spark.sparkContext.defaultParallelism,
                     -(-n_types // _VOCAB_ROWS_PER_TASK),
                 ))
-                vocab = _vocab_from_docs(docs).coalesce(parts)
+                vocab = vocab.coalesce(parts)
         return train_merges_on(docs, k, mode=train_mode, vocab=vocab)
 
     return memo(("bpe_train", sf_dir, k, mode), build)

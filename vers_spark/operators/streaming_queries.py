@@ -573,14 +573,8 @@ def stream_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph hash-matches the SAME DuckDB oracle as minhash_neardup. At
     100 TB the band store is bucketed by (band_id, band_key) and each
     micro-batch's join partition-prunes to its own keys."""
-    from vers_spark.operators.text_dedup import (
-        band_candidates,
-        jaccard_verify,
-        minhash_bands,
-        minhash_signatures_from_shingles,
-        shingle_array,
-        shingle_sets,
-    )
+    from vers_spark.functions.text_np import minhash_rows
+    from vers_spark.operators.text_dedup import jaccard_verify, minhash_bands, shingle_array
     from vers_spark.operators.text_dedup_queries import NEAR_TAIL, _augmented
 
     corpus = _augmented(spark, sf_dir, 7, NEAR_TAIL).select("doc_id", "text")
@@ -598,8 +592,7 @@ def stream_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = scratch_dir("vs_ndstream_ck_")
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        sh = shingle_sets(batch_df, 3)
-        bands = minhash_bands(minhash_signatures_from_shingles(sh))
+        bands = minhash_bands(minhash_rows(batch_df, 3, keep_shingles=False))
         bands.write.mode("append").parquet(band_store)
         store = spark.read.parquet(band_store)
         new = bands.select(F.col("doc_id").alias("doc_n"), "band_id", "band_key")

@@ -5,8 +5,10 @@ All hashing uses the cross-engine deterministic md5-fold (functions.text), so
 even the MinHash pipeline is DuckDB-oracle-checkable end to end.
 
 Scale shapes:
-- MinHash signatures: one explode + ONE groupBy with 16 min-aggregates
-  (map-side combine), then an unpivot — no 16× row blowup.
+- Shingles, MinHash and SimHash signatures: one row-local Arrow kernel
+  (functions.text_np) per document — tokenize, shingle, hash and reduce in
+  numpy, bit-equal to the expression chain; no exploded shingle rows and no
+  signature exchange.
 - Band join: candidates only where a 4-hash band collides; the self-join keys
   on (band_id, band_key) — skew handled by AQE; verification joins are
   candidate-sized, not corpus².
@@ -17,17 +19,14 @@ Scale shapes:
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vers_spark.functions import text as TX
+from vers_spark.functions import text_np as TN
 from vers_spark.functions.spread import cpu_spread
 
 BAND_SIZE = 4
 BAND_POWERS = [1, 31, 961, 29791]  # weight of position h_idx % 4 inside a band
-SIMHASH_BITS = 32
 SIMHASH_CHUNKS = 4
 
 
@@ -35,60 +34,12 @@ def shingle_array(
     docs: DataFrame, n_shingle: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, shingles array<string>) — DISTINCT word n-gram shingles per
-    document, computed ROW-LOCALLY (``array_distinct`` over the shingle
-    window transform). Per-doc dedup never needs cross-row data, so the
-    explode + global ``dropDuplicates`` shuffle the old shape paid is pure
-    waste — at 100 TB this stage is embarrassingly parallel, zero exchanges
-    (guide §2.4: remove shuffles outright). Docs with NULL text yield no
-    row (the explode path dropped them implicitly). The null filter sits on
-    the SOURCE column, not the computed array: a filter on the projected
-    alias would be pushed below the projection with the expression
-    substituted in, evaluating the whole tokenize+shingle+distinct chain
-    twice per row (the guide §4.4 duplication, with built-ins) — and
-    ``shingles`` is null exactly iff ``text`` is null (ws_tokens is a
-    split/trim/lower chain, word_shingles a null-propagating transform)."""
-    toks = TX.ws_tokens(F.col(text_col))
-    return (
-        cpu_spread(docs)
-        .filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.array_distinct(TX.word_shingles(toks, n_shingle)).alias("shingles"),
-        )
-    )
-
-
-def shingle_sets(docs: DataFrame, n_shingle: int = 3, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, shingle) — DISTINCT word n-gram shingles per document
-    (exploded view of :func:`shingle_array`; same rows as the historical
-    explode + dropDuplicates shape, without its shuffle)."""
-    return shingle_array(docs, n_shingle, id_col, text_col).select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    )
-
-
-def _sig_wide(sets: DataFrame, num_hashes: int, hash_backend: str) -> DataFrame:
-    """(doc_id, h0..h{n-1}) MinHash signature table from the row-local
-    shingle arrays: explode (NO dedup shuffle — the arrays are already
-    distinct) then ONE groupBy(doc_id) whose 16 min-aggregates share the
-    scalar base-hash subexpression under whole-stage codegen.
-
-    Deliberately NOT a row-local array_min projection: higher-order-function
-    lambdas are CodegenFallback with no subexpression elimination, and
-    CollapseProject inlines a struct-of-16-lambdas once per field reference
-    — measured ~5× slower end-to-end than this aggregate shape (the md5
-    transform re-evaluated per referencing expression). The aggregate keys
-    on doc_id with map-side partial combine, so the exchange carries one
-    17-column row per document — the same bytes the projection shape would
-    have shuffled into the band join anyway."""
-    sh = sets.select("doc_id", F.explode("shingles").alias("shingle"))
-    base = TX.base_hash(F.col("shingle"), hash_backend)
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(TX.minhash_value(base, a, b)).alias(f"h{i}")
-            for i, (a, b) in enumerate(TX.MINHASH_COEFFS[:num_hashes])
-        ]
-    )
+    document, in first-seen order: the dedup kernel
+    (:func:`text_np.minhash_rows`) with zero hashes. Per-doc dedup never
+    needs cross-row data, so the stage is embarrassingly parallel with zero
+    exchanges past the gated spread (guide §2.4). Docs with NULL text yield
+    no row."""
+    return TN.minhash_rows(cpu_spread(docs), n_shingle, 0, id_col=id_col, text_col=text_col)
 
 
 def minhash_signatures(
@@ -100,19 +51,19 @@ def minhash_signatures(
     hash_backend: str = "md5",
 ) -> DataFrame:
     """(doc_id, h_idx, min_hash): num_hashes affine hashes over the shingle
-    set, one shuffle (16 min-aggs in a single groupBy, then unpivot).
+    set, computed per document in one Arrow pass, then unpivoted.
 
     ``hash_backend``: "md5" (oracle-certified default) | "xxhash64" (the
     100 TB deployment swap — see functions.text.base_hash).
 
-    Shuffle discipline: per-doc shingle dedup is row-local (array_distinct,
-    :func:`shingle_array`) so the historical global dropDuplicates exchange
-    is gone; the one remaining shuffle is the signature aggregate itself
-    (``_sig_wide`` — see its docstring for why an aggregate, not a
-    row-local array_min projection). Values are bit-identical (same base
-    hash, same affine arithmetic, min over the same distinct set)."""
-    wide = _sig_wide(
-        shingle_array(docs, n_shingle, id_col, text_col), num_hashes, hash_backend
+    Shuffle discipline: a signature depends on its own document only, so
+    the kernel (:func:`text_np.minhash_rows`) tokenizes, shingles, hashes
+    and takes the 16 minima row-locally — no exploded shingle rows and no
+    ``groupBy(doc_id)`` exchange; the only shuffle is the gated spread.
+    Values are bit-identical to the expression chain (same base hash, same
+    affine arithmetic, min over the same distinct set; test-gated)."""
+    wide = TN.minhash_rows(
+        cpu_spread(docs), n_shingle, num_hashes, hash_backend, id_col, text_col, keep_shingles=False
     )
     stack = ", ".join(f"{i}, h{i}" for i in range(num_hashes))
     return wide.selectExpr(
@@ -120,31 +71,22 @@ def minhash_signatures(
     ).select("doc_id", F.col("h_idx").cast("int").alias("h_idx"), "min_hash")
 
 
-def minhash_signatures_from_shingles(
-    sh: DataFrame, num_hashes: int = 16, hash_backend: str = "md5"
-) -> DataFrame:
-    base = TX.base_hash(F.col("shingle"), hash_backend)
-    aggs = [
-        F.min(TX.minhash_value(base, a, b)).alias(f"h{i}")
-        for i, (a, b) in enumerate(TX.MINHASH_COEFFS[:num_hashes])
+def minhash_bands(wide: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """(doc_id, band_id, band_key) from the kernel's wide signature rows:
+    the position-weighted sum of each band's BAND_SIZE minima — exact
+    integer arithmetic, row-local, identical in the SQL twin."""
+    band_structs = [
+        F.struct(
+            F.lit(j).alias("band_id"),
+            sum(
+                F.col(f"h{j * BAND_SIZE + k}") * F.lit(BAND_POWERS[k])
+                for k in range(BAND_SIZE)
+            ).alias("band_key"),
+        )
+        for j in range(num_hashes // BAND_SIZE)
     ]
-    wide = sh.groupBy("doc_id").agg(*aggs)
-    stack = ", ".join(f"{i}, h{i}" for i in range(num_hashes))
-    return wide.selectExpr(
-        "doc_id", f"stack({num_hashes}, {stack}) as (h_idx, min_hash)"
-    ).select("doc_id", F.col("h_idx").cast("int").alias("h_idx"), "min_hash")
-
-
-def minhash_bands(sigs: DataFrame, band_size: int = BAND_SIZE) -> DataFrame:
-    """(doc_id, band_id, band_key): position-weighted sum per band — exact
-    integer arithmetic, order-independent, identical in the SQL twin."""
-    weight = F.element_at(
-        F.array(*[F.lit(p) for p in BAND_POWERS[:band_size]]), (F.col("h_idx") % band_size) + 1
-    )
-    return (
-        sigs.withColumn("band_id", F.expr(f"h_idx div {band_size}"))
-        .groupBy("doc_id", "band_id")
-        .agg(F.sum(F.col("min_hash") * weight).alias("band_key"))
+    return wide.select("doc_id", F.explode(F.array(*band_structs)).alias("b")).select(
+        "doc_id", "b.band_id", "b.band_key"
     )
 
 
@@ -215,39 +157,24 @@ def minhash_neardup_pairs(
     """Full MinHash-LSH dedup pipeline: signatures → bands → candidate pairs →
     exact-Jaccard verification.
 
-    Stage-count discipline (same result as the composable pieces above,
-    fewer shuffles): per-doc shingle dedup is row-local (array_distinct —
-    the old global dropDuplicates exchange is gone), signatures are ONE
-    codegen'd aggregate (see ``_sig_wide``), band keys are row-local
-    expressions over the wide signature row, and verification attaches the
+    Stage-count discipline: one Arrow pass (:func:`text_np.minhash_rows`)
+    emits each document's distinct shingle array AND its wide signature row
+    (no exploded shingle rows, no signature aggregate), band keys are
+    row-local expressions over the wide row, and verification attaches the
     per-doc shingle arrays with two joins and intersects locally instead of
     re-shuffling exploded shingle rows (guide §2.4)."""
-    # the shingle-array table feeds signatures AND both sides of the
-    # verification join — materialize it once (at 100 TB this would be a
+    # the kernel's rows feed the band keys AND both sides of the
+    # verification join — materialize them once (at 100 TB this would be a
     # persisted Parquet intermediate). localCheckpoint, not .cache(): the
     # columnar cache builder does a per-value UnsafeArrayData copy for
     # nested array<string> columns, measured ~20% slower end-to-end than
-    # storing the task outputs as serialized rows (r14 variants study,
-    # tools/r14_minhash_variants.py as of commit f1b3580; no-materialization
-    # is 4× worse — the md5-bound chain would run once per consumer).
-    sets = shingle_array(docs, n_shingle).localCheckpoint(eager=True)
-    wide = _sig_wide(sets, num_hashes, hash_backend)
-    n_bands = num_hashes // BAND_SIZE
-    band_structs = [
-        F.struct(
-            F.lit(j).alias("band_id"),
-            sum(
-                F.col(f"h{j * BAND_SIZE + k}") * F.lit(BAND_POWERS[k])
-                for k in range(BAND_SIZE)
-            ).alias("band_key"),
-        )
-        for j in range(n_bands)
-    ]
-    bands = wide.select("doc_id", F.explode(F.array(*band_structs)).alias("b")).select(
-        "doc_id", "b.band_id", "b.band_key"
-    )
-    cands = band_candidates(bands, max_bucket=max_bucket)
-    return jaccard_verify(cands, sets, threshold)
+    # storing the task outputs as serialized rows (r14 variants study);
+    # without materialization the kernel would run once per consumer.
+    rows = TN.minhash_rows(
+        cpu_spread(docs), n_shingle, num_hashes, hash_backend
+    ).localCheckpoint(eager=True)
+    cands = band_candidates(minhash_bands(rows, num_hashes), max_bucket=max_bucket)
+    return jaccard_verify(cands, rows.select("doc_id", "shingles"), threshold)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8, n_shingle: int = 3) -> DataFrame:
@@ -320,8 +247,7 @@ def mllib_minhash_exactdup_pairs(
     from pyspark.ml.feature import CountVectorizer
     from pyspark.ml.feature import MinHashLSH
 
-    sh = shingle_sets(docs, n_shingle)
-    as_list = sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("shingles"))
+    as_list = shingle_array(docs, n_shingle)
     cv = CountVectorizer(inputCol="shingles", outputCol="features", binary=True).fit(as_list)
     feats = cv.transform(as_list).select("doc_id", "features")
     model = MinHashLSH(
@@ -348,26 +274,11 @@ def simhash(
 ) -> DataFrame:
     """(doc_id, simhash): 32-bit SimHash over whitespace tokens WITH
     multiplicity — per-bit ±1 vote weighted by term frequency, bit set iff
-    the vote sum is strictly positive. ``hash_backend``: see
-    functions.text.base_hash (md5 = oracle path, xxhash64 = deployment)."""
-    toks = cpu_spread(docs).select(
-        F.col(id_col).alias("doc_id"), F.explode(TX.ws_tokens(F.col(text_col))).alias("t")
-    )
-    hv = TX.base_hash(F.col("t"), hash_backend)
-    votes = [
-        F.sum(
-            F.when(F.shiftright(hv, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(SIMHASH_BITS)
-    ]
-    wide = toks.groupBy("doc_id").agg(*votes)
-    sim = reduce(
-        lambda acc, b: acc
-        + F.when(F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long")),
-        range(SIMHASH_BITS),
-        F.lit(0).cast("long"),
-    )
-    return wide.select("doc_id", sim.alias("simhash"))
+    the vote sum is strictly positive. Row-local: one Arrow pass
+    (:func:`text_np.simhash_rows`), no ``groupBy(doc_id)`` exchange.
+    ``hash_backend``: see functions.text.base_hash (md5 = oracle path,
+    xxhash64 = deployment)."""
+    return TN.simhash_rows(cpu_spread(docs), hash_backend, id_col, text_col)
 
 
 def simhash_neardup_pairs(

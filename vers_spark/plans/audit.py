@@ -50,8 +50,13 @@ def scan_columns(df: DataFrame) -> list[set[str]]:
 
 
 def has_partial_aggregate(df: DataFrame) -> bool:
-    """Map-side combine present (partial_ function in a HashAggregate)."""
-    return count(df, r"partial_") > 0
+    """Map-side combine present: a partial_ function in a HashAggregate, or
+    a key-only HashAggregate (a distinct / dropDuplicates, which has no
+    functions to name) directly below the exchange of its final aggregate."""
+    plan = executed_plan(df)
+    return "partial_" in plan or bool(
+        re.search(r"Exchange hashpartitioning[^\n]*\n[\s:|+-]*HashAggregate\(keys=", plan)
+    )
 
 
 def num_exchanges(df: DataFrame) -> int:
