@@ -77,48 +77,16 @@ def test_assign_paths_fallback_above_dense_cap(forest, emb):
     assert got == want
 
 
-def test_leaf_order_pack_matches_full(forest, emb):
-    """r11: the packed best-first leaf enumeration must reproduce the
-    exhaustive `_leaf_order` ranking EXACTLY — same top-P leaves, same
-    dev strings, bit-identical costs — in both probe modes. (The pack
-    walk settles in global (cost, dev) order because both keys are
-    monotone along descent; costs match because both engines fold the
-    margin in ascending level order in f64.)"""
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    q = emb.limit(30)
-    qp = forest.assign_paths(q)
-    pairs = qp.select("query_id", "tree_id", "q_vec")
-    P = 3
-    for mode in ("margin", "dfs"):
-        got = {}
-        for r in forest._leaf_order_pack(pairs, mode, P, keep_keys=True).collect():
-            got.setdefault((r["query_id"], r["tree_id"]), []).append(
-                (r["path"], r["dev"], r["cost"])
-            )
-        key = [F.asc("dev")] if mode == "dfs" else [F.asc("cost"), F.asc("dev")]
-        wv = W.partitionBy("query_id", "tree_id").orderBy(*key)
-        want = {}
-        full = (
-            forest._leaf_order(pairs, forest.leaves, mode)
-            .withColumn("_r", F.row_number().over(wv))
-            .filter(F.col("_r") <= P)
-            .orderBy("query_id", "tree_id", "_r")
-        )
-        for r in full.collect():
-            want.setdefault((r["query_id"], r["tree_id"]), []).append(
-                (r["path"], r["dev"], r["cost"])
-            )
-        assert got == want, f"mode={mode}"
-
-
 def test_multiprobe_pack_equals_full_end_to_end(forest, emb):
-    """search_multiprobe via the packed engine must return the identical
-    result rows as the exhaustive leaf_descent='full' engine."""
+    """search_multiprobe planned from the plane pack must return the
+    identical result rows as the declarative frontier plan (pack disabled
+    on the same instance)."""
+    from tests.test_lsh_backup import _declarative
+
     q = emb.filter(F.col("vec_id") < 8)
-    a = forest.search_multiprobe(q, k=10, n_probes=3, leaf_descent="pack").collect()
-    b = forest.search_multiprobe(q, k=10, n_probes=3, leaf_descent="full").collect()
+    a = forest.search_multiprobe(q, k=10, n_probes=3).collect()
+    with _declarative(forest):
+        b = forest.search_multiprobe(q, k=10, n_probes=3).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) > 0
 
@@ -271,6 +239,40 @@ def test_add_retires_pack_and_source_still_serves(spark, emb):
     assert all(r["neighbour_id"] == r["query_id"] for r in hits)
 
 
+def test_pack_broadcast_only_for_assign_paths(spark, emb, tmp_path, monkeypatch):
+    """Serving plans on the driver, so search and search_multiprobe on a
+    loaded store ship no trie broadcast; add() routes through
+    assign_paths, which broadcasts the trie on first use, and add()'s
+    release_pack unpersists it."""
+    base = emb.filter(F.col("vec_id") < 150)
+    extra = emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 180))
+    path = str(tmp_path / "lazy_bc")
+    LSHForestIndex.build(base, num_trees=2, max_node_size=16, seed=3).save(path)
+    idx = LSHForestIndex.load(spark, path)
+    sc = spark.sparkContext
+    shipped, unpersisted = [], []
+    broadcast = sc.broadcast
+
+    def recording_broadcast(value):
+        bc = broadcast(value)
+        unpersist = bc.unpersist
+        bc.unpersist = lambda blocking=False: unpersisted.append(bc) or unpersist(blocking)
+        shipped.append((value, bc))
+        return bc
+
+    monkeypatch.setattr(sc, "broadcast", recording_broadcast)
+    trie = idx._planes_pack().trie
+    q = base.limit(5)
+    assert idx.search(q, k=3).collect() and idx.search_multiprobe(q, k=3).collect()
+    assert not any(v is trie for v, _ in shipped)
+    assert "_pack_bc" not in idx.__dict__
+    grown = idx.add(extra)
+    assert grown.leaves.count() > 0
+    (trie_bc,) = [bc for v, bc in shipped if v is trie]
+    assert unpersisted == [trie_bc]
+    assert "_pack_bc" not in idx.__dict__
+
+
 def test_distributed_build_invariants_and_search(spark, sf_dir):
     """The level-synchronous distributed build (the 100 TB path, normally
     auto-selected only above the local-build row cap): every leaf respects
@@ -313,17 +315,20 @@ def test_distributed_build_invariants_and_search(spark, sf_dir):
 
 
 def test_multiprobe_broadcast_gate_parity(forest, emb, monkeypatch):
-    """Batches above _BROADCAST_QUERY_CAP queries drop the broadcast hints
-    on the probe-set / query-vector joins (Spark's 8 GB / 512M-row
-    broadcast hard limits would bite a corpus-sized batch; ADVICE r12) —
-    the plain-shuffle fallback must return identical rows."""
+    """In the declarative plan (pack disabled), batches above
+    _BROADCAST_QUERY_CAP queries drop the broadcast hints on the probe-set
+    / query-vector joins (Spark's 8 GB / 512M-row broadcast hard limits
+    would bite a corpus-sized batch; ADVICE r12) — the plain-shuffle
+    fallback must return the planned path's rows."""
     import vers_spark.indexes.lsh as L
+    from tests.test_lsh_backup import _declarative
 
     q = emb.filter(F.col("vec_id") < 20)
     want = sorted(map(tuple, forest.search_multiprobe(q, k=5, n_probes=2).collect()))
     monkeypatch.setattr(L, "_BROADCAST_QUERY_CAP", 0)
-    got = sorted(map(tuple, forest.search_multiprobe(q, k=5, n_probes=2).collect()))
-    assert got == want
+    with _declarative(forest):
+        got = sorted(map(tuple, forest.search_multiprobe(q, k=5, n_probes=2).collect()))
+    assert got == want and want
 
 
 def test_save_pp_len_width_dial(spark, emb, tmp_path):
@@ -400,8 +405,8 @@ def test_saved_pack_loads_and_is_bit_equal_with_rebuilt(spark, forest, emb, tmp_
         spark, loaded.leaves, loaded.hyperplanes, dict(loaded.params)
     )
     rp = rebuilt._planes_pack()
-    (ltk, ltr, lW, lB, lM, llk), ldepth, lT = lp[0].value, lp[1], lp[2]
-    (rtk, rtr, rW, rB, rM, rlk), rdepth, rT = rp[0].value, rp[1], rp[2]
+    (ltk, ltr, lW, lB, lM, llk), ldepth, lT = lp.trie, lp.depth, lp.trees
+    (rtk, rtr, rW, rB, rM, rlk), rdepth, rT = rp.trie, rp.depth, rp.trees
     assert (ldepth, lT) == (rdepth, rT)
     for t in range(lT):
         assert np.array_equal(ltk[t], rtk[t])  # sorted node keys per tree

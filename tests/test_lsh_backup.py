@@ -1,6 +1,7 @@
-"""Backup-branch fill rule (lsh.rs:203-215): bit-parity between the
-declarative deviation-order formulation and a local Python replay of the
-reference's budgeted recursion over the SAME planes/leaves."""
+"""Backup-branch fill rule (lsh.rs:203-215) and multiprobe: bit-parity of
+the planned search with a local Python replay of the reference's budgeted
+recursion (and of the multiprobe visit) over the SAME planes/leaves, and
+row parity between the planned and the declarative plans."""
 
 from __future__ import annotations
 
@@ -113,12 +114,13 @@ def _leaf_visit_keys(planes, path, q):
     return cost, "".join(dev_bits)
 
 
-def _multiprobe_tree_cands(planes, leaves, q, n_probes):
+def _multiprobe_tree_cands(planes, leaves, q, n_probes, probe_mode):
     """Local replay of search_multiprobe's per-tree visit: the n_probes
-    best leaves by (margin cost, deviation string), ALL their members."""
+    best leaves by (margin cost, deviation string) — by deviation string
+    alone in dfs mode — ALL their members."""
     scored = sorted(
         ((*_leaf_visit_keys(planes, path, q), path) for path in leaves),
-        key=lambda s: (s[0], s[1]),
+        key=(lambda s: (s[0], s[1])) if probe_mode == "margin" else (lambda s: s[1]),
     )
     out = []
     for _, _, path in scored[:n_probes]:
@@ -127,88 +129,55 @@ def _multiprobe_tree_cands(planes, leaves, q, n_probes):
 
 
 def test_multiprobe_margin_parity_with_local_replay(spark, emb, small_forest):
-    """search_multiprobe bit-matches a local replay of the margin-ordered
-    n_probes-leaf visit over the same planes/leaves — the multi-probe twin
-    of the DFS parity test above."""
-    k, n_probes = 10, 2
+    """search_multiprobe bit-matches a local replay of the n_probes-leaf
+    visit over the same planes/leaves — the multi-probe twin of the DFS
+    parity test above, and the gate on the planner's probe order: both
+    probe orders, 1, 2 and 4 probes."""
+    k = 10
     queries = emb.filter(F.col("vec_id") < 15)
-    got = small_forest.search_multiprobe(queries, k=k, n_probes=n_probes).collect()
-
     trees = _local_index(small_forest)
     all_vecs = {
         int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in emb.collect()
     }
-    for qrow in queries.select("vec_id", "embedding").collect():
-        qid, qv = int(qrow["vec_id"]), [float(x) for x in qrow["embedding"]]
-        cand = set()
-        for planes, leaves in trees.values():
-            cand.update(_multiprobe_tree_cands(planes, leaves, qv, n_probes))
-        ranked = sorted(
-            cand, key=lambda i: (sum((a - b) ** 2 for a, b in zip(all_vecs[i], qv)), i)
-        )[:k]
-        mine = [r["neighbour_id"] for r in sorted(
-            (r for r in got if r["query_id"] == qid), key=lambda r: r["rank"]
-        )]
-        assert mine == ranked, f"query {qid}: {mine} != {ranked}"
-
-
-def test_multiprobe_blocked_compute_parity(spark, emb, small_forest):
-    """The GEMM serving twin (compute="blocked", _sides_blocked) must
-    reproduce the declarative fold's results EXACTLY on this corpus: same
-    probed leaves (margins differ only in the last ulp; ties break on the
-    deviation string) → same candidates → identical (neighbour, distance,
-    rank) rows. Both probe orders gated."""
-    k, n_probes = 10, 2
-    queries = emb.filter(F.col("vec_id") < 15)
+    qrows = [
+        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
+        for r in queries.select("vec_id", "embedding").collect()
+    ]
     for mode in ("margin", "dfs"):
-        fold = sorted(
-            map(tuple, small_forest.search_multiprobe(
-                queries, k=k, n_probes=n_probes, probe_mode=mode,
-                leaf_descent="full").collect())
-        )
-        blocked = sorted(
-            map(tuple, small_forest.search_multiprobe(
-                queries, k=k, n_probes=n_probes, probe_mode=mode,
-                compute="blocked", leaf_descent="full"
-            ).collect())
-        )
-        assert fold == blocked, mode
-
-
-def test_multiprobe_rerank_blocked_bitexact(spark, emb, small_forest):
-    """The vectorized candidate rerank (np.cumsum running sum) must be
-    BIT-equal to the declarative left-fold — same distance DOUBLES, not
-    just same ranking — across probe modes."""
-    queries = emb.filter(F.col("vec_id") < 15)
-    for mode in ("margin", "dfs"):
-        fold = sorted(map(tuple, small_forest.search_multiprobe(
-            queries, k=10, n_probes=2, probe_mode=mode, rerank="fold").collect()))
-        blocked = sorted(map(tuple, small_forest.search_multiprobe(
-            queries, k=10, n_probes=2, probe_mode=mode, rerank="blocked").collect()))
-        assert fold == blocked, mode
+        for n_probes in (1, 2, 4):
+            got = small_forest.search_multiprobe(
+                queries, k=k, n_probes=n_probes, probe_mode=mode
+            ).collect()
+            for qid, qv in qrows:
+                cand = set()
+                for planes, leaves in trees.values():
+                    cand.update(_multiprobe_tree_cands(planes, leaves, qv, n_probes, mode))
+                ranked = sorted(
+                    cand,
+                    key=lambda i: (sum((a - b) ** 2 for a, b in zip(all_vecs[i], qv)), i),
+                )[:k]
+                mine = [r["neighbour_id"] for r in sorted(
+                    (r for r in got if r["query_id"] == qid), key=lambda r: r["rank"]
+                )]
+                assert mine == ranked, f"{mode} P={n_probes} query {qid}: {mine} != {ranked}"
 
 
 def test_multiprobe_frontier_parity_with_full(spark, emb, small_forest):
-    """The branch-and-bound frontier descent (the serving default) must
-    probe the SAME leaves as the exhaustive every-leaf ranking — identical
-    (neighbour, distance, rank) rows across probe modes and probe counts.
-    The beam cap is sized so the bound, not the cap, does the pruning on
-    any non-adversarial corpus; this pins it."""
-    k = 10
+    """The branch-and-bound frontier descent (the declarative plan, which
+    serves tries the plane pack cannot hold) must probe the SAME leaves as
+    the planned walk of the pack — identical (neighbour, distance, rank)
+    rows across probe modes and probe counts, with the pack disabled on
+    the same instance. The beam cap is sized so the bound, not the cap,
+    does the pruning on any non-adversarial corpus; this pins it."""
     queries = emb.filter(F.col("vec_id") < 15)
     for mode in ("margin", "dfs"):
         for n_probes in (1, 2, 4):
-            full = sorted(
-                map(tuple, small_forest.search_multiprobe(
-                    queries, k=k, n_probes=n_probes, probe_mode=mode,
-                    leaf_descent="full").collect())
-            )
-            frontier = sorted(
-                map(tuple, small_forest.search_multiprobe(
-                    queries, k=k, n_probes=n_probes, probe_mode=mode,
-                    leaf_descent="frontier").collect())
-            )
-            assert frontier == full, (mode, n_probes)
+            kw = dict(k=10, n_probes=n_probes, probe_mode=mode)
+            planned = _rows(small_forest.search_multiprobe(queries, **kw))
+            with _declarative(small_forest):
+                frontier = _rows(small_forest.search_multiprobe(queries, **kw))
+            assert frontier == planned, (mode, n_probes)
+            assert planned, (mode, n_probes)
 
 
 def test_multiprobe_recall_gains(spark, emb):
@@ -262,8 +231,9 @@ def test_degenerate_oracle_unchanged_by_fill(spark, emb):
 @contextmanager
 def _declarative(idx):
     """Serve ``idx`` through the declarative plans: a cached None pack makes
-    _planes_pack() return None on this instance, so search() takes
-    _search_declarative (join descent, declarative fill)."""
+    _planes_pack() return None on this instance, so search() and
+    search_multiprobe() take _search_declarative (join descent, frontier
+    leaf walk, declarative fill)."""
     saved = idx.__dict__.pop("_planes_pack_cache", None)
     idx._planes_pack_cache = None
     try:
@@ -280,14 +250,12 @@ def _rows(df):
 
 def test_backup_fill_frontier_parity(spark, emb, small_forest):
     """The planned search (driver walk of the plane pack) must return the
-    IDENTICAL rows as the declarative plan whose fill enumerates leaves
-    exhaustively (_leaf_order) and as the one that uses the frontier
-    descent with n_probes=k (exact for budgeted admission: every admitted
-    leaf holds >= 1 member, so the admitted set lives within the k
-    best-ordered leaves) — in both probe orders, and with ``allowed_ids``,
-    where the planner's sizes come from the filtered leaves and an empty
-    leaf neither contributes nor ends the walk. The declarative engine
-    switch keys on the memoized leaf count; forcing it exercises both."""
+    IDENTICAL rows as the declarative plan, whose fill enumerates leaves
+    with the frontier descent at n_probes=k (exact for budgeted admission:
+    every admitted leaf holds >= 1 member, so the admitted set lives
+    within the k best-ordered leaves) — in both probe orders, and with
+    ``allowed_ids``, where the planner's sizes come from the filtered
+    leaves and an empty leaf neither contributes nor ends the walk."""
     queries = emb.filter(F.col("vec_id") < 15)
     keep = emb.filter(F.col("label") % 3 == 0).select("vec_id")
     for allowed in (None, keep):
@@ -295,12 +263,7 @@ def test_backup_fill_frontier_parity(spark, emb, small_forest):
             kw = dict(k=10, backup_fill=True, probe_mode=mode, allowed_ids=allowed)
             planned = _rows(small_forest.search(queries, **kw))
             with _declarative(small_forest):
-                small_forest._leaf_path_count = 1  # force exhaustive
-                full = _rows(small_forest.search(queries, **kw))
-                small_forest._leaf_path_count = 10**9  # force frontier
                 frontier = _rows(small_forest.search(queries, **kw))
-                small_forest._leaf_path_count = None
-            assert full == planned, (mode, allowed is not None)
             assert frontier == planned, (mode, allowed is not None)
             assert len({r[0] for r in planned}) == 15
 
@@ -336,35 +299,30 @@ def test_planned_search_equals_declarative_plan(spark, emb, small_forest, tmp_pa
 
 
 def test_multiprobe_parity_above_auto_threshold(spark, sf_oracle_dir):
-    """ADVICE r7: the auto engine switch flips at _FRONTIER_MIN_LEAVES, but
-    full-vs-frontier parity had only been gated at small leaf counts. Build
-    a forest whose leaf count genuinely crosses the threshold (9 trees ×
-    max_node_size=1 over the sf0.01 embeddings → ~4.5k single-member leaves)
-    and pin parity there, margin mode included: both engines now accumulate
-    margin cost as the SAME ascending-level left fold (_leaf_order's
-    aggregate() ≡ the frontier's per-round running sum), so f64 summation
-    order cannot flip near-tie orderings across the switch."""
-    from vers_spark.indexes.lsh import _FRONTIER_MIN_LEAVES
-
+    """Planned-vs-frontier multiprobe parity on a forest with many leaves
+    (9 trees × max_node_size=1 over the sf0.01 embeddings → ~4.5k
+    single-member leaves, deep tries with many near-tie margins), margin
+    mode included: both walks accumulate margin cost as the same
+    ascending-level f64 left fold, so summation order cannot flip near-tie
+    orderings between them."""
     emb10 = load_table(spark, sf_oracle_dir, "embeddings")
     idx = LSHForestIndex.build(emb10, num_trees=9, max_node_size=1, seed=11)
-    assert idx._n_leaf_paths() >= _FRONTIER_MIN_LEAVES
+    assert idx.leaves.select("tree_id", "path").distinct().count() >= 4096
     queries = emb10.filter(F.col("vec_id") < 8)
     for mode in ("margin", "dfs"):
         for n_probes in (2, 8):
-            full = sorted(map(tuple, idx.search_multiprobe(
-                queries, k=10, n_probes=n_probes, probe_mode=mode,
-                leaf_descent="full").collect()))
-            frontier = sorted(map(tuple, idx.search_multiprobe(
-                queries, k=10, n_probes=n_probes, probe_mode=mode,
-                leaf_descent="frontier").collect()))
-            assert frontier == full, (mode, n_probes)
-            assert len(full) > 0, (mode, n_probes)
+            kw = dict(k=10, n_probes=n_probes, probe_mode=mode)
+            planned = _rows(idx.search_multiprobe(queries, **kw))
+            with _declarative(idx):
+                frontier = _rows(idx.search_multiprobe(queries, **kw))
+            assert frontier == planned, (mode, n_probes)
+            assert len(planned) > 0, (mode, n_probes)
 
 
 def test_frontier_probe_mode_validated(spark, emb, small_forest):
-    """A typo'd probe_mode must raise in BOTH engines (ADVICE r7: the
-    frontier silently fell into the margin branch)."""
+    """A typo'd probe_mode must raise in the planned multiprobe and in the
+    declarative frontier walk (ADVICE r7: the frontier silently fell into
+    the margin branch)."""
     queries = emb.filter(F.col("vec_id") < 3)
     pairs = small_forest.assign_paths(queries).select(
         "query_id", "tree_id", "q_vec"
@@ -374,21 +332,7 @@ def test_frontier_probe_mode_validated(spark, emb, small_forest):
             pairs, small_forest.leaves, "margins", n_probes=2
         )
     with pytest.raises(ValueError, match="probe_mode"):
-        small_forest._leaf_order(pairs, small_forest.leaves, "margins")
-
-
-def test_blocked_compute_with_frontier_warns(spark, emb, small_forest):
-    """compute='blocked' composes only with the 'full' descent; requesting
-    it with the frontier engine must warn, not silently ignore."""
-    import warnings
-
-    queries = emb.filter(F.col("vec_id") < 3)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        small_forest.search_multiprobe(
-            queries, k=5, n_probes=2, compute="blocked", leaf_descent="frontier"
-        ).collect()
-    assert any("full" in str(x.message) for x in w)
+        small_forest.search_multiprobe(queries, k=5, probe_mode="margins")
 
 
 def test_save_load_format_version(spark, emb, small_forest, tmp_path):

@@ -215,8 +215,8 @@ def test_n_hint_above_caps_engages_staged_guarantee(spark):
 
 
 def test_auto_width_selection_thresholds():
-    """Band width auto-selects from the corpus count (the lsh.py _leaf_order
-    auto-threshold discipline): 64-bit narrow below WIDE_FP_MIN_COUNT,
+    """Band width auto-selects from the corpus count (the lsh.py
+    _auto_pp_len discipline): 64-bit narrow below WIDE_FP_MIN_COUNT,
     256-bit wide at/above — buckets stay ~n/2^16 at 1M."""
     assert auto_dhash_grid(0) == (8, 9)
     assert auto_dhash_grid(WIDE_FP_MIN_COUNT - 1) == (8, 9)

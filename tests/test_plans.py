@@ -108,12 +108,13 @@ def test_blocked_knn_and_ivf_search_job_counts(spark, sf_dir, tmp_path):
 
 
 def test_lsh_search_job_counts(spark, sf_dir, tmp_path):
-    """An 8-query search on a file-loaded LSH store starts at most 4 Spark
-    jobs, with the plane pack warmed as in steady serving: the bounded
-    query collect, then one Arrow pass over the planned leaves and its
-    ranking. Both for a forest whose main leaves mostly fill k and for a
-    forced-fill forest (max_node_size < k), whose backup fill is planned
-    on the driver instead of running as extra jobs."""
+    """An 8-query search or search_multiprobe on a file-loaded LSH store
+    starts at most 4 Spark jobs, with the plane pack warmed as in steady
+    serving: the bounded query collect, then one Arrow pass over the
+    planned leaves and its ranking. Both for a forest whose main leaves
+    mostly fill k and for a forced-fill forest (max_node_size < k), whose
+    backup fill is planned on the driver instead of running as extra
+    jobs; multiprobe's probe set is planned on the driver the same way."""
     from vers_spark.indexes.lsh import LSHForestIndex
 
     sc = spark.sparkContext
@@ -128,6 +129,13 @@ def test_lsh_search_job_counts(spark, sf_dir, tmp_path):
             sc, f"test_jobs_lsh_search_{name}", lambda: loaded.search(q, k=10)
         )
         assert len(rows) == 80, name
+        assert n_jobs <= 4, name
+        rows, n_jobs = _collect_in_group(
+            sc,
+            f"test_jobs_lsh_multiprobe_{name}",
+            lambda: loaded.search_multiprobe(q, k=10, n_probes=2),
+        )
+        assert len({r["query_id"] for r in rows}) == 8, name
         assert n_jobs <= 4, name
 
 
@@ -688,15 +696,17 @@ def test_lsh_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
     assert mscans and all(0 < s["numPartitions"] <= 6 for s in mscans), mscans
     b = sorted(map(tuple, idx.search(q, k=5, backup_fill=False).collect()))
     assert a == b
-    # multiprobe serving path prunes too — and not just in the plan STRING:
-    # the runtime scan metrics must show fewer partitions read than the
-    # store holds (BASELINE §r12: the plan-string check alone passed while
-    # the old layout read 128/128 at 1M; per-column DPP couldn't express
-    # the (tree, prefix) pair, hence the fused _pp value). The probed set
-    # here is ≤ 3 queries × 2 trees × 2 probes = 12 pairs of 32 buckets.
+    # multiprobe serving path prunes too — its probe set is planned on the
+    # driver, so again a literal _pp IN (…) partition filter — and not
+    # just in the plan STRING: the runtime scan metrics must show fewer
+    # partitions read than the store holds (BASELINE §r12: the plan-string
+    # check alone passed while the old layout read 128/128 at 1M). The
+    # probed set here is ≤ 3 queries × 2 trees × 2 probes = 12 pairs of 32
+    # buckets.
     mp = loaded.search_multiprobe(q, k=5, n_probes=2)
     am = sorted(map(tuple, mp.collect()))
-    assert "dynamicpruning" in audit.executed_plan(mp)
+    mp_filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", audit.executed_plan(mp))
+    assert any(re.search(r"_pp#\d+ IN \(", f) for f in mp_filters), mp_filters
     total_buckets = loaded.leaves.select("_pp").distinct().count()
     scans = audit.scan_runtime_metrics(mp, "_pp#")
     assert scans, "leaf scan not found in executed plan"

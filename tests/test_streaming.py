@@ -169,6 +169,33 @@ def test_stream_neardup_pairs_equals_batch_pipeline(spark, sf_dir):
     assert got == want and got
 
 
+def test_stream_neardup_ingest_hashes_each_batch_once(spark, sf_dir, monkeypatch):
+    """Each micro-batch's bands frame feeds both the band-store append and
+    the join against the store; the MinHash kernel must still see every
+    streamed document exactly once, not once per consumer. An accumulator
+    counts the rows entering the ingest's kernel calls."""
+    import vers_spark.functions.text_np as TN
+    from vers_spark.operators.text_dedup_queries import NEAR_TAIL, _augmented
+
+    seen = spark.sparkContext.accumulator(0)
+    kernel = TN.minhash_rows
+
+    def counted(docs, *args, **kwargs):
+        if kwargs.get("keep_shingles", True):  # not the ingest's call
+            return kernel(docs, *args, **kwargs)
+
+        def count(batches):
+            for pdf in batches:
+                seen.add(len(pdf))
+                yield pdf
+
+        return kernel(docs.mapInPandas(count, docs.schema), *args, **kwargs)
+
+    monkeypatch.setattr(TN, "minhash_rows", counted)
+    assert SQ.QUERIES["stream_neardup_pairs"](spark, sf_dir).collect()
+    assert seen.value == _augmented(spark, sf_dir, 7, NEAR_TAIL).count()
+
+
 def test_stream_markov_equals_batch(spark, sf_dir):
     """Streamed transition maintenance ≡ the batch matrix: the last-event
     store carries exactly the cross-batch boundary pairs, so the end state

@@ -308,12 +308,10 @@ def main() -> None:
         out["lsh_search_per_query_ms"] = round(
             out["lsh_search_batch_sec"] * 1000 / N_QUERIES, 1
         )
-        # margin-ordered multi-probe: the recall-vs-work dial at fixed trees.
-        # compute="blocked" is the r6 GEMM margin scorer (lsh._sides_blocked)
-        # — at 1M the declarative fold was ~6 s/query of margin scoring
+        # margin-ordered multi-probe: the recall-vs-work dial at fixed trees
         for p in (2, 4):
             t0 = time.perf_counter()
-            res = lsh.search_multiprobe(queries, k=10, n_probes=p, compute="blocked")
+            res = lsh.search_multiprobe(queries, k=10, n_probes=p)
             out[f"lsh_mp{p}_recall_at_10"] = recall(res)
             out[f"lsh_mp{p}_search_batch_sec"] = round(time.perf_counter() - t0, 1)
         print(f"# lsh: {json.dumps({k: v for k, v in out.items() if k.startswith('lsh')})}", flush=True)

@@ -19,18 +19,21 @@ by vector value first (`lsh.rs:113-130`).
 
 Search (`lsh.rs:163-216`) is planned on the driver from the PLANE PACK — the
 hyperplane trie and the leaf catalog (keys and sizes) as numpy arrays,
-collected once per index (or read from the saved ``pack.npz``): a vectorized
-per-tree descent gives each query its main leaf, and a (query, tree) pair
-whose main leaf holds fewer than k members runs the reference's
-backup-branch visit (`lsh.rs:203-215`) as a best-first walk of the trie in
-deviation-string order — provably the reference recursion's visit order —
-with each visited leaf capped at its remaining budget (bit-parity with a
-local replay of the reference recursion is gated in tests). The planned
-leaves are then read ONCE: a literal partition filter on a saved store, one
-Arrow pass folding each leaf against its queries (exact squared Euclidean,
-`lsh.rs:271-281`), one exchange for the per-leaf caps, the cross-tree dedup
-and the top-k. Tries the pack cannot hold keep the declarative plan
-(per-level join descent, window-ranked fill), which returns the same rows.
+collected once per index (or read from the saved ``pack.npz``). ``search``
+gives each query its main leaf per tree by a vectorized descent, and a
+(query, tree) pair whose main leaf holds fewer than k members runs the
+reference's backup-branch visit (`lsh.rs:203-215`) as a best-first walk of
+the trie in deviation-string order — provably the reference recursion's
+visit order — with each visited leaf capped at its remaining budget
+(bit-parity with a local replay of the reference recursion is gated in
+tests). ``search_multiprobe`` takes the first ``n_probes`` leaves of the
+same walk per (query, tree), margin-ordered by default (Lv et al. 2007).
+Either plan is then read ONCE: a literal partition filter on a saved store,
+one Arrow pass folding each leaf against its queries (exact squared
+Euclidean, `lsh.rs:271-281`), one exchange for the per-leaf caps, the
+cross-tree dedup and the top-k. Tries the pack cannot hold keep the
+declarative plan (per-level join descent, branch-and-bound frontier leaf
+walk), which returns the same rows.
 
 Degenerate config (1 tree, max_node_size ≥ n) ≡ exact brute force — the
 oracle check.
@@ -71,8 +74,8 @@ def _plane_side(vec_col, coeff_col, const_col):
 # ('01' → '01zz' ≠ '0100'): _pp = 'p<tree>_<prefix>'. Bounded directory
 # fan-out (≤ T × 2^pp_len + shorter-path buckets) and the serving plans
 # filter or join on _pp too, so only the probed buckets are scanned (a
-# literal _pp IN filter in search, dynamic partition pruning in the join
-# plans) — the LSH analogue of IVF's partitionBy(cluster_id) posting lists
+# literal _pp IN filter in the planned serving path, dynamic partition
+# pruning in the declarative join plans) — the LSH analogue of IVF's partitionBy(cluster_id) posting lists
 # (ivfflat.py save). The width is a save() parameter recorded in the
 # manifest; the probe side must derive _pp at the SAME width or it never
 # matches, so every serving call reads it from params.
@@ -156,20 +159,19 @@ def _planes_at(planes: DataFrame, lvl: int) -> DataFrame:
 def _join_leaves(
     probed: DataFrame, leaves: DataFrame, pp_len: int = _PP_LEN
 ) -> DataFrame:
-    """Join a (…, tree_id, path) probe frame against the leaf table. When
-    the leaves carry the _pp partition column (file-loaded bucketed store),
-    derive _pp on the probe side and include it in the join key — the
-    equi-join on the partition column is what lets dynamic partition
-    pruning skip unprobed leaf buckets.
+    """Join a (…, tree_id, path) probe frame against the leaf table — the
+    declarative plan's leaf read. When the leaves carry the _pp partition
+    column (file-loaded bucketed store), derive _pp on the probe side and
+    include it in the join key — the equi-join on the partition column is
+    what lets dynamic partition pruning skip unprobed leaf buckets.
 
     The startswith('p') filter is an always-true invariant of _pp_of (the
     type-pinning prefix), kept here deliberately: Spark's PartitionPruning
     rule only plants the DPP subquery when the filtering side carries a
     *likely-selective* predicate (IsNotNull doesn't count, StartsWith
     does), and probe frames that come straight out of a stats-free
-    mapInPandas pass (the pack descent engine) otherwise carry none — the
-    saved leaf store would silently fall back to a full every-bucket scan
-    (plan-gated in test_plans.py::test_lsh_on_disk_search_partition_prunes)."""
+    mapInPandas pass otherwise carry none — the saved leaf store would
+    silently fall back to a full every-bucket scan."""
     if "_pp" not in leaves.columns:
         return probed.join(leaves, ["tree_id", "path"])
     return (
@@ -180,22 +182,15 @@ def _join_leaves(
     )
 
 
-# Broadcast-hint cap for multiprobe's probe-set / query-vector joins, in
-# QUERIES per batch. Below it the hints hold (probed is queries×trees×probes
-# narrow rows; qvec is one dim-wide f64 vector per query — ≤ ~0.5 GB at
-# dim 1024), and the hint is what keeps dynamic partition pruning alive on a
-# saved (tree_id, _pp)-partitioned leaf store (the pack engine's mapInPandas
-# output carries no stats). Above it — a corpus-sized batch through the
-# public API — the hints could hit Spark's 8 GB / 512M-row broadcast hard
+# Broadcast-hint cap for the declarative plan's probe-set / query-vector
+# joins, in QUERIES per batch. Below it the hints hold (the probe set is
+# queries×trees×probes narrow rows; qvec is one dim-wide f64 vector per
+# query — ≤ ~0.5 GB at dim 1024), and the hint is what keeps dynamic
+# partition pruning alive on a saved (tree_id, _pp)-partitioned leaf store.
+# Above it the hints could hit Spark's 8 GB / 512M-row broadcast hard
 # limits or driver OOM, so we fall back to plain shuffle joins; no DPP loss
 # in practice, since a corpus-sized batch probes essentially every bucket.
 _BROADCAST_QUERY_CAP = 65536
-
-# Below this many distinct leaf paths, multiprobe's exhaustive every-leaf
-# ranking (_leaf_order) is cheaper than the frontier descent's per-round
-# fixed overhead; above it the frontier's leaf-count-independent rounds win
-# (and at 1M+ the exhaustive ranking is the serving-scale killer).
-_FRONTIER_MIN_LEAVES = 4096
 
 # Above this row count the per-task whole-tree build stops being reasonable —
 # each task holds the FULL (deduped) corpus as a float64 matrix plus pandas
@@ -205,12 +200,12 @@ _LOCAL_BUILD_MAX_ROWS = 500_000
 
 
 class _Pack(NamedTuple):
-    """The plane pack of one index instance: the trie arrays
-    ``(tree_keys, tree_rows, W, B, M, leaf_keys)`` held on the driver and
-    broadcast to the executors, plus per-tree leaf sizes aligned with
-    ``leaf_keys`` (driver-only: the serving planner reads them)."""
+    """The plane pack of one index instance, held on the driver: the trie
+    arrays ``(tree_keys, tree_rows, W, B, M, leaf_keys)`` plus per-tree
+    leaf sizes aligned with ``leaf_keys`` (the serving planner reads
+    them). Only :meth:`LSHForestIndex.assign_paths` ships the trie to the
+    executors, through a broadcast it creates on first use."""
 
-    bc: object
     depth: int
     trees: int
     trie: tuple
@@ -261,10 +256,11 @@ def _best_first(q, K, R, W, B, M, LK, dfs: bool):
     the declarative engines do (ascending-level f64 left fold; margin =
     |dot+const| / ‖coeffs‖ with the cumsum kernel, bit-exact with
     V.dot/V.magnitude). Both keys are MONOTONE along descent — cost adds
-    ≥ 0, dev only extends — so the pop order IS the global probe order:
-    the first n yields are exactly `_leaf_order`'s top n (parity pinned in
-    tests/test_lsh.py::test_leaf_order_pack_matches_full). In dfs order
-    the main leaf (all-agree deviation string) comes first."""
+    ≥ 0, dev only extends — so the pop order IS the global probe order
+    over every leaf of the tree (gated against an independent replay in
+    tests/test_lsh_backup.py::test_multiprobe_margin_parity_with_local_replay).
+    In dfs order the main leaf (all-agree deviation string) comes first;
+    in margin order it costs 0 and sorts first too."""
     heap = [("", 1, 0.0)] if dfs else [(0.0, "", 1)]
     while heap:
         if dfs:
@@ -291,42 +287,60 @@ def _best_first(q, K, R, W, B, M, LK, dfs: bool):
 
 
 def _plan_leaves(
-    q_mat, pack: _Pack, sizes: list, k: int, backup_fill: bool, dfs: bool
+    q_mat,
+    pack: _Pack,
+    sizes: list,
+    k: int,
+    dfs: bool,
+    backup_fill: bool = True,
+    n_probes: int | None = None,
 ) -> dict:
     """The serving plan of one query batch, on the driver: ``{(tree_id,
     path): [(query row, cap), …]}`` — which leaves to read and how many of
     their nearest members each query keeps from each.
 
-    Per tree a vectorized descent gives every query its main leaf. A
-    (query, tree) pair whose main leaf holds ≥ k members (``sizes``), or
-    any pair without ``backup_fill``, reads the main leaf with cap k. An
-    underfilled pair walks the leaves in probe order (``_best_first``)
-    until the leaves taken hold ≥ k members; each takes
-    ``cap = k − cum_before`` — the reference's budgeted backup recursion
-    (lsh.rs:203-215): in deviation-string order a member is admitted iff
-    its within-leaf rank ≤ k − Σ sizes of earlier leaves. Leaves of size 0
-    (no allowed member under ``allowed_ids``) are skipped and do not end
-    the walk. A main leaf's cap of k drops nothing: a member beyond the
-    k nearest of its own leaf cannot be among a query's k nearest."""
+    With ``n_probes`` (multiprobe) every (query, tree) pair reads the first
+    ``n_probes`` non-empty leaves of its probe-order walk
+    (``_best_first``), each with cap k.
+
+    Without it (search) a vectorized descent gives every query its main
+    leaf per tree. A pair whose main leaf holds ≥ k members (``sizes``),
+    or any pair without ``backup_fill``, reads the main leaf with cap k.
+    An underfilled pair walks the leaves in probe order until the leaves
+    taken hold ≥ k members; each takes ``cap = k − cum_before`` — the
+    reference's budgeted backup recursion (lsh.rs:203-215): in
+    deviation-string order a member is admitted iff its within-leaf rank
+    ≤ k − Σ sizes of earlier leaves.
+
+    Leaves of size 0 (no allowed member under ``allowed_ids``) are skipped
+    and end neither walk. A cap of k drops nothing: a member beyond the k
+    nearest of its own leaf cannot be among a query's k nearest."""
     tree_keys, tree_rows, W, B, M, leaf_keys = pack.trie
     plan: dict = {}
     for t in range(pack.trees):
         K, R, LK, LS = tree_keys[t], tree_rows[t], leaf_keys[t], sizes[t]
-        main = _descend(q_mat, K, R, W, B, pack.depth)
-        pos = np.minimum(np.searchsorted(LK, main), max(len(LK) - 1, 0))
-        for qi, key in enumerate(main.tolist()):
+        if n_probes is None:
+            main = _descend(q_mat, K, R, W, B, pack.depth)
+            pos = np.minimum(np.searchsorted(LK, main), max(len(LK) - 1, 0))
+        for qi in range(len(q_mat)):
+            walk = (  # lazy: a filled main leaf never starts it
+                p for p, _dev, _cost in _best_first(q_mat[qi], K, R, W, B, M, LK, dfs)
+                if LS[p]
+            )
+            if n_probes is not None:
+                for p in islice(walk, n_probes):
+                    plan.setdefault((t, _key_path(LK[p])), []).append((qi, k))
+                continue
+            key = int(main[qi])
             n_main = int(LS[pos[qi]]) if len(LK) and LK[pos[qi]] == key else 0
             if n_main >= k or not backup_fill:
                 if n_main:
                     plan.setdefault((t, _key_path(key)), []).append((qi, k))
                 continue
             cum = 0
-            for p, _dev, _cost in _best_first(q_mat[qi], K, R, W, B, M, LK, dfs):
-                n = int(LS[p])
-                if not n:
-                    continue
+            for p in walk:
                 plan.setdefault((t, _key_path(LK[p])), []).append((qi, k - cum))
-                cum += n
+                cum += int(LS[p])
                 if cum >= k:
                     break
     return plan
@@ -672,10 +686,11 @@ class LSHForestIndex:
 
     # ---------------- search ----------------
 
-    # broadcast-size cap for the plane pack (bytes of coeffs); above it the
-    # index serves through the declarative plans, whose memory is bounded
-    # regardless of forest size. Depth is capped by the int64 path encoding
-    # (≤ 62 bits) — deeper trees also fall back.
+    # size cap for the plane pack (bytes of coeffs) — it is held on the
+    # driver and broadcast by assign_paths; above it the index serves
+    # through the declarative plans, whose memory is bounded regardless of
+    # forest size. Depth is capped by the int64 path encoding (≤ 62 bits) —
+    # deeper trees also fall back.
     _PACK_MAX_BYTES = 512 * 1024 * 1024
 
     def _pack_arrays(self) -> dict | None:
@@ -690,12 +705,12 @@ class LSHForestIndex:
         :meth:`save` persists as ``pack.npz`` so cold serving stops paying
         it per session. A depth-0 forest packs as an empty trie whose only
         leaf is the root. Returns None when the trie is too deep or
-        exceeds the broadcast cap — callers fall back to the declarative
+        exceeds ``_PACK_MAX_BYTES`` — callers fall back to the declarative
         plans.
 
         f64 ALWAYS: in-session forests carry array<double> coeffs (the
         b−a splits are computed in f64) and a float32 pack would silently
-        quantize every dot — caught by the leaf-order cost parity test;
+        quantize every dot and could flip near-tie probe orders;
         f32-at-rest coeffs widen exactly, so f64 is exact for both
         storage types."""
         if int(self.params["depth"]) > 62:
@@ -739,7 +754,7 @@ class LSHForestIndex:
         }
 
     def _assemble_pack(self, arrs: dict) -> _Pack:
-        """Per-tree sorted node-key structures + broadcast, from the flat
+        """Per-tree sorted node-key structures, from the flat
         arrays (collected or ``pack.npz``-loaded — identical assembly, so
         a persisted pack is bit-equal with a rebuilt one; parity-gated in
         test_lsh.py). A node's key is its path as a '1'-prefixed binary
@@ -764,24 +779,18 @@ class LSHForestIndex:
             leaf_keys.append(lkeys[mask][order])
             leaf_sizes.append(lsizes[mask][order])
         trie = (tree_keys, tree_rows, arrs["W"], arrs["B"], arrs["M"], leaf_keys)
-        return _Pack(
-            self.spark.sparkContext.broadcast(trie),
-            int(self.params["depth"]),
-            T,
-            trie,
-            leaf_sizes,
-        )
+        return _Pack(int(self.params["depth"]), T, trie, leaf_sizes)
 
     def _planes_pack(self) -> _Pack | None:
-        """Build + broadcast the hyperplane trie pack ONCE per index
-        instance. A file-loaded store with a persisted ``pack.npz`` (see
-        :meth:`save`) skips the Arrow collect entirely — a local numpy
-        read replaces the 19-87 s cold rebuild; a ``pack.npz`` written
+        """Build the hyperplane trie pack ONCE per index instance. A
+        file-loaded store with a persisted ``pack.npz`` (see :meth:`save`)
+        skips the Arrow collect entirely — a local numpy read replaces the
+        19-87 s cold rebuild; a ``pack.npz`` written
         without leaf sizes counts as absent and is re-collected. Returns
-        None when the pack exceeds the broadcast cap or the trie is too
+        None when the pack exceeds ``_PACK_MAX_BYTES`` or the trie is too
         deep — callers fall back to the declarative plans. Amortizes the
-        driver collect + broadcast across every serving call on this
-        instance (VERDICT r10 #5)."""
+        driver collect across every serving call on this instance
+        (VERDICT r10 #5)."""
         if hasattr(self, "_planes_pack_cache"):
             return self._planes_pack_cache
         arrs = None
@@ -797,19 +806,21 @@ class LSHForestIndex:
         return pack
 
     def release_pack(self) -> None:
-        """Drop this instance's hyperplane-pack broadcast from executor
-        memory (non-blocking unpersist) and clear the instance cache.
+        """Clear the instance's pack cache and drop its trie broadcast (if
+        :meth:`assign_paths` created one) from executor memory
+        (non-blocking unpersist).
 
         Safe at any point: unpersist leaves the driver-held value intact,
         so a not-yet-materialized plan that still references the broadcast
         re-ships it on demand, and the next _planes_pack() call on this
-        instance re-collects + re-broadcasts. ``add()`` calls this on the
-        SOURCE instance — sessions that loop add() cycles (each returning
-        a new instance with its own pack) would otherwise accumulate one
-        executor-resident pack per retired instance (ADVICE r11)."""
-        pack = self.__dict__.pop("_planes_pack_cache", None)
-        if pack is not None:
-            pack.bc.unpersist(blocking=False)
+        instance re-collects. ``add()`` calls this on the SOURCE instance —
+        sessions that loop add() cycles (each returning a new instance with
+        its own pack) would otherwise accumulate one executor-resident
+        trie per retired instance (ADVICE r11)."""
+        self.__dict__.pop("_planes_pack_cache", None)
+        bc = self.__dict__.pop("_pack_bc", None)
+        if bc is not None:
+            bc.unpersist(blocking=False)
 
     def assign_paths(
         self,
@@ -827,12 +838,17 @@ class LSHForestIndex:
         100-query serving batch the stage latency dwarfed the ~6 M flops of
         actual plane math. The numpy kernel (:func:`_descend`, shared with
         the serving planner) is BIT-EXACT with the declarative fold it
-        replaces. Falls back to the per-level join descent when the trie
-        exceeds the pack's broadcast cap or depth."""
+        replaces. The trie broadcast is created on the first call and
+        reused; serving never ships it (the planner runs on the driver).
+        Falls back to the per-level join descent when the trie exceeds the
+        pack's size cap or depth."""
         pack = self._planes_pack()
         if pack is None:
             return self._assign_paths_joins(df, id_col, vec_col)
-        bc, depth, T = pack.bc, pack.depth, pack.trees
+        bc = self.__dict__.get("_pack_bc")
+        if bc is None:
+            bc = self._pack_bc = self.spark.sparkContext.broadcast(pack.trie)
+        depth, T = pack.depth, pack.trees
         emb_t = df.schema[vec_col].dataType.simpleString()
         id_t = df.schema[id_col].dataType.simpleString()
         src = df.select(
@@ -916,25 +932,13 @@ class LSHForestIndex:
         (at most ``validate.MAX_QUERY_BATCH_ROWS`` rows,
         ``QueryBatchTooLarge`` above); query ids must be integral and come
         back as long. With the plane pack (every trie up to 62 levels whose
-        coeffs fit ``_PACK_MAX_BYTES``) the search is one Arrow pass:
-
-        - the driver plans from the pack (:func:`_plan_leaves`): a
-          vectorized descent gives each (query, tree) its main leaf, and a
-          pair whose main leaf holds fewer than k members walks the leaves
-          in ``probe_mode`` order until the leaves taken hold ≥ k, each
-          capped at its remaining budget;
-        - the leaves are read once, through a literal ``_pp IN (…)``
-          filter (static partition pruning on a saved store) and a filter
-          on the planned (tree_id, path) pairs;
-        - one ``mapInPandas`` folds each planned leaf against its queries
-          (``vector_np.fold_distances``, bit-equal to the declarative
-          kernel) and emits each batch's top-``cap`` rows per leaf and
-          query; one exchange on query_id feeds the per-leaf cap window,
-          the (query, id) dedup across trees (the reference's DashSet
-          union, lsh.rs:266-270) and the top-k ranking.
-
-        Deeper or larger tries take :meth:`_search_declarative`, which
-        returns the same rows.
+        coeffs fit ``_PACK_MAX_BYTES``) the driver plans from the pack
+        (:func:`_plan_leaves`): a vectorized descent gives each (query,
+        tree) its main leaf, and a pair whose main leaf holds fewer than k
+        members walks the leaves in ``probe_mode`` order until the leaves
+        taken hold ≥ k, each capped at its remaining budget. The planned
+        leaves are read in one pass (:meth:`_serve_plan`). Deeper or larger
+        tries take :meth:`_search_declarative`, which returns the same rows.
 
         ``backup_fill`` implements the reference's backup-branch rule
         (lsh.rs:203-215): per tree, the search is a BUDGETED depth-first
@@ -964,8 +968,6 @@ class LSHForestIndex:
           tie-break."""
         if probe_mode not in ("dfs", "margin"):
             raise ValueError(f"unknown probe_mode {probe_mode!r}")
-        from vers_spark.functions import vector_np as VN
-
         block = _query_block(queries, query_id, query_vec, "lsh_search")
         if block is None:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
@@ -978,14 +980,71 @@ class LSHForestIndex:
         pack = self._planes_pack()
         if pack is None:
             return self._search_declarative(
-                queries, k, query_id, query_vec, leaves, backup_fill, probe_mode
+                queries, k, query_id, query_vec, leaves, probe_mode, backup_fill=backup_fill
             )
-        q_ids, q_mat = block
         sizes = pack.leaf_sizes if allowed_ids is None else _leaf_sizes_of(leaves, pack)
-        plan = _plan_leaves(q_mat, pack, sizes, k, backup_fill, probe_mode == "dfs")
+        plan = _plan_leaves(block[1], pack, sizes, k, probe_mode == "dfs", backup_fill)
+        return self._serve_plan(leaves, block, plan, k)
+
+    def search_multiprobe(
+        self,
+        queries: DataFrame,
+        k: int,
+        n_probes: int = 2,
+        query_id: str = "vec_id",
+        query_vec: str = "embedding",
+        probe_mode: str = "margin",
+    ) -> DataFrame:
+        """True multi-probe search (Lv et al. 2007): per (query, tree) visit
+        the best ``n_probes`` leaves by the probe order — margin-ascending
+        by default, deviation-string DFS with ``probe_mode="dfs"`` (both
+        defined under :meth:`search`) — and exact-rerank the union. Unlike
+        :meth:`search`'s backup fill (which probes extra leaves only on
+        UNDERFLOW), this always pays n_probes·max_node_size candidates per
+        tree for recall beyond the main leaf: the standard recall-vs-work
+        dial when adding trees is too expensive (T trees × P probes ≈ the
+        recall of T·P trees at the memory of T).
+
+        Same engine and bounded-batch contract as :meth:`search`: the
+        driver plans the probe set from the plane pack (the first
+        ``n_probes`` leaves of each pair's best-first walk,
+        :func:`_plan_leaves`) and :meth:`_serve_plan` reads it in one pass;
+        tries the pack cannot hold take the declarative frontier walk
+        (:meth:`_search_declarative`), which returns the same rows."""
+        if probe_mode not in ("dfs", "margin"):
+            raise ValueError(f"unknown probe_mode {probe_mode!r}")
+        block = _query_block(queries, query_id, query_vec, "lsh_search_multiprobe")
+        if block is None:
+            return self.spark.createDataFrame([], RESULT_SCHEMA)
+        pack = self._planes_pack()
+        if pack is None:
+            return self._search_declarative(
+                queries, k, query_id, query_vec, self.leaves, probe_mode, n_probes=n_probes
+            )
+        plan = _plan_leaves(
+            block[1], pack, pack.leaf_sizes, k, probe_mode == "dfs", n_probes=n_probes
+        )
+        return self._serve_plan(self.leaves, block, plan, k)
+
+    def _serve_plan(self, leaves: DataFrame, block: tuple, plan: dict, k: int) -> DataFrame:
+        """Read a driver-side plan (:func:`_plan_leaves`) in one pass — the
+        serving tail of both search methods. ``block`` is the collected
+        (ids, vectors) batch whose rows the plan indexes.
+
+        - the leaves are read once, through a literal ``_pp IN (…)``
+          filter (static partition pruning on a saved store) and a filter
+          on the planned (tree_id, path) pairs;
+        - one ``mapInPandas`` folds each planned leaf against its queries
+          (``vector_np.fold_distances``, bit-equal to the declarative
+          kernel) and emits each batch's top-``cap`` rows per leaf and
+          query;
+        - one exchange on query_id feeds the per-leaf cap window, the
+          (query, id) dedup across trees (the reference's DashSet union,
+          lsh.rs:266-270) and the top-k ranking."""
+        from vers_spark.functions import vector_np as VN
+
         if not plan:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-
         # the filters go in as SQL text — one parse instead of a py4j call
         # per literal; paths are bit strings and _pp values 'p<tree>_<bits
         # or z>', so quoting them is safe
@@ -1002,7 +1061,7 @@ class LSHForestIndex:
                 for t, paths in by_tree.items()
             )
         )
-        bc = self.spark.sparkContext.broadcast((q_ids, q_mat, plan))
+        bc = self.spark.sparkContext.broadcast((*block, plan))
 
         def leaf_topk(batches):
             ids, mat, pl = bc.value
@@ -1057,55 +1116,45 @@ class LSHForestIndex:
         query_id: str,
         query_vec: str,
         leaves: DataFrame,
-        backup_fill: bool,
         probe_mode: str,
+        backup_fill: bool = True,
+        n_probes: int | None = None,
     ) -> DataFrame:
-        """:meth:`search` as a declarative plan, for tries the plane pack
-        cannot hold (deeper than 62 levels or coeffs above
-        ``_PACK_MAX_BYTES``): the per-level join descent, a leaf join for
-        the main leaves, and for underfilled (query, tree) pairs the
-        budgeted fill of :meth:`_backup_fill_candidates`. ``leaves`` is the
-        leaf table after the ``allowed_ids`` semi-join. Returns the same
-        rows as the planned path (gated in tests/test_lsh_backup.py)."""
-        qp = self.assign_paths(queries, query_id, query_vec)
-
-        if backup_fill or "_pp" in self.leaves.columns:
-            # backup_fill: three consumers below (count, filled-branch,
-            # fill-branch) share the descent fold and the leaf join —
-            # persist both subplans so the final DAG computes them once,
-            # not per branch (Catalyst does not CSE whole subtrees across
-            # union branches). File-loaded stores checkpoint too: the
-            # broadcast-gate count below materializes it.
-            qp = qp.localCheckpoint(eager=False)
-        if "_pp" in self.leaves.columns:
-            # File-loaded store: broadcast-hint the NARROW probe side of
-            # the main leaf join and re-join the dim-wide q_vec after, the
-            # search_multiprobe shape (gated on _BROADCAST_QUERY_CAP).
-            # MEASURED reason (BASELINE §r13): the stats-free mapInPandas
-            # descent output otherwise planned a sort-merge join at the 1M
-            # store, and the leaf scan read 128/128 partitions — all 8M
-            # rows — for a SINGLE query whose main leaves touch 8 buckets.
-            n_queries = qp.count() // max(int(self.params["num_trees"]), 1)
-            bq = (
-                F.broadcast
-                if n_queries <= _BROADCAST_QUERY_CAP
-                else (lambda df: df)
-            )
-            qvec = qp.select("query_id", "q_vec").dropDuplicates(["query_id"])
-            main = (
-                _join_leaves(
-                    bq(qp.select("query_id", "tree_id", "path")),
-                    leaves,
-                    self._pp_len(),
-                )
-                .join(bq(qvec), ["query_id"])
-                .select("query_id", "tree_id", "q_vec", "id", "embedding")
-            )
+        """:meth:`search` (``n_probes`` None) or :meth:`search_multiprobe`
+        as a declarative plan, for tries the plane pack cannot hold (deeper
+        than 62 levels or coeffs above ``_PACK_MAX_BYTES``): the per-level
+        join descent, then a leaf join for either the main leaves — with
+        the budgeted fill of :meth:`_backup_fill_candidates` for
+        underfilled (query, tree) pairs — or the first ``n_probes`` leaves
+        of the frontier walk (:meth:`_leaf_order_frontier`). ``leaves`` is
+        the leaf table after the ``allowed_ids`` semi-join. Returns the
+        same rows as the planned path (gated in tests/test_lsh_backup.py)."""
+        # the checkpoint is read by every branch below (probe side, qvec,
+        # underfill test); the count materializes it
+        qp = self.assign_paths(queries, query_id, query_vec).localCheckpoint(
+            eager=False
+        )
+        # Broadcast-hint the NARROW probe side of the leaf join and re-join
+        # the dim-wide q_vec after, both gated on _BROADCAST_QUERY_CAP.
+        # MEASURED reason (BASELINE §r13): the stats-free descent output
+        # otherwise planned a sort-merge join at the 1M store, and the leaf
+        # scan read 128/128 partitions — all 8M rows — for a SINGLE query
+        # whose main leaves touch 8 buckets.
+        n_queries = qp.count() // max(int(self.params["num_trees"]), 1)
+        bq = F.broadcast if n_queries <= _BROADCAST_QUERY_CAP else (lambda df: df)
+        if n_probes is None:
+            probe = qp.select("query_id", "tree_id", "path")
         else:
-            main = _join_leaves(qp, leaves, self._pp_len()).select(
-                "query_id", "tree_id", "q_vec", "id", "embedding"
+            probe = self._leaf_order_frontier(
+                qp.select("query_id", "tree_id", "q_vec"), leaves, probe_mode, n_probes
             )
-        if backup_fill:
+        qvec = qp.select("query_id", "q_vec").dropDuplicates(["query_id"])
+        main = (
+            _join_leaves(bq(probe), leaves, self._pp_len())
+            .join(bq(qvec), ["query_id"])
+            .select("query_id", "tree_id", "q_vec", "id", "embedding")
+        )
+        if backup_fill and n_probes is None:
             main = main.localCheckpoint(eager=False)
             cnt = main.groupBy("query_id", "tree_id").agg(
                 F.count(F.lit(1)).alias("n_cand")
@@ -1142,160 +1191,15 @@ class LSHForestIndex:
         scored = self._rerank_blocked(cands).withColumnRenamed("id", "neighbour_id")
         return _ranked(scored, "_dist", k)
 
-    def _sides_blocked(self, pairs: DataFrame) -> DataFrame:
-        """Blocked-BLAS twin of the declarative per-plane fold (the
-        knn.exact_knn_blocked pattern): q_bit and q_margin for every
-        (query, inner node) via ONE GEMM per Arrow batch of hyperplanes
-        against the collected query batch. At 1M×300 the declarative fold
-        costs ~µs per element — 100 queries × 163k inner nodes ≈ 16M folds
-        ≈ 6 s/query (BASELINE.md); the GEMM does the same work in one BLAS
-        call per batch. Queries ride the bounded-batch serving contract
-        (driver-collect + broadcast, same as IVFFlatIndex.search); the
-        hyperplane table never leaves the executors. Same summation caveat
-        as every blocked twin: BLAS pairwise sums differ from the fold in
-        the last ulp, so probe ORDER parity (not margin-value parity) is
-        the gated contract — ties still break on the deviation string."""
-        import pandas as pd
-
-        from vers_spark.functions.validate import bounded_collect
-
-        q_rows = bounded_collect(
-            pairs.select("query_id", "q_vec").dropDuplicates(["query_id"]),
-            "lsh_sides_blocked",
-        )
-        if not q_rows:
-            return self.spark.createDataFrame(
-                [], "query_id long, tree_id int, prefix string, q_bit string, q_margin double"
-            )
-        q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-        q_mat = np.array([[float(x) for x in r[1]] for r in q_rows], dtype=np.float64)
-        bc = self.spark.sparkContext.broadcast((q_ids, q_mat))
-
-        def score(batches):
-            ids, mat = bc.value
-            nq = len(ids)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                cmat = np.array(pdf["coeffs"].tolist(), dtype=np.float64)  # (B, d)
-                const = pdf["constant"].to_numpy(dtype=np.float64)
-                dots = mat @ cmat.T + const  # (Q, B)
-                margins = np.abs(dots) / np.sqrt((cmat * cmat).sum(axis=1))
-                nb = len(pdf)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(ids, nb),
-                        "tree_id": np.tile(pdf["tree_id"].to_numpy(), nq),
-                        "prefix": np.tile(pdf["path"].to_numpy(), nq),
-                        "q_bit": np.where(dots >= 0, "1", "0").reshape(-1),
-                        "q_margin": margins.reshape(-1),
-                    }
-                )
-
-        sides = self.hyperplanes.mapInPandas(
-            score, "query_id long, tree_id int, prefix string, q_bit string, q_margin double"
-        )
-        # restrict to the requested (query, tree) pairs so subset callers
-        # (e.g. underflow fill) keep identical semantics
-        return sides.join(
-            F.broadcast(pairs.select("query_id", "tree_id").dropDuplicates()),
-            ["query_id", "tree_id"],
-            "left_semi",
-        )
-
-    def _leaf_order(
-        self, pairs: DataFrame, leaves: DataFrame, probe_mode: str, compute: str = "fold"
-    ) -> DataFrame:
-        """Per (query, tree): EVERY leaf of the tree with its two visit keys
-        — ``dev`` (deviation string: bit i = 1 iff the leaf disagrees with
-        the query's plane side at ancestor level i; lexicographic order IS
-        the reference recursion's DFS order) and ``cost`` (Σ query margins
-        |coeffs·q + const| over the disagreeing levels — the multi-probe
-        visit order of Lv et al. 2007). ``pairs``: (query_id, tree_id,
-        q_vec). ``compute``: "fold" (declarative, the oracle/replay path) |
-        "blocked" (GEMM twin, the serving path — see _sides_blocked)."""
-        if probe_mode not in ("dfs", "margin"):
-            raise ValueError(f"unknown probe_mode {probe_mode!r}")
-        if compute not in ("fold", "blocked"):
-            raise ValueError(f"unknown compute {compute!r}")
-        # the query's side (and its distance-to-plane proxy) at EVERY inner
-        # node of its tree
-        if compute == "blocked":
-            sides = self._sides_blocked(pairs)
-        else:
-            sides = pairs.join(self.hyperplanes, "tree_id").select(
-                "query_id",
-                "tree_id",
-                F.col("path").alias("prefix"),
-                _plane_side(F.col("q_vec"), F.col("coeffs"), F.col("constant")).alias("q_bit"),
-                # TRUE distance to the plane: |coeffs·q + const| / ‖coeffs‖ —
-                # planes are annoy-style b−a splits, so raw dots carry the
-                # arbitrary ‖b−a‖ scale and are not comparable across levels
-                (
-                    F.abs(V.dot(F.col("q_vec"), F.col("coeffs")) + F.col("constant"))
-                    / V.magnitude(F.col("coeffs"))
-                ).alias("q_margin"),
-            )
-        # leaf paths decomposed into (ancestor prefix, branch bit) per level
-        paths = leaves.select("tree_id", "path").distinct()
-        lp = (
-            paths.filter(F.length("path") >= 1)
-            .withColumn("level", F.explode(F.expr("sequence(0, length(path) - 1)")))
-            .select(
-                "tree_id",
-                "path",
-                "level",
-                F.expr("substring(path, 1, level)").alias("prefix"),
-                F.expr("substring(path, level + 1, 1)").alias("leaf_bit"),
-            )
-        )
-        dev = (
-            pairs.select("query_id", "tree_id")
-            .join(lp, "tree_id")
-            .join(sides, ["query_id", "tree_id", "prefix"])
-            .withColumn(
-                "bit", F.when(F.col("leaf_bit") == F.col("q_bit"), "0").otherwise("1")
-            )
-            .groupBy("query_id", "tree_id", "path")
-            .agg(
-                F.expr(
-                    "array_join(transform(array_sort(collect_list(struct(level, bit))), x -> x.bit), '')"
-                ).alias("dev"),
-                # cost accumulates as a LEFT FOLD in ascending level order —
-                # bit-equal to the frontier descent's running sum (which adds
-                # one level's contribution per round), so the auto engine
-                # switch can never flip a near-tie margin ordering through
-                # f64 summation order (an unordered F.sum could)
-                F.expr(
-                    "aggregate("
-                    " transform(array_sort(collect_list(struct(level, bit, q_margin))),"
-                    "  x -> CASE WHEN x.bit = '1' THEN x.q_margin"
-                    "       ELSE cast(0.0 as double) END),"
-                    " cast(0.0 as double), (a, x) -> a + x)"
-                ).alias("cost"),
-            )
-        )
-        # single-leaf trees (empty path, no planes) sort first with dev = ''
-        root_leaves = (
-            pairs.select("query_id", "tree_id")
-            .join(paths.filter(F.length("path") == 0), "tree_id")
-            .withColumn("dev", F.lit(""))
-            .withColumn("cost", F.lit(0.0))
-        )
-        return dev.unionByName(root_leaves)
-
     @staticmethod
     def _rerank_blocked(cands: DataFrame) -> DataFrame:
-        """Numpy twin of the declarative exact rerank: per candidate row,
+        """The declarative plan's exact rerank: per candidate row,
         sq_euclidean(q_vec, embedding) in ONE vectorized Arrow batch pass
-        instead of a per-row zip_with/aggregate fold (µs per ELEMENT — at
-        1M multiprobe serving the fold touches ~50M elements). BIT-EXACT,
-        not last-ulp: the fold is a sequential left sum over (xᵢ−yᵢ)² in
-        f64, and np.cumsum's running sum accumulates in the same index
-        order, so the final prefix equals the fold exactly (gated in
-        test_lsh_backup.test_multiprobe_rerank_blocked_bitexact; the kernel
-        is vector_np.fold_distances). Input (query_id, q_vec, id, embedding)
-        → (query_id, id, _dist)."""
+        instead of a per-row zip_with/aggregate fold (µs per ELEMENT).
+        BIT-EXACT with the fold, not last-ulp: the kernel is
+        vector_np.fold_distances (gated in
+        test_vector.test_fold_distances_bit_equal_to_expression_kernels).
+        Input (query_id, q_vec, id, embedding) → (query_id, id, _dist)."""
         import pandas as pd
 
         from vers_spark.functions.vector_np import fold_distances
@@ -1324,84 +1228,6 @@ class LSHForestIndex:
         absent means the default, covering every pre-parameter store."""
         return int(self.params.get("pp_len", _PP_LEN))
 
-    def _n_leaf_paths(self) -> int:
-        """Distinct leaf-path count, memoized per instance — one bounded
-        aggregate on first use; drives search_multiprobe's auto
-        leaf_descent switch."""
-        if getattr(self, "_leaf_path_count", None) is None:
-            self._leaf_path_count = (
-                self.leaves.select("tree_id", "path").distinct().count()
-            )
-        return self._leaf_path_count
-
-    def _leaf_order_pack(
-        self,
-        pairs: DataFrame,
-        probe_mode: str,
-        n_probes: int,
-        keep_keys: bool = False,
-    ) -> DataFrame:
-        """Best-first multiprobe leaf enumeration INSIDE the plane pack —
-        the r11 serving engine: one mapInPandas pass, zero join rounds.
-
-        Per (query, tree) row, the first ``n_probes`` leaves of the
-        best-first trie walk :func:`_best_first` (the serving planner's
-        backup fill walks the same function) — EXACTLY `_leaf_order`'s
-        top-``n_probes`` (no beam, no approximation guard; parity pinned
-        in tests/test_lsh.py::test_leaf_order_pack_matches_full). Work is
-        O(pairs × visited nodes × dim) inside numpy/heapq — the frontier
-        engine's per-round joins cost 41-83 s per 100-query batch at the
-        1M forest where this pass costs ~1 s."""
-        pack = self._planes_pack()
-        if pack is None:
-            raise RuntimeError("_leaf_order_pack requires the plane pack")
-        bc = pack.bc
-        id_t = pairs.schema["query_id"].dataType.simpleString()
-        src = pairs.select("query_id", "tree_id", "q_vec")
-        dfs = probe_mode == "dfs"
-
-        def enumerate_best(batches):
-            import numpy as np
-            import pandas as pd
-
-            tree_keys, tree_rows, W, B, M, leaf_keys = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                oq, ot, op, od, oc = [], [], [], [], []
-                for qid, t, qv in zip(
-                    pdf["query_id"], pdf["tree_id"], pdf["q_vec"]
-                ):
-                    t = int(t)
-                    LK = leaf_keys[t]
-                    walk = _best_first(
-                        np.asarray(qv, dtype=np.float64),
-                        tree_keys[t], tree_rows[t], W, B, M, LK, dfs,
-                    )
-                    for p, dev, cost in islice(walk, n_probes):
-                        oq.append(qid)
-                        ot.append(t)
-                        op.append(_key_path(LK[p]))
-                        od.append(dev)
-                        oc.append(cost)
-                yield pd.DataFrame(
-                    {
-                        "query_id": oq,
-                        "tree_id": np.array(ot, dtype=np.int32),
-                        "path": op,
-                        "dev": od,
-                        "cost": np.array(oc, dtype=np.float64),
-                    }
-                )
-
-        out = src.mapInPandas(
-            enumerate_best,
-            f"query_id {id_t}, tree_id int, path string, dev string, cost double",
-        )
-        if keep_keys:
-            return out
-        return out.select("query_id", "tree_id", "path")
-
     def _leaf_order_frontier(
         self,
         pairs: DataFrame,
@@ -1412,11 +1238,10 @@ class LSHForestIndex:
         stride: int = 2,
         keep_keys: bool = False,
     ) -> DataFrame:
-        """Best-first multiprobe leaf enumeration via a BOUNDED FRONTIER —
-        the serving-scale replacement for :meth:`_leaf_order`, which scores
-        and ranks EVERY leaf of every tree per query (~80k leaves × their
-        ancestor levels per (query, tree) at 1M; the ranking join is the
-        corpus-growth term). Here only visited nodes are ever scored:
+        """Best-first leaf enumeration via a BOUNDED FRONTIER — the
+        declarative plan's twin of the planner's :func:`_best_first` walk,
+        for tries the plane pack cannot hold. Only visited nodes are ever
+        scored:
 
         Level-synchronous branch-and-bound down the path trie. The frontier
         holds ≤ ``beam`` inner-node prefixes per (query, tree), each with
@@ -1431,16 +1256,20 @@ class LSHForestIndex:
         at ``beam`` by the probe order. Exact top-``n_probes`` whenever the
         beam cap never binds after the bound activates (branch-and-bound);
         the cap is the documented guard against adversarial margin
-        landscapes — parity with the exhaustive ranking is replay-gated in
-        tests/test_lsh_backup.py. Work per round is O(pairs × beam) rows —
+        landscapes — row parity with the planned walk is gated in
+        tests/test_lsh_backup.py. Margin cost accumulates as the same
+        ascending-level f64 left fold as the planned walk, so summation
+        order cannot flip near-tie orderings between the two. Work per
+        round is O(pairs × beam) rows —
         independent of leaf count — for ``depth`` rounds; per playbook the
         self-referencing round state is eagerly localCheckpointed.
 
-        Returns the probed (query_id, tree_id, path) rows, ≤ n_probes per
-        pair, ordered semantics identical to _leaf_order's top-n_probes."""
+        Returns the probed (query_id, tree_id, path) rows: the first
+        ≤ n_probes non-empty leaves per pair in probe order, as the planned
+        walk takes them."""
         if probe_mode not in ("dfs", "margin"):
-            # same error contract as _leaf_order: a typo'd mode must raise,
-            # not silently fall into the margin key/bound branch
+            # a typo'd mode must raise, not silently fall into the margin
+            # key/bound branch
             raise ValueError(f"unknown probe_mode {probe_mode!r}")
         # 1M grid (BASELINE.md round-7): the branch-and-bound threshold, not
         # the beam, does the pruning — beams 8/16/32 probe the IDENTICAL
@@ -1602,170 +1431,6 @@ class LSHForestIndex:
             return settled.select("query_id", "tree_id", "path", "dev", "cost")
         return settled.select("query_id", "tree_id", "path")
 
-    def search_multiprobe(
-        self,
-        queries: DataFrame,
-        k: int,
-        n_probes: int = 2,
-        query_id: str = "vec_id",
-        query_vec: str = "embedding",
-        probe_mode: str = "margin",
-        compute: str = "fold",
-        leaf_descent: str = "auto",
-        rerank: str = "blocked",
-    ) -> DataFrame:
-        """True multi-probe search (Lv et al. 2007): per (query, tree) visit
-        the best ``n_probes`` leaves by the probe order — margin-ascending
-        by default, deviation-string DFS with ``probe_mode="dfs"`` — and
-        exact-rerank the union. Unlike :meth:`search`'s backup fill (which
-        probes extra leaves only on UNDERFLOW), this always pays
-        n_probes·max_node_size candidates per tree for recall beyond the
-        main leaf: the standard recall-vs-work dial when adding trees is
-        too expensive (T trees × P probes ≈ the recall of T·P trees at the
-        memory of T). Scale shape identical to search(): one descent fold,
-        leaf ranking is a bounded window per (query, tree) over the tree's
-        leaf COUNT (not members), candidates join only the probed
-        (tree, path) posting lists, final top-k is a per-query window over
-        ≤ T·P·max_node rows.
-
-        ``compute="blocked"`` swaps the margin scoring onto the GEMM twin
-        (_sides_blocked) — applies to the "full" descent; "fold" (default)
-        keeps the declarative kernel. Probe-order parity between the two is
-        replay-gated in tests (margins differ only in the last ulp).
-
-        ``leaf_descent`` picks the probe-order engine:
-        - ``"frontier"``: branch-and-bound descent scoring only visited
-          nodes (_leaf_order_frontier) — per-round work is O(queries ×
-          beam), independent of leaf count; the 1M+ serving path.
-        - ``"full"``: exhaustively score and rank every leaf per
-          (query, tree) (_leaf_order) — its cost grows with the corpus'
-          leaf count; at small leaf counts it is CHEAPER than the
-          frontier's per-round fixed overhead, and it is the parity
-          reference the frontier is gated against.
-        - ``"auto"`` (default): "full" below _FRONTIER_MIN_LEAVES distinct
-          leaf paths, "frontier" above (count memoized per instance) —
-          both sides return identical rows (parity-gated), so the switch
-          is a pure plan choice.
-
-        ``rerank="blocked"`` (default) computes the exact candidate
-        distances in vectorized Arrow batches (_rerank_blocked) — BIT-equal
-        to the ``"fold"`` declarative kernel (np.cumsum accumulates in the
-        fold's index order), so this is a pure throughput choice too.
-
-        Batch sizing: serving-shaped batches (≤ _BROADCAST_QUERY_CAP
-        queries) get broadcast-hinted probe/query joins — the shape that
-        preserves dynamic partition pruning on a saved leaf store; larger
-        (corpus-sized) batches automatically fall back to plain shuffle
-        joins, which degrade gracefully instead of tripping Spark's
-        broadcast hard limits. Row parity across the switch is test-gated."""
-        qp = self.assign_paths(queries, query_id, query_vec).localCheckpoint(
-            eager=False
-        )
-        # one count materializes the lazy checkpoint (which every engine
-        # below reuses) and sizes the broadcast decision: hints on for
-        # serving-shaped batches, plain shuffle joins for corpus-sized ones
-        # (see _BROADCAST_QUERY_CAP)
-        n_queries = qp.count() // max(int(self.params["num_trees"]), 1)
-        bcast = (
-            F.broadcast if n_queries <= _BROADCAST_QUERY_CAP else (lambda df: df)
-        )
-        pairs = qp.select("query_id", "tree_id", "q_vec")
-        if leaf_descent == "auto":
-            # the packed best-first engine is exact at every scale and
-            # join-free; the declarative engines remain for explicit
-            # requests, the above-cap fallback, and as parity references
-            if self._planes_pack() is not None:
-                leaf_descent = "pack"
-            else:
-                leaf_descent = (
-                    "full" if self._n_leaf_paths() < _FRONTIER_MIN_LEAVES else "frontier"
-                )
-        if leaf_descent == "pack":
-            if compute == "blocked":
-                # same loudness as the frontier branch below: the GEMM
-                # margin kernel belongs to the 'full' descent; the pack
-                # engine folds margins inside its best-first walk
-                import warnings
-
-                warnings.warn(
-                    "compute='blocked' applies to the 'full' leaf descent "
-                    "only; the pack descent folds margins at visited "
-                    "nodes — proceeding with the fold kernel",
-                    stacklevel=2,
-                )
-            probed = self._leaf_order_pack(pairs, probe_mode, n_probes)
-        elif leaf_descent == "frontier":
-            if compute == "blocked":
-                # the GEMM margin kernel scores the full (query × plane)
-                # grid — the frontier only ever touches visited nodes, so
-                # the two compose into neither engine's plan; be loud
-                # instead of silently ignoring the explicit request
-                import warnings
-
-                warnings.warn(
-                    "compute='blocked' applies to the 'full' leaf descent "
-                    "only; the frontier descent folds margins at visited "
-                    "nodes — proceeding with the fold kernel",
-                    stacklevel=2,
-                )
-            probed = self._leaf_order_frontier(
-                pairs, self.leaves, probe_mode, n_probes
-            )
-        elif leaf_descent == "full":
-            order = self._leaf_order(pairs, self.leaves, probe_mode, compute)
-            key = (
-                [F.asc("dev")] if probe_mode == "dfs" else [F.asc("cost"), F.asc("dev")]
-            )
-            wv = W.partitionBy("query_id", "tree_id").orderBy(*key)
-            probed = (
-                order.withColumn("_pr", F.row_number().over(wv))
-                .filter(F.col("_pr") <= n_probes)
-                .select("query_id", "tree_id", "path")
-            )
-        else:
-            raise ValueError(f"unknown leaf_descent {leaf_descent!r}")
-        # Broadcast the probe set into the leaf join: it is bounded by
-        # queries × trees × n_probes rows of (query_id, tree_id, path) —
-        # the tiny side against the corpus-sized leaf store for any
-        # serving-shaped batch (gated: see _BROADCAST_QUERY_CAP). The
-        # explicit hint is what keeps dynamic partition pruning on a
-        # (tree_id, _pp)-partitioned saved store: the pack engine's
-        # mapInPandas output carries no stats, so without the hint the
-        # planner falls back to a sort-merge join and the leaf scan reads
-        # EVERY bucket (plan-gated in test_plans.py::
-        # test_lsh_on_disk_search_partition_prunes). q_vec re-joins AFTER
-        # the candidate dedup so the probed payload stays narrow — paths
-        # and ids only; the qvec leg DOES carry one dim-wide f64 vector
-        # per query, which is why both hints are gated on
-        # _BROADCAST_QUERY_CAP (bcast above).
-        qvec = qp.select("query_id", "q_vec").dropDuplicates(["query_id"])
-        cands = (
-            _join_leaves(bcast(probed), self.leaves, self._pp_len())
-            .select("query_id", "id", "embedding")
-            .dropDuplicates(["query_id", "id"])
-            .join(bcast(qvec), ["query_id"])
-            .select("query_id", "q_vec", "id", "embedding")
-        )
-        if rerank == "blocked":
-            scored = self._rerank_blocked(cands)
-        elif rerank == "fold":
-            scored = cands.withColumn(
-                "_dist", V.sq_euclidean(F.col("q_vec"), F.col("embedding"))
-            ).select("query_id", "id", "_dist")
-        else:
-            raise ValueError(f"unknown rerank {rerank!r}")
-        w = W.partitionBy("query_id").orderBy(F.asc("_dist"), F.asc("id"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select(
-                "query_id",
-                F.col("id").alias("neighbour_id"),
-                F.col("_dist").alias("distance"),
-                F.col("rn").alias("rank"),
-            )
-        )
-
     def _backup_fill_candidates(
         self, under: DataFrame, leaves: DataFrame, k: int, probe_mode: str = "dfs"
     ) -> DataFrame:
@@ -1782,29 +1447,19 @@ class LSHForestIndex:
         pairs never reach here, and at production max_node_size ≥ k
         underflow is the rare edge, not the norm.
 
-        Leaf enumeration follows the multiprobe auto rule: above
-        _FRONTIER_MIN_LEAVES the frontier descent drives it with
-        n_probes=k — exact for the budgeted admission, because every
-        admitted leaf contributes ≥ 1 member, so the admitted set is
-        always within the k best-ordered leaves; below, the exhaustive
-        ranking is cheaper. Two caveats to that exactness (shared with
-        search_multiprobe): it holds while the frontier's beam cap
-        (4·n_probes) never binds after the settled bound activates — the
-        documented guard against adversarial margin landscapes — and both
-        engines accumulate margin cost as the SAME ascending-level left
-        fold (_leaf_order's aggregate(), the frontier's per-round running
-        sum), so f64 summation order cannot flip near-tie orderings across
-        the auto switch. Parity across both engines is gated in
-        test_lsh_backup.py."""
+        The frontier descent enumerates the leaves with n_probes=k — exact
+        for the budgeted admission, because every admitted leaf contributes
+        ≥ 1 member, so the admitted set is always within the k best-ordered
+        leaves, as long as the frontier's beam cap (4·n_probes) never binds
+        after the settled bound activates (the documented guard against
+        adversarial margin landscapes). Parity with the planned search is
+        gated in test_lsh_backup.py."""
         sizes = leaves.groupBy("tree_id", "path").agg(F.count(F.lit(1)).alias("leaf_n"))
         order = [F.asc("dev")] if probe_mode == "dfs" else [F.asc("cost"), F.asc("dev")]
         wdev = W.partitionBy("query_id", "tree_id").orderBy(*order)
-        if self._n_leaf_paths() >= _FRONTIER_MIN_LEAVES:
-            ordered = self._leaf_order_frontier(
-                under, leaves, probe_mode, n_probes=k, keep_keys=True
-            )
-        else:
-            ordered = self._leaf_order(under, leaves, probe_mode)
+        ordered = self._leaf_order_frontier(
+            under, leaves, probe_mode, n_probes=k, keep_keys=True
+        )
         adm = (
             ordered
             .join(sizes, ["tree_id", "path"])
@@ -1826,7 +1481,7 @@ class LSHForestIndex:
             # broadcast: `under` is the underfilled (query, tree) subset —
             # rare by design (max_node_size ≥ k fills from the main leaf) —
             # and the hint preserves the saved store's dynamic partition
-            # pruning when `adm` comes out of the stats-free pack engine
+            # pruning
             _join_leaves(
                 F.broadcast(adm.join(under, ["query_id", "tree_id"])),
                 leaves,

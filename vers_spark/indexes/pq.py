@@ -493,7 +493,7 @@ def ivfpq_search_blocked(
                 # explicit sequential fold over the m LUT terms: numpy's
                 # .sum uses pairwise summation, which can differ by ulps
                 # from the declarative aggregate's left fold and flip
-                # near-tie orderings across engines (cf. lsh._leaf_order)
+                # near-tie orderings across engines (cf. lsh._best_first)
                 d = np.zeros(g.shape[:2], dtype=np.float64)
                 for j in range(g.shape[2]):
                     d += g[:, :, j]  # in-place: same left fold, no temporaries

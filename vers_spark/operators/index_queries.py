@@ -512,11 +512,12 @@ def lsh_search_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the best 2 leaves by ascending total query-margin of their disagreeing
     ancestor planes are probed (nearest-hyperplane siblings first), their
     members exact-reranked — the recall-vs-work dial that buys ~2-tree
-    recall at 1-tree memory. Rows-only here (probe order is geometry, not
-    SQL); bit-parity with a local replay of the margin-ordered visit plus
-    the recall-vs-DFS-order comparison are gated in
-    tests/test_lsh_backup.py. The same probe_mode also upgrades search()'s
-    underflow backup fill."""
+    recall at 1-tree memory. The probe set is planned on the driver from
+    the plane pack and read in one pass, like search(). Rows-only here
+    (probe order is geometry, not SQL); bit-parity with a local replay of
+    the margin-ordered visit plus the recall-vs-DFS-order comparison are
+    gated in tests/test_lsh_backup.py. The same probe_mode also upgrades
+    search()'s underflow backup fill."""
     idx = _lsh(spark, sf_dir, trees=2, max_node=8)
     emb = load_table(spark, sf_dir, "embeddings")
     return idx.search_multiprobe(
@@ -525,23 +526,18 @@ def lsh_search_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lsh_multiprobe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SERVING-SCALE multiprobe engine, driver-certified on its own row:
-    branch-and-bound frontier leaf descent (lsh._leaf_order_frontier — only
-    visited trie nodes are margin-scored; per-round work is O(queries ×
-    beam), independent of leaf count) forced on a corpus where the auto
-    switch would pick the exhaustive ranking. Rows-only, but the results
-    are pytest-gated BIT-identical to lsh_search_multiprobe's exhaustive
-    path (test_lsh_backup.test_multiprobe_frontier_parity_with_full), and
-    at 1M×300 this path serves P=2 at 790 ms/query with recall identical
-    to the all-leaf ranking (BASELINE.md round-7)."""
+    """Multiprobe through the one LSH engine, kept as its own driver row:
+    the driver plans the first 2 leaves of each (query, tree) pair's
+    margin-ordered walk of the plane pack and one pass reads them — the
+    same call as lsh_search_multiprobe, so the two rows must agree. The
+    branch-and-bound frontier descent (lsh._leaf_order_frontier) serves
+    only tries the pack cannot hold, and is pytest-gated row-identical to
+    the planned walk
+    (test_lsh_backup.test_multiprobe_frontier_parity_with_full)."""
     idx = _lsh(spark, sf_dir, trees=2, max_node=8)
     emb = load_table(spark, sf_dir, "embeddings")
     return idx.search_multiprobe(
-        emb.filter(F.col("vec_id") < 5),
-        k=10,
-        n_probes=2,
-        probe_mode="margin",
-        leaf_descent="frontier",
+        emb.filter(F.col("vec_id") < 5), k=10, n_probes=2, probe_mode="margin"
     )
 
 
@@ -578,12 +574,13 @@ def lsh_saved_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lsh_saved_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The saved-store SERVING flagship (bench headline line since r14):
     reference forest config (8 trees, max_node_size=100), save → load →
-    margin-ordered multiprobe over the partition-pruned leaf store with
-    the persisted plane pack. Rows-only (probe order is geometry, not
-    SQL), but pytest-gated BIT-identical to the in-session engine
-    (tests/test_lsh.py saved-pack parity) and runtime-metric-gated on
-    partitions-read (test_plans); the bench line puts the DPP serving
-    path the r13 measurements fixed under the per-line minima ratchet."""
+    margin-ordered multiprobe planned on the driver from the persisted
+    plane pack, read through a literal _pp IN (…) partition filter on the
+    leaf store. Rows-only (probe order is geometry, not SQL), but
+    pytest-gated BIT-identical to the in-session engine (tests/test_lsh.py
+    saved-pack parity) and runtime-metric-gated on partitions-read
+    (test_plans); the bench line puts the saved-store serving path under
+    the per-line minima ratchet."""
     idx = _lsh_saved(spark, sf_dir, trees=8, max_node=100)
     emb = load_table(spark, sf_dir, "embeddings")
     return idx.search_multiprobe(

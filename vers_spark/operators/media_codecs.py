@@ -704,8 +704,8 @@ def image_features(arr: np.ndarray, dim: int) -> np.ndarray:
 # keep band buckets small; at or above it the 256-bit layouts (16×17 grid /
 # 257 windows → 16×16-bit bands) are REQUIRED — tools/phash_scale_probe.py
 # measured 8-bit bands going ~n²/256 (OOM at 1M) while 16-bit bands serve
-# 1M in 22 s. The same corpus-count auto-dial discipline as the LSH
-# serving engine's 4096-leaf threshold (indexes/lsh.py _FRONTIER_MIN_LEAVES).
+# 1M in 22 s. The same corpus-count auto-dial discipline as lsh.py's
+# save() bucket width (indexes/lsh.py _auto_pp_len).
 WIDE_FP_MIN_COUNT = 100_000
 
 

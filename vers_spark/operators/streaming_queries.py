@@ -592,7 +592,11 @@ def stream_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = scratch_dir("vs_ndstream_ck_")
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        bands = minhash_bands(minhash_rows(batch_df, 3, keep_shingles=False))
+        # two consumers (the append and the join's new side): the append
+        # materializes the checkpoint, so the MinHash pass runs once
+        bands = minhash_bands(
+            minhash_rows(batch_df, 3, keep_shingles=False)
+        ).localCheckpoint(eager=False)
         bands.write.mode("append").parquet(band_store)
         store = spark.read.parquet(band_store)
         new = bands.select(F.col("doc_id").alias("doc_n"), "band_id", "band_key")
