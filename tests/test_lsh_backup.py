@@ -319,6 +319,31 @@ def test_multiprobe_parity_above_auto_threshold(spark, sf_oracle_dir):
             assert len(planned) > 0, (mode, n_probes)
 
 
+def test_declarative_fallback_evaluates_queries_once(spark, emb, small_forest):
+    """Without the pack, search() and search_multiprobe() serve the batch
+    they collected under the bounded-batch contract: an accumulator in the
+    query frame's lineage counts each query row once per call."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    base = emb.filter(F.col("vec_id") < 15).select("vec_id", "embedding")
+    queries = base.mapInPandas(tap, base.schema)
+    calls = {
+        "search": lambda: small_forest.search(queries, k=10, backup_fill=False),
+        "search_multiprobe": lambda: small_forest.search_multiprobe(queries, k=10, n_probes=1),
+    }
+    for name, call in calls.items():
+        before = seen.value
+        with _declarative(small_forest):
+            rows = call().collect()
+        assert len({r["query_id"] for r in rows}) == 15, name
+        assert seen.value - before == 15, name
+
+
 def test_frontier_probe_mode_validated(spark, emb, small_forest):
     """A typo'd probe_mode must raise in the planned multiprobe and in the
     declarative frontier walk (ADVICE r7: the frontier silently fell into

@@ -57,6 +57,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from vers_spark.functions import vector as V
 from vers_spark.operators.dedup import dedup_exact
@@ -980,7 +981,8 @@ class LSHForestIndex:
         pack = self._planes_pack()
         if pack is None:
             return self._search_declarative(
-                queries, k, query_id, query_vec, leaves, probe_mode, backup_fill=backup_fill
+                self._block_frame(queries, block, query_id, query_vec),
+                k, query_id, query_vec, leaves, probe_mode, backup_fill=backup_fill,
             )
         sizes = pack.leaf_sizes if allowed_ids is None else _leaf_sizes_of(leaves, pack)
         plan = _plan_leaves(block[1], pack, sizes, k, probe_mode == "dfs", backup_fill)
@@ -1019,12 +1021,31 @@ class LSHForestIndex:
         pack = self._planes_pack()
         if pack is None:
             return self._search_declarative(
-                queries, k, query_id, query_vec, self.leaves, probe_mode, n_probes=n_probes
+                self._block_frame(queries, block, query_id, query_vec),
+                k, query_id, query_vec, self.leaves, probe_mode, n_probes=n_probes,
             )
         plan = _plan_leaves(
             block[1], pack, pack.leaf_sizes, k, probe_mode == "dfs", n_probes=n_probes
         )
         return self._serve_plan(self.leaves, block, plan, k)
+
+    def _block_frame(
+        self, queries: DataFrame, block: tuple, query_id: str, query_vec: str
+    ) -> DataFrame:
+        """The collected batch ``block`` as a local frame for
+        :meth:`_search_declarative`, so the caller's ``queries`` is
+        evaluated once per call. Ids are long (the bounded-batch
+        contract); vectors keep the caller's element type, so the
+        declarative descent and fold read the values they would have read
+        from ``queries``."""
+        ids, mat = block
+        schema = StructType(
+            [
+                StructField(query_id, LongType()),
+                StructField(query_vec, queries.schema[query_vec].dataType),
+            ]
+        )
+        return self.spark.createDataFrame(list(zip(ids.tolist(), mat.tolist())), schema)
 
     def _serve_plan(self, leaves: DataFrame, block: tuple, plan: dict, k: int) -> DataFrame:
         """Read a driver-side plan (:func:`_plan_leaves`) in one pass — the
