@@ -86,10 +86,11 @@ def _collect_in_group(sc, group, call):
 
 
 def test_blocked_knn_and_ivf_search_job_counts(spark, sf_dir, tmp_path):
-    """Serving an 8-query batch starts at most 4 Spark jobs, for
-    exact_knn_blocked and for a search on a file-loaded IVF index (its
-    per-instance centroid and size caches warm, as in steady serving): the
-    bounded query collect, then one Arrow pass and its ranking window."""
+    """Serving an 8-query batch on a file-loaded IVF index (its
+    per-instance centroid and size caches warm, as in steady serving)
+    starts at most 2 Spark jobs: the one-job query collect and one Arrow
+    pass whose partial top-k the driver merges. exact_knn_blocked keeps
+    its exchange and ranking window: at most 3 jobs."""
     from vers_spark.indexes.ivfflat import IVFFlatIndex
     from vers_spark.operators.knn import exact_knn_blocked
 
@@ -103,18 +104,19 @@ def test_blocked_knn_and_ivf_search_job_counts(spark, sf_dir, tmp_path):
     def jobs(group, call):
         return _collect_in_group(sc, group, call)[1]
 
-    assert jobs("test_jobs_exact_blocked", lambda: exact_knn_blocked(q, emb, k=10)) <= 4
-    assert jobs("test_jobs_ivf_search", lambda: loaded.search(q, k=10, n_probes=2)) <= 4
+    assert jobs("test_jobs_exact_blocked", lambda: exact_knn_blocked(q, emb, k=10)) <= 3
+    assert jobs("test_jobs_ivf_search", lambda: loaded.search(q, k=10, n_probes=2)) <= 2
 
 
 def test_lsh_search_job_counts(spark, sf_dir, tmp_path):
     """An 8-query search or search_multiprobe on a file-loaded LSH store
-    starts at most 4 Spark jobs, with the plane pack warmed as in steady
-    serving: the bounded query collect, then one Arrow pass over the
-    planned leaves and its ranking. Both for a forest whose main leaves
-    mostly fill k and for a forced-fill forest (max_node_size < k), whose
-    backup fill is planned on the driver instead of running as extra
-    jobs; multiprobe's probe set is planned on the driver the same way."""
+    starts at most 2 Spark jobs, with the plane pack warmed as in steady
+    serving: the one-job query collect, then one Arrow pass over the
+    planned leaves whose partial top-k the driver merges. Both for a
+    forest whose main leaves mostly fill k and for a forced-fill forest
+    (max_node_size < k), whose backup fill is planned on the driver
+    instead of running as extra jobs; multiprobe's probe set is planned on
+    the driver the same way."""
     from vers_spark.indexes.lsh import LSHForestIndex
 
     sc = spark.sparkContext
@@ -129,14 +131,69 @@ def test_lsh_search_job_counts(spark, sf_dir, tmp_path):
             sc, f"test_jobs_lsh_search_{name}", lambda: loaded.search(q, k=10)
         )
         assert len(rows) == 80, name
-        assert n_jobs <= 4, name
+        assert n_jobs <= 2, name
         rows, n_jobs = _collect_in_group(
             sc,
             f"test_jobs_lsh_multiprobe_{name}",
             lambda: loaded.search_multiprobe(q, k=10, n_probes=2),
         )
         assert len({r["query_id"] for r in rows}) == 8, name
-        assert n_jobs <= 4, name
+        assert n_jobs <= 2, name
+
+
+def test_hnsw_search_job_counts(spark, sf_dir, tmp_path):
+    """An 8-query search on a file-loaded HNSW store starts at most 4
+    Spark jobs: the one-job query collect, then the shard cogroup (two
+    shuffle map stages and its result stage), whose per-shard top-k the
+    driver merges instead of a ranking window."""
+    from vers_spark.indexes.hnsw import HNSWIndex
+
+    sc = spark.sparkContext
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 8)
+    HNSWIndex.build(emb, num_shards=8, seed=9, metric="cosine").save(str(tmp_path / "hnsw"))
+    loaded = HNSWIndex.load(spark, str(tmp_path / "hnsw"))
+    loaded.search(q, k=10, n_probe_shards=8).collect()
+    rows, n_jobs = _collect_in_group(
+        sc, "test_jobs_hnsw_search", lambda: loaded.search(q, k=10, n_probe_shards=8)
+    )
+    assert len(rows) == 80
+    assert n_jobs <= 4
+
+
+def test_saved_stores_hold_one_file_per_partition(spark, sf_dir, tmp_path):
+    """IVF and LSH saves write through a rebalance on their partition
+    columns: at this scale every cluster_id and (tree_id, _pp) directory
+    holds exactly one parquet file, so a probe opens one file per probed
+    partition instead of one per input split."""
+    import glob
+
+    from vers_spark.indexes.ivfflat import IVFFlatIndex
+    from vers_spark.indexes.lsh import LSHForestIndex
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    ivf = str(tmp_path / "ivf")
+    IVFFlatIndex.build(emb, num_clusters=8, seed=1).save(ivf)
+    lsh = str(tmp_path / "lsh")
+    LSHForestIndex.build(emb, num_trees=4, max_node_size=64, seed=3).save(lsh)
+    for dirs in (
+        glob.glob(f"{ivf}/assignments/cluster_id=*"),
+        glob.glob(f"{lsh}/leaves/tree_id=*/_pp=*"),
+    ):
+        assert len(dirs) > 4, dirs
+        files = {d: len(glob.glob(f"{d}/*.parquet")) for d in dirs}
+        assert set(files.values()) == {1}, files
+
+
+def _call_executions(spark, call, kernel):
+    """(rows of ``call()``, the SQL executions it started that ran the
+    Arrow kernel named ``kernel`` — the candidate scan; a cold index's
+    cache-filling aggregates are left out)."""
+    mark = audit.execution_mark(spark)
+    rows = call().collect()
+    executions = [e for e in audit.executions_since(spark, mark) if f"{kernel}(" in e["plan"]]
+    assert executions, f"no execution ran {kernel}"
+    return rows, executions
 
 
 def test_ivf_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
@@ -151,11 +208,17 @@ def test_ivf_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
     idx = IVFFlatIndex.build(emb, num_clusters=8, seed=1)
     idx.save(str(tmp_path / "ivf"))
     loaded = IVFFlatIndex.load(spark, str(tmp_path / "ivf"))
-    res = loaded.search(emb.filter(F.col("vec_id") < 3), k=5, n_probes=2)
-    a_rows = res.collect()  # collect FIRST: metrics live on this plan
-    plan = audit.executed_plan(res)
+    # the search returns a local frame: the candidate scan is one of the
+    # SQL executions the call started, read back from the status store
+    a_rows, executions = _call_executions(
+        spark,
+        lambda: loaded.search(emb.filter(F.col("vec_id") < 3), k=5, n_probes=2),
+        "member_topk",
+    )
     # the probe list prunes posting-list directories at planning time
-    part_filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    part_filters = [
+        s["partitionFilters"] for s in audit.executed_scan_metrics(executions, "cluster_id#")
+    ]
     assert any(re.search(r"cluster_id#\d+ IN \(", f) for f in part_filters), part_filters
     # runtime metrics, not just the plan string (BASELINE §r12): the
     # posting-list scan must read ≤ the probed-cluster union (≤ 3 queries
@@ -164,10 +227,10 @@ def test_ivf_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
     # scan reports numPartitions, and it is the one that must show pruning
     scans = [
         s
-        for s in audit.scan_runtime_metrics(res, "cluster_id#")
+        for s in audit.executed_scan_metrics(executions, "cluster_id#")
         if "numPartitions" in s
     ]
-    assert scans, "partitioned posting-list scan not found in executed plan"
+    assert scans, "partitioned posting-list scan not found in the executions"
     assert all(0 < s["numPartitions"] <= 6 for s in scans), scans
     # and results are identical to the in-memory index's
     a = sorted(map(tuple, a_rows))
@@ -678,19 +741,22 @@ def test_lsh_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
     bad = loaded.hyperplanes.filter(F.col("_lvl") != F.length("path")).count()
     assert bad == 0
     q = emb.filter(F.col("vec_id") < 3)
-    res = loaded.search(q, k=5, backup_fill=False)
-    a = sorted(map(tuple, res.collect()))  # collect FIRST: metrics live here
-    plan = audit.executed_plan(res)
+    rows, res = _call_executions(
+        spark, lambda: loaded.search(q, k=5, backup_fill=False), "leaf_topk"
+    )
+    a = sorted(map(tuple, rows))
     # the main leaves are planned on the driver, so the pruning is static:
     # a literal _pp IN (…) partition filter on the leaf scan
-    part_filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    part_filters = [
+        s["partitionFilters"] for s in audit.executed_scan_metrics(res, "_pp#")
+    ]
     assert any(re.search(r"_pp#\d+ IN \(", f) for f in part_filters), part_filters
     # measured pruning on the MAIN search path too (BASELINE §r13: the
     # un-hinted shape read 128/128 partitions at the 1M store): ≤ 3
     # queries × 2 trees = 6 main-leaf buckets of 32
     mscans = [
         s
-        for s in audit.scan_runtime_metrics(res, "_pp#")
+        for s in audit.executed_scan_metrics(res, "_pp#")
         if "numPartitions" in s
     ]
     assert mscans and all(0 < s["numPartitions"] <= 6 for s in mscans), mscans
@@ -703,13 +769,17 @@ def test_lsh_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
     # check alone passed while the old layout read 128/128 at 1M). The
     # probed set here is ≤ 3 queries × 2 trees × 2 probes = 12 pairs of 32
     # buckets.
-    mp = loaded.search_multiprobe(q, k=5, n_probes=2)
-    am = sorted(map(tuple, mp.collect()))
-    mp_filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", audit.executed_plan(mp))
+    rows, mp = _call_executions(
+        spark, lambda: loaded.search_multiprobe(q, k=5, n_probes=2), "leaf_topk"
+    )
+    am = sorted(map(tuple, rows))
+    mp_filters = [
+        s["partitionFilters"] for s in audit.executed_scan_metrics(mp, "_pp#")
+    ]
     assert any(re.search(r"_pp#\d+ IN \(", f) for f in mp_filters), mp_filters
     total_buckets = loaded.leaves.select("_pp").distinct().count()
-    scans = audit.scan_runtime_metrics(mp, "_pp#")
-    assert scans, "leaf scan not found in executed plan"
+    scans = audit.executed_scan_metrics(mp, "_pp#")
+    assert scans, "leaf scan not found in the executions"
     assert all(s.get("numPartitions", 0) <= 12 for s in scans), (scans, total_buckets)
     assert all(s.get("numPartitions", 0) < total_buckets for s in scans), (
         scans,
@@ -719,11 +789,11 @@ def test_lsh_on_disk_search_partition_prunes(spark, sf_dir, tmp_path):
     assert am == bm
     # the backup-fill path reads its planned leaves in the same one scan,
     # so the same runtime bound holds there
-    fill = loaded.search(q, k=5)
-    af = sorted(map(tuple, fill.collect()))
+    rows, fill = _call_executions(spark, lambda: loaded.search(q, k=5), "leaf_topk")
+    af = sorted(map(tuple, rows))
     fscans = [
         s
-        for s in audit.scan_runtime_metrics(fill, "_pp#")
+        for s in audit.executed_scan_metrics(fill, "_pp#")
         if "numPartitions" in s
     ]
     assert fscans and all(0 < s["numPartitions"] <= 6 for s in fscans), fscans
@@ -775,13 +845,15 @@ def test_hnsw_on_disk_search_shard_prunes(spark, sf_dir, tmp_path):
     idx.save(str(tmp_path / "hnsw"))
     loaded = HNSWIndex.load(spark, str(tmp_path / "hnsw"))
     q = emb.filter(F.col("vec_id") < 3)
-    res = loaded.search(q, k=5, n_probe_shards=2)
-    a = sorted(map(tuple, res.collect()))
+    rows, res = _call_executions(
+        spark, lambda: loaded.search(q, k=5, n_probe_shards=2), "shard_topk"
+    )
+    a = sorted(map(tuple, rows))
     # ≤ 3 queries × 2 probed shards = union ≤ 6 of 8 partitions, on BOTH
     # the nodes and the graph scan
     scans = [
         s
-        for s in audit.scan_runtime_metrics(res, "shard_id#")
+        for s in audit.executed_scan_metrics(res, "shard_id#")
         if "numPartitions" in s
     ]
     assert len(scans) >= 2, scans

@@ -138,6 +138,85 @@ def test_normalize_degenerate_guard(spark):
     assert rows[2]["n"][:2] == pytest.approx([0.6, 0.8])
 
 
+def _normalize_per_element_norm(a):
+    """The previous ``V.normalize``: ‖a‖ named inside the ``transform``
+    lambda, so the norm is folded again for every element (O(d²))."""
+    from pyspark.sql import functions as F
+
+    mag = V.magnitude(a)
+    return F.when(mag < F.lit(V.NORMALIZE_EPSILON), F.transform(a, V._f64)).otherwise(
+        F.transform(a, lambda x: V._f64(x) / mag)
+    )
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_normalize_bit_equal_to_per_element_norm(spark, sf_dir, elem):
+    """The O(d) normalize returns the old expression's values bit for bit,
+    on the corpus and on zero, sub-ε, NaN, -0.0 and near-float-max
+    vectors, NULL arrays and NULL elements."""
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from vers_spark.sources.tables import load_table
+
+    edge = spark.createDataFrame(
+        [
+            (-1, [0.0, 0.0, 0.0]),
+            (-2, [1e-9, -1e-9, 0.0]),
+            (-3, [float("nan"), 1.0, 2.0]),
+            (-4, [-0.0, 3.0, -4.0]),
+            (-5, [3.4e38, -3.4e38, 1.0]),
+            (-6, [5e-7, 0.0, 5e-7]),
+            (-7, None),
+            (-8, [1.0, None, 2.0]),
+            (-9, []),
+        ],
+        f"vec_id long, embedding array<{elem}>",
+    )
+    corpus = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast(f"array<{elem}>").alias("embedding")
+    )
+    df = corpus.unionByName(edge)
+    got = df.select("vec_id", V.normalize(F.col("embedding")).alias("n"))
+    want = df.select("vec_id", _normalize_per_element_norm(F.col("embedding")).alias("n"))
+
+    def bits(rows):
+        return {
+            r[0]: None
+            if r[1] is None
+            else [None if x is None else struct.pack("<d", x) for x in r[1]]
+            for r in rows
+        }
+
+    g, w = bits(got.collect()), bits(want.collect())
+    assert len(g) == len(w) == df.count()
+    assert g == w
+
+
+def test_normalize_lambda_holds_no_aggregate(spark):
+    """Structural: no lambda inside ``V.normalize`` folds the vector, so
+    the norm is evaluated once per row, not once per element."""
+    from pyspark.sql import functions as F
+
+    def lambdas_with_fold(expr, inside=False):
+        name = expr.getClass().getSimpleName()
+        if inside and name == "ArrayAggregate":
+            return 1
+        inside = inside or name == "LambdaFunction"
+        ch = expr.children()
+        return sum(lambdas_with_fold(ch.apply(i), inside) for i in range(ch.size()))
+
+    def count(col):
+        df = spark.createDataFrame([([1.0, 2.0],)], "a array<double>").select(col.alias("n"))
+        plan = df._jdf.queryExecution().analyzed()
+        exprs = plan.expressions()
+        return sum(lambdas_with_fold(exprs.apply(i)) for i in range(exprs.size()))
+
+    assert count(_normalize_per_element_norm(F.col("a"))) > 0  # the check sees it
+    assert count(V.normalize(F.col("a"))) == 0
+
+
 def test_blocked_knn_matches_expr_knn(spark, sf_dir):
     from vers_spark.sources.tables import load_table
     from pyspark.sql import functions as F

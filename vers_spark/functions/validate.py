@@ -63,16 +63,19 @@ class QueryBatchTooLarge(ValueError):
 MAX_QUERY_BATCH_ROWS = 1_000_000
 
 
-def bounded_collect(df: DataFrame, what: str, cap: int | None = None):
-    """Collect ``df`` enforcing the bounded-query-batch contract: at most
-    ``cap`` rows leave the cluster (limit cap+1 bounds the transfer even on
-    violation); above the cap, raise with the fix spelled out."""
-    cap = MAX_QUERY_BATCH_ROWS if cap is None else cap
-    rows = df.limit(cap + 1).collect()
-    if len(rows) > cap:
+def bounded_arrow(df: DataFrame, what: str):
+    """Collect ``df`` as a ``pyarrow.Table`` under the bounded-query-batch
+    contract: at most ``MAX_QUERY_BATCH_ROWS`` rows leave the cluster
+    (``limit(cap + 1)`` bounds the transfer even on violation); above the
+    cap, raise with the fix spelled out. ``limit(n).toArrow()`` runs as one
+    Spark job, where ``limit(n).collect()`` scans partitions in rounds (one
+    job per round), and it skips the per-row Python conversion."""
+    cap = MAX_QUERY_BATCH_ROWS
+    table = df.limit(cap + 1).toArrow()
+    if table.num_rows > cap:
         raise QueryBatchTooLarge(
             f"{what}: query batch exceeds the {cap}-row driver-collect cap. "
             "Split the queries into blocks (or raise the cap explicitly) — "
             "the batch-serving contract broadcasts the query side."
         )
-    return rows
+    return table

@@ -68,11 +68,14 @@ def magnitude(a: Column) -> Column:
 def normalize(a: Column) -> Column:
     """a/‖a‖, identity when ‖a‖ < 1e-6 (degenerate guard, base.rs:99-105).
 
-    Emits array<double>.
+    Emits array<double>. ‖a‖ is computed once per row and paired with
+    every element through ``array_repeat``: a lambda body that named
+    ``mag`` would re-fold the whole vector for each element, O(d²) per
+    vector.
     """
     mag = magnitude(a)
     return F.when(mag < F.lit(NORMALIZE_EPSILON), F.transform(a, _f64)).otherwise(
-        F.transform(a, lambda x: _f64(x) / mag)
+        F.zip_with(a, F.array_repeat(mag, F.size(a)), lambda x, m: _f64(x) / m)
     )
 
 

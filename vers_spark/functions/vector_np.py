@@ -126,3 +126,16 @@ def pairwise_distances(queries: np.ndarray, corpus: np.ndarray, metric: str) -> 
     if metric == "dot":
         return -(queries @ corpus.T)
     raise ValueError(f"unknown metric {metric!r}")
+
+
+def keep_topk(best: dict, key, ids: np.ndarray, dist: np.ndarray, cap: int) -> None:
+    """Fold the rows ``(ids, dist)`` into ``best[key]``: the ``cap``
+    smallest (distance, id) pairs seen under ``key`` so far, the running
+    partial top-k an Arrow kernel keeps across the batches of its task.
+    ``np.lexsort`` orders doubles as Spark does: NaN after every number,
+    ``-0.0`` tied with ``0.0``."""
+    if key in best:
+        ids = np.concatenate([best[key][0], ids])
+        dist = np.concatenate([best[key][1], dist])
+    sel = np.lexsort((ids, dist))[:cap]
+    best[key] = (ids[sel], dist[sel])

@@ -26,9 +26,9 @@ re-expression is a SHARDED graph (the standard distributed-ANN shape):
 
 Search is batch-first: the query set is broadcast into a cogrouped
 ``applyInPandas`` over (nodes, edges) per shard; each shard runs the layered
-greedy search (`hnsw.rs:510-548`) for the queries that probe it, emits its
-local top-k, and a final per-query window merges shards. Entrypoint is PINNED
-to the max-layer, min-id node — the reference's entrypoint is HashMap
+greedy search (`hnsw.rs:510-548`) for the queries that probe it and emits its
+local top-k, which the driver fetches and merges per query. Entrypoint is
+PINNED to the max-layer, min-id node — the reference's entrypoint is HashMap
 iteration order (`hnsw.rs:366,516`), i.e. nondeterministic; we choose
 determinism (SURVEY §3.2 note).
 
@@ -63,6 +63,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from vers_spark.functions.frames import local_frame
 
 _GRAPH_SCHEMA = "shard_id int, kind int, layer int, src long, dst long, distance double"
 _RESULT_SCHEMA = "query_id long, neighbour_id long, distance double"
@@ -683,6 +685,15 @@ class HNSWIndex:
         shards (k-means sharding) or all shards (random), per-shard layered
         greedy search, global per-query top-k merge.
 
+        The query batch is collected in one job under the bounded-batch
+        contract (``knn._query_block``). Each cogroup group is one probed
+        shard and emits at most k rows per query probing it, so the rows
+        fetched are bounded by the driver's probe sets × k. The driver
+        fetches them with ``toArrow()``, halves cosine distances, drops
+        boundary replicas (one row per (query, id)) and ranks the top-k in
+        numpy (``knn._topk_frame``): the result is a local frame, and
+        collecting it starts no job.
+
         ``ef_search="auto"`` applies the probe-aware rule (see _auto_ef):
         probing a small fraction of the shards needs a deeper per-shard
         pool to hold recall."""
@@ -691,19 +702,12 @@ class HNSWIndex:
             ef = self._auto_ef(k, probes)
         else:
             ef = int(ef_search or self.params["ef_search"])
-        from vers_spark.functions.validate import bounded_collect
+        from vers_spark.operators.knn import _NO_ROWS, _query_block, _rank_within, _topk_frame
 
-        q_rows = bounded_collect(
-            queries.select(
-                F.col(query_id).cast("long").alias("query_id"),
-                F.col(query_vec).alias("q_vec"),
-            ),
-            "HNSWIndex.search",
-        )
-        if not q_rows:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA + ", rank int")
-        qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-        qvecs = np.array([r["q_vec"] for r in q_rows], dtype=np.float64)
+        block = _query_block(queries, query_id, query_vec, "HNSWIndex.search")
+        if block is None:
+            return _topk_frame(self.spark, *_NO_ROWS, k)
+        qids, qvecs = block
         if self.params.get("metric") == "cosine":
             norms = np.linalg.norm(qvecs, axis=1, keepdims=True)
             qvecs = np.where(norms < 1e-6, qvecs, qvecs / np.maximum(norms, 1e-30))
@@ -740,7 +744,7 @@ class HNSWIndex:
         else:
             probe_sets = None  # every shard handles every query
 
-        def fn(node_pdfs: pd.DataFrame, graph_pdf: pd.DataFrame) -> pd.DataFrame:
+        def shard_topk(node_pdfs: pd.DataFrame, graph_pdf: pd.DataFrame) -> pd.DataFrame:
             if node_pdfs.empty:
                 return pd.DataFrame(columns=["query_id", "neighbour_id", "distance"])
             shard = int(node_pdfs["shard_id"].iloc[0])
@@ -784,25 +788,24 @@ class HNSWIndex:
             graph_src = self.graph.filter(F.col("shard_id").isin(union))
         else:
             nodes_src, graph_src = self.nodes, self.graph
-        per_shard = (
+        cands = (
             nodes_src.groupby("shard_id")
             .cogroup(graph_src.groupby("shard_id"))
-            .applyInPandas(fn, _RESULT_SCHEMA)
+            .applyInPandas(shard_topk, _RESULT_SCHEMA)
+            .toArrow()
         )
+        qid, nid, dist = (cands.column(c).to_numpy() for c in cands.column_names)
         if self.params.get("metric") == "cosine":
             # unit vectors: sq_euclidean/2 = 1 − dot = the reference's cosine
             # distance (hnsw.rs:258)
-            per_shard = per_shard.withColumn("distance", F.col("distance") / 2)
+            dist = dist / 2
         if self.params.get("boundary_eps"):
             # boundary replicas: the same neighbour can surface from two
-            # shards (identical id + distance) — dedup before ranking
-            per_shard = per_shard.dropDuplicates(["query_id", "neighbour_id"])
-        w = W.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbour_id"))
-        return (
-            per_shard.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbour_id", "distance", "rank")
-        )
+            # shards (identical id + distance) — one row per (query, id)
+            order = np.lexsort((dist, nid, qid))
+            order = order[_rank_within(order, qid, nid) == 1]
+            qid, nid, dist = qid[order], nid[order], dist[order]
+        return _topk_frame(self.spark, qid, nid, dist, k)
 
     def search_filtered(
         self,
@@ -892,9 +895,10 @@ class HNSWIndex:
         ep = self.params.get("entrypoints")
         if ep:
             # manifest-cached entrypoints: no aggregate over the graph table
-            eps = self.spark.createDataFrame(
-                [(int(s), int(n)) for s, (n, _l) in ep.items()],
+            eps = local_frame(
+                self.spark,
                 "shard_id int, node_id long",
+                [(int(s), int(n)) for s, (n, _l) in ep.items()],
             )
             top_layer = int(self.params.get("top_edge_layer", 0))
         else:  # pre-§9.6 index loaded from disk: fall back to the scan
@@ -928,24 +932,25 @@ class HNSWIndex:
             # parent — ranking sub-shards individually would count duplicates
             # against n_probe_shards and cover only part of a cluster's
             # neighbourhood (same semantics as search()'s probe_sets).
+            cents = np.asarray(self.centroids, dtype=np.float64)
             if parents is not None:
                 parr = np.array(parents)
                 uniq_parents, first_idx = np.unique(parr, return_index=True)
-                cent_df = self.spark.createDataFrame(
-                    [
-                        (int(p), [float(x) for x in self.centroids[i]])
-                        for p, i in zip(uniq_parents, first_idx)
-                    ],
+                cent_df = local_frame(
+                    self.spark,
                     "route_id int, c_vec array<double>",
+                    {"route_id": uniq_parents, "c_vec": cents[first_idx]},
                 )
-                sub_df = self.spark.createDataFrame(
-                    [(int(p), int(s)) for s, p in enumerate(parents)],
+                sub_df = local_frame(
+                    self.spark,
                     "route_id int, shard_id int",
+                    {"route_id": parr, "shard_id": np.arange(len(parr))},
                 )
             else:
-                cent_df = self.spark.createDataFrame(
-                    [(i, [float(x) for x in c]) for i, c in enumerate(self.centroids)],
+                cent_df = local_frame(
+                    self.spark,
                     "route_id int, c_vec array<double>",
+                    {"route_id": np.arange(len(cents)), "c_vec": cents},
                 )
                 sub_df = None
             cw = W.partitionBy("query_id").orderBy("c_dist", "route_id")

@@ -30,7 +30,7 @@ expand to further clusters only until the cumulative posting-list size reaches
 k — on the driver over the (k-row) centroid table for the collected query
 batch. Candidates are fetched by a literal cluster-id filter (partition-pruned
 on a saved store) and scored in one Arrow pass with the numpy twin of the f64
-fold kernels, per-query top-k.
+fold kernels, per-query partial top-k, which the driver merges.
 
 The reference's ``add`` ignores the caller's vec_id (`ivfflat.rs:200-213`
 shadowing bug) — ours honors it.
@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from vers_spark.functions import vector as V
+from vers_spark.functions.frames import local_frame
 
 # Below this row count the k-means training set is collected to the driver and
 # Lloyd's loop runs in numpy — the build's ~30 per-iteration Spark jobs
@@ -202,9 +203,10 @@ class IVFFlatIndex:
                 if best is None or cost < best[0]:
                     best = (cost, cents)
             cost, cents = best
-            centroids_df = spark.createDataFrame(
-                [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
+            centroids_df = local_frame(
+                spark,
                 "cluster_id int, centroid array<double>",
+                {"cluster_id": np.arange(len(cents)), "centroid": cents},
             )
             # cpu_spread the ASSIGNMENT input only (r15): a single-split
             # corpus otherwise leaves the assignment — and, through the
@@ -314,8 +316,13 @@ class IVFFlatIndex:
           ``partitionBy(cluster_id)`` store is static partition pruning;
         - one ``mapInPandas`` scores each probed member against the queries
           probing its cluster with ``vector_np.fold_distances`` (bit-equal
-          to the declarative kernel) and emits each query's per-batch
-          (distance, id) top-k; a ranking window takes the global top-k.
+          to the declarative kernel) and keeps each query's (distance, id)
+          top-k over all the Arrow batches of its task, emitted once per
+          task — the rows fetched are at most queries × k × tasks;
+        - the driver fetches them with ``toArrow()`` and merges the global
+          top-k in numpy (:func:`~vers_spark.operators.knn._topk_frame`,
+          the rows a ranking window would return): the result is a local
+          frame, and collecting it starts no job.
 
         Same fold, order and fill rule as the declarative plan, so probing
         every cluster equals :func:`~vers_spark.operators.knn.exact_knn`
@@ -329,11 +336,11 @@ class IVFFlatIndex:
         filtered subset); the predicate prunes candidate I/O instead of
         post-filtering results."""
         from vers_spark.functions import vector_np as VN
-        from vers_spark.operators.knn import RESULT_SCHEMA, _query_block, _ranked
+        from vers_spark.operators.knn import _NO_ROWS, _query_block, _topk_frame
 
         block = _query_block(queries, query_id, query_vec, "ivf_search")
         if block is None:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _topk_frame(self.spark, *_NO_ROWS, k)
         q_ids, q_mat = block
 
         assignments = self._serving_assignments()
@@ -363,34 +370,40 @@ class IVFFlatIndex:
         bc = self.spark.sparkContext.broadcast((q_ids, q_mat, probe_map, k))
 
         def member_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            # per query row, the task's running top-k over every Arrow
+            # batch; emitted once, when the task's input ends
             ids, mat, pmap, kk = bc.value
+            best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
             for pdf in batches:
-                out = []
                 for cid, grp in pdf.groupby("cluster_id"):
                     b_ids = grp["id"].to_numpy(dtype=np.int64)
                     b_mat = np.array(grp["embedding"].tolist(), dtype=np.float64)
                     for qi in pmap.get(int(cid), ()):
                         dist = VN.fold_distances(mat[qi], b_mat, "sq_euclidean")
-                        sel = np.lexsort((b_ids, dist))[:kk]
-                        out.append(
-                            pd.DataFrame(
-                                {
-                                    "query_id": np.full(len(sel), ids[qi]),
-                                    "neighbour_id": b_ids[sel],
-                                    "_dist": dist[sel],
-                                }
-                            )
-                        )
-                if out:
-                    yield pd.concat(out, ignore_index=True)
+                        VN.keep_topk(best, qi, b_ids, dist, kk)
+            if best:
+                lens = [len(b[0]) for b in best.values()]
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.repeat([ids[qi] for qi in best], lens),
+                        "neighbour_id": np.concatenate([b[0] for b in best.values()]),
+                        "_dist": np.concatenate([b[1] for b in best.values()]),
+                    }
+                )
 
         members = assignments.filter(F.col("cluster_id").isin(sorted(probe_map))).select(
             "id", "cluster_id", "embedding"
         )
-        candidates = members.mapInPandas(
+        cands = members.mapInPandas(
             member_topk, "query_id long, neighbour_id long, _dist double"
+        ).toArrow()
+        return _topk_frame(
+            self.spark,
+            cands.column("query_id").to_numpy(),
+            cands.column("neighbour_id").to_numpy(),
+            cands.column("_dist").to_numpy(),
+            k,
         )
-        return _ranked(candidates, "_dist", k)
 
     def range_search(
         self,
@@ -550,11 +563,7 @@ class IVFFlatIndex:
         data = vectors.select(
             F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("embedding")
         )
-        cents = np.array(
-            [r["centroid"] for r in self.centroids.orderBy("cluster_id").collect()],
-            dtype=np.float64,
-        )
-        new_assign = IVFFlatIndex._assign(data, cents)
+        new_assign = IVFFlatIndex._assign(data, self._centroid_matrix()[1])
         return IVFFlatIndex(
             self.spark,
             self.centroids,
@@ -596,11 +605,17 @@ class IVFFlatIndex:
     def save(self, path: str) -> None:
         """Parquet tables + JSON manifest (replaces the bincode blob,
         base.rs:31-58). Posting lists partitioned by cluster_id → probe
-        filters become partition pruning."""
+        filters become partition pruning.
+
+        The posting lists are written through a ``rebalance`` hint on
+        ``cluster_id``: each cluster's rows meet in one writer task, so a
+        small store holds one parquet file per ``cluster_id`` directory
+        (a probed cluster is one file to open, not one per input split),
+        while AQE's rebalance splits a directory too large for one task."""
         self.centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-        self.assignments.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            f"{path}/assignments"
-        )
+        self.assignments.hint("rebalance", "cluster_id").write.mode("overwrite").partitionBy(
+            "cluster_id"
+        ).parquet(f"{path}/assignments")
         os.makedirs(path, exist_ok=True)
         with open(f"{path}/manifest.json", "w") as f:
             json.dump(
@@ -740,9 +755,10 @@ def lloyd_fixed(
 
     def _freeze(cents: DataFrame) -> DataFrame:
         rows = cents.collect()
-        return spark.createDataFrame(
-            [(int(r["cluster_id"]), [float(x) for x in r["centroid"]]) for r in rows],
+        return local_frame(
+            spark,
             "cluster_id int, centroid array<double>",
+            [(int(r["cluster_id"]), [float(x) for x in r["centroid"]]) for r in rows],
         )
 
     if materialize is True:

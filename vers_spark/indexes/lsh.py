@@ -30,10 +30,11 @@ tests). ``search_multiprobe`` takes the first ``n_probes`` leaves of the
 same walk per (query, tree), margin-ordered by default (Lv et al. 2007).
 Either plan is then read ONCE: a literal partition filter on a saved store,
 one Arrow pass folding each leaf against its queries (exact squared
-Euclidean, `lsh.rs:271-281`), one exchange for the per-leaf caps, the
-cross-tree dedup and the top-k. Tries the pack cannot hold keep the
-declarative plan (per-level join descent, branch-and-bound frontier leaf
-walk), which returns the same rows.
+Euclidean, `lsh.rs:271-281`) and keeping each planned (query, leaf)'s
+top-cap rows, then the per-leaf caps, the cross-tree dedup and the top-k on
+the driver, in numpy. Tries the pack cannot hold keep the declarative plan
+(per-level join descent, branch-and-bound frontier leaf walk), which
+returns the same rows.
 
 Degenerate config (1 tree, max_node_size ≥ n) ≡ exact brute force — the
 oracle check.
@@ -60,8 +61,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from vers_spark.functions import vector as V
+from vers_spark.functions.frames import local_frame
 from vers_spark.operators.dedup import dedup_exact
-from vers_spark.operators.knn import RESULT_SCHEMA, _query_block, _ranked
+from vers_spark.operators.knn import (
+    _NO_ROWS,
+    _query_block,
+    _rank_within,
+    _ranked,
+    _topk_frame,
+)
+
+
+_PLANE_SCHEMA = "tree_id int, path string, coeffs array<double>, constant double"
 
 
 def _plane_side(vec_col, coeff_col, const_col):
@@ -142,9 +153,7 @@ def _read_planes(spark: SparkSession, path: str) -> DataFrame:
     try:
         return spark.read.parquet(f"{path}/hyperplanes")
     except Exception:
-        return spark.createDataFrame(
-            [], "tree_id int, path string, coeffs array<double>, constant double"
-        )
+        return local_frame(spark, _PLANE_SCHEMA, [])
 
 
 def _planes_at(planes: DataFrame, lvl: int) -> DataFrame:
@@ -356,6 +365,18 @@ def _leaf_sizes_of(leaves: DataFrame, pack: _Pack) -> list:
     for t, path, n in leaves.groupBy("tree_id", "path").agg(F.count(F.lit(1))).collect():
         sizes[t][np.searchsorted(leaf_keys[t], int("1" + path, 2))] = n
     return sizes
+
+
+def _merge_leaf_candidates(spark, qid, leaf, nid, dist, cap, k: int) -> DataFrame:
+    """The driver's finish of a planned LSH batch: per (query, leaf) the
+    ``cap`` nearest rows (ties by id), then one row per (query, id) — a
+    duplicated id carries the same vector, hence the same distance, in
+    every tree — then the top-k (:func:`~vers_spark.operators.knn._topk_frame`)."""
+    order = np.lexsort((nid, dist, leaf, qid))
+    kept = order[_rank_within(order, qid, leaf) <= cap[order]]
+    by_id = kept[np.lexsort((dist[kept], nid[kept], qid[kept]))]
+    first = by_id[_rank_within(by_id, qid, nid) == 1]
+    return _topk_frame(spark, qid[first], nid[first], dist[first], k)
 
 
 def _local_build_schema(emb_type: str) -> str:
@@ -604,9 +625,7 @@ class LSHForestIndex:
             if not level_planes:
                 break
             all_planes.extend(level_planes)
-            planes_df = spark.createDataFrame(
-                level_planes, "tree_id int, path string, coeffs array<double>, constant double"
-            )
+            planes_df = local_frame(spark, _PLANE_SCHEMA, level_planes)
             split = frontier.join(F.broadcast(planes_df), ["tree_id", "path"], "left")
             # nodes WITHOUT a plane this level (fit max_node_size, or <2
             # distinct points) are final leaves — settle them out
@@ -634,12 +653,7 @@ class LSHForestIndex:
         else:
             assign = frontier
 
-        hyperplanes = spark.createDataFrame(
-            all_planes or [(0, "__none__", [0.0], 0.0)],
-            "tree_id int, path string, coeffs array<double>, constant double",
-        )
-        if not all_planes:
-            hyperplanes = hyperplanes.filter(F.lit(False))
+        hyperplanes = local_frame(spark, _PLANE_SCHEMA, all_planes)
         params = {
             "num_trees": int(num_trees),
             "max_node_size": int(max_node_size),
@@ -938,7 +952,8 @@ class LSHForestIndex:
         tree) its main leaf, and a pair whose main leaf holds fewer than k
         members walks the leaves in ``probe_mode`` order until the leaves
         taken hold ≥ k, each capped at its remaining budget. The planned
-        leaves are read in one pass (:meth:`_serve_plan`). Deeper or larger
+        leaves are read in one pass and the batch is finished on the driver
+        (:meth:`_serve_plan`; the result is a local frame). Deeper or larger
         tries take :meth:`_search_declarative`, which returns the same rows.
 
         ``backup_fill`` implements the reference's backup-branch rule
@@ -971,7 +986,7 @@ class LSHForestIndex:
             raise ValueError(f"unknown probe_mode {probe_mode!r}")
         block = _query_block(queries, query_id, query_vec, "lsh_search")
         if block is None:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _topk_frame(self.spark, *_NO_ROWS, k)
         leaves = self.leaves
         if allowed_ids is not None:
             keep = allowed_ids.select(
@@ -1017,7 +1032,7 @@ class LSHForestIndex:
             raise ValueError(f"unknown probe_mode {probe_mode!r}")
         block = _query_block(queries, query_id, query_vec, "lsh_search_multiprobe")
         if block is None:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _topk_frame(self.spark, *_NO_ROWS, k)
         pack = self._planes_pack()
         if pack is None:
             return self._search_declarative(
@@ -1045,27 +1060,33 @@ class LSHForestIndex:
                 StructField(query_vec, queries.schema[query_vec].dataType),
             ]
         )
-        return self.spark.createDataFrame(list(zip(ids.tolist(), mat.tolist())), schema)
+        return local_frame(self.spark, schema, {query_id: ids, query_vec: mat})
 
     def _serve_plan(self, leaves: DataFrame, block: tuple, plan: dict, k: int) -> DataFrame:
-        """Read a driver-side plan (:func:`_plan_leaves`) in one pass — the
-        serving tail of both search methods. ``block`` is the collected
-        (ids, vectors) batch whose rows the plan indexes.
+        """Read a driver-side plan (:func:`_plan_leaves`) in one pass and
+        finish the batch on the driver — the serving tail of both search
+        methods. ``block`` is the collected (ids, vectors) batch whose rows
+        the plan indexes. Returns a local frame (``RESULT_SCHEMA``).
 
         - the leaves are read once, through a literal ``_pp IN (…)``
           filter (static partition pruning on a saved store) and a filter
           on the planned (tree_id, path) pairs;
         - one ``mapInPandas`` folds each planned leaf against its queries
           (``vector_np.fold_distances``, bit-equal to the declarative
-          kernel) and emits each batch's top-``cap`` rows per leaf and
-          query;
-        - one exchange on query_id feeds the per-leaf cap window, the
-          (query, id) dedup across trees (the reference's DashSet union,
-          lsh.rs:266-270) and the top-k ranking."""
+          kernel) and keeps, per planned (query, leaf), the task's
+          top-``cap`` rows over all its Arrow batches, emitted once per
+          task — so the rows fetched are bounded by the plan's caps times
+          the task count;
+        - one ``toArrow()`` fetches them, and numpy applies the per-leaf
+          caps again (a leaf may span tasks), the (query, id) dedup across
+          trees (the reference's DashSet union, lsh.rs:266-270) and the
+          top-k ranking (:func:`~vers_spark.operators.knn._topk_frame`),
+          the rows a per-leaf cap window, dedup and ranking window return
+          for the same candidates."""
         from vers_spark.functions import vector_np as VN
 
         if not plan:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return _topk_frame(self.spark, *_NO_ROWS, k)
         # the filters go in as SQL text — one parse instead of a py4j call
         # per literal; paths are bit strings and _pp values 'p<tree>_<bits
         # or z>', so quoting them is safe
@@ -1082,53 +1103,49 @@ class LSHForestIndex:
                 for t, paths in by_tree.items()
             )
         )
-        bc = self.spark.sparkContext.broadcast((*block, plan))
+        # (tree_id, path) → (leaf number, [(query row, cap), …])
+        numbered = {key: (li, plan[key]) for li, key in enumerate(sorted(plan))}
+        bc = self.spark.sparkContext.broadcast((*block, numbered))
 
         def leaf_topk(batches):
+            # per planned (query row, leaf), the task's running top-cap over
+            # every Arrow batch; emitted once, when the task's input ends
             ids, mat, pl = bc.value
+            best: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
+            caps: dict[tuple[int, int], int] = {}
             for pdf in batches:
-                out = []
                 for (t, path), grp in pdf.groupby(["tree_id", "path"]):
+                    li, entries = pl.get((int(t), path), (-1, ()))
                     b_ids = grp["id"].to_numpy(dtype=np.int64)
                     b_mat = np.array(grp["embedding"].tolist(), dtype=np.float64)
-                    for qi, cap in pl.get((int(t), path), ()):
+                    for qi, cap in entries:
                         dist = VN.fold_distances(mat[qi], b_mat, "sq_euclidean")
-                        sel = np.lexsort((b_ids, dist))[:cap]
-                        out.append(
-                            pd.DataFrame(
-                                {
-                                    "query_id": np.full(len(sel), ids[qi]),
-                                    "tree_id": np.full(len(sel), t, dtype=np.int32),
-                                    "path": path,
-                                    "neighbour_id": b_ids[sel],
-                                    "_dist": dist[sel],
-                                    "_cap": np.full(len(sel), cap, dtype=np.int32),
-                                }
-                            )
-                        )
-                if out:
-                    yield pd.concat(out, ignore_index=True)
+                        VN.keep_topk(best, (qi, li), b_ids, dist, cap)
+                        caps[qi, li] = cap
+            if best:
+                lens = [len(b[0]) for b in best.values()]
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.repeat([ids[qi] for qi, _ in best], lens),
+                        "_leaf": np.repeat([li for _, li in best], lens).astype(np.int32),
+                        "neighbour_id": np.concatenate([b[0] for b in best.values()]),
+                        "_dist": np.concatenate([b[1] for b in best.values()]),
+                        "_cap": np.repeat([caps[key] for key in best], lens).astype(np.int32),
+                    }
+                )
 
         cands = (
             leaves.filter(planned)
             .select("tree_id", "path", "id", "embedding")
             .mapInPandas(
                 leaf_topk,
-                "query_id long, tree_id int, path string, neighbour_id long, "
-                "_dist double, _cap int",
+                "query_id long, _leaf int, neighbour_id long, _dist double, _cap int",
             )
-            .repartition("query_id")
+            .toArrow()
         )
-        wleaf = W.partitionBy("query_id", "tree_id", "path").orderBy(
-            F.asc("_dist"), F.asc("neighbour_id")
+        return _merge_leaf_candidates(
+            self.spark, *(cands.column(c).to_numpy() for c in cands.column_names), k
         )
-        capped = (
-            cands.withColumn("_lr", F.row_number().over(wleaf))
-            .filter(F.col("_lr") <= F.col("_cap"))
-            .select("query_id", "neighbour_id", "_dist")
-            .dropDuplicates(["query_id", "neighbour_id"])
-        )
-        return _ranked(capped, "_dist", k)
 
     def _search_declarative(
         self,
@@ -1603,7 +1620,13 @@ class LSHForestIndex:
         as corpora grow — 4 at ≤128M leaf rows (8 trees), 7 at ~1B, 12
         clamped beyond. Small-batch online-serving deployments at modest
         scale should pass 6-8 explicitly; the rule optimizes for bounded
-        file sizes, not minimum latency."""
+        file sizes, not minimum latency.
+
+        The leaves are written through a ``rebalance`` hint on
+        ``(tree_id, _pp)``: each bucket's rows meet in one writer task, so a
+        small store holds one parquet file per bucket directory (a probed
+        bucket is one file to open, not one per input split), while AQE's
+        rebalance splits a bucket too large for one task."""
         if pp_len is None:
             stored = self.params.get("pp_len")
             if stored is not None:
@@ -1636,9 +1659,9 @@ class LSHForestIndex:
         def _write_leaves() -> None:
             self.leaves.drop("_pp").withColumn(
                 "_pp", _pp_of(F.col("tree_id"), F.col("path"), w)
-            ).write.mode("overwrite").partitionBy("tree_id", "_pp").parquet(
-                f"{path}/leaves"
-            )
+            ).hint("rebalance", "tree_id", "_pp").write.mode("overwrite").partitionBy(
+                "tree_id", "_pp"
+            ).parquet(f"{path}/leaves")
 
         def _write_planes() -> None:
             planes.write.mode("overwrite").partitionBy("_lvl").parquet(

@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vers_spark.indexes.ivfflat import _kmeans_numpy
-from vers_spark.operators.knn import _ranked
+from vers_spark.functions.frames import local_frame
+from vers_spark.operators.knn import _NO_ROWS, _query_block, _ranked, _topk_frame
 
 # Codebook training never collects more than this many rows (seeded uniform
 # sample above it — same discipline as ivfflat._LOCAL_KMEANS_SAMPLE_ROWS).
@@ -132,16 +133,11 @@ class PQCodec:
         ADC shortlist (k·oversample) is exactly re-ranked against the raw
         vectors. Returns (query_id, neighbour_id, distance, rank) like
         operators/knn.exact_knn."""
-        from vers_spark.functions.validate import bounded_collect
-
         spark = codes.sparkSession
-        q_rows = bounded_collect(queries.select(query_id, query_vec), "PQCodec.search")
-        if not q_rows:
-            return spark.createDataFrame(
-                [], "query_id long, neighbour_id long, distance double, rank int"
-            )
-        q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-        q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+        block = _query_block(queries, query_id, query_vec, "PQCodec.search")
+        if block is None:
+            return _topk_frame(spark, *_NO_ROWS, k)
+        q_ids, q_mat = block
         m, dsub = self.m, self.dsub
         # per-query LUT: exact squared distance from the query's j-th slice
         # to every centroid of codebook j → code distance = m lookups
@@ -224,20 +220,18 @@ class PQCodec:
         ``lut array<array<double>>`` (m × k_codebook): computed driver-side
         (queries are the small side by contract), joined/broadcast to
         candidates so the per-candidate distance is a pure JVM expression."""
-        from vers_spark.functions.validate import bounded_collect
-
         spark = queries.sparkSession
-        q_rows = bounded_collect(queries.select(query_id, query_vec), "PQCodec.lut")
+        block = _query_block(queries, query_id, query_vec, "PQCodec.lut")
+        q_ids, q_mat = block if block is not None else _NO_ROWS[:2]
         m, dsub = self.m, self.dsub
         out = []
-        for r in q_rows:
-            qv = np.asarray(r[1], dtype=np.float64)
+        for qid, qv in zip(q_ids, q_mat):
             lut = []
             for j in range(m):
                 diff = self.codebooks[j] - qv[j * dsub : (j + 1) * dsub][None, :]
                 lut.append(np.einsum("kd,kd->k", diff, diff).tolist())
-            out.append((int(r[0]), lut))
-        return spark.createDataFrame(out, "query_id long, lut array<array<double>>")
+            out.append((int(qid), lut))
+        return local_frame(spark, "query_id long, lut array<array<double>>", out)
 
 
 def persist_codes_partitioned(
@@ -307,19 +301,14 @@ def ivfpq_search_residual(
     import numpy as np
 
     from vers_spark.functions import vector as V
-    from vers_spark.functions.validate import bounded_collect
 
     if "cluster_id" not in codes.columns:
         raise ValueError("residual serving needs the cluster-partitioned code store")
     spark = codes.sparkSession
-    q_rows = bounded_collect(
-        queries.select(F.col("vec_id").alias("query_id"), "embedding"),
-        "ivfpq_search_residual",
-    )
-    if not q_rows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbour_id long, distance double, rank int"
-        )
+    block = _query_block(queries, "vec_id", "embedding", "ivfpq_search_residual")
+    if block is None:
+        return _topk_frame(spark, *_NO_ROWS, k)
+    q_ids, q_mat = block
     cent_rows = ivf.centroids.orderBy("cluster_id").collect()
     c_ids = np.array([r["cluster_id"] for r in cent_rows], dtype=np.int64)
     c_mat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
@@ -327,8 +316,7 @@ def ivfpq_search_residual(
     m, dsub = codec.m, codec.dsub
 
     lut_rows = []
-    for qid, qv in q_rows:
-        q = np.asarray(qv, dtype=np.float64)
+    for qid, q in zip(q_ids, q_mat):
         d = np.einsum("ij,ij->i", c_mat - q[None, :], c_mat - q[None, :])
         order = np.lexsort((c_ids, d))
         cum_before = 0
@@ -343,8 +331,8 @@ def ivfpq_search_residual(
                 diff = codec.codebooks[j] - res[j * dsub : (j + 1) * dsub][None, :]
                 lut.append(np.einsum("kd,kd->k", diff, diff).tolist())
             lut_rows.append((int(qid), cid, lut))
-    luts = spark.createDataFrame(
-        lut_rows, "query_id long, cluster_id int, lut array<array<double>>"
+    luts = local_frame(
+        spark, "query_id long, cluster_id int, lut array<array<double>>", lut_rows
     )
     probe_set = sorted({cid for _, cid, _ in lut_rows})
     pruned = codes.filter(F.col("cluster_id").isin(probe_set))
@@ -365,9 +353,8 @@ def ivfpq_search_residual(
     )
     if corpus is None:
         return shortlist
-    q_df = corpus.sparkSession.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in q_rows],
-        "query_id long, q_vec array<double>",
+    q_df = local_frame(
+        spark, "query_id long, q_vec array<double>", {"query_id": q_ids, "q_vec": q_mat}
     )
     c = corpus.select(F.col("vec_id").alias("neighbour_id"), F.col("embedding").alias("c_vec"))
     exact = (
@@ -412,26 +399,19 @@ def ivfpq_search_blocked(
     by_residual ADC); ``False`` whole-vector codes (one LUT per query).
     Parity with the declarative twins is gated in tests/test_pq.py."""
     from vers_spark.functions import vector as V
-    from vers_spark.functions.validate import bounded_collect
 
     if "cluster_id" not in codes.columns:
         raise ValueError("blocked serving needs the cluster-partitioned code store")
     spark = codes.sparkSession
-    q_rows = bounded_collect(
-        queries.select(F.col("vec_id").alias("query_id"), "embedding"),
-        "ivfpq_search_blocked",
-    )
-    if not q_rows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbour_id long, distance double, rank int"
-        )
+    block = _query_block(queries, "vec_id", "embedding", "ivfpq_search_blocked")
+    if block is None:
+        return _topk_frame(spark, *_NO_ROWS, k)
+    q_ids, q_mat = block
     cent_rows = ivf.centroids.orderBy("cluster_id").collect()
     c_ids = np.array([r["cluster_id"] for r in cent_rows], dtype=np.int64)
     c_mat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
     sizes = ivf._cluster_sizes()
     m, dsub, kbook = codec.m, codec.dsub, codec.codebooks.shape[1]
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
 
     # whole-vector LUTs are per query; residual LUTs per (query, cluster)
     flat_luts = np.empty((0, m, kbook))
@@ -533,9 +513,8 @@ def ivfpq_search_blocked(
     if corpus is None:
         return _ranked(cands, "_dist", k)
     shortlisted = _ranked(cands, "_dist", shortlist).select("query_id", "neighbour_id")
-    q_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in q_rows],
-        "query_id long, q_vec array<double>",
+    q_df = local_frame(
+        spark, "query_id long, q_vec array<double>", {"query_id": q_ids, "q_vec": q_mat}
     )
     c = corpus.select(
         F.col("vec_id").alias("neighbour_id"), F.col("embedding").alias("c_vec")

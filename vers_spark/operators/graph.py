@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vers_spark.functions.frames import local_frame
+
 
 def _driver_union_find(spark, e: DataFrame) -> DataFrame:
     """Driver-side union-find over a collected ``(src, dst)`` edge list:
@@ -48,7 +50,7 @@ def _driver_union_find(spark, e: DataFrame) -> DataFrame:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "node long, component long")
+    return local_frame(spark, "node long, component long", rows)
 
 
 def connected_components(
@@ -282,9 +284,7 @@ def kcore(
         for a, b in rows:
             out[a] = out.get(a, 0) + 1
             out[b] = out.get(b, 0) + 1
-        return edges.sparkSession.createDataFrame(
-            list(out.items()), "node long, core_degree long"
-        )
+        return local_frame(edges.sparkSession, "node long, core_degree long", list(out.items()))
     # EAGER checkpoint per round: each round's plan references the edge set
     # three times (two degree branches + the filter base), and Catalyst does
     # not CSE whole subtrees — lazy lineage would re-expand the upstream

@@ -14,8 +14,8 @@ f64 kernels of :mod:`vers_spark.functions.vector`):
   join instead of a forced broadcast through driver memory.
 
 - ``exact_knn_blocked`` — block nested loop for scale, one Arrow pass: the
-  query block is collected under the bounded-batch contract
-  (``validate.bounded_collect``: ``QueryBatchTooLarge`` above the cap) and
+  query block is collected under the bounded-batch contract in one job
+  (``validate.bounded_arrow``: ``QueryBatchTooLarge`` above the cap) and
   broadcast; the corpus streams through ``mapInPandas``. Per Arrow batch a
   BLAS distance matrix shortlists candidates, the fold kernel's numpy twin
   (``vector_np.fold_distances``, bit-equal) re-scores them in the same
@@ -23,7 +23,15 @@ f64 kernels of :mod:`vers_spark.functions.vector`):
   window takes the global top-k (final). The corpus is scanned once, never
   shuffled, never joined back; only O(batches × Q × k) candidate rows move.
   This is the 100 TB path — at 1000 executors each scans its split, and the
-  shuffle is candidates only.
+  shuffle is candidates only. It keeps the exchange and the window: its
+  candidate count grows with the corpus's splits, not with a plan.
+
+The index serving paths (IVF, LSH, HNSW) share this module's query collect
+(:func:`_query_block`) but finish on the driver instead: their kernels read
+only the partitions the driver planned and emit a partial top-k bounded by
+that plan, so the driver fetches it with ``toArrow()`` and merges it in
+numpy (:func:`_topk_frame`) — Spark's ``TakeOrderedAndProjectExec`` idea —
+returning a local frame whose ``collect()`` starts no job.
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -50,19 +59,58 @@ _PREFILTER_MARGIN = 2
 
 RESULT_SCHEMA = "query_id long, neighbour_id long, distance double, rank int"
 
+# (query ids, neighbour ids, distances) of an empty candidate set
+_NO_ROWS = (np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0, np.float64))
+
 
 def _query_block(queries: DataFrame, query_id: str, query_vec: str, what: str):
-    """The serving paths' query batch under the bounded-batch contract
-    (``validate.bounded_collect``): (int64 ids ``(Q,)``, f64 vectors
-    ``(Q, d)``), or None for an empty batch."""
-    from vers_spark.functions.validate import bounded_collect
+    """The serving paths' query batch under the bounded-batch contract, in
+    one Spark job (``validate.bounded_arrow``: ``QueryBatchTooLarge`` above
+    the cap): (int64 ids ``(Q,)``, f64 vectors ``(Q, d)``), or None for an
+    empty batch."""
+    from vers_spark.functions.validate import bounded_arrow
 
-    rows = bounded_collect(queries.select(query_id, query_vec), what)
-    if not rows:
+    table = bounded_arrow(queries.select(query_id, query_vec), what)
+    if not table.num_rows:
         return None
-    return (
-        np.array([r[0] for r in rows], dtype=np.int64),
-        np.array([r[1] for r in rows], dtype=np.float64),
+    ids, vecs = table.column(0), table.column(1).combine_chunks()
+    if ids.null_count or vecs.null_count or len(pc.unique(pc.list_value_length(vecs))) > 1:
+        raise ValueError(f"{what}: query ids and vectors must be non-null, vectors of one length")
+    ids = ids.to_numpy().astype(np.int64)
+    flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return ids, flat.reshape(len(vecs), flat.size // len(vecs))
+
+
+def _rank_within(order: np.ndarray, *keys: np.ndarray) -> np.ndarray:
+    """1-based position of each row of ``order`` within its run of rows
+    with equal ``keys`` (``order`` sorts by the keys first)."""
+    n = len(order)
+    new = np.zeros(n, dtype=bool)
+    if n:
+        new[0] = True
+    for key in keys:
+        s = key[order]
+        new[1:] |= s[1:] != s[:-1]
+    pos = np.arange(n)
+    return pos - np.maximum.accumulate(np.where(new, pos, 0)) + 1
+
+
+def _topk_frame(spark, qid: np.ndarray, nid: np.ndarray, dist: np.ndarray, k: int) -> DataFrame:
+    """The driver's top-k merge of candidate rows, as a local frame
+    (``RESULT_SCHEMA``; collecting it starts no job): per query id the k
+    smallest (distance, neighbour_id), ranked from 1 — the rows
+    :func:`_ranked` returns for the same candidates. numpy orders doubles
+    as Spark does: NaN after every number, ``-0.0`` tied with ``0.0``."""
+    from vers_spark.functions.frames import local_frame
+
+    order = np.lexsort((nid, dist, qid))
+    rank = _rank_within(order, qid)
+    keep = rank <= k
+    sel = order[keep]
+    return local_frame(
+        spark,
+        RESULT_SCHEMA,
+        {"query_id": qid[sel], "neighbour_id": nid[sel], "distance": dist[sel], "rank": rank[keep]},
     )
 
 
@@ -146,7 +194,7 @@ def exact_knn_blocked(
     spark = corpus.sparkSession
     block = _query_block(queries, query_id, query_vec, "exact_knn_blocked")
     if block is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return _topk_frame(spark, *_NO_ROWS, k)
     bc = spark.sparkContext.broadcast((*block, metric, k))
 
     def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -134,3 +134,100 @@ def scan_runtime_metrics(df: DataFrame, column_token: str) -> list[dict]:
     except Exception:
         return []
     return found
+
+
+# SparkPlanGraph metric names → the SQLMetric keys scan_runtime_metrics reports
+_SCAN_METRIC_KEYS = {
+    "number of partitions read": "numPartitions",
+    "number of files read": "numFiles",
+    "number of output rows": "numOutputRows",
+}
+
+
+def _sql_status(spark):
+    """The session's SQL status store, after the listener bus has posted
+    every pending event (it is asynchronous: an execution that just ended
+    may not be recorded yet). Works with the UI disabled."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def _latest_execution_id(store) -> int:
+    """The highest recorded execution id (the store lists executions in id
+    order), or -1 when none is recorded."""
+    total = store.executionsCount()
+    return store.executionsList(total - 1, 1).apply(0).executionId() if total else -1
+
+
+def execution_mark(spark) -> int:
+    """A mark for :func:`executions_since`: the id the next SQL execution
+    of this session will get (or a lower one)."""
+    return _latest_execution_id(_sql_status(spark)) + 1
+
+
+def executions_since(spark, mark: int) -> list[dict]:
+    """The SQL executions started since ``mark`` (:func:`execution_mark`),
+    oldest first — what a call ran, even when the frame it returned is a
+    local relation whose own plan shows none of it.
+
+    Each is a dict: ``id``, ``description`` (the job description when the
+    execution started), ``plan`` (the physical plan as Spark records it,
+    the final adaptive plan once AQE re-planned) and ``nodes``: per
+    physical operator its ``name``, ``desc`` (the one-line plan string, for
+    a file scan its ``PartitionFilters``) and ``metrics`` (display name →
+    value string, as the SQL UI would show them)."""
+    store = _sql_status(spark)
+    out = []
+    for eid in range(mark, _latest_execution_id(store) + 1):
+        recorded = store.execution(eid)
+        if recorded.isEmpty():  # another session's id, or evicted
+            continue
+        ex = recorded.get()
+        values = {}
+        it = store.executionMetrics(eid).iterator()
+        while it.hasNext():
+            kv = it.next()
+            values[int(kv._1())] = kv._2()
+        graph = store.planGraph(eid).allNodes()
+        nodes = []
+        for i in range(graph.size()):
+            node = graph.apply(i)
+            ms = node.metrics()
+            metrics = {}
+            for j in range(ms.size()):
+                m = ms.apply(j)
+                if m.accumulatorId() in values:
+                    metrics[m.name()] = values[m.accumulatorId()]
+            nodes.append({"name": node.name(), "desc": node.desc(), "metrics": metrics})
+        out.append(
+            {
+                "id": eid,
+                "description": ex.description(),
+                "plan": ex.physicalPlanDescription(),
+                "nodes": nodes,
+            }
+        )
+    return out
+
+
+def executed_scan_metrics(executions: list[dict], column_token: str) -> list[dict]:
+    """:func:`scan_runtime_metrics` over recorded executions
+    (:func:`executions_since`): per file scan whose plan string contains
+    ``column_token``, its ``numPartitions`` / ``numFiles`` /
+    ``numOutputRows``, where recorded, and ``partitionFilters``, the text
+    inside the scan's ``PartitionFilters: [...]`` ("" when it has none)."""
+    found = []
+    for ex in executions:
+        for node in ex["nodes"]:
+            desc = node["desc"]
+            if not desc.startswith(("FileScan", "BatchScan")) or column_token not in desc:
+                continue
+            row = {
+                key: int(node["metrics"][name].replace(",", ""))
+                for name, key in _SCAN_METRIC_KEYS.items()
+                if name in node["metrics"]
+            }
+            filters = re.search(r"PartitionFilters: \[([^\]]*)\]", desc)
+            row["partitionFilters"] = filters.group(1) if filters else ""
+            found.append(row)
+    return found
