@@ -287,6 +287,38 @@ def test_exact_blocked_keeps_its_window(spark, emb, tied):
     assert empty.schema.simpleString() == spark.createDataFrame([], RESULT_SCHEMA).schema.simpleString()
 
 
+def test_whole_corpus_kernels_rank_nan_last(spark):
+    """A NaN distance ranks last, with distance NaN, on the window finish
+    of exact_knn_blocked and PQCodec.search, as in exact_knn. The pandas →
+    Arrow conversion of a kernel's output masks NaN as null, which a window
+    ranks first. PQ runs with a codebook that holds the corpus vectors
+    themselves, so its ADC distances are the exact ones."""
+    from vers_spark.indexes.pq import PQCodec
+    from vers_spark.operators.knn import exact_knn, exact_knn_blocked
+
+    vecs = [[0.0, 0.0], [1.0, 0.0], [0.0, 1.0], [1.0, 1.0], [2.0, 0.0], [0.0, 2.0], [float("nan"), 0.0]]
+    ids = [1, 2, 3, 4, 5, 6, 9]
+    corpus = local_frame(spark, "vec_id long, embedding array<double>", list(zip(ids, vecs)))
+    q = local_frame(
+        spark, "vec_id long, embedding array<double>", [(100, [0.1, 0.2]), (101, [1.5, 0.5])]
+    )
+    codes = local_frame(spark, "vec_id long, codes array<long>", [(i, [n]) for n, i in enumerate(ids)])
+    codec = PQCodec(codebooks=np.array([vecs]))
+
+    def rows(df):
+        return sorted(
+            (r["query_id"], r["rank"], r["neighbour_id"], "nan" if d is not None and np.isnan(d) else d)
+            for r in df.collect()
+            for d in [r["distance"]]
+        )
+
+    want = rows(exact_knn(q, corpus, k=7))
+    assert [r[1:] for r in want if r[0] == 100][-1] == (7, 9, "nan")
+    assert rows(exact_knn_blocked(q, corpus, k=7)) == want
+    assert rows(codec.search(q, codes, k=7)) == want
+    assert rows(codec.search(q, codes, corpus=corpus, k=7, oversample=2)) == want
+
+
 # ------------------------------------------------- driver-built frames
 
 

@@ -253,6 +253,53 @@ def test_shard_build_telemetry(hnsw_idx):
     assert hnsw_idx.graph.filter(F.col("kind") > 1).count() == 0
 
 
+def _window_manifest(graph):
+    """The manifest entries as build() and add() used to compute them from
+    the graph table: per shard the entrypoint (max layer, then min id) by a
+    window and a groupBy, and the max edge layer by an aggregate (None when
+    there is no edge)."""
+    from pyspark.sql import Window as W
+
+    ep_rows = (
+        graph.filter(F.col("kind") == 0)
+        .select("shard_id", "layer", F.col("src").alias("node_id"))
+        .withColumn("_top", F.max("layer").over(W.partitionBy("shard_id")))
+        .filter(F.col("layer") == F.col("_top"))
+        .groupBy("shard_id", "_top")
+        .agg(F.min("node_id").alias("node_id"))
+        .collect()
+    )
+    eps = {str(int(r["shard_id"])): [int(r["node_id"]), int(r["_top"])] for r in ep_rows}
+    top = graph.filter(F.col("kind") == 1).agg(F.max("layer")).collect()[0][0]
+    return eps, top
+
+
+def test_shard_summaries_equal_the_graph_windows(spark, sf_dir, hnsw_idx):
+    """build() and add() read the entrypoints, the top edge layer and the
+    telemetry from the per-shard summary rows in one collect; they equal
+    the window computation over the graph table — also for shards of one
+    node, which hold no edge."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    tiny = HNSWIndex.build(
+        emb.filter(F.col("vec_id") < 5), num_shards=4, shard_by="random", seed=42
+    )
+    for idx in (hnsw_idx, tiny):
+        eps, top = _window_manifest(idx.graph)
+        assert idx.params["entrypoints"] == eps
+        assert idx.params["top_edge_layer"] == (top if top is not None else 0)
+        per_shard = {
+            str(r["shard_id"]): r["count"] for r in idx.nodes.groupBy("shard_id").count().collect()
+        }
+        assert {s: n for s, (n, _) in idx.params["shard_build_seconds"].items()} == per_shard
+    assert 1 in per_shard.values()  # the tiny index has a one-node shard
+    extra = emb.select((F.col("vec_id") + 10_000).alias("vec_id"), "embedding").limit(20)
+    idx2 = hnsw_idx.add(extra)
+    eps, top = _window_manifest(idx2.graph)
+    assert idx2.params["entrypoints"] == eps
+    assert idx2.params["top_edge_layer"] == max(hnsw_idx.params["top_edge_layer"], top)
+    assert sum(n for n, _ in idx2.params["shard_build_seconds"].values()) == 520
+
+
 def test_frontier_search_recall_and_order(spark, sf_dir, hnsw_idx):
     """Distributed frontier-expansion search (the graph-stays-on-executors
     formulation): recall@10 ≥ 0.9 vs exact, distances verified + monotone,

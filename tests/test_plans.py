@@ -161,6 +161,35 @@ def test_hnsw_search_job_counts(spark, sf_dir, tmp_path):
     assert n_jobs <= 4
 
 
+def test_ivfpq_blocked_search_job_counts(spark, sf_dir, tmp_path):
+    """An ADC-only 8-query ivfpq_search_blocked call on the persisted code
+    store, with the coarse index's centroid and size caches warm, starts at
+    most 2 Spark jobs: the one-job query collect and one Arrow pass over the
+    probed code partitions, whose partial top-k the driver merges. Its
+    result is a local frame: collecting it starts no job."""
+    from vers_spark.indexes.ivfflat import IVFFlatIndex
+    from vers_spark.indexes.pq import PQCodec, ivfpq_search_blocked, persist_codes_partitioned
+
+    sc = spark.sparkContext
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 8)
+    ivf = IVFFlatIndex.build(emb, num_clusters=8, seed=1)
+    codec = PQCodec.train(emb, m=8, k_codebook=16, max_iter=5)
+    store = persist_codes_partitioned(
+        codec.encode(emb), ivf._serving_assignments(), str(tmp_path / "codes")
+    )
+
+    def search():
+        return ivfpq_search_blocked(ivf, codec, store, q, k=10, n_probes=2)
+
+    search().collect()  # warms the per-instance caches
+    rows, n_jobs = _collect_in_group(sc, "test_jobs_ivfpq_blocked", search)
+    assert len(rows) == 80
+    assert n_jobs <= 2
+    result = search()
+    assert _collect_in_group(sc, "test_jobs_ivfpq_blocked_result", lambda: result)[1] == 0
+
+
 def test_saved_stores_hold_one_file_per_partition(spark, sf_dir, tmp_path):
     """IVF and LSH saves write through a rebalance on their partition
     columns: at this scale every cluster_id and (tree_id, _pp) directory

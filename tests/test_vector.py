@@ -409,3 +409,43 @@ def test_fold_distances_cosine_zero_vector_raises_like_the_expression(spark):
         VN.fold_distances(np.array(zero), np.array([other]), "cosine")
     with pytest.raises(ZeroDivisionError):
         VN.fold_distances(np.array(other), np.array([zero]), "cosine")
+
+
+def test_keep_topk_prefilter_equals_full_lexsort():
+    """keep_topk's running top-cap, prefiltered by topk_candidates, keeps
+    exactly the rows (and order) of one plain (distance, id) lexsort over
+    every row it was fed: ties at the cap boundary, NaN, -0.0 against 0.0,
+    fewer rows than the cap, an all-NaN batch, and ids repeated within and
+    across batches. Distances compare bit for bit."""
+    from vers_spark.functions import vector_np as VN
+
+    nan = float("nan")
+    rng = np.random.default_rng(7)
+    values = np.array([0.0, -0.0, 0.5, 1.0, nan, np.inf])
+    cases = [
+        # a tie group straddling the cap, ids out of order
+        (2, [(np.array([5, 3, 9, 1]), np.array([1.0, 1.0, 1.0, 1.0]))]),
+        # NaN rows are ranked by id after every number
+        (3, [(np.array([4, 2, 7, 1]), np.array([nan, 0.5, nan, nan]))]),
+        # an all-NaN batch after a full one, fewer rows than the cap
+        (4, [(np.array([8, 6]), np.array([0.0, -0.0])), (np.array([3, 1, 2]), np.full(3, nan))]),
+        # the same id in two batches with -0.0 and 0.0
+        (1, [(np.array([5, 5]), np.array([-0.0, 0.0])), (np.array([5]), np.array([0.0]))]),
+    ]
+    for _ in range(300):
+        cap = int(rng.integers(1, 12))
+        batches = []
+        for _ in range(int(rng.integers(1, 5))):
+            n = int(rng.integers(0, 3 * cap + 2))
+            batches.append((rng.integers(0, 15, n), rng.choice(values, n)))
+        cases.append((cap, batches))
+    for cap, batches in cases:
+        best: dict = {}
+        for ids, dist in batches:
+            VN.keep_topk(best, "q", ids.astype(np.int64), dist.astype(np.float64), cap)
+        all_ids = np.concatenate([b[0] for b in batches]).astype(np.int64)
+        all_d = np.concatenate([b[1] for b in batches]).astype(np.float64)
+        sel = np.lexsort((all_ids, all_d))[:cap]
+        got_ids, got_d = best["q"]
+        assert got_ids.tolist() == all_ids[sel].tolist(), (cap, batches)
+        assert got_d.view(np.int64).tolist() == all_d[sel].view(np.int64).tolist(), (cap, batches)

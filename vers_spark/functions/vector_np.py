@@ -128,14 +128,41 @@ def pairwise_distances(queries: np.ndarray, corpus: np.ndarray, metric: str) -> 
     raise ValueError(f"unknown metric {metric!r}")
 
 
+def topk_candidates(dist: np.ndarray, cap: int) -> np.ndarray:
+    """Indices of the rows of ``dist`` that can rank among its ``cap``
+    smallest: the partition's ``cap`` smallest plus every row tying the
+    boundary value (duplicate vectors tie exactly, and the partition alone
+    keeps an arbitrary one of them). A NaN boundary keeps every row: NaN
+    ranks after every number, so the id decides among the NaN rows."""
+    if len(dist) <= cap:
+        return np.arange(len(dist))
+    bound = np.partition(dist, cap - 1)[cap - 1]
+    if np.isnan(bound):
+        return np.arange(len(dist))
+    return np.flatnonzero(dist <= bound)
+
+
 def keep_topk(best: dict, key, ids: np.ndarray, dist: np.ndarray, cap: int) -> None:
     """Fold the rows ``(ids, dist)`` into ``best[key]``: the ``cap``
     smallest (distance, id) pairs seen under ``key`` so far, the running
     partial top-k an Arrow kernel keeps across the batches of its task.
-    ``np.lexsort`` orders doubles as Spark does: NaN after every number,
-    ``-0.0`` tied with ``0.0``."""
+    :func:`topk_candidates` prefilters, then ``np.lexsort`` orders doubles
+    as Spark does: NaN after every number, ``-0.0`` tied with ``0.0``."""
     if key in best:
         ids = np.concatenate([best[key][0], ids])
         dist = np.concatenate([best[key][1], dist])
+    keep = topk_candidates(dist, cap)
+    ids, dist = ids[keep], dist[keep]
     sel = np.lexsort((ids, dist))[:cap]
     best[key] = (ids[sel], dist[sel])
+
+
+def topk_columns(best: dict, ids: np.ndarray) -> dict:
+    """A kernel's running top-k keyed by query row (see :func:`keep_topk`)
+    as its output columns ``query_id``, ``neighbour_id``, ``_dist``."""
+    lens = [len(b[0]) for b in best.values()]
+    return {
+        "query_id": np.repeat(ids[list(best)], lens),
+        "neighbour_id": np.concatenate([b[0] for b in best.values()]),
+        "_dist": np.concatenate([b[1] for b in best.values()]),
+    }

@@ -410,15 +410,36 @@ def _build_local(pdf: pd.DataFrame, params: dict) -> pd.DataFrame:
         for src, nbrs in adj.items():
             for dst, d in nbrs.items():
                 rows.append((shard, 1, layer, int(src), int(dst), float(d)))
-    # kind=2 marker row: per-shard build telemetry (src = shard row count,
-    # distance = wall seconds). build()/add() strip these from the graph
-    # table right after the checkpoint — they exist so a 1M run can tell
-    # STRAGGLERS (uneven shard walls) from host steal (uniform slowdown)
-    # without re-instrumenting (VERDICT r11 item 5).
+    # the shard's summary, which build()/add() harvest into the manifest in
+    # one collect and strip from the graph table (see _shard_summaries):
+    # kind=2 is build telemetry (src = shard row count, distance = wall
+    # seconds — a 1M run tells STRAGGLERS, uneven shard walls, from host
+    # steal, a uniform slowdown); kind=3 the entrypoint (src = the max-layer,
+    # then min-id node — §3.2 determinism — layer = its layer) and the top
+    # layer holding an edge (dst; null when the shard has no edge)
+    ep = min(g.node_layer, key=lambda n: (-g.node_layer[n], n))
+    edge_layers = [layer for layer, adj in enumerate(g.adj) if any(adj.values())]
     rows.append((shard, 2, 0, len(pdf), None, time.perf_counter() - t0))
+    rows.append((shard, 3, g.node_layer[ep], int(ep), max(edge_layers, default=None), None))
     return pd.DataFrame(
         rows, columns=["shard_id", "kind", "layer", "src", "dst", "distance"]
     )
+
+
+def _shard_summaries(rows) -> tuple[dict, dict, int | None]:
+    """The manifest entries of _build_local's summary rows (kinds 2 and 3):
+    ``shard_build_seconds`` and ``entrypoints`` keyed by shard, and the top
+    edge layer over the shards (None when no shard has an edge)."""
+    tele, eps, top = {}, {}, None
+    for r in rows:
+        shard = str(int(r["shard_id"]))
+        if r["kind"] == 2:
+            tele[shard] = [int(r["src"]), round(float(r["distance"]), 4)]
+        else:
+            eps[shard] = [int(r["src"]), int(r["layer"])]
+            if r["dst"] is not None:
+                top = int(r["dst"]) if top is None else max(top, int(r["dst"]))
+    return tele, eps, top
 
 
 def _assign_top2(data: DataFrame, cent_mat: np.ndarray, eps: float) -> DataFrame:
@@ -626,33 +647,16 @@ class HNSWIndex:
             .applyInPandas(lambda pdf: _build_local(pdf, params), _GRAPH_SCHEMA)
             .localCheckpoint(eager=True)  # build once, reuse across searches
         )
-        # harvest the kind=2 telemetry rows (num_shards of them — driver-
-        # trivial) into the manifest, then strip them: the graph readers
-        # (search reconstruction, layer_stats, save) see kinds 0/1 only
-        params["shard_build_seconds"] = {
-            str(int(r["shard_id"])): [int(r["src"]), round(float(r["distance"]), 4)]
-            for r in graph.filter(F.col("kind") == 2).collect()
-        }
+        # harvest the per-shard summary rows (2 × num_shards — driver-
+        # trivial) into the manifest in one collect, then strip them: the
+        # graph readers (search reconstruction, layer_stats, save) see
+        # kinds 0/1 only. Entrypoints persist in the manifest (SURVEY
+        # §9.6): searches start from it instead of re-aggregating the graph.
+        tele, eps, top_edge = _shard_summaries(graph.filter(F.col("kind") >= 2).collect())
+        params["shard_build_seconds"] = tele
         graph = graph.filter(F.col("kind") <= 1)
-        # per-shard entrypoints (max-layer, min-id node — §3.2 determinism)
-        # cached ONCE here and persisted in the manifest (SURVEY §9.6):
-        # searches start from the manifest instead of re-aggregating the
-        # graph table per query batch. num_shards rows — driver-trivial.
-        sw = W.partitionBy("shard_id")
-        ep_rows = (
-            graph.filter(F.col("kind") == 0)
-            .select("shard_id", "layer", F.col("src").alias("node_id"))
-            .withColumn("_top", F.max("layer").over(sw))
-            .filter(F.col("layer") == F.col("_top"))
-            .groupBy("shard_id", "_top")
-            .agg(F.min("node_id").alias("node_id"))
-            .collect()
-        )
-        params["entrypoints"] = {
-            str(int(r["shard_id"])): [int(r["node_id"]), int(r["_top"])] for r in ep_rows
-        }
-        top_edge = graph.filter(F.col("kind") == 1).agg(F.max("layer")).collect()[0][0]
-        params["top_edge_layer"] = int(top_edge) if top_edge is not None else 0
+        params["entrypoints"] = eps
+        params["top_edge_layer"] = top_edge if top_edge is not None else 0
         return HNSWIndex(spark, nodes, graph, centroids, params)
 
     # ---------------- search ----------------
@@ -1120,45 +1124,22 @@ class HNSWIndex:
             nodes.filter(F.col("shard_id").isin(affected))
             .groupBy("shard_id")
             .applyInPandas(lambda pdf: _build_local(pdf, build_params), _GRAPH_SCHEMA)
-            .localCheckpoint(eager=True)  # build once; harvested twice below
+            .localCheckpoint(eager=True)  # build once; summaries and graph read it below
         )
-        # refresh the manifest for the rebuilt shards (copy — self.params
-        # stays the pre-add index's truth): telemetry rows re-harvested so
-        # shard_build_seconds keeps its rows-partition-the-corpus invariant
-        # after add(), and entrypoints recomputed because the id-deterministic
-        # layer draw lets an added node raise a shard's top layer or take
-        # over min-id at the old top.
+        # refresh the manifest for the rebuilt shards from their summary
+        # rows, one collect (copy — self.params stays the pre-add index's
+        # truth): telemetry so shard_build_seconds keeps its rows-partition-
+        # the-corpus invariant after add(), and entrypoints because the
+        # id-deterministic layer draw lets an added node raise a shard's top
+        # layer or take over min-id at the old top.
         params = dict(self.params)
-        tele = params.get("shard_build_seconds")
-        if tele is not None:
-            tele = dict(tele)
-            for r in rebuilt.filter(F.col("kind") == 2).collect():
-                tele[str(int(r["shard_id"]))] = [
-                    int(r["src"]),
-                    round(float(r["distance"]), 4),
-                ]
-            params["shard_build_seconds"] = tele
-        eps = params.get("entrypoints")
-        if eps is not None:
-            eps = dict(eps)
-            sw = W.partitionBy("shard_id")
-            ep_rows = (
-                rebuilt.filter(F.col("kind") == 0)
-                .select("shard_id", "layer", F.col("src").alias("node_id"))
-                .withColumn("_top", F.max("layer").over(sw))
-                .filter(F.col("layer") == F.col("_top"))
-                .groupBy("shard_id", "_top")
-                .agg(F.min("node_id").alias("node_id"))
-                .collect()
-            )
-            for r in ep_rows:
-                eps[str(int(r["shard_id"]))] = [int(r["node_id"]), int(r["_top"])]
-            params["entrypoints"] = eps
-            top = rebuilt.filter(F.col("kind") == 1).agg(F.max("layer")).collect()[0][0]
+        tele, eps, top = _shard_summaries(rebuilt.filter(F.col("kind") >= 2).collect())
+        if params.get("shard_build_seconds") is not None:
+            params["shard_build_seconds"] = {**params["shard_build_seconds"], **tele}
+        if params.get("entrypoints") is not None:
+            params["entrypoints"] = {**params["entrypoints"], **eps}
             if top is not None:
-                params["top_edge_layer"] = max(
-                    int(params.get("top_edge_layer", 0)), int(top)
-                )
+                params["top_edge_layer"] = max(int(params.get("top_edge_layer", 0)), top)
         graph = (
             self.graph.filter(~F.col("shard_id").isin(affected))
             .unionByName(rebuilt.filter(F.col("kind") <= 1))

@@ -289,6 +289,32 @@ class IVFFlatIndex:
             self.params["_cents_cache"] = cached
         return cached
 
+    def _probe_plan(
+        self, q_mat: np.ndarray, k: int, n_probes: int, sizes: dict[int, int] | None = None
+    ) -> dict[int, list[int]]:
+        """The probe set of a query batch ``q_mat`` (Q, d): cluster_id → the
+        query rows probing it. Per query the cached centroids rank by the
+        fold distance (``vector_np.fold_distances``, bit-equal to the
+        declarative kernel; cluster_id breaks ties), and the reference's
+        fill rule (ivfflat.rs:166-195) keeps the cluster at rank r iff
+        r < ``n_probes`` or the better-ranked clusters hold fewer than k
+        members. The members counted are ``sizes`` (default: the cached
+        posting-list sizes); cum_before only grows, so the kept set is a
+        rank prefix."""
+        from vers_spark.functions import vector_np as VN
+
+        if sizes is None:
+            sizes = self._cluster_sizes()
+        c_ids, c_mat = self._centroid_matrix()
+        c_sizes = np.array([sizes.get(int(c), 0) for c in c_ids], dtype=np.int64)
+        plan: dict[int, list[int]] = {}
+        for qi, q in enumerate(q_mat):
+            order = np.lexsort((c_ids, VN.fold_distances(q, c_mat, "sq_euclidean")))
+            cum_before = np.cumsum(c_sizes[order]) - c_sizes[order]
+            for ci in order[: max(n_probes, np.count_nonzero(cum_before < k))]:
+                plan.setdefault(int(c_ids[ci]), []).append(qi)
+        return plan
+
     def search(
         self,
         queries: DataFrame,
@@ -336,7 +362,7 @@ class IVFFlatIndex:
         filtered subset); the predicate prunes candidate I/O instead of
         post-filtering results."""
         from vers_spark.functions import vector_np as VN
-        from vers_spark.operators.knn import _NO_ROWS, _query_block, _topk_frame
+        from vers_spark.operators.knn import _NO_ROWS, _arrow_topk, _query_block, _topk_frame
 
         block = _query_block(queries, query_id, query_vec, "ivf_search")
         if block is None:
@@ -344,29 +370,14 @@ class IVFFlatIndex:
         q_ids, q_mat = block
 
         assignments = self._serving_assignments()
+        sizes = None
         if candidate_ids is not None:
             assignments = assignments.join(
                 candidate_ids.select(F.col("id").cast("long").alias("id")), "id", "left_semi"
             )
             # the fill rule must see FILTERED posting sizes
             sizes = _posting_sizes(assignments)
-        else:
-            sizes = self._cluster_sizes()
-        c_ids, c_mat = self._centroid_matrix()
-        # fill rule: keep the cluster at rank r iff r <= n_probes OR the
-        # better-ranked clusters hold < k members; cum_before only grows,
-        # so the kept set is a rank prefix — stop at the first exclusion
-        probe_map: dict[int, list[int]] = {}  # cluster_id → probing query rows
-        for qi in range(len(q_ids)):
-            order = np.lexsort((c_ids, VN.fold_distances(q_mat[qi], c_mat, "sq_euclidean")))
-            cum_before = 0
-            for rank0, ci in enumerate(order):
-                if rank0 >= n_probes and cum_before >= k:
-                    break
-                cid = int(c_ids[ci])
-                probe_map.setdefault(cid, []).append(qi)
-                cum_before += sizes.get(cid, 0)
-
+        probe_map = self._probe_plan(q_mat, k, n_probes, sizes)
         bc = self.spark.sparkContext.broadcast((q_ids, q_mat, probe_map, k))
 
         def member_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -382,28 +393,47 @@ class IVFFlatIndex:
                         dist = VN.fold_distances(mat[qi], b_mat, "sq_euclidean")
                         VN.keep_topk(best, qi, b_ids, dist, kk)
             if best:
-                lens = [len(b[0]) for b in best.values()]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat([ids[qi] for qi in best], lens),
-                        "neighbour_id": np.concatenate([b[0] for b in best.values()]),
-                        "_dist": np.concatenate([b[1] for b in best.values()]),
-                    }
-                )
+                yield pd.DataFrame(VN.topk_columns(best, ids))
 
         members = assignments.filter(F.col("cluster_id").isin(sorted(probe_map))).select(
             "id", "cluster_id", "embedding"
         )
-        cands = members.mapInPandas(
-            member_topk, "query_id long, neighbour_id long, _dist double"
-        ).toArrow()
-        return _topk_frame(
-            self.spark,
-            cands.column("query_id").to_numpy(),
-            cands.column("neighbour_id").to_numpy(),
-            cands.column("_dist").to_numpy(),
-            k,
+        cands = members.mapInPandas(member_topk, "query_id long, neighbour_id long, _dist double")
+        return _arrow_topk(self.spark, cands, k)
+
+    def _range_probe(
+        self, queries: DataFrame, r2: float, query_id: str, query_vec: str
+    ) -> tuple[DataFrame, DataFrame]:
+        """(queries as (query_id, q_vec), their (query_id, q_vec,
+        cluster_id) probe set) for radius ``r2``: the lossless
+        triangle-inequality filter of :meth:`range_search` and
+        :meth:`range_join_blocked` over the centroid table and the cluster
+        coverage radii (one aggregate over the posting lists, cached per
+        index)."""
+        radii_key = "_range_radii"
+        if radii_key not in self.params:
+            self.params[radii_key] = (
+                self._serving_assignments()
+                .join(F.broadcast(self.centroids), "cluster_id")
+                .groupBy("cluster_id")
+                .agg(
+                    F.max(V.sq_euclidean(F.col("embedding"), F.col("centroid"))).alias(
+                        "r2_max"
+                    )
+                )
+                .localCheckpoint(eager=True)
+            )
+        q = queries.select(
+            F.col(query_id).cast("long").alias("query_id"), F.col(query_vec).alias("q_vec")
         )
+        cents = self.centroids.join(F.broadcast(self.params[radii_key]), "cluster_id")
+        c_dist = V.sq_euclidean(F.col("q_vec"), F.col("centroid"))
+        probe = (
+            q.crossJoin(F.broadcast(cents))
+            .filter(F.sqrt(c_dist) <= F.sqrt(F.lit(float(r2))) + F.sqrt(F.col("r2_max")))
+            .select("query_id", "q_vec", "cluster_id")
+        )
+        return q, probe
 
     def range_search(
         self,
@@ -428,29 +458,7 @@ class IVFFlatIndex:
         full scan, never to a wrong answer. For UNBOUNDED query sets swap
         the probe broadcast for a shuffle join on cluster_id."""
         asg = self._serving_assignments()
-        radii_key = "_range_radii"
-        if radii_key not in self.params:
-            self.params[radii_key] = (
-                asg.join(F.broadcast(self.centroids), "cluster_id")
-                .groupBy("cluster_id")
-                .agg(
-                    F.max(V.sq_euclidean(F.col("embedding"), F.col("centroid"))).alias(
-                        "r2_max"
-                    )
-                )
-                .localCheckpoint(eager=True)
-            )
-        radii = self.params[radii_key]
-        q = queries.select(
-            F.col(query_id).cast("long").alias("query_id"), F.col(query_vec).alias("q_vec")
-        )
-        cents = self.centroids.join(F.broadcast(radii), "cluster_id")
-        c_dist = V.sq_euclidean(F.col("q_vec"), F.col("centroid"))
-        probe = (
-            q.crossJoin(F.broadcast(cents))
-            .filter(F.sqrt(c_dist) <= F.sqrt(F.lit(float(r2))) + F.sqrt(F.col("r2_max")))
-            .select("query_id", "q_vec", "cluster_id")
-        )
+        _, probe = self._range_probe(queries, r2, query_id, query_vec)
         dist = V.sq_euclidean(F.col("q_vec"), F.col("embedding"))
         return (
             asg.join(F.broadcast(probe), "cluster_id")
@@ -489,29 +497,7 @@ class IVFFlatIndex:
         import pandas as pd
 
         asg = self._serving_assignments()
-        radii_key = "_range_radii"
-        if radii_key not in self.params:
-            self.params[radii_key] = (
-                asg.join(F.broadcast(self.centroids), "cluster_id")
-                .groupBy("cluster_id")
-                .agg(
-                    F.max(V.sq_euclidean(F.col("embedding"), F.col("centroid"))).alias(
-                        "r2_max"
-                    )
-                )
-                .localCheckpoint(eager=True)
-            )
-        radii = self.params[radii_key]
-        q = queries.select(
-            F.col(query_id).cast("long").alias("query_id"), F.col(query_vec).alias("q_vec")
-        )
-        cents = self.centroids.join(F.broadcast(radii), "cluster_id")
-        c_dist = V.sq_euclidean(F.col("q_vec"), F.col("centroid"))
-        probe = (
-            q.crossJoin(F.broadcast(cents))
-            .filter(F.sqrt(c_dist) <= F.sqrt(F.lit(float(r2))) + F.sqrt(F.col("r2_max")))
-            .select("cluster_id", "query_id", "q_vec")
-        )
+        q, probe = self._range_probe(queries, r2, query_id, query_vec)
         thr = float(r2) + 1e-9 * (1.0 + float(r2))
 
         def pairs_fn(probe_pdf: pd.DataFrame, member_pdf: pd.DataFrame) -> pd.DataFrame:

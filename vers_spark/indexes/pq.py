@@ -14,12 +14,21 @@ Spark-first layout, mirroring the IVF split (indexes/ivfflat.py):
 - **encode** is one distributed ``mapInPandas`` pass (codebooks broadcast,
   per-batch vectorized argmin per subspace) — the only corpus-wide job;
 - **search** is asymmetric distance computation (ADC): per query ONE
-  (m × k_codebook) lookup table of exact subspace distances, then every
-  code's distance is m table lookups — the blocked partial/final top-k
-  shape of operators/knn.exact_knn_blocked, reading only (id, codes);
+  (m × k_codebook) lookup table of exact subspace distances
+  (``PQCodec.luts``, the one LUT builder), then every code's distance is
+  m table lookups folded left (:func:`_adc`, bit-equal to the declarative
+  ``aggregate``), each task keeping a running per-query top-k
+  (:func:`_adc_scan`);
 - optional exact re-rank of an oversampled shortlist against the raw
-  vectors (the standard PQ-shortlist → exact-rerank serving pattern):
-  recall@k then depends on oversample, not on quantization alone.
+  vectors (:func:`_rerank`, the standard PQ-shortlist → exact-rerank
+  pattern): recall@k then depends on oversample, not on quantization.
+
+Finishes (see operators/knn): ``PQCodec.search`` scans the whole code
+table, so its candidates grow with the splits and it keeps the ranking
+window; ``ivfpq_search_blocked`` reads only the clusters that
+``IVFFlatIndex._probe_plan`` picks and finishes on the driver (a local
+frame). ``ivfpq_search`` and ``ivfpq_search_residual`` stay declarative
+JVM folds: the references the blocked twin must match row for row.
 
 Determinism: seeded k-means, numpy float64 throughout, ties broken by id.
 """
@@ -36,7 +45,8 @@ from pyspark.sql import functions as F
 
 from vers_spark.indexes.ivfflat import _kmeans_numpy
 from vers_spark.functions.frames import local_frame
-from vers_spark.operators.knn import _NO_ROWS, _query_block, _ranked, _topk_frame
+from vers_spark.operators.knn import _NO_ROWS, _arrow_topk, _kernel_ranked, _query_block
+from vers_spark.operators.knn import _ranked, _topk_frame
 
 # Codebook training never collects more than this many rows (seeded uniform
 # sample above it — same discipline as ivfflat._LOCAL_KMEANS_SAMPLE_ROWS).
@@ -119,6 +129,19 @@ class PQCodec:
 
         return df.mapInPandas(fn, "vec_id long, codes array<long>")
 
+    def luts(self, vecs: np.ndarray) -> np.ndarray:
+        """ADC lookup tables of the vectors ``vecs`` (n, D): (n, m,
+        k_codebook), entry [i, j, c] the exact squared distance from the
+        j-th slice of vector i to centroid c of codebook j — a code's
+        distance is then m lookups. The one LUT builder every PQ search
+        path uses."""
+        dsub = self.dsub
+        out = np.empty((len(vecs), self.m, self.codebooks.shape[1]), dtype=np.float64)
+        for j, book in enumerate(self.codebooks):
+            diff = vecs[:, None, j * dsub : (j + 1) * dsub] - book[None, :, :]
+            out[:, j, :] = np.einsum("nkd,nkd->nk", diff, diff)
+        return out
+
     def search(
         self,
         queries: DataFrame,
@@ -132,85 +155,19 @@ class PQCodec:
         """ADC top-k over the coded corpus; with ``corpus`` given, the
         ADC shortlist (k·oversample) is exactly re-ranked against the raw
         vectors. Returns (query_id, neighbour_id, distance, rank) like
-        operators/knn.exact_knn."""
+        operators/knn.exact_knn. A whole-corpus scan, so it keeps the
+        ranking window (see the module docstring)."""
         spark = codes.sparkSession
         block = _query_block(queries, query_id, query_vec, "PQCodec.search")
         if block is None:
             return _topk_frame(spark, *_NO_ROWS, k)
         q_ids, q_mat = block
-        m, dsub = self.m, self.dsub
-        # per-query LUT: exact squared distance from the query's j-th slice
-        # to every centroid of codebook j → code distance = m lookups
-        luts = np.empty((len(q_ids), m, self.codebooks.shape[1]), dtype=np.float64)
-        for j in range(m):
-            qs = q_mat[:, j * dsub : (j + 1) * dsub]
-            diff = qs[:, None, :] - self.codebooks[j][None, :, :]
-            luts[:, j, :] = np.einsum("qkd,qkd->qk", diff, diff)
-        shortlist = k * oversample
-        bc = spark.sparkContext.broadcast((q_ids, luts, shortlist))
-
-        def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ids, tables, kk = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                c_ids = pdf["vec_id"].to_numpy(np.int64)
-                C = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (B, m)
-                # gather: dist[q, b] = Σ_j tables[q, j, C[b, j]] — folded
-                # SEQUENTIALLY to be bit-equal to the declarative
-                # aggregate's left fold (the ivfpq_search_blocked fix:
-                # numpy pairwise summation can differ by ulps and flip
-                # near-tie orderings across engines)
-                g = tables[:, np.arange(C.shape[1])[None, :], C]  # (Q, B, m)
-                d = np.zeros(g.shape[:2], dtype=np.float64)
-                for j in range(g.shape[2]):
-                    d += g[:, :, j]  # in-place: same left fold, no temporaries
-                take = min(kk, d.shape[1])
-                part = np.argpartition(d, take - 1, axis=1)[:, :take]
-                out = []
-                for qi in range(d.shape[0]):
-                    cols = part[qi]
-                    # ADC distance ties at the take boundary are COMMON
-                    # (identical codes sum identical LUT entries); re-admit
-                    # boundary ties and truncate on the (distance, id)
-                    # composite key — the serving-kernel discipline
-                    thr = d[qi, cols].max()
-                    cand = np.nonzero(d[qi] <= thr)[0]
-                    if len(cand) < take:  # NaN distances → keep fixed width
-                        cand = cols
-                    order = np.lexsort((c_ids[cand], d[qi, cand]))
-                    sel = cand[order][:take]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(take, ids[qi]),
-                                "neighbour_id": c_ids[sel],
-                                "_dist": d[qi, sel],
-                            }
-                        )
-                    )
-                yield pd.concat(out, ignore_index=True)
-
-        cands = codes.mapInPandas(
-            partial_topk, "query_id long, neighbour_id long, _dist double"
-        )
+        shortlist = k * oversample if corpus is not None else k
+        plan = {None: (np.arange(len(q_ids)), self.luts(q_mat))}
+        cands = _adc_scan(codes.select("vec_id", "codes"), q_ids, plan, shortlist)
         if corpus is None:
-            return _ranked(cands, "_dist", k)
-        # exact re-rank of the global shortlist against raw vectors
-        shortlisted = _ranked(cands, "_dist", shortlist).select(
-            "query_id", "neighbour_id"
-        )
-        q = queries.select(
-            F.col(query_id).alias("query_id"), F.col(query_vec).alias("q_vec")
-        )
-        c = corpus.select(F.col("vec_id").alias("neighbour_id"), F.col("embedding").alias("c_vec"))
-        from vers_spark.functions import vector as V
-
-        exact = (
-            shortlisted.join(F.broadcast(q), "query_id")
-            .join(c, "neighbour_id")
-            .withColumn("_dist", V.sq_euclidean(F.col("q_vec"), F.col("c_vec")))
-        )
+            return _kernel_ranked(cands, k)
+        exact = _rerank(_kernel_ranked(cands, shortlist), block, corpus)
         return _ranked(exact, "_dist", k)
 
     def luts_df(
@@ -222,16 +179,101 @@ class PQCodec:
         candidates so the per-candidate distance is a pure JVM expression."""
         spark = queries.sparkSession
         block = _query_block(queries, query_id, query_vec, "PQCodec.lut")
-        q_ids, q_mat = block if block is not None else _NO_ROWS[:2]
-        m, dsub = self.m, self.dsub
-        out = []
-        for qid, qv in zip(q_ids, q_mat):
-            lut = []
-            for j in range(m):
-                diff = self.codebooks[j] - qv[j * dsub : (j + 1) * dsub][None, :]
-                lut.append(np.einsum("kd,kd->k", diff, diff).tolist())
-            out.append((int(qid), lut))
-        return local_frame(spark, "query_id long, lut array<array<double>>", out)
+        q_ids, q_mat = block if block is not None else (_NO_ROWS[0], np.zeros((0, self.m * self.dsub)))
+        return local_frame(
+            spark,
+            "query_id long, lut array<array<double>>",
+            {"query_id": q_ids, "lut": [t.tolist() for t in self.luts(q_mat)]},
+        )
+
+
+def _adc(tables: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """ADC distances (Q, B) of the codes (B, m) under the LUTs (Q, m, K):
+    Σⱼ tables[q, j, codes[b, j]], folded left in j order from 0.0 —
+    bit-equal to the declarative ``aggregate(…, 0.0, acc + x)`` (numpy's
+    pairwise ``sum`` can differ by ulps and flip near-tie orders)."""
+    d = np.zeros((tables.shape[0], len(codes)), dtype=np.float64)
+    for j in range(codes.shape[1]):
+        d += tables[:, j, codes[:, j]]
+    return d
+
+
+def _adc_scan(codes: DataFrame, q_ids: np.ndarray, plan: dict, cap: int) -> DataFrame:
+    """One Arrow pass over ``codes`` (vec_id, codes[, cluster_id]):
+    ``plan`` maps a cluster_id (None for a store without one) to (query
+    rows, their LUTs); each task keeps every planned query's running ADC
+    top-``cap`` over its batches (``vector_np.keep_topk``) and emits it
+    once. Returns (query_id, neighbour_id, _dist)."""
+    from vers_spark.functions import vector_np as VN
+
+    bc = codes.sparkSession.sparkContext.broadcast((q_ids, plan, cap))
+
+    def code_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids, pl, kk = bc.value
+        best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            groups = pdf.groupby("cluster_id") if "cluster_id" in pdf.columns else [(None, pdf)]
+            for cid, grp in groups:
+                if cid not in pl:
+                    continue
+                rows, tables = pl[cid]
+                d = _adc(tables, np.array(grp["codes"].tolist(), dtype=np.int64))
+                n_ids = grp["vec_id"].to_numpy(np.int64)
+                for row, qi in enumerate(rows):
+                    VN.keep_topk(best, qi, n_ids, d[row], kk)
+        if best:
+            yield pd.DataFrame(VN.topk_columns(best, ids))
+
+    return codes.mapInPandas(code_topk, "query_id long, neighbour_id long, _dist double")
+
+
+def _adc_expr():
+    """The declarative ADC of a (codes, lut) row: ``aggregate(zip_with(codes,
+    lut, element_at), 0.0, acc + x)`` — whole-stage codegen, no Python."""
+    return F.aggregate(
+        F.zip_with("codes", "lut", lambda c, row: F.element_at(row, (c + 1).cast("int"))),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _rerank(shortlist: DataFrame, q, corpus: DataFrame) -> DataFrame:
+    """(query_id, neighbour_id, _dist): the exact squared-L2 distance
+    (the left fold of functions.vector) of every shortlisted (query,
+    neighbour) pair, from the queries ``q`` — a (query_id, q_vec) frame or
+    a collected query block — and the raw ``corpus`` (vec_id, embedding)
+    vectors: the shortlist → exact re-rank tail of every PQ search path."""
+    from vers_spark.functions import vector as V
+
+    if isinstance(q, tuple):
+        schema = "query_id long, q_vec array<double>"
+        q = local_frame(shortlist.sparkSession, schema, {"query_id": q[0], "q_vec": q[1]})
+    c = corpus.select(F.col("vec_id").alias("neighbour_id"), F.col("embedding").alias("c_vec"))
+    dist = V.sq_euclidean(F.col("q_vec"), F.col("c_vec")).alias("_dist")
+    return (
+        shortlist.select("query_id", "neighbour_id")
+        .join(F.broadcast(q), "query_id")
+        .join(c, "neighbour_id")
+        .select("query_id", "neighbour_id", dist)
+    )
+
+
+def _probe_luts(ivf, codec: PQCodec, q_mat: np.ndarray, k: int, n_probes: int, residual: bool):
+    """The IVF probe plan (``IVFFlatIndex._probe_plan``) with its LUTs:
+    cluster_id → (probing query rows, their LUTs). Whole-vector codes use
+    each query's LUT; residual codes the LUT of the query's residual
+    against THAT cluster's centroid (the FAISS by_residual ADC)."""
+    plan = {cid: np.array(rows) for cid, rows in ivf._probe_plan(q_mat, k, n_probes).items()}
+    if not residual:
+        whole = codec.luts(q_mat)
+        return {cid: (rows, whole[rows]) for cid, rows in plan.items()}
+    c_ids, c_mat = ivf._centroid_matrix()
+    return {
+        cid: (rows, codec.luts(q_mat[rows] - c_mat[np.searchsorted(c_ids, cid)]))
+        for cid, rows in plan.items()
+    }
 
 
 def persist_codes_partitioned(
@@ -291,17 +333,13 @@ def ivfpq_search_residual(
     The ADC lookup table is now per (query, probed cluster) — the query's
     residual against THAT cluster's centroid — so LUTs key on
     (query_id, cluster_id): Q × ~n_probes rows, driver-computed like
-    luts_df and broadcast. Probing/fill-rule resolve driver-side on the
-    collected centroid table (IVFFlatIndex.search's probe rule, ivfflat.rs:166-195
-    semantics); candidates come off the cluster-pruned code store with a
-    literal isin filter (static partition pruning on the
-    persist_codes_partitioned layout); the per-candidate ADC stays a pure
-    JVM fold. ``codes`` must carry cluster_id (the persisted layout).
+    luts_df and broadcast. Probing and the fill rule resolve driver-side
+    (``IVFFlatIndex._probe_plan``, ivfflat.rs:166-195 semantics);
+    candidates come off the cluster-pruned code store with a literal isin
+    filter (static partition pruning on the persist_codes_partitioned
+    layout); the per-candidate ADC stays a pure JVM fold. ``codes`` must
+    carry cluster_id (the persisted layout).
     """
-    import numpy as np
-
-    from vers_spark.functions import vector as V
-
     if "cluster_id" not in codes.columns:
         raise ValueError("residual serving needs the cluster-partitioned code store")
     spark = codes.sparkSession
@@ -309,61 +347,26 @@ def ivfpq_search_residual(
     if block is None:
         return _topk_frame(spark, *_NO_ROWS, k)
     q_ids, q_mat = block
-    cent_rows = ivf.centroids.orderBy("cluster_id").collect()
-    c_ids = np.array([r["cluster_id"] for r in cent_rows], dtype=np.int64)
-    c_mat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    sizes = ivf._cluster_sizes()
-    m, dsub = codec.m, codec.dsub
-
-    lut_rows = []
-    for qid, q in zip(q_ids, q_mat):
-        d = np.einsum("ij,ij->i", c_mat - q[None, :], c_mat - q[None, :])
-        order = np.lexsort((c_ids, d))
-        cum_before = 0
-        for rank0, ci in enumerate(order):
-            if rank0 >= n_probes and cum_before >= k:
-                break
-            cid = int(c_ids[ci])
-            cum_before += sizes.get(cid, 0)
-            res = q - c_mat[ci]
-            lut = []
-            for j in range(m):
-                diff = codec.codebooks[j] - res[j * dsub : (j + 1) * dsub][None, :]
-                lut.append(np.einsum("kd,kd->k", diff, diff).tolist())
-            lut_rows.append((int(qid), cid, lut))
+    plan = _probe_luts(ivf, codec, q_mat, k, n_probes, residual=True)
     luts = local_frame(
-        spark, "query_id long, cluster_id int, lut array<array<double>>", lut_rows
+        spark,
+        "query_id long, cluster_id int, lut array<array<double>>",
+        [
+            (int(q_ids[qi]), cid, lut.tolist())
+            for cid, (rows, tables) in plan.items()
+            for qi, lut in zip(rows, tables)
+        ],
     )
-    probe_set = sorted({cid for _, cid, _ in lut_rows})
-    pruned = codes.filter(F.col("cluster_id").isin(probe_set))
+    pruned = codes.filter(F.col("cluster_id").isin(sorted(plan)))
     cands = pruned.withColumnRenamed("vec_id", "neighbour_id").join(
         F.broadcast(luts), "cluster_id"
     )
-    adc = F.aggregate(
-        F.zip_with(
-            "codes", "lut", lambda c, row: F.element_at(row, (c + 1).cast("int"))
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     shortlist = _ranked(
-        cands.withColumn("_dist", adc),
-        "_dist",
-        k * oversample if corpus is not None else k,
+        cands.withColumn("_dist", _adc_expr()), "_dist", k * oversample if corpus is not None else k
     )
     if corpus is None:
         return shortlist
-    q_df = local_frame(
-        spark, "query_id long, q_vec array<double>", {"query_id": q_ids, "q_vec": q_mat}
-    )
-    c = corpus.select(F.col("vec_id").alias("neighbour_id"), F.col("embedding").alias("c_vec"))
-    exact = (
-        shortlist.select("query_id", "neighbour_id")
-        .join(F.broadcast(q_df), "query_id")
-        .join(c, "neighbour_id")
-        .withColumn("_dist", V.sq_euclidean(F.col("q_vec"), F.col("c_vec")))
-    )
-    return _ranked(exact, "_dist", k)
+    return _ranked(_rerank(shortlist, block, corpus), "_dist", k)
 
 
 def ivfpq_search_blocked(
@@ -383,23 +386,20 @@ def ivfpq_search_blocked(
     serving path gets a vectorized Arrow twin of its declarative oracle).
 
     The declarative ADC carries an m×k_codebook LUT per CANDIDATE row
-    through a broadcast join and folds it element-wise in the JVM — at 1M
-    with 100 queries that is ~20M candidate rows × (m lookups + a ~8 KB
-    lut column each). Here probing and LUTs resolve driver-side exactly as
-    in ivfpq_search_residual (same centroid ranking, same underflow fill
-    prefix rule), the numpy LUT tensor is broadcast ONCE, and each code
-    partition computes a vectorized gather + per-query partial top-k
-    (PQCodec.search's partial_topk shape) — output is bounded at
-    shortlist rows per (query, partition), never the candidate volume.
-    Partition pruning on the persist_codes_partitioned layout still
-    applies through the literal isin filter.
+    through a broadcast join (at 1M with 100 queries, ~20M rows × a ~8 KB
+    lut column). Here the declarative twins' probe plan and LUTs
+    (:func:`_probe_luts`) are broadcast ONCE, and one Arrow pass over the
+    probed code partitions (a literal isin filter: partition pruning on the
+    persist_codes_partitioned layout) keeps each query's running ADC top-k
+    per task (:func:`_adc_scan`). The plan bounds those rows, so the driver
+    finishes like IVF search (``knn._arrow_topk``), as it does the exact
+    re-rank of the k·oversample shortlist when ``corpus`` is given: the
+    result is a local frame, and collecting it starts no job.
 
     ``residual=True`` serves residual codes (LUT per (query, probed
     cluster) against the query's residual to THAT centroid — the FAISS
     by_residual ADC); ``False`` whole-vector codes (one LUT per query).
     Parity with the declarative twins is gated in tests/test_pq.py."""
-    from vers_spark.functions import vector as V
-
     if "cluster_id" not in codes.columns:
         raise ValueError("blocked serving needs the cluster-partitioned code store")
     spark = codes.sparkSession
@@ -407,124 +407,14 @@ def ivfpq_search_blocked(
     if block is None:
         return _topk_frame(spark, *_NO_ROWS, k)
     q_ids, q_mat = block
-    cent_rows = ivf.centroids.orderBy("cluster_id").collect()
-    c_ids = np.array([r["cluster_id"] for r in cent_rows], dtype=np.int64)
-    c_mat = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    sizes = ivf._cluster_sizes()
-    m, dsub, kbook = codec.m, codec.dsub, codec.codebooks.shape[1]
-
-    # whole-vector LUTs are per query; residual LUTs per (query, cluster)
-    flat_luts = np.empty((0, m, kbook))
-    if not residual:
-        flat_luts = np.empty((len(q_ids), m, kbook), dtype=np.float64)
-        for j in range(m):
-            qs = q_mat[:, j * dsub : (j + 1) * dsub]
-            diff = qs[:, None, :] - codec.codebooks[j][None, :, :]
-            flat_luts[:, j, :] = np.einsum("qkd,qkd->qk", diff, diff)
-
-    # probe resolve: rank clusters per query, include the n_probes nearest
-    # plus the underflow-fill prefix (cum sizes < k) — the ivfpq_search /
-    # ivfpq_search_residual rule verbatim
-    probe: dict[int, list[tuple[int, np.ndarray | None]]] = {}
-    for qi in range(len(q_ids)):
-        q = q_mat[qi]
-        d = np.einsum("ij,ij->i", c_mat - q[None, :], c_mat - q[None, :])
-        order = np.lexsort((c_ids, d))
-        cum_before = 0
-        for rank0, ci in enumerate(order):
-            if rank0 >= n_probes and cum_before >= k:
-                break
-            cid = int(c_ids[ci])
-            cum_before += sizes.get(cid, 0)
-            lut = None
-            if residual:
-                res = q - c_mat[ci]
-                lut = np.empty((m, kbook), dtype=np.float64)
-                for j in range(m):
-                    diff = codec.codebooks[j] - res[j * dsub : (j + 1) * dsub][None, :]
-                    lut[j] = np.einsum("kd,kd->k", diff, diff)
-            probe.setdefault(cid, []).append((qi, lut))
-    # per probed cluster: (query indices, stacked LUT tensor)
-    packed = {
-        cid: (
-            np.array([qi for qi, _ in lst], dtype=np.int64),
-            np.stack([lut for _, lut in lst]) if residual else None,
-        )
-        for cid, lst in probe.items()
-    }
+    plan = _probe_luts(ivf, codec, q_mat, k, n_probes, residual)
     shortlist = k * oversample if corpus is not None else k
-    bc = spark.sparkContext.broadcast((q_ids, flat_luts, packed, shortlist))
-
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, whole_luts, probes_by_cluster, kk = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for cid, grp in pdf.groupby("cluster_id"):
-                hit = probes_by_cluster.get(int(cid))
-                if hit is None:
-                    continue
-                qsel, res_luts = hit
-                tables = res_luts if res_luts is not None else whole_luts[qsel]
-                n_ids = grp["vec_id"].to_numpy(np.int64)
-                C = np.array(grp["codes"].tolist(), dtype=np.int64)  # (B, m)
-                g = tables[:, np.arange(C.shape[1])[None, :], C]  # (Q, B, m)
-                # explicit sequential fold over the m LUT terms: numpy's
-                # .sum uses pairwise summation, which can differ by ulps
-                # from the declarative aggregate's left fold and flip
-                # near-tie orderings across engines (cf. lsh._best_first)
-                d = np.zeros(g.shape[:2], dtype=np.float64)
-                for j in range(g.shape[2]):
-                    d += g[:, :, j]  # in-place: same left fold, no temporaries
-                take = min(kk, d.shape[1])
-                # argpartition accepts kth == n-1, so no full-take branch
-                part = np.argpartition(d, take - 1, axis=1)[:, :take]
-                for row, qi in enumerate(qsel):
-                    cols = part[row]
-                    # argpartition selected by distance alone; ADC distance
-                    # ties at the take boundary are common (identical codes
-                    # sum identical LUT entries) and could drop a smaller-id
-                    # neighbour. Re-admit every candidate tying the boundary
-                    # distance, then truncate on the (distance, id) composite
-                    # key — the ivfflat serving-kernel discipline.
-                    thr = d[row, cols].max()
-                    cand = np.nonzero(d[row] <= thr)[0]
-                    if len(cand) < take:  # NaN distances → keep fixed width
-                        cand = cols
-                    order = np.lexsort((n_ids[cand], d[row, cand]))
-                    sel = cand[order][:take]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(take, ids[qi]),
-                                "neighbour_id": n_ids[sel],
-                                "_dist": d[row, sel],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    pruned = codes.filter(F.col("cluster_id").isin(sorted(packed)))
-    cands = pruned.mapInPandas(
-        partial_topk, "query_id long, neighbour_id long, _dist double"
-    )
+    pruned = codes.filter(F.col("cluster_id").isin(sorted(plan)))
+    cands = _adc_scan(pruned.select("vec_id", "codes", "cluster_id"), q_ids, plan, shortlist)
     if corpus is None:
-        return _ranked(cands, "_dist", k)
-    shortlisted = _ranked(cands, "_dist", shortlist).select("query_id", "neighbour_id")
-    q_df = local_frame(
-        spark, "query_id long, q_vec array<double>", {"query_id": q_ids, "q_vec": q_mat}
-    )
-    c = corpus.select(
-        F.col("vec_id").alias("neighbour_id"), F.col("embedding").alias("c_vec")
-    )
-    exact = (
-        shortlisted.join(F.broadcast(q_df), "query_id")
-        .join(c, "neighbour_id")
-        .withColumn("_dist", V.sq_euclidean(F.col("q_vec"), F.col("c_vec")))
-    )
-    return _ranked(exact, "_dist", k)
+        return _arrow_topk(spark, cands, k)
+    shortlisted = _arrow_topk(spark, cands, shortlist)
+    return _arrow_topk(spark, _rerank(shortlisted, block, corpus), k)
 
 
 def ivfpq_search(
@@ -598,25 +488,11 @@ def ivfpq_search(
             .join(codes.withColumnRenamed("vec_id", "id"), "id")
             .join(F.broadcast(luts), "query_id")
         )
-    adc = F.aggregate(
-        F.zip_with(
-            "codes", "lut", lambda c, row: F.element_at(row, (c + 1).cast("int"))
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     shortlist = _ranked(
-        cands.withColumn("_dist", adc).withColumnRenamed("id", "neighbour_id"),
+        cands.withColumn("_dist", _adc_expr()).withColumnRenamed("id", "neighbour_id"),
         "_dist",
         k * oversample if corpus is not None else k,
     )
     if corpus is None:
         return shortlist
-    c = corpus.select(F.col("vec_id").alias("neighbour_id"), F.col("embedding").alias("c_vec"))
-    exact = (
-        shortlist.select("query_id", "neighbour_id")
-        .join(F.broadcast(q), "query_id")
-        .join(c, "neighbour_id")
-        .withColumn("_dist", V.sq_euclidean(F.col("q_vec"), F.col("c_vec")))
-    )
-    return _ranked(exact, "_dist", k)
+    return _ranked(_rerank(shortlist, q, corpus), "_dist", k)

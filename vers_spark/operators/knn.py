@@ -17,21 +17,28 @@ f64 kernels of :mod:`vers_spark.functions.vector`):
   query block is collected under the bounded-batch contract in one job
   (``validate.bounded_arrow``: ``QueryBatchTooLarge`` above the cap) and
   broadcast; the corpus streams through ``mapInPandas``. Per Arrow batch a
-  BLAS distance matrix shortlists candidates, the fold kernel's numpy twin
-  (``vector_np.fold_distances``, bit-equal) re-scores them in the same
-  kernel, and the batch emits its per-query top-k (partial); a ranking
-  window takes the global top-k (final). The corpus is scanned once, never
-  shuffled, never joined back; only O(batches × Q × k) candidate rows move.
-  This is the 100 TB path — at 1000 executors each scans its split, and the
-  shuffle is candidates only. It keeps the exchange and the window: its
-  candidate count grows with the corpus's splits, not with a plan.
+  BLAS distance matrix shortlists candidates, and the fold kernel's numpy
+  twin (``vector_np.fold_distances``, bit-equal) re-scores them in the same
+  kernel into the task's running per-query top-k (``vector_np.keep_topk``),
+  emitted once per task (partial); a ranking window takes the global top-k
+  (final). The corpus is scanned once, never shuffled, never joined back;
+  only O(tasks × Q × k) candidate rows move. This is the 100 TB path — at
+  1000 executors each scans its split, and the shuffle is candidates only.
 
-The index serving paths (IVF, LSH, HNSW) share this module's query collect
-(:func:`_query_block`) but finish on the driver instead: their kernels read
-only the partitions the driver planned and emit a partial top-k bounded by
-that plan, so the driver fetches it with ``toArrow()`` and merges it in
-numpy (:func:`_topk_frame`) — Spark's ``TakeOrderedAndProjectExec`` idea —
-returning a local frame whose ``collect()`` starts no job.
+Two finishes, chosen by what bounds the candidate rows:
+
+- **driver** (the planned paths: IVF, LSH, HNSW and blocked IVF×PQ). The
+  driver plans which partitions each query reads, so the kernels' partial
+  top-k is bounded by that plan; the driver fetches it with ``toArrow()``
+  and merges it in numpy (:func:`_arrow_topk`, :func:`_topk_frame`) —
+  Spark's ``TakeOrderedAndProjectExec`` idea — returning a local frame
+  whose ``collect()`` starts no job. They share the query collect
+  (:func:`_query_block`).
+- **window** (the whole-corpus paths: ``exact_knn_blocked`` and
+  ``indexes.pq.PQCodec.search``). Every split of the corpus emits up to
+  Q × k rows, so their candidate count grows with the corpus, not with a
+  plan: they keep the exchange and the ranking window
+  (:func:`_kernel_ranked`), which scale out where a driver merge would not.
 """
 
 from __future__ import annotations
@@ -114,6 +121,31 @@ def _topk_frame(spark, qid: np.ndarray, nid: np.ndarray, dist: np.ndarray, k: in
     )
 
 
+def _arrow_topk(spark, cands: DataFrame, k: int) -> DataFrame:
+    """The driver finish: fetch a kernel's ``(query_id, neighbour_id,
+    _dist)`` partial top-k with ``toArrow()`` (one job) and merge it with
+    :func:`_topk_frame`. A NaN distance that the pandas → Arrow conversion
+    masked as null reads back as NaN."""
+    table = cands.toArrow()
+    return _topk_frame(
+        spark,
+        table.column("query_id").to_numpy(),
+        table.column("neighbour_id").to_numpy(),
+        table.column("_dist").to_numpy(),
+        k,
+    )
+
+
+def _kernel_ranked(cands: DataFrame, k: int) -> DataFrame:
+    """The window finish of a whole-corpus kernel's ``(query_id,
+    neighbour_id, _dist)`` partial top-k. PySpark's pandas → Arrow
+    conversion masks a NaN in a ``mapInPandas`` output as null, and a null
+    ranks first; the kernels never emit a null distance, so it is read
+    back as NaN, which ranks after every number as in :func:`exact_knn`."""
+    restored = cands.withColumn("_dist", F.coalesce(F.col("_dist"), F.lit(float("nan"))))
+    return _ranked(restored, "_dist", k)
+
+
 def _ranked(joined: DataFrame, dist_col: str, k: int) -> DataFrame:
     w = W.partitionBy("query_id").orderBy(F.asc(dist_col), F.asc("neighbour_id"))
     return (
@@ -181,9 +213,10 @@ def exact_knn_blocked(
     ids must be integral.
 
     Per Arrow batch, BLAS shortlists ``_PREFILTER_MARGIN·k`` candidates per
-    query plus every row tying the shortlist's boundary distance; the fold
-    kernel (``vector_np.fold_distances``, bit-equal to the declarative one)
-    then recomputes their distances and the batch emits its top-k on the
+    query plus every row tying the shortlist's boundary distance
+    (``vector_np.topk_candidates``); the fold kernel
+    (``vector_np.fold_distances``, bit-equal to the declarative one) then
+    recomputes their distances into the task's running top-k on the
     (fold distance, id) key. The final top-k therefore reads fold values
     only, and the output equals :func:`exact_knn` unless BLAS misranks a
     true top-k neighbour more than (_PREFILTER_MARGIN−1)·k places deep
@@ -198,39 +231,26 @@ def exact_knn_blocked(
     bc = spark.sparkContext.broadcast((*block, metric, k))
 
     def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # per query row, the task's running top-k over every Arrow batch;
+        # emitted once, when the task's input ends
         ids, mat, m, kk = bc.value
+        best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for pdf in batches:
             if pdf.empty:
                 continue
             c_ids = pdf["neighbour_id"].to_numpy(dtype=np.int64)
             c_mat = np.array(pdf["c_vec"].tolist(), dtype=np.float64)
             d = VN.pairwise_distances(mat, c_mat, m)  # (Q, B)
-            take = min(_PREFILTER_MARGIN * kk, d.shape[1])
-            part = np.argpartition(d, take - 1, axis=1)[:, :take]
-            out_q, out_c, out_d = [], [], []
-            for qi in range(d.shape[0]):
-                cols = part[qi]
-                # re-admit every row tying the shortlist boundary: duplicate
-                # vectors tie exactly, and argpartition alone keeps an
-                # arbitrary one of them
-                cand = np.nonzero(d[qi] <= d[qi, cols].max())[0]
-                if len(cand) < take:  # NaN distances → keep the fixed width
-                    cand = cols
+            for qi in range(len(ids)):
+                # BLAS shortlists, the fold decides among the shortlist
+                cand = VN.topk_candidates(d[qi], _PREFILTER_MARGIN * kk)
                 exact = VN.fold_distances(mat[qi], c_mat[cand], m)
-                sel = np.lexsort((c_ids[cand], exact))[:kk]
-                out_q.append(np.full(len(sel), ids[qi]))
-                out_c.append(c_ids[cand][sel])
-                out_d.append(exact[sel])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbour_id": np.concatenate(out_c),
-                    "_dist": np.concatenate(out_d),
-                }
-            )
+                VN.keep_topk(best, qi, c_ids[cand], exact, kk)
+        if best:
+            yield pd.DataFrame(VN.topk_columns(best, ids))
 
     c = corpus.select(
         F.col(corpus_id).cast("long").alias("neighbour_id"), F.col(corpus_vec).alias("c_vec")
     )
     candidates = c.mapInPandas(partial_topk, "query_id long, neighbour_id long, _dist double")
-    return _ranked(candidates, "_dist", k)
+    return _kernel_ranked(candidates, k)
