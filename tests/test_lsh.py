@@ -32,63 +32,52 @@ def test_degenerate_single_leaf_equals_exact(spark, emb):
     assert gk == wk
 
 
-def test_assign_paths_pandas_equals_join_descent(forest, emb):
-    """r11: the single-pass broadcast-trie descent must be BIT-EXACT with
-    the per-level join descent it replaced — every (query, tree) lands on
-    the identical path, including corpus vectors (whose build-time routing
-    used the Spark fold; a near-boundary disagreement here would route a
-    query away from its own duplicate's leaf)."""
-    q = emb.limit(200)
-    fast = {
-        (r["query_id"], r["tree_id"]): r["path"]
-        for r in forest.assign_paths(q).collect()
+@pytest.fixture(scope="module")
+def dist_forest(emb):
+    """A forest from the level-synchronous distributed build, which routes
+    members with the Spark plane test (``_plane_side``)."""
+    return LSHForestIndex.build(
+        emb, num_trees=2, max_node_size=64, seed=13, backend="distributed"
+    )
+
+
+def test_assign_paths_routes_distributed_members_to_stored_paths(dist_forest):
+    """The broadcast-pack descent (numpy ``_descend``) must be BIT-EXACT with
+    the Spark plane fold: every member of a distributed-built forest, whose
+    paths that fold chose, is routed to its stored path in every tree (a
+    near-boundary disagreement would route a query away from its own
+    duplicate's leaf)."""
+    stored = {
+        (r["id"], r["tree_id"]): r["path"]
+        for r in dist_forest.leaves.select("id", "tree_id", "path").collect()
     }
-    slow = {
+    members = dist_forest.leaves.filter(F.col("tree_id") == 0).select(
+        F.col("id").alias("vec_id"), "embedding"
+    )
+    routed = {
         (r["query_id"], r["tree_id"]): r["path"]
-        for r in forest._assign_paths_joins(q).collect()
+        for r in dist_forest.assign_paths(members).collect()
     }
-    assert fast == slow
-    assert len(fast) == 200 * forest.params["num_trees"]
+    assert routed == stored
+    assert max(len(p) for p in stored.values()) >= 2
     # the trie pack is cached on the instance (one collect per index)
-    assert forest._planes_pack() is forest._planes_pack()
-
-
-def test_assign_paths_fallback_above_dense_cap(forest, emb):
-    """Above the dense-lookup cap assign_paths must fall back to the join
-    descent (any-depth safety) and produce the same paths."""
-    import vers_spark.indexes.lsh as L
-
-    q = emb.limit(50)
-    want = {
-        (r["query_id"], r["tree_id"]): r["path"]
-        for r in forest.assign_paths(q).collect()
-    }
-    idx = LSHForestIndex(forest.spark, forest.leaves, forest.hyperplanes, forest.params)
-    old = L.LSHForestIndex._PACK_MAX_BYTES
-    L.LSHForestIndex._PACK_MAX_BYTES = 0
-    try:
-        assert idx._planes_pack() is None
-        got = {
-            (r["query_id"], r["tree_id"]): r["path"]
-            for r in idx.assign_paths(q).collect()
-        }
-    finally:
-        L.LSHForestIndex._PACK_MAX_BYTES = old
-    assert got == want
+    assert dist_forest._planes_pack() is dist_forest._planes_pack()
 
 
 def test_multiprobe_pack_equals_full_end_to_end(forest, emb):
-    """search_multiprobe planned from the plane pack must return the
-    identical result rows as the declarative frontier plan (pack disabled
-    on the same instance)."""
-    from tests.test_lsh_backup import _declarative
+    """search_multiprobe planned from the plane pack returns the rows of the
+    full ranking — every leaf of every tree ordered by a local replay of the
+    probe order, the n_probes first read whole."""
+    from tests.test_lsh_backup import _assert_replay, _local_index, _multiprobe_tree_cands, _qrows
 
     q = emb.filter(F.col("vec_id") < 8)
-    a = forest.search_multiprobe(q, k=10, n_probes=3).collect()
-    with _declarative(forest):
-        b = forest.search_multiprobe(q, k=10, n_probes=3).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert len(a) > 0
+    _assert_replay(
+        forest.search_multiprobe(q, k=10, n_probes=3),
+        _qrows(q),
+        _local_index(forest),
+        10,
+        lambda planes, leaves, qv: _multiprobe_tree_cands(planes, leaves, qv, 3, "margin"),
+    )
 
 
 def test_leaf_size_invariant(forest):
@@ -273,19 +262,14 @@ def test_pack_broadcast_only_for_assign_paths(spark, emb, tmp_path, monkeypatch)
     assert "_pack_bc" not in idx.__dict__
 
 
-def test_distributed_build_invariants_and_search(spark, sf_dir):
+def test_distributed_build_invariants_and_search(emb, dist_forest):
     """The level-synchronous distributed build (the 100 TB path, normally
     auto-selected only above the local-build row cap): every leaf respects
     max_node_size, each tree's leaves exactly partition the deduped corpus,
     every member agrees with ALL its ancestor plane sides (the descent
     invariant), and search over the distributed-built forest returns k
     ranked results."""
-    from vers_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = LSHForestIndex.build(
-        emb, num_trees=2, max_node_size=64, seed=13, backend="distributed"
-    )
+    idx = dist_forest
     leaves = idx.leaves.collect()
     n_corpus = emb.dropDuplicates(["embedding"]).count()
     per_tree = {}
@@ -312,23 +296,6 @@ def test_distributed_build_invariants_and_search(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 5)
     got = idx.search(q, k=10).groupBy("query_id").count().collect()
     assert len(got) == 5 and all(r["count"] == 10 for r in got)
-
-
-def test_multiprobe_broadcast_gate_parity(forest, emb, monkeypatch):
-    """In the declarative plan (pack disabled), batches above
-    _BROADCAST_QUERY_CAP queries drop the broadcast hints on the probe-set
-    / query-vector joins (Spark's 8 GB / 512M-row broadcast hard limits
-    would bite a corpus-sized batch; ADVICE r12) — the plain-shuffle
-    fallback must return the planned path's rows."""
-    import vers_spark.indexes.lsh as L
-    from tests.test_lsh_backup import _declarative
-
-    q = emb.filter(F.col("vec_id") < 20)
-    want = sorted(map(tuple, forest.search_multiprobe(q, k=5, n_probes=2).collect()))
-    monkeypatch.setattr(L, "_BROADCAST_QUERY_CAP", 0)
-    with _declarative(forest):
-        got = sorted(map(tuple, forest.search_multiprobe(q, k=5, n_probes=2).collect()))
-    assert got == want and want
 
 
 def test_save_pp_len_width_dial(spark, emb, tmp_path):
@@ -383,69 +350,81 @@ def test_auto_pp_len_rule():
     assert _auto_pp_len(0, 8) == 4
 
 
-def test_saved_pack_loads_and_is_bit_equal_with_rebuilt(spark, forest, emb, tmp_path):
-    """save() persists the hyperplane pack (pack.npz) and load() wires it;
-    the file-loaded pack must be BIT-EQUAL with one rebuilt from the
-    coeff table — same per-tree keys, same W/B/M rows under the key
-    alignment, same leaf-key sets — and serving through it must match
-    the in-session index (cold-start fix, VERDICT r13 #3)."""
+def _pack_equal(a, b):
+    """Two packs hold the same trie: per tree the same sorted node keys, the
+    same W/B/M rows under the key alignment (collect order may differ),
+    the same leaf keys and sizes — bit for bit."""
+    import numpy as np
+
+    (atk, atr, aW, aB, aM, alk), (btk, btr, bW, bB, bM, blk) = a.trie, b.trie
+    assert (a.depth, a.trees) == (b.depth, b.trees)
+    for t in range(a.trees):
+        assert np.array_equal(atk[t], btk[t])
+        assert np.array_equal(aW[atr[t]], bW[btr[t]])
+        assert np.array_equal(aB[atr[t]], bB[btr[t]])
+        assert np.array_equal(aM[atr[t]], bM[btr[t]])
+        assert np.array_equal(alk[t], blk[t])
+        assert np.array_equal(a.leaf_sizes[t], b.leaf_sizes[t])
+
+
+def test_saved_pack_loads_and_is_bit_equal_with_rebuilt(spark, forest, emb, tmp_path, monkeypatch):
+    """save() writes the plane pack as one .npy per array in pack/ and load()
+    maps it: the loaded W is a memory map. A pack written in several Arrow
+    slices (the slice budget lowered below one tree's coeffs) is BIT-EQUAL
+    with the one-slice pack, and serving through either matches the
+    in-session index."""
     import os
 
     import numpy as np
 
+    import vers_spark.indexes.lsh as L
+
     path = str(tmp_path / "lsh_pack")
     forest.save(path)
-    assert os.path.exists(f"{path}/pack.npz")
+    assert sorted(os.listdir(f"{path}/pack")) == sorted(f"{n}.npy" for n in L._PACK_ARRAYS)
     loaded = LSHForestIndex.load(spark, path)
-    assert loaded._pack_path == f"{path}/pack.npz"
     lp = loaded._planes_pack()
-    assert lp is not None
-    # rebuilt twin: same leaves/planes, no pack file wired
-    rebuilt = LSHForestIndex(
-        spark, loaded.leaves, loaded.hyperplanes, dict(loaded.params)
-    )
+    W = lp.trie[2]
+    assert type(W) is np.ndarray and isinstance(W.base, np.memmap)
+    # rebuilt twin: same leaves/planes, no pack files wired, the writer
+    # forced to collect one tree per slice
+    rebuilt = LSHForestIndex(spark, loaded.leaves, loaded.hyperplanes, dict(loaded.params))
+    collects = []
+    frame = type(loaded.hyperplanes)
+    to_arrow = frame.toArrow
+    monkeypatch.setattr(L, "_PACK_SLICE_BYTES", 1)
+    monkeypatch.setattr(frame, "toArrow", lambda df: collects.append(1) or to_arrow(df))
     rp = rebuilt._planes_pack()
-    (ltk, ltr, lW, lB, lM, llk), ldepth, lT = lp.trie, lp.depth, lp.trees
-    (rtk, rtr, rW, rB, rM, rlk), rdepth, rT = rp.trie, rp.depth, rp.trees
-    assert (ldepth, lT) == (rdepth, rT)
-    for t in range(lT):
-        assert np.array_equal(ltk[t], rtk[t])  # sorted node keys per tree
-        # row payloads aligned by key (collect order may differ)
-        assert np.array_equal(lW[ltr[t]], rW[rtr[t]])
-        assert np.array_equal(lB[ltr[t]], rB[rtr[t]])
-        assert np.array_equal(lM[ltr[t]], rM[rtr[t]])
-        assert np.array_equal(llk[t], rlk[t])
+    assert len(collects) == forest.params["num_trees"]
+    _pack_equal(lp, rp)
     q = emb.filter(F.col("vec_id") < 5)
-    want = sorted(
-        map(tuple, forest.search_multiprobe(q, k=5, n_probes=2).collect())
-    )
-    got = sorted(
-        map(tuple, loaded.search_multiprobe(q, k=5, n_probes=2).collect())
-    )
-    assert got == want
+    want = sorted(map(tuple, forest.search_multiprobe(q, k=5, n_probes=2).collect()))
+    assert sorted(map(tuple, loaded.search_multiprobe(q, k=5, n_probes=2).collect())) == want
+    assert sorted(map(tuple, rebuilt.search_multiprobe(q, k=5, n_probes=2).collect())) == want
 
 
 def test_pack_without_leaf_sizes_is_recollected(spark, forest, emb, tmp_path, monkeypatch):
-    """A pack.npz without ``lsizes`` (saved before leaf sizes rode the pack)
-    is treated as absent: the loaded index re-collects its pack from the
-    stores — leaf sizes equal to the leaf table's — and serves the same
-    rows as the in-session index."""
+    """An older store whose pack is a pack.npz (here one saved before leaf
+    sizes rode the pack) loads without it: the writer rebuilds the pack
+    from the store's tables on first use — leaf sizes equal to the leaf
+    table's — and the index serves the same rows as the in-session one."""
+    import shutil
+
     import numpy as np
+
+    import vers_spark.indexes.lsh as L
 
     path = str(tmp_path / "lsh_old_pack")
     forest.save(path)
-    with np.load(f"{path}/pack.npz") as z:
-        assert "lsizes" in z.files
-        old = {k: z[k] for k in z.files if k != "lsizes"}
+    old = {n: np.load(f"{path}/pack/{n}.npy") for n in L._PACK_ARRAYS if n != "lsizes"}
+    shutil.rmtree(f"{path}/pack")
     np.savez(f"{path}/pack.npz", **old)
     loaded = LSHForestIndex.load(spark, path)
     calls = []
-    collect = LSHForestIndex._pack_arrays
-    monkeypatch.setattr(
-        LSHForestIndex, "_pack_arrays", lambda self: calls.append(1) or collect(self)
-    )
+    write = L._write_pack
+    monkeypatch.setattr(L, "_write_pack", lambda *a: calls.append(1) or write(*a))
     pack = loaded._planes_pack()
-    assert pack is not None and calls == [1]
+    assert calls == [1]
     want = {
         (r["tree_id"], r["path"]): r["count"]
         for r in forest.leaves.groupBy("tree_id", "path").count().collect()
@@ -459,6 +438,107 @@ def test_pack_without_leaf_sizes_is_recollected(spark, forest, emb, tmp_path, mo
     q = emb.filter(F.col("vec_id") < 5)
     a = sorted(map(tuple, loaded.search(q, k=5).collect()))
     assert a == sorted(map(tuple, forest.search(q, k=5).collect())) and a
+    # a re-save writes the pack files and drops the old pack.npz
+    loaded.save(str(tmp_path / "resaved"))
+    assert L._has_pack(str(tmp_path / "resaved" / "pack"))
+
+
+def test_save_over_own_store_keeps_mapped_pack(spark, forest, emb, tmp_path):
+    """Pack files are published by os.replace, never rewritten in place: a
+    loaded instance whose pack is mapped keeps serving identical rows after
+    the store is saved over its own path (an in-place write would truncate
+    the mapped file under it), and the rewritten store loads and serves
+    the same rows."""
+    path = str(tmp_path / "own")
+    forest.save(path)
+    idx = LSHForestIndex.load(spark, path)
+    q = emb.filter(F.col("vec_id") < 5)
+    before = sorted(map(tuple, idx.search(q, k=5).collect()))
+    W = idx._planes_pack().trie[2]
+    snapshot = W.copy()
+    # the tables are read from the files the save replaces, so pin them
+    # first (as an in-place migrate does); the pack stays the mapped one
+    idx.leaves = idx.leaves.localCheckpoint(eager=True)
+    idx.hyperplanes = idx.hyperplanes.localCheckpoint(eager=True)
+    idx.save(path)
+    assert (W == snapshot).all()
+    assert sorted(map(tuple, idx.search(q, k=5).collect())) == before
+    again = LSHForestIndex.load(spark, path)
+    assert sorted(map(tuple, again.search(q, k=5).collect())) == before
+
+
+def test_store_with_lvl_partitioned_planes_loads_and_serves(spark, forest, emb, tmp_path):
+    """save() writes the hyperplanes as one unpartitioned table. A store
+    saved the old way, hyperplanes partitioned by _lvl, still loads: its
+    pack is rebuilt from those planes (the writer selects columns by name)
+    and it serves the in-session rows; add() and a re-save drop the column."""
+    import glob
+    import shutil
+
+    path = str(tmp_path / "lvl")
+    forest.save(path)
+    assert not glob.glob(f"{path}/hyperplanes/_lvl=*")
+    old = str(tmp_path / "lvl_old")
+    shutil.copytree(path, old)
+    shutil.rmtree(f"{old}/hyperplanes")
+    shutil.rmtree(f"{old}/pack")
+    spark.read.parquet(f"{path}/hyperplanes").withColumn(
+        "_lvl", F.length("path").cast("int")
+    ).write.partitionBy("_lvl").parquet(f"{old}/hyperplanes")
+    loaded = LSHForestIndex.load(spark, old)
+    assert "_lvl" in loaded.hyperplanes.columns
+    q = emb.filter(F.col("vec_id") < 5)
+    want = sorted(map(tuple, forest.search(q, k=5).collect()))
+    assert sorted(map(tuple, loaded.search(q, k=5).collect())) == want
+    assert sorted(
+        map(tuple, loaded.search_multiprobe(q, k=5, n_probes=2).collect())
+    ) == sorted(map(tuple, forest.search_multiprobe(q, k=5, n_probes=2).collect()))
+    assert "_lvl" not in loaded.add(emb.filter(F.col("vec_id") < 3)).hyperplanes.columns
+    loaded.save(str(tmp_path / "lvl_resaved"))
+    resaved = LSHForestIndex.load(spark, str(tmp_path / "lvl_resaved"))
+    assert "_lvl" not in resaved.hyperplanes.columns
+    assert sorted(map(tuple, resaved.search(q, k=5).collect())) == want
+
+
+def test_build_and_load_bound_max_depth(spark, emb, forest, tmp_path):
+    """max_depth is recorded in params and the manifest; a build outside
+    [1, 62] (a node key is an int64) is refused, and so is loading a
+    manifest deeper than 62 levels."""
+    import json
+
+    assert forest.params["max_depth"] == 24
+    for bad in (0, 63):
+        with pytest.raises(ValueError, match="max_depth"):
+            LSHForestIndex.build(emb, num_trees=1, max_depth=bad)
+    path = str(tmp_path / "deep")
+    forest.save(path)
+    with open(f"{path}/manifest.json") as f:
+        m = json.load(f)
+    assert m["max_depth"] == 24
+    m["depth"] = 63
+    with open(f"{path}/manifest.json", "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="depth 63"):
+        LSHForestIndex.load(spark, path)
+
+
+def test_add_keeps_build_max_depth(spark, emb):
+    """add()'s overflow split honours the build's max_depth: with
+    max_depth=2 no leaf or plane path grows past 2 bits, however far the
+    inserts overflow max_node_size."""
+    base = emb.filter(F.col("vec_id") < 200)
+    extra = emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 400))
+    idx = LSHForestIndex.build(base, num_trees=2, max_node_size=16, seed=3, max_depth=2)
+    assert idx.params["max_depth"] == 2
+    grown = idx.add(extra)
+    longest = max(
+        grown.leaves.agg(F.max(F.length("path"))).collect()[0][0],
+        grown.hyperplanes.agg(F.max(F.length("path"))).collect()[0][0],
+    )
+    assert longest <= 2
+    assert grown.params["depth"] <= 2
+    hits = grown.search(extra.limit(3), k=1).collect()
+    assert all(r["neighbour_id"] == r["query_id"] for r in hits)
 
 
 def test_migrate_rewrites_v2_store_in_place(spark, forest, emb, tmp_path):

@@ -1,11 +1,12 @@
 """Backup-branch fill rule (lsh.rs:203-215) and multiprobe: bit-parity of
 the planned search with a local Python replay of the reference's budgeted
-recursion (and of the multiprobe visit) over the SAME planes/leaves, and
-row parity between the planned and the declarative plans."""
+recursion (and of the multiprobe visit) over the SAME planes/leaves — in
+session and file-loaded, with ``allowed_ids``, without backup fill, on the
+depth-0 forest, in margin order and on a many-leaf trie."""
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,27 +28,34 @@ def small_forest(emb):
     return LSHForestIndex.build(emb, num_trees=2, max_node_size=8, seed=7)
 
 
-def _reference_tree_result(planes, leaves, q, n, path=""):
+def _nearest(members, q, n):
+    """The ``n`` nearest of a leaf's (id, vector) members, ties by id."""
+    members = sorted(
+        members, key=lambda m: (sum((a - b) ** 2 for a, b in zip(m[1], q)), m[0])
+    )
+    return [m[0] for m in members[:n]]
+
+
+def _reference_tree_result(planes, leaves, q, n, path="", backup_fill=True):
     """Replay of lsh.rs:163-215: budgeted DFS, main branch first; a leaf
     yields min(len, budget) nearest members (ties by id, matching the
-    engine's deterministic tie-break). Returns list of candidate ids."""
+    engine's deterministic tie-break). Without ``backup_fill`` only the
+    main branch is visited. Returns list of candidate ids."""
     if path in leaves:
-        members = leaves[path]
-        members = sorted(
-            members, key=lambda m: (sum((a - b) ** 2 for a, b in zip(m[1], q)), m[0])
-        )
-        return [m[0] for m in members[:n]]
+        return _nearest(leaves[path], q, n)
     coeffs, const = planes[path]
     side = "1" if sum(c * x for c, x in zip(coeffs, q)) + const >= 0 else "0"
     backup = "0" if side == "1" else "1"
-    got = _reference_tree_result(planes, leaves, q, n, path + side)
-    if len(got) < n:
+    got = _reference_tree_result(planes, leaves, q, n, path + side, backup_fill)
+    if backup_fill and len(got) < n:
         got += _reference_tree_result(planes, leaves, q, n - len(got), path + backup)
     return got
 
 
-def _local_index(forest):
-    """Collect the forest into per-tree dicts for the local replay."""
+def _local_index(forest, allowed=None):
+    """Collect the forest into per-tree (planes, leaves) dicts for the local
+    replay. With ``allowed`` (a set of ids) each leaf keeps only its allowed
+    members; a leaf left with none stays, empty."""
     trees = {}
     for r in forest.hyperplanes.collect():
         trees.setdefault(r["tree_id"], ({}, {}))[0][r["path"]] = (
@@ -55,34 +63,47 @@ def _local_index(forest):
             float(r["constant"]),
         )
     for r in forest.leaves.collect():
-        t = trees.setdefault(r["tree_id"], ({}, {}))
-        t[1].setdefault(r["path"], []).append(
-            (int(r["id"]), [float(x) for x in r["embedding"]])
-        )
+        members = trees.setdefault(r["tree_id"], ({}, {}))[1].setdefault(r["path"], [])
+        if allowed is None or int(r["id"]) in allowed:
+            members.append((int(r["id"]), [float(x) for x in r["embedding"]]))
     return trees
+
+
+def _qrows(queries):
+    return [
+        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
+        for r in queries.select("vec_id", "embedding").collect()
+    ]
+
+
+def _assert_replay(got_df, qrows, trees, k, tree_cands, label=""):
+    """Each query's ranked neighbour ids in ``got_df`` equal the k nearest
+    of the union of ``tree_cands(planes, leaves, q)`` over the trees."""
+    vecs = {i: v for _, leaves in trees.values() for ms in leaves.values() for i, v in ms}
+    got = got_df.collect()
+    for qid, qv in qrows:
+        cand = set()
+        for planes, leaves in trees.values():
+            cand.update(tree_cands(planes, leaves, qv))
+        want = sorted(
+            cand, key=lambda i: (sum((a - b) ** 2 for a, b in zip(vecs[i], qv)), i)
+        )[:k]
+        mine = [r["neighbour_id"] for r in sorted(
+            (r for r in got if r["query_id"] == qid), key=lambda r: r["rank"]
+        )]
+        assert mine == want, f"{label} query {qid}: {mine} != {want}"
 
 
 def test_backup_fill_parity_with_reference_recursion(spark, emb, small_forest):
     k = 10
     queries = emb.filter(F.col("vec_id") < 15)
-    got = small_forest.search(queries, k=k).collect()
-
-    trees = _local_index(small_forest)
-    all_vecs = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in emb.collect()
-    }
-    for qrow in queries.select("vec_id", "embedding").collect():
-        qid, qv = int(qrow["vec_id"]), [float(x) for x in qrow["embedding"]]
-        cand = set()
-        for planes, leaves in trees.values():
-            cand.update(_reference_tree_result(planes, leaves, qv, k))
-        ranked = sorted(
-            cand, key=lambda i: (sum((a - b) ** 2 for a, b in zip(all_vecs[i], qv)), i)
-        )[:k]
-        mine = [r["neighbour_id"] for r in sorted(
-            (r for r in got if r["query_id"] == qid), key=lambda r: r["rank"]
-        )]
-        assert mine == ranked, f"query {qid}: {mine} != {ranked}"
+    _assert_replay(
+        small_forest.search(queries, k=k),
+        _qrows(queries),
+        _local_index(small_forest),
+        k,
+        lambda planes, leaves, qv: _reference_tree_result(planes, leaves, qv, k),
+    )
 
 
 def test_underfilled_pairs_reach_k(spark, emb, small_forest):
@@ -98,34 +119,58 @@ def test_underfilled_pairs_reach_k(spark, emb, small_forest):
     assert n_without < 10
 
 
-def _leaf_visit_keys(planes, path, q):
+def _leaf_visit_keys(planes, path, q, dots):
     """(margin cost, deviation string) of one leaf for a query — the two
-    probe orders' sort keys, recomputed independently."""
+    probe orders' sort keys, recomputed independently. ``dots`` caches each
+    inner node's (plane value, plane norm) for ``q``."""
     cost, dev_bits = 0.0, []
     for lvl in range(len(path)):
-        coeffs, const = planes[path[:lvl]]
-        d = sum(c * x for c, x in zip(coeffs, q)) + const
+        node = path[:lvl]
+        if node not in dots:
+            coeffs, const = planes[node]
+            dots[node] = (
+                sum(c * x for c, x in zip(coeffs, q)) + const,
+                math.sqrt(sum(c * c for c in coeffs)),
+            )
+        d, norm = dots[node]
         side = "1" if d >= 0 else "0"
         if path[lvl] != side:
-            cost += abs(d) / sum(c * c for c in coeffs) ** 0.5
+            cost += abs(d) / norm
             dev_bits.append("1")
         else:
             dev_bits.append("0")
     return cost, "".join(dev_bits)
 
 
-def _multiprobe_tree_cands(planes, leaves, q, n_probes, probe_mode):
-    """Local replay of search_multiprobe's per-tree visit: the n_probes
-    best leaves by (margin cost, deviation string) — by deviation string
-    alone in dfs mode — ALL their members."""
-    scored = sorted(
-        ((*_leaf_visit_keys(planes, path, q), path) for path in leaves),
+def _leaf_order(planes, leaves, q, probe_mode):
+    """Every leaf of one tree in probe order: by (margin cost, deviation
+    string), or by deviation string alone in dfs mode."""
+    dots: dict = {}
+    keyed = sorted(
+        ((*_leaf_visit_keys(planes, path, q, dots), path) for path in leaves),
         key=(lambda s: (s[0], s[1])) if probe_mode == "margin" else (lambda s: s[1]),
     )
-    out = []
-    for _, _, path in scored[:n_probes]:
-        out += [m[0] for m in leaves[path]]
-    return out
+    return [path for _, _, path in keyed]
+
+
+def _multiprobe_tree_cands(planes, leaves, q, n_probes, probe_mode):
+    """Local replay of search_multiprobe's per-tree visit: the n_probes
+    best leaves in probe order, ALL their members."""
+    paths = _leaf_order(planes, leaves, q, probe_mode)[:n_probes]
+    return [m[0] for path in paths for m in leaves[path]]
+
+
+def _ordered_fill_tree_result(planes, leaves, q, n, probe_mode):
+    """The budgeted visit with the leaves taken in probe order: each leaf
+    yields its min(len, remaining budget) nearest members until n are
+    taken. In dfs order this is the recursion of _reference_tree_result;
+    in margin order it is search's margin-ordered backup fill."""
+    got: list = []
+    for path in _leaf_order(planes, leaves, q, probe_mode):
+        if len(got) >= n:
+            break
+        got += _nearest(leaves[path], q, n - len(got))
+    return got
 
 
 def test_multiprobe_margin_parity_with_local_replay(spark, emb, small_forest):
@@ -136,48 +181,87 @@ def test_multiprobe_margin_parity_with_local_replay(spark, emb, small_forest):
     k = 10
     queries = emb.filter(F.col("vec_id") < 15)
     trees = _local_index(small_forest)
-    all_vecs = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in emb.collect()
-    }
-    qrows = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in queries.select("vec_id", "embedding").collect()
-    ]
+    qrows = _qrows(queries)
     for mode in ("margin", "dfs"):
         for n_probes in (1, 2, 4):
-            got = small_forest.search_multiprobe(
-                queries, k=k, n_probes=n_probes, probe_mode=mode
-            ).collect()
-            for qid, qv in qrows:
-                cand = set()
-                for planes, leaves in trees.values():
-                    cand.update(_multiprobe_tree_cands(planes, leaves, qv, n_probes, mode))
-                ranked = sorted(
-                    cand,
-                    key=lambda i: (sum((a - b) ** 2 for a, b in zip(all_vecs[i], qv)), i),
-                )[:k]
-                mine = [r["neighbour_id"] for r in sorted(
-                    (r for r in got if r["query_id"] == qid), key=lambda r: r["rank"]
-                )]
-                assert mine == ranked, f"{mode} P={n_probes} query {qid}: {mine} != {ranked}"
+            _assert_replay(
+                small_forest.search_multiprobe(
+                    queries, k=k, n_probes=n_probes, probe_mode=mode
+                ),
+                qrows,
+                trees,
+                k,
+                lambda planes, leaves, qv: _multiprobe_tree_cands(
+                    planes, leaves, qv, n_probes, mode
+                ),
+                f"{mode} P={n_probes}",
+            )
 
 
-def test_multiprobe_frontier_parity_with_full(spark, emb, small_forest):
-    """The branch-and-bound frontier descent (the declarative plan, which
-    serves tries the plane pack cannot hold) must probe the SAME leaves as
-    the planned walk of the pack — identical (neighbour, distance, rank)
-    rows across probe modes and probe counts, with the pack disabled on
-    the same instance. The beam cap is sized so the bound, not the cap,
-    does the pruning on any non-adversarial corpus; this pins it."""
+def test_search_parity_with_replay_across_inputs(spark, emb, small_forest, tmp_path):
+    """The planned search equals the local replay on every input shape the
+    planner treats apart: a FILE-LOADED store (literal _pp pruning plus the
+    planned-pair filter, the mapped pack), ``allowed_ids`` (the replay runs
+    over the filtered leaves: an emptied leaf neither contributes nor ends
+    the walk), ``backup_fill=False`` (main leaves only), margin-order fill,
+    and depth-0 forests, which pack as an empty trie whose only leaf is the
+    root — in session and file-loaded."""
+    k = 10
     queries = emb.filter(F.col("vec_id") < 15)
-    for mode in ("margin", "dfs"):
-        for n_probes in (1, 2, 4):
-            kw = dict(k=10, n_probes=n_probes, probe_mode=mode)
-            planned = _rows(small_forest.search_multiprobe(queries, **kw))
-            with _declarative(small_forest):
-                frontier = _rows(small_forest.search_multiprobe(queries, **kw))
-            assert frontier == planned, (mode, n_probes)
-            assert planned, (mode, n_probes)
+    qrows = _qrows(queries)
+    keep = emb.filter(F.col("label") % 3 == 0).select("vec_id")
+    keep_ids = {int(r["vec_id"]) for r in keep.collect()}
+    small_forest.save(str(tmp_path / "small"))
+    loaded = LSHForestIndex.load(spark, str(tmp_path / "small"))
+    deg = LSHForestIndex.build(emb, num_trees=1, max_node_size=10**9)
+    assert deg.params["depth"] == 0
+    deg.save(str(tmp_path / "deg"))
+    deg_loaded = LSHForestIndex.load(spark, str(tmp_path / "deg"))
+    trees, filtered = _local_index(small_forest), _local_index(small_forest, keep_ids)
+    deg_trees, deg_filtered = _local_index(deg), _local_index(deg, keep_ids)
+
+    def dfs(planes, leaves, qv):
+        return _reference_tree_result(planes, leaves, qv, k)
+
+    def main_only(planes, leaves, qv):
+        return _reference_tree_result(planes, leaves, qv, k, backup_fill=False)
+
+    def margin(planes, leaves, qv):
+        return _ordered_fill_tree_result(planes, leaves, qv, k, "margin")
+
+    def probes2(planes, leaves, qv):
+        return _multiprobe_tree_cands(planes, leaves, qv, 2, "margin")
+
+    cases = [
+        ("file-loaded", lambda: loaded.search(queries, k=k), trees, dfs),
+        ("allowed_ids", lambda: small_forest.search(queries, k=k, allowed_ids=keep), filtered, dfs),
+        (
+            "file-loaded allowed_ids margin",
+            lambda: loaded.search(queries, k=k, allowed_ids=keep, probe_mode="margin"),
+            filtered,
+            margin,
+        ),
+        ("no backup fill", lambda: loaded.search(queries, k=k, backup_fill=False), trees, main_only),
+        (
+            "no backup fill allowed_ids",
+            lambda: small_forest.search(queries, k=k, backup_fill=False, allowed_ids=keep),
+            filtered,
+            main_only,
+        ),
+        ("margin fill", lambda: small_forest.search(queries, k=k, probe_mode="margin"), trees, margin),
+        ("file-loaded multiprobe", lambda: loaded.search_multiprobe(queries, k=k), trees, probes2),
+        ("depth 0", lambda: deg.search(queries, k=k), deg_trees, dfs),
+        (
+            "depth 0 file-loaded allowed_ids",
+            lambda: deg_loaded.search(queries, k=k, allowed_ids=keep),
+            deg_filtered,
+            dfs,
+        ),
+    ]
+    for label, call, tr, tree_cands in cases:
+        got = call()
+        assert got.count() > 0, label
+        _assert_replay(got, qrows, tr, k, tree_cands, label)
 
 
 def test_multiprobe_recall_gains(spark, emb):
@@ -228,134 +312,48 @@ def test_degenerate_oracle_unchanged_by_fill(spark, emb):
     assert gk == wk
 
 
-@contextmanager
-def _declarative(idx):
-    """Serve ``idx`` through the declarative plans: a cached None pack makes
-    _planes_pack() return None on this instance, so search() and
-    search_multiprobe() take _search_declarative (join descent, frontier
-    leaf walk, declarative fill)."""
-    saved = idx.__dict__.pop("_planes_pack_cache", None)
-    idx._planes_pack_cache = None
-    try:
-        yield idx
-    finally:
-        del idx._planes_pack_cache
-        if saved is not None:
-            idx._planes_pack_cache = saved
-
-
-def _rows(df):
-    return sorted(map(tuple, df.collect()))
-
-
-def test_backup_fill_frontier_parity(spark, emb, small_forest):
-    """The planned search (driver walk of the plane pack) must return the
-    IDENTICAL rows as the declarative plan, whose fill enumerates leaves
-    with the frontier descent at n_probes=k (exact for budgeted admission:
-    every admitted leaf holds >= 1 member, so the admitted set lives
-    within the k best-ordered leaves) — in both probe orders, and with
-    ``allowed_ids``, where the planner's sizes come from the filtered
-    leaves and an empty leaf neither contributes nor ends the walk."""
-    queries = emb.filter(F.col("vec_id") < 15)
-    keep = emb.filter(F.col("label") % 3 == 0).select("vec_id")
-    for allowed in (None, keep):
-        for mode in ("dfs", "margin"):
-            kw = dict(k=10, backup_fill=True, probe_mode=mode, allowed_ids=allowed)
-            planned = _rows(small_forest.search(queries, **kw))
-            with _declarative(small_forest):
-                frontier = _rows(small_forest.search(queries, **kw))
-            assert frontier == planned, (mode, allowed is not None)
-            assert len({r[0] for r in planned}) == 15
-
-
-def test_planned_search_equals_declarative_plan(spark, emb, small_forest, tmp_path):
-    """Beyond the in-session forced-fill forest above: the planned search
-    equals the declarative plan (pack disabled on the same instance) —
-    rows and distance bits — on a FILE-LOADED store (literal _pp pruning
-    plus the planned-pair filter), without backup fill, and on depth-0
-    forests, which pack as an empty trie whose only leaf is the root."""
-    queries = emb.filter(F.col("vec_id") < 15)
-    keep = emb.filter(F.col("label") % 3 == 0).select("vec_id")
-    small_forest.save(str(tmp_path / "small"))
-    loaded = LSHForestIndex.load(spark, str(tmp_path / "small"))
-    deg = LSHForestIndex.build(emb, num_trees=1, max_node_size=10**9)
-    assert deg.params["depth"] == 0 and deg._planes_pack() is not None
-    deg.save(str(tmp_path / "deg"))
-    deg_loaded = LSHForestIndex.load(spark, str(tmp_path / "deg"))
-    cases = [
-        (loaded, dict(probe_mode="dfs")),
-        (loaded, dict(probe_mode="margin", allowed_ids=keep)),
-        (loaded, dict(backup_fill=False)),
-        (small_forest, dict(backup_fill=False, allowed_ids=keep)),
-        (deg, dict()),
-        (deg_loaded, dict(allowed_ids=keep)),
-    ]
-    for idx, kw in cases:
-        planned = _rows(idx.search(queries, k=10, **kw))
-        with _declarative(idx):
-            want = _rows(idx.search(queries, k=10, **kw))
-        assert planned == want, kw
-        assert planned, kw
-
-
 def test_multiprobe_parity_above_auto_threshold(spark, sf_oracle_dir):
-    """Planned-vs-frontier multiprobe parity on a forest with many leaves
-    (9 trees × max_node_size=1 over the sf0.01 embeddings → ~4.5k
-    single-member leaves, deep tries with many near-tie margins), margin
-    mode included: both walks accumulate margin cost as the same
+    """Planned multiprobe and margin-ordered fill equal the local replay on
+    a forest with many leaves (3 trees × max_node_size=1 over the sf0.01
+    embeddings → ~1.5k single-member leaves, deep tries with many near-tie
+    margins): the planner and the replay accumulate margin cost as the same
     ascending-level f64 left fold, so summation order cannot flip near-tie
     orderings between them."""
+    k = 10
     emb10 = load_table(spark, sf_oracle_dir, "embeddings")
-    idx = LSHForestIndex.build(emb10, num_trees=9, max_node_size=1, seed=11)
-    assert idx.leaves.select("tree_id", "path").distinct().count() >= 4096
+    idx = LSHForestIndex.build(emb10, num_trees=3, max_node_size=1, seed=11)
+    assert idx.leaves.select("tree_id", "path").distinct().count() >= 1400
     queries = emb10.filter(F.col("vec_id") < 8)
+    qrows = _qrows(queries)
+    trees = _local_index(idx)
     for mode in ("margin", "dfs"):
         for n_probes in (2, 8):
-            kw = dict(k=10, n_probes=n_probes, probe_mode=mode)
-            planned = _rows(idx.search_multiprobe(queries, **kw))
-            with _declarative(idx):
-                frontier = _rows(idx.search_multiprobe(queries, **kw))
-            assert frontier == planned, (mode, n_probes)
-            assert len(planned) > 0, (mode, n_probes)
-
-
-def test_declarative_fallback_evaluates_queries_once(spark, emb, small_forest):
-    """Without the pack, search() and search_multiprobe() serve the batch
-    they collected under the bounded-batch contract: an accumulator in the
-    query frame's lineage counts each query row once per call."""
-    seen = spark.sparkContext.accumulator(0)
-
-    def tap(batches):
-        for pdf in batches:
-            seen.add(len(pdf))
-            yield pdf
-
-    base = emb.filter(F.col("vec_id") < 15).select("vec_id", "embedding")
-    queries = base.mapInPandas(tap, base.schema)
-    calls = {
-        "search": lambda: small_forest.search(queries, k=10, backup_fill=False),
-        "search_multiprobe": lambda: small_forest.search_multiprobe(queries, k=10, n_probes=1),
-    }
-    for name, call in calls.items():
-        before = seen.value
-        with _declarative(small_forest):
-            rows = call().collect()
-        assert len({r["query_id"] for r in rows}) == 15, name
-        assert seen.value - before == 15, name
+            _assert_replay(
+                idx.search_multiprobe(queries, k=k, n_probes=n_probes, probe_mode=mode),
+                qrows,
+                trees,
+                k,
+                lambda planes, leaves, qv: _multiprobe_tree_cands(
+                    planes, leaves, qv, n_probes, mode
+                ),
+                f"{mode} P={n_probes}",
+            )
+    _assert_replay(
+        idx.search(queries, k=k, probe_mode="margin"),
+        qrows,
+        trees,
+        k,
+        lambda planes, leaves, qv: _ordered_fill_tree_result(planes, leaves, qv, k, "margin"),
+        "margin fill",
+    )
 
 
 def test_frontier_probe_mode_validated(spark, emb, small_forest):
-    """A typo'd probe_mode must raise in the planned multiprobe and in the
-    declarative frontier walk (ADVICE r7: the frontier silently fell into
-    the margin branch)."""
+    """A typo'd probe_mode must raise in search and in search_multiprobe
+    (ADVICE r7: a walk silently fell into the margin branch)."""
     queries = emb.filter(F.col("vec_id") < 3)
-    pairs = small_forest.assign_paths(queries).select(
-        "query_id", "tree_id", "q_vec"
-    )
     with pytest.raises(ValueError, match="probe_mode"):
-        small_forest._leaf_order_frontier(
-            pairs, small_forest.leaves, "margins", n_probes=2
-        )
+        small_forest.search(queries, k=5, probe_mode="margins")
     with pytest.raises(ValueError, match="probe_mode"):
         small_forest.search_multiprobe(queries, k=5, probe_mode="margins")
 

@@ -232,7 +232,7 @@ def _probes():
         "doc_schema_evolution": _q("doc_schema_evolution"),
         "stream_markov_merge": _q("stream_markov_merge"),
         "mm_jpeg_pipeline": _q("mm_jpeg_pipeline"),
-        # round-7: LSH multiprobe with the auto/frontier leaf descent — the
+        # LSH multiprobe planned on the driver from the plane pack — the
         # x10 factor should track BUILD growth (~linear), not leaf-ranking
         # growth (the pre-r7 every-leaf serving term)
         "lsh_search_multiprobe": _q("lsh_search_multiprobe"),

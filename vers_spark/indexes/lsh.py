@@ -18,8 +18,9 @@ broadcast them back, append one bit to each row's path. Rows are deduplicated
 by vector value first (`lsh.rs:113-130`).
 
 Search (`lsh.rs:163-216`) is planned on the driver from the PLANE PACK — the
-hyperplane trie and the leaf catalog (keys and sizes) as numpy arrays,
-collected once per index (or read from the saved ``pack.npz``). ``search``
+hyperplane trie and the leaf catalog (keys and sizes) as numpy arrays, one
+memory-mapped ``.npy`` file each, written once per index (a saved store keeps
+them in ``pack/``). ``search``
 gives each query its main leaf per tree by a vectorized descent, and a
 (query, tree) pair whose main leaf holds fewer than k members runs the
 reference's backup-branch visit (`lsh.rs:203-215`) as a best-first walk of
@@ -32,9 +33,9 @@ Either plan is then read ONCE: a literal partition filter on a saved store,
 one Arrow pass folding each leaf against its queries (exact squared
 Euclidean, `lsh.rs:271-281`) and keeping each planned (query, leaf)'s
 top-cap rows, then the per-leaf caps, the cross-tree dedup and the top-k on
-the driver, in numpy. Tries the pack cannot hold keep the declarative plan
-(per-level join descent, branch-and-bound frontier leaf walk), which
-returns the same rows.
+the driver, in numpy. The pack is the only serving engine: a build caps
+``max_depth`` at 62 (a node key is an int64), and a pack larger than the
+driver's memory is paged in from its files as the planner touches it.
 
 Degenerate config (1 tree, max_node_size ≥ n) ≡ exact brute force — the
 oracle check.
@@ -50,6 +51,7 @@ from __future__ import annotations
 import heapq
 import json
 import os
+import shutil
 from dataclasses import dataclass
 from itertools import islice
 from typing import NamedTuple
@@ -58,7 +60,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from vers_spark.functions import vector as V
 from vers_spark.functions.frames import local_frame
@@ -67,7 +68,6 @@ from vers_spark.operators.knn import (
     _NO_ROWS,
     _query_block,
     _rank_within,
-    _ranked,
     _topk_frame,
 )
 
@@ -84,10 +84,9 @@ def _plane_side(vec_col, coeff_col, const_col):
 # the tree id with the path's first pp_len bits (default _PP_LEN),
 # 'z'-padded so short/root paths get their own distinct value
 # ('01' → '01zz' ≠ '0100'): _pp = 'p<tree>_<prefix>'. Bounded directory
-# fan-out (≤ T × 2^pp_len + shorter-path buckets) and the serving plans
-# filter or join on _pp too, so only the probed buckets are scanned (a
-# literal _pp IN filter in the planned serving path, dynamic partition
-# pruning in the declarative join plans) — the LSH analogue of IVF's partitionBy(cluster_id) posting lists
+# fan-out (≤ T × 2^pp_len + shorter-path buckets) and the serving plan
+# filters on _pp too, so only the probed buckets are scanned (a literal
+# _pp IN filter) — the LSH analogue of IVF's partitionBy(cluster_id) posting lists
 # (ivfflat.py save). The width is a save() parameter recorded in the
 # manifest; the probe side must derive _pp at the SAME width or it never
 # matches, so every serving call reads it from params.
@@ -106,9 +105,9 @@ def _plane_side(vec_col, coeff_col, const_col):
 #
 # The value is prefixed with a literal 'p': a digit-leading value would
 # make spark.read's partition-type inference type the directory column
-# as INT — the serving equi-join against the string-derived probe _pp
-# would go through implicit casts (silently defeating dynamic partition
-# pruning) and a re-save would strip leading zeros. A non-numeric first
+# as INT — the serving filter's string _pp literals would compare through
+# implicit casts (silently defeating partition pruning) and a re-save
+# would strip leading zeros. A non-numeric first
 # character pins the inferred partition type to STRING on every load.
 _PP_LEN = 4
 
@@ -145,62 +144,18 @@ def _pp_of(tree_col, path_col, pp_len: int = _PP_LEN):
 
 def _read_planes(spark: SparkSession, path: str) -> DataFrame:
     """Read a saved store's hyperplanes. A depth-0 forest (degenerate
-    1-tree/unbounded-leaf config) has ZERO planes, and Spark writes an
-    empty partitioned parquet dir with no schema-bearing part files —
-    reading it throws UNABLE_TO_INFER_SCHEMA. Fall back to an empty
+    1-tree/unbounded-leaf config) has ZERO planes, and its hyperplane dir
+    can hold no schema-bearing part file (stores saved before the planes
+    were one unpartitioned table wrote an empty ``_lvl``-partitioned dir)
+    — reading it throws UNABLE_TO_INFER_SCHEMA. Fall back to an empty
     frame with the canonical plane schema so the degenerate store
-    roundtrips like any other."""
+    roundtrips like any other. An older store's ``_lvl`` column rides
+    along unread: the pack writer selects its columns by name."""
     try:
         return spark.read.parquet(f"{path}/hyperplanes")
     except Exception:
         return local_frame(spark, _PLANE_SCHEMA, [])
 
-
-def _planes_at(planes: DataFrame, lvl: int) -> DataFrame:
-    """Hyperplanes at one trie level. A file-loaded store carries the _lvl
-    partition column (save() writes partitionBy level), so the filter is a
-    partition prune — one directory read instead of scanning every level's
-    coeffs-heavy rows; in-session lineage falls back to the path length."""
-    if "_lvl" in planes.columns:
-        return planes.filter(F.col("_lvl") == lvl).drop("_lvl")
-    return planes.filter(F.length("path") == lvl)
-
-
-def _join_leaves(
-    probed: DataFrame, leaves: DataFrame, pp_len: int = _PP_LEN
-) -> DataFrame:
-    """Join a (…, tree_id, path) probe frame against the leaf table — the
-    declarative plan's leaf read. When the leaves carry the _pp partition
-    column (file-loaded bucketed store), derive _pp on the probe side and
-    include it in the join key — the equi-join on the partition column is
-    what lets dynamic partition pruning skip unprobed leaf buckets.
-
-    The startswith('p') filter is an always-true invariant of _pp_of (the
-    type-pinning prefix), kept here deliberately: Spark's PartitionPruning
-    rule only plants the DPP subquery when the filtering side carries a
-    *likely-selective* predicate (IsNotNull doesn't count, StartsWith
-    does), and probe frames that come straight out of a stats-free
-    mapInPandas pass otherwise carry none — the saved leaf store would
-    silently fall back to a full every-bucket scan."""
-    if "_pp" not in leaves.columns:
-        return probed.join(leaves, ["tree_id", "path"])
-    return (
-        probed.withColumn("_pp", _pp_of(F.col("tree_id"), F.col("path"), pp_len))
-        .filter(F.col("_pp").startswith("p"))
-        .join(leaves, ["tree_id", "_pp", "path"])
-        .drop("_pp")
-    )
-
-
-# Broadcast-hint cap for the declarative plan's probe-set / query-vector
-# joins, in QUERIES per batch. Below it the hints hold (the probe set is
-# queries×trees×probes narrow rows; qvec is one dim-wide f64 vector per
-# query — ≤ ~0.5 GB at dim 1024), and the hint is what keeps dynamic
-# partition pruning alive on a saved (tree_id, _pp)-partitioned leaf store.
-# Above it the hints could hit Spark's 8 GB / 512M-row broadcast hard
-# limits or driver OOM, so we fall back to plain shuffle joins; no DPP loss
-# in practice, since a corpus-sized batch probes essentially every bucket.
-_BROADCAST_QUERY_CAP = 65536
 
 # Above this row count the per-task whole-tree build stops being reasonable —
 # each task holds the FULL (deduped) corpus as a float64 matrix plus pandas
@@ -209,17 +164,146 @@ _BROADCAST_QUERY_CAP = 65536
 _LOCAL_BUILD_MAX_ROWS = 500_000
 
 
+# Bytes of plane coeffs the pack writer collects to the driver per Arrow
+# slice. A slice holds whole trees, so a single tree above it is one slice.
+_PACK_SLICE_BYTES = 512 * 1024 * 1024
+
+# The pack's flat arrays, one uncompressed ``<name>.npy`` each (row order =
+# collect order): the plane coeffs W (n_planes × dim), constants B and
+# magnitudes M (f64), the planes' tree ids and node keys, and the leaf
+# catalog's tree ids, node keys and member counts.
+_PACK_ARRAYS = ("W", "B", "M", "tids", "keys", "ltids", "lkeys", "lsizes")
+
+
 class _Pack(NamedTuple):
-    """The plane pack of one index instance, held on the driver: the trie
+    """The plane pack of one index instance, mapped on the driver: the trie
     arrays ``(tree_keys, tree_rows, W, B, M, leaf_keys)`` plus per-tree
     leaf sizes aligned with ``leaf_keys`` (the serving planner reads
-    them). Only :meth:`LSHForestIndex.assign_paths` ships the trie to the
-    executors, through a broadcast it creates on first use."""
+    them). ``W``, ``B`` and ``M`` are views of the memory-mapped pack
+    files, so the planner pages in only the planes it visits. Only
+    :meth:`LSHForestIndex.assign_paths` ships the trie to the executors,
+    through a broadcast it creates on first use."""
 
     depth: int
     trees: int
     trie: tuple
     leaf_sizes: list
+
+
+def _path_keys(paths) -> np.ndarray:
+    """Node keys of path bit-strings: the path as a '1'-prefixed binary
+    integer (root '' → 1, child key = key·2 + bit)."""
+    return np.fromiter((int("1" + p, 2) for p in paths), dtype=np.int64, count=len(paths))
+
+
+def _pack_file(d: str, name: str) -> str:
+    return os.path.join(d, f"{name}.npy")
+
+
+def _tmp_file(d: str, name: str) -> str:
+    """Where a pack file is written before :func:`os.replace` publishes it:
+    a mapped pack file is never truncated or rewritten in place (its
+    readers keep the old inode), which an in-place write would do under a
+    loaded instance's mapping."""
+    return os.path.join(d, f".{name}.npy.{os.getpid()}.tmp")
+
+
+def _write_pack(leaves: DataFrame, planes: DataFrame, dest: str) -> None:
+    """Write a forest's plane pack into ``dest``, one ``.npy`` per array of
+    ``_PACK_ARRAYS``, each published by :func:`os.replace`.
+
+    One aggregate sizes it before any coeff leaves the executors: the leaf
+    catalog (member count per leaf) and each tree's plane count and dim.
+    The coeffs are then collected through Arrow in slices of whole trees,
+    at most ``_PACK_SLICE_BYTES`` each, straight into a memory-mapped
+    ``W``, so the driver holds one slice at a time; a forest under the
+    budget is one slice, one collect. f64 ALWAYS: in-session forests carry
+    array<double> coeffs and a float32 pack would quantize every dot and
+    could flip near-tie probe orders; f32-at-rest coeffs widen exactly. A
+    depth-0 forest packs as an empty trie whose only leaf is the root."""
+    os.makedirs(dest, exist_ok=True)
+    # one row per leaf (its member count) and per plane (its dim)
+    cat = (
+        leaves.select("tree_id", "path", F.lit(0).alias("dim"))
+        .unionByName(planes.select("tree_id", "path", F.size("coeffs").alias("dim")))
+        .groupBy("tree_id", "path", (F.col("dim") > 0).alias("plane"))
+        .agg(F.count(F.lit(1)).alias("n"), F.max("dim").alias("dim"))
+        .toPandas()
+    )
+    lp = cat[~cat["plane"]]
+    per_tree = cat[cat["plane"]].groupby("tree_id")["dim"].agg(["size", "max"])
+    n = int(per_tree["size"].sum())
+    dim = int(per_tree["max"].max()) if n else 0
+    slices: list[list[int]] = []
+    rows = 0
+    for t, m in zip(per_tree.index.tolist(), per_tree["size"].tolist()):
+        if not slices or (rows + m) * dim * 8 > _PACK_SLICE_BYTES:
+            slices.append([])
+            rows = 0
+        slices[-1].append(int(t))
+        rows += int(m)
+    arrs = {
+        "B": np.empty(n),
+        "M": np.empty(n),
+        "tids": np.empty(n, dtype=np.int32),
+        "keys": np.empty(n, dtype=np.int64),
+        "ltids": lp["tree_id"].to_numpy(dtype=np.int32),
+        "lkeys": _path_keys(lp["path"].tolist()),
+        "lsizes": lp["n"].to_numpy(dtype=np.int64),
+    }
+    w_tmp = _tmp_file(dest, "W")
+    W = np.lib.format.open_memmap(w_tmp, mode="w+", dtype=np.float64, shape=(n, dim))
+    cols = planes.select("tree_id", "path", "coeffs", "constant")
+    off = 0
+    for trees in slices:
+        part = cols if len(slices) == 1 else cols.filter(F.col("tree_id").isin(trees))
+        tbl = part.toArrow()
+        m = tbl.num_rows
+        rs = slice(off, off + m)
+        coeffs = tbl.column("coeffs").combine_chunks().flatten()
+        Ws = coeffs.to_numpy(zero_copy_only=False).astype(np.float64).reshape(m, dim)
+        W[rs] = Ws
+        arrs["B"][rs] = tbl.column("constant").to_numpy()
+        # plane magnitudes for the multiprobe margin — the same f64
+        # left-fold-then-sqrt as V.magnitude (cumsum = fold)
+        arrs["M"][rs] = np.sqrt(np.cumsum(Ws * Ws, axis=1)[:, -1])
+        arrs["tids"][rs] = tbl.column("tree_id").to_numpy()
+        arrs["keys"][rs] = _path_keys(tbl.column("path").to_pylist())
+        off += m
+    if off != n:
+        raise RuntimeError(f"hyperplanes changed while packing: sized {n} rows, read {off}")
+    W.flush()
+    del W
+    os.replace(w_tmp, _pack_file(dest, "W"))
+    for name, arr in arrs.items():
+        tmp = _tmp_file(dest, name)
+        with open(tmp, "wb") as f:
+            np.save(f, arr)
+        os.replace(tmp, _pack_file(dest, name))
+
+
+def _copy_pack(src: str, dest: str) -> None:
+    """Copy a pack's files into ``dest``, each published by os.replace —
+    ``src`` may be ``dest`` itself (a store saved over its own path)."""
+    os.makedirs(dest, exist_ok=True)
+    for name in _PACK_ARRAYS:
+        tmp = _tmp_file(dest, name)
+        shutil.copyfile(_pack_file(src, name), tmp)
+        os.replace(tmp, _pack_file(dest, name))
+
+
+def _has_pack(d: str) -> bool:
+    return all(os.path.exists(_pack_file(d, name)) for name in _PACK_ARRAYS)
+
+
+def _read_pack(d: str) -> dict:
+    """Map a pack's files. ``np.asarray`` views each memmap as a plain
+    ndarray (no copy), so the planner's per-node indexing pays no
+    memmap-subclass overhead."""
+    return {
+        name: np.asarray(np.load(_pack_file(d, name), mmap_mode="r"))
+        for name in _PACK_ARRAYS
+    }
 
 
 def _descend(X, K, R, W, B, depth: int):
@@ -229,11 +313,12 @@ def _descend(X, K, R, W, B, depth: int):
     and their rows in ``W``/``B``; a key is the path as a '1'-prefixed
     binary integer (root '' → 1, child = key·2 + bit).
 
-    BIT-EXACT with the declarative descent: Spark's V.dot is a left fold of
-    f64 products, and ``np.cumsum`` over the f64 product row is the same
+    BIT-EXACT with the Spark plane test (``_plane_side``, which routes the
+    distributed build's members): Spark's V.dot is a left fold of f64
+    products, and ``np.cumsum`` over the f64 product row is the same
     sequential accumulation (pinned in
-    tests/test_lsh.py::test_assign_paths_pandas_equals_join_descent), so
-    build-time routing and query-time descent never disagree on a
+    tests/test_lsh.py::test_assign_paths_routes_distributed_members_to_stored_paths),
+    so build-time routing and query-time descent never disagree on a
     boundary."""
     key = np.ones(len(X), dtype=np.int64)
     alive = np.arange(len(X))
@@ -263,7 +348,7 @@ def _best_first(q, K, R, W, B, M, LK, dfs: bool):
     ``(index into LK, dev, cost)``: a heap-ordered best-first walk of the
     trie that pops the least (cost, dev) node (dfs: least dev), yields it if
     it is a leaf, else pushes both children with the margin accumulated as
-    the declarative engines do (ascending-level f64 left fold; margin =
+    an ascending-level f64 left fold (margin =
     |dot+const| / ‖coeffs‖ with the cumsum kernel, bit-exact with
     V.dot/V.magnitude). Both keys are MONOTONE along descent — cost adds
     ≥ 0, dev only extends — so the pop order IS the global probe order
@@ -533,7 +618,12 @@ class LSHForestIndex:
           per depth); the 100 TB path, no single task ever holds the corpus.
         - ``"auto"`` — local below ``_LOCAL_BUILD_MAX_ROWS`` rows, else
           distributed.
+
+        ``max_depth`` (1 to 62: a node key is a '1'-prefixed int64) bounds
+        every path, also those ``add`` grows; it is recorded in ``params``.
         """
+        if not 1 <= int(max_depth) <= 62:
+            raise ValueError(f"max_depth must be in [1, 62], got {max_depth}")
         spark = corpus.sparkSession
         data = corpus.select(
             F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("embedding")
@@ -659,6 +749,7 @@ class LSHForestIndex:
             "max_node_size": int(max_node_size),
             "seed": seed,
             "depth": depth_reached,
+            "max_depth": int(max_depth),
             "metric": "sq_euclidean",
         }
         return LSHForestIndex(spark, assign, hyperplanes, params)
@@ -695,89 +786,21 @@ class LSHForestIndex:
             "max_node_size": int(max_node_size),
             "seed": seed,
             "depth": int(depth) + 1 if depth is not None else 0,
+            "max_depth": int(max_depth),
             "metric": "sq_euclidean",
         }
         return LSHForestIndex(spark, leaves, hyperplanes, params)
 
     # ---------------- search ----------------
 
-    # size cap for the plane pack (bytes of coeffs) — it is held on the
-    # driver and broadcast by assign_paths; above it the index serves
-    # through the declarative plans, whose memory is bounded regardless of
-    # forest size. Depth is capped by the int64 path encoding (≤ 62 bits) —
-    # deeper trees also fall back.
-    _PACK_MAX_BYTES = 512 * 1024 * 1024
-
-    def _pack_arrays(self) -> dict | None:
-        """Arrow-collect the hyperplane trie + leaf catalog as FLAT numpy
-        arrays (row order = collect order): W (n_planes × dim float64 —
-        exact for both float- and double-typed coeffs), B/M (f64), tids,
-        '1'-prefixed binary path keys, and the leaf catalog's (ltids,
-        lkeys, lsizes) — lsizes is each leaf's member count, which the
-        serving planner's fill rule reads. This is the expensive leg of
-        pack construction (the Arrow collect — 19-87 s cold at the 1M
-        file-loaded store, BASELINE §r12) and the exact payload
-        :meth:`save` persists as ``pack.npz`` so cold serving stops paying
-        it per session. A depth-0 forest packs as an empty trie whose only
-        leaf is the root. Returns None when the trie is too deep or
-        exceeds ``_PACK_MAX_BYTES`` — callers fall back to the declarative
-        plans.
-
-        f64 ALWAYS: in-session forests carry array<double> coeffs (the
-        b−a splits are computed in f64) and a float32 pack would silently
-        quantize every dot and could flip near-tie probe orders;
-        f32-at-rest coeffs widen exactly, so f64 is exact for both
-        storage types."""
-        if int(self.params["depth"]) > 62:
-            return None
-        # Arrow collect: 126k coeff rows arrive as numpy cells in ~2 s
-        # where the py4j row path took ~20 s at the 1M forest
-        pdf = self.hyperplanes.select(
-            "tree_id", "path", "coeffs", "constant"
-        ).toPandas()
-        dim = len(pdf["coeffs"].iloc[0]) if len(pdf) else 0
-        if len(pdf) * dim * 8 > self._PACK_MAX_BYTES:
-            return None
-        W = np.array(pdf["coeffs"].tolist(), dtype=np.float64).reshape(len(pdf), dim)
-        B = pdf["constant"].to_numpy(dtype=np.float64)
-        # plane magnitudes for the multiprobe margin — the same
-        # f64 left-fold-then-sqrt as V.magnitude (cumsum = fold)
-        M = np.sqrt(np.cumsum(W * W, axis=1)[:, -1]) if len(W) else np.zeros(0)
-        tids = pdf["tree_id"].to_numpy(dtype=np.int32)
-        keys = np.fromiter(
-            (int("1" + p, 2) for p in pdf["path"]),
-            dtype=np.int64,
-            count=len(pdf),
-        )
-        # leaf-path keys and sizes per tree — one slim aggregate over the
-        # leaf catalog
-        lp = (
-            self.leaves.groupBy("tree_id", "path")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .toPandas()
-        )
-        lkeys = np.fromiter(
-            (int("1" + p, 2) for p in lp["path"]),
-            dtype=np.int64,
-            count=len(lp),
-        )
-        ltids = lp["tree_id"].to_numpy(dtype=np.int32)
-        lsizes = lp["n"].to_numpy(dtype=np.int64)
-        return {
-            "W": W, "B": B, "M": M, "tids": tids, "keys": keys,
-            "ltids": ltids, "lkeys": lkeys, "lsizes": lsizes,
-        }
-
     def _assemble_pack(self, arrs: dict) -> _Pack:
-        """Per-tree sorted node-key structures, from the flat
-        arrays (collected or ``pack.npz``-loaded — identical assembly, so
-        a persisted pack is bit-equal with a rebuilt one; parity-gated in
-        test_lsh.py). A node's key is its path as a '1'-prefixed binary
-        integer (root '' → 1, child key = key·2 + bit) — depth-independent
-        and SPARSE, so a 24-deep imbalanced forest (the 1M reference
-        config measured n_leaf_paths ≈ 126k, max depth 24) packs as ~16k
-        keys/tree instead of the 134M dense heap slots a direct
-        node-index table would need."""
+        """Per-tree sorted node-key structures over the flat pack arrays
+        (:func:`_read_pack`). A node's key is its path as a '1'-prefixed
+        binary integer (root '' → 1, child key = key·2 + bit) —
+        depth-independent and SPARSE, so a 24-deep imbalanced forest (the
+        1M reference config measured n_leaf_paths ≈ 126k, max depth 24)
+        packs as ~16k keys/tree instead of the 134M dense heap slots a
+        direct node-index table would need."""
         T = int(self.params["num_trees"])
         tids, keys = arrs["tids"], arrs["keys"]
         tree_keys, tree_rows = [], []
@@ -796,42 +819,35 @@ class LSHForestIndex:
         trie = (tree_keys, tree_rows, arrs["W"], arrs["B"], arrs["M"], leaf_keys)
         return _Pack(int(self.params["depth"]), T, trie, leaf_sizes)
 
-    def _planes_pack(self) -> _Pack | None:
-        """Build the hyperplane trie pack ONCE per index instance. A
-        file-loaded store with a persisted ``pack.npz`` (see :meth:`save`)
-        skips the Arrow collect entirely — a local numpy read replaces the
-        19-87 s cold rebuild; a ``pack.npz`` written
-        without leaf sizes counts as absent and is re-collected. Returns
-        None when the pack exceeds ``_PACK_MAX_BYTES`` or the trie is too
-        deep — callers fall back to the declarative plans. Amortizes the
-        driver collect across every serving call on this instance
-        (VERDICT r10 #5)."""
-        if hasattr(self, "_planes_pack_cache"):
-            return self._planes_pack_cache
-        arrs = None
-        pack_path = getattr(self, "_pack_path", None)
-        if pack_path is not None and os.path.exists(pack_path):
-            with np.load(pack_path) as z:
-                if "lsizes" in z.files:
-                    arrs = {k: z[k] for k in z.files}
-        if arrs is None:
-            arrs = self._pack_arrays()
-        pack = self._assemble_pack(arrs) if arrs is not None else None
-        self._planes_pack_cache = pack
-        return pack
+    def _planes_pack(self) -> _Pack:
+        """The instance's plane pack, mapped once per instance from its pack
+        files: a saved store's ``pack/`` (wired by :meth:`load`), else a
+        pack :func:`_write_pack` writes into a local scratch dir (on disk,
+        not tmpfs, whose pages are RAM) on first use. Amortizes the
+        collect across every serving call on this instance."""
+        if "_planes_pack_cache" not in self.__dict__:
+            d = self.__dict__.get("_pack_dir")
+            if d is None:
+                from vers_spark.sources.staging import ephemeral_dir
+
+                d = ephemeral_dir("vs_lsh_pack_", tmpfs=False)
+                _write_pack(self.leaves, self.hyperplanes, d)
+                self._pack_dir = d
+            self._planes_pack_cache = self._assemble_pack(_read_pack(d))
+        return self._planes_pack_cache
 
     def release_pack(self) -> None:
-        """Clear the instance's pack cache and drop its trie broadcast (if
+        """Clear the instance's mapped pack and drop its trie broadcast (if
         :meth:`assign_paths` created one) from executor memory
         (non-blocking unpersist).
 
         Safe at any point: unpersist leaves the driver-held value intact,
         so a not-yet-materialized plan that still references the broadcast
         re-ships it on demand, and the next _planes_pack() call on this
-        instance re-collects. ``add()`` calls this on the SOURCE instance —
-        sessions that loop add() cycles (each returning a new instance with
-        its own pack) would otherwise accumulate one executor-resident
-        trie per retired instance (ADVICE r11)."""
+        instance maps its pack files again. ``add()`` calls this on the
+        SOURCE instance — sessions that loop add() cycles (each returning a
+        new instance with its own pack) would otherwise accumulate one
+        executor-resident trie per retired instance (ADVICE r11)."""
         self.__dict__.pop("_planes_pack_cache", None)
         bc = self.__dict__.pop("_pack_bc", None)
         if bc is not None:
@@ -847,19 +863,14 @@ class LSHForestIndex:
         path). Identical vectors always get identical paths (deterministic
         dots).
 
-        Fast path (r11, VERDICT r10 #5): ONE mapInPandas pass against the
-        broadcast plane trie — the per-level shape scheduled ``depth``
-        sequential join stages (~13 at the 1M/T16 config), and for a
-        100-query serving batch the stage latency dwarfed the ~6 M flops of
-        actual plane math. The numpy kernel (:func:`_descend`, shared with
-        the serving planner) is BIT-EXACT with the declarative fold it
-        replaces. The trie broadcast is created on the first call and
-        reused; serving never ships it (the planner runs on the driver).
-        Falls back to the per-level join descent when the trie exceeds the
-        pack's size cap or depth."""
+        ONE mapInPandas pass against the broadcast plane trie (a per-level
+        join descent scheduled ``depth`` sequential join stages, ~13 at the
+        1M/T16 config). The numpy kernel (:func:`_descend`, shared with the
+        serving planner) is BIT-EXACT with the Spark plane test the
+        distributed build routes members with. The trie broadcast is
+        created on the first call and reused; serving never ships it (the
+        planner runs on the driver)."""
         pack = self._planes_pack()
-        if pack is None:
-            return self._assign_paths_joins(df, id_col, vec_col)
         bc = self.__dict__.get("_pack_bc")
         if bc is None:
             bc = self._pack_bc = self.spark.sparkContext.broadcast(pack.trie)
@@ -898,37 +909,6 @@ class LSHForestIndex:
             f"query_id {id_t}, q_vec {emb_t}, tree_id int, path string",
         )
 
-    def _assign_paths_joins(
-        self,
-        df: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> DataFrame:
-        """The declarative per-level descent (one broadcast join per trie
-        level) — the any-depth fallback and the semantic reference the
-        pandas kernel is property-tested against."""
-        trees = self.spark.range(self.params["num_trees"]).select(
-            F.col("id").cast("int").alias("tree_id")
-        )
-        qp = df.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-        ).crossJoin(F.broadcast(trees)).withColumn("path", F.lit(""))
-
-        for depth in range(self.params["depth"]):
-            level = _planes_at(self.hyperplanes, depth)
-            qp = (
-                qp.join(F.broadcast(level), ["tree_id", "path"], "left")
-                .withColumn(
-                    "path",
-                    F.when(
-                        F.col("coeffs").isNotNull(),
-                        F.concat("path", _plane_side(F.col("q_vec"), F.col("coeffs"), F.col("constant"))),
-                    ).otherwise(F.col("path")),
-                )
-                .select("query_id", "q_vec", "tree_id", "path")
-            )
-        return qp
-
     def search(
         self,
         queries: DataFrame,
@@ -946,15 +926,13 @@ class LSHForestIndex:
         Bounded-batch contract: the query batch is collected to the driver
         (at most ``validate.MAX_QUERY_BATCH_ROWS`` rows,
         ``QueryBatchTooLarge`` above); query ids must be integral and come
-        back as long. With the plane pack (every trie up to 62 levels whose
-        coeffs fit ``_PACK_MAX_BYTES``) the driver plans from the pack
+        back as long. The driver plans from the plane pack
         (:func:`_plan_leaves`): a vectorized descent gives each (query,
         tree) its main leaf, and a pair whose main leaf holds fewer than k
         members walks the leaves in ``probe_mode`` order until the leaves
         taken hold ≥ k, each capped at its remaining budget. The planned
         leaves are read in one pass and the batch is finished on the driver
-        (:meth:`_serve_plan`; the result is a local frame). Deeper or larger
-        tries take :meth:`_search_declarative`, which returns the same rows.
+        (:meth:`_serve_plan`; the result is a local frame).
 
         ``backup_fill`` implements the reference's backup-branch rule
         (lsh.rs:203-215): per tree, the search is a BUDGETED depth-first
@@ -994,11 +972,6 @@ class LSHForestIndex:
             )
             leaves = leaves.join(F.broadcast(keep), "id", "left_semi")
         pack = self._planes_pack()
-        if pack is None:
-            return self._search_declarative(
-                self._block_frame(queries, block, query_id, query_vec),
-                k, query_id, query_vec, leaves, probe_mode, backup_fill=backup_fill,
-            )
         sizes = pack.leaf_sizes if allowed_ids is None else _leaf_sizes_of(leaves, pack)
         plan = _plan_leaves(block[1], pack, sizes, k, probe_mode == "dfs", backup_fill)
         return self._serve_plan(leaves, block, plan, k)
@@ -1025,42 +998,18 @@ class LSHForestIndex:
         Same engine and bounded-batch contract as :meth:`search`: the
         driver plans the probe set from the plane pack (the first
         ``n_probes`` leaves of each pair's best-first walk,
-        :func:`_plan_leaves`) and :meth:`_serve_plan` reads it in one pass;
-        tries the pack cannot hold take the declarative frontier walk
-        (:meth:`_search_declarative`), which returns the same rows."""
+        :func:`_plan_leaves`) and :meth:`_serve_plan` reads it in one
+        pass."""
         if probe_mode not in ("dfs", "margin"):
             raise ValueError(f"unknown probe_mode {probe_mode!r}")
         block = _query_block(queries, query_id, query_vec, "lsh_search_multiprobe")
         if block is None:
             return _topk_frame(self.spark, *_NO_ROWS, k)
         pack = self._planes_pack()
-        if pack is None:
-            return self._search_declarative(
-                self._block_frame(queries, block, query_id, query_vec),
-                k, query_id, query_vec, self.leaves, probe_mode, n_probes=n_probes,
-            )
         plan = _plan_leaves(
             block[1], pack, pack.leaf_sizes, k, probe_mode == "dfs", n_probes=n_probes
         )
         return self._serve_plan(self.leaves, block, plan, k)
-
-    def _block_frame(
-        self, queries: DataFrame, block: tuple, query_id: str, query_vec: str
-    ) -> DataFrame:
-        """The collected batch ``block`` as a local frame for
-        :meth:`_search_declarative`, so the caller's ``queries`` is
-        evaluated once per call. Ids are long (the bounded-batch
-        contract); vectors keep the caller's element type, so the
-        declarative descent and fold read the values they would have read
-        from ``queries``."""
-        ids, mat = block
-        schema = StructType(
-            [
-                StructField(query_id, LongType()),
-                StructField(query_vec, queries.schema[query_vec].dataType),
-            ]
-        )
-        return local_frame(self.spark, schema, {query_id: ids, query_vec: mat})
 
     def _serve_plan(self, leaves: DataFrame, block: tuple, plan: dict, k: int) -> DataFrame:
         """Read a driver-side plan (:func:`_plan_leaves`) in one pass and
@@ -1072,8 +1021,8 @@ class LSHForestIndex:
           filter (static partition pruning on a saved store) and a filter
           on the planned (tree_id, path) pairs;
         - one ``mapInPandas`` folds each planned leaf against its queries
-          (``vector_np.fold_distances``, bit-equal to the declarative
-          kernel) and keeps, per planned (query, leaf), the task's
+          (``vector_np.fold_distances``, bit-equal to the Spark fold
+          ``V.sq_euclidean``) and keeps, per planned (query, leaf), the task's
           top-``cap`` rows over all its Arrow batches, emitted once per
           task — so the rows fetched are bounded by the plan's caps times
           the task count;
@@ -1147,389 +1096,12 @@ class LSHForestIndex:
             self.spark, *(cands.column(c).to_numpy() for c in cands.column_names), k
         )
 
-    def _search_declarative(
-        self,
-        queries: DataFrame,
-        k: int,
-        query_id: str,
-        query_vec: str,
-        leaves: DataFrame,
-        probe_mode: str,
-        backup_fill: bool = True,
-        n_probes: int | None = None,
-    ) -> DataFrame:
-        """:meth:`search` (``n_probes`` None) or :meth:`search_multiprobe`
-        as a declarative plan, for tries the plane pack cannot hold (deeper
-        than 62 levels or coeffs above ``_PACK_MAX_BYTES``): the per-level
-        join descent, then a leaf join for either the main leaves — with
-        the budgeted fill of :meth:`_backup_fill_candidates` for
-        underfilled (query, tree) pairs — or the first ``n_probes`` leaves
-        of the frontier walk (:meth:`_leaf_order_frontier`). ``leaves`` is
-        the leaf table after the ``allowed_ids`` semi-join. Returns the
-        same rows as the planned path (gated in tests/test_lsh_backup.py)."""
-        # the checkpoint is read by every branch below (probe side, qvec,
-        # underfill test); the count materializes it
-        qp = self.assign_paths(queries, query_id, query_vec).localCheckpoint(
-            eager=False
-        )
-        # Broadcast-hint the NARROW probe side of the leaf join and re-join
-        # the dim-wide q_vec after, both gated on _BROADCAST_QUERY_CAP.
-        # MEASURED reason (BASELINE §r13): the stats-free descent output
-        # otherwise planned a sort-merge join at the 1M store, and the leaf
-        # scan read 128/128 partitions — all 8M rows — for a SINGLE query
-        # whose main leaves touch 8 buckets.
-        n_queries = qp.count() // max(int(self.params["num_trees"]), 1)
-        bq = F.broadcast if n_queries <= _BROADCAST_QUERY_CAP else (lambda df: df)
-        if n_probes is None:
-            probe = qp.select("query_id", "tree_id", "path")
-        else:
-            probe = self._leaf_order_frontier(
-                qp.select("query_id", "tree_id", "q_vec"), leaves, probe_mode, n_probes
-            )
-        qvec = qp.select("query_id", "q_vec").dropDuplicates(["query_id"])
-        main = (
-            _join_leaves(bq(probe), leaves, self._pp_len())
-            .join(bq(qvec), ["query_id"])
-            .select("query_id", "tree_id", "q_vec", "id", "embedding")
-        )
-        if backup_fill and n_probes is None:
-            main = main.localCheckpoint(eager=False)
-            cnt = main.groupBy("query_id", "tree_id").agg(
-                F.count(F.lit(1)).alias("n_cand")
-            )
-            under = (
-                qp.join(cnt, ["query_id", "tree_id"], "left")
-                .filter(F.coalesce(F.col("n_cand"), F.lit(0)) < k)
-                .select("query_id", "tree_id", "q_vec")
-            ).localCheckpoint(eager=False)
-            # short-circuit the common case: no underfilled pair -> every
-            # fill branch would be empty, but its stages would still be
-            # scheduled. The probe rides the persisted qp/main, and the
-            # persisted `under` feeds the fill plan when non-empty.
-            if under.isEmpty():
-                cands = main.select(
-                    "query_id", "q_vec", "id", "embedding"
-                ).dropDuplicates(["query_id", "id"])
-            else:
-                filled = main.join(
-                    under.select("query_id", "tree_id"),
-                    ["query_id", "tree_id"],
-                    "left_anti",
-                )
-                fill = self._backup_fill_candidates(under, leaves, k, probe_mode)
-                cands = (
-                    filled.select("query_id", "q_vec", "id", "embedding")
-                    .unionByName(fill)
-                    .dropDuplicates(["query_id", "id"])
-                )
-        else:
-            cands = main.select("query_id", "q_vec", "id", "embedding").dropDuplicates(
-                ["query_id", "id"]  # DashSet union across trees (lsh.rs:266-270)
-            )
-        scored = self._rerank_blocked(cands).withColumnRenamed("id", "neighbour_id")
-        return _ranked(scored, "_dist", k)
-
-    @staticmethod
-    def _rerank_blocked(cands: DataFrame) -> DataFrame:
-        """The declarative plan's exact rerank: per candidate row,
-        sq_euclidean(q_vec, embedding) in ONE vectorized Arrow batch pass
-        instead of a per-row zip_with/aggregate fold (µs per ELEMENT).
-        BIT-EXACT with the fold, not last-ulp: the kernel is
-        vector_np.fold_distances (gated in
-        test_vector.test_fold_distances_bit_equal_to_expression_kernels).
-        Input (query_id, q_vec, id, embedding) → (query_id, id, _dist)."""
-        import pandas as pd
-
-        from vers_spark.functions.vector_np import fold_distances
-
-        def fn(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                q = np.array(pdf["q_vec"].tolist(), dtype=np.float64)
-                e = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-                dist = fold_distances(q, e, "sq_euclidean")
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].astype("int64"),
-                        "id": pdf["id"].astype("int64"),
-                        "_dist": dist,
-                    }
-                )
-
-        return cands.mapInPandas(fn, "query_id long, id long, _dist double")
-
     def _pp_len(self) -> int:
-        """The saved store's leaf-bucket prefix width. The probe side of
-        every serving join must derive _pp at this width (a mismatch makes
-        the equi-join silently match nothing), so it rides the manifest —
-        absent means the default, covering every pre-parameter store."""
+        """The saved store's leaf-bucket prefix width. The serving filter
+        must derive _pp at this width (a mismatch makes it silently match
+        nothing), so it rides the manifest — absent means the default,
+        covering every pre-parameter store."""
         return int(self.params.get("pp_len", _PP_LEN))
-
-    def _leaf_order_frontier(
-        self,
-        pairs: DataFrame,
-        leaves: DataFrame,
-        probe_mode: str,
-        n_probes: int,
-        beam: int | None = None,
-        stride: int = 2,
-        keep_keys: bool = False,
-    ) -> DataFrame:
-        """Best-first leaf enumeration via a BOUNDED FRONTIER — the
-        declarative plan's twin of the planner's :func:`_best_first` walk,
-        for tries the plane pack cannot hold. Only visited nodes are ever
-        scored:
-
-        Level-synchronous branch-and-bound down the path trie. The frontier
-        holds ≤ ``beam`` inner-node prefixes per (query, tree), each with
-        its accumulated (cost, dev); one round joins the frontier against
-        that level's hyperplanes (the assign_paths per-level join shape),
-        folds the query margin at ONLY those nodes, expands both children
-        (same side +0, opposite side +margin), settles children that are
-        leaf paths, and prunes: settled keeps the best ``n_probes`` per
-        pair, the frontier keeps nodes still able to beat the current
-        n_probes-th settled leaf (cost/dev is a lower bound for every
-        descendant — costs are non-negative and dev only extends), capped
-        at ``beam`` by the probe order. Exact top-``n_probes`` whenever the
-        beam cap never binds after the bound activates (branch-and-bound);
-        the cap is the documented guard against adversarial margin
-        landscapes — row parity with the planned walk is gated in
-        tests/test_lsh_backup.py. Margin cost accumulates as the same
-        ascending-level f64 left fold as the planned walk, so summation
-        order cannot flip near-tie orderings between the two. Work per
-        round is O(pairs × beam) rows —
-        independent of leaf count — for ``depth`` rounds; per playbook the
-        self-referencing round state is eagerly localCheckpointed.
-
-        Returns the probed (query_id, tree_id, path) rows: the first
-        ≤ n_probes non-empty leaves per pair in probe order, as the planned
-        walk takes them."""
-        if probe_mode not in ("dfs", "margin"):
-            # a typo'd mode must raise, not silently fall into the margin
-            # key/bound branch
-            raise ValueError(f"unknown probe_mode {probe_mode!r}")
-        # 1M grid (BASELINE.md round-7): the branch-and-bound threshold, not
-        # the beam, does the pruning — beams 8/16/32 probe the IDENTICAL
-        # leaf set while costing 50/69/89 s per 100-query batch. 4·n_probes
-        # keeps proportional headroom at higher probe counts.
-        if beam is None:
-            beam = max(4 * n_probes, 8)
-        key = (
-            [F.asc("dev")]
-            if probe_mode == "dfs"
-            else [F.asc("cost"), F.asc("dev")]
-        )
-        wpair = W.partitionBy("query_id", "tree_id").orderBy(*key)
-        # materialize the two PATH CATALOGS once: every strided round semi-
-        # joins against them, and leaving them lazy re-scans (and for the
-        # leaf side re-shuffles a distinct over) the full corpus-sized leaf
-        # parquet PER ROUND — profiled at 1M as 231 s of a 248 s serving
-        # batch. The catalogs themselves are tiny (paths ≈ leaves/max_node
-        # rows; inner ≈ plane count, two slim columns).
-        paths = leaves.select("tree_id", "path").distinct().localCheckpoint()
-        inner = self.hyperplanes.select("tree_id", "path").localCheckpoint()
-        settled = (
-            pairs.select("query_id", "tree_id")
-            .join(paths.filter(F.length("path") == 0), "tree_id")
-            .select(
-                "query_id",
-                "tree_id",
-                "path",
-                F.lit("").alias("dev"),
-                F.lit(0.0).alias("cost"),
-            )
-            .localCheckpoint()
-        )
-        frontier = (
-            pairs.join(inner.filter(F.length("path") == 0), "tree_id")
-            .select(
-                "query_id",
-                "tree_id",
-                "q_vec",
-                F.col("path").alias("prefix"),
-                F.lit("").alias("dev"),
-                F.lit(0.0).alias("cost"),
-            )
-            .localCheckpoint()
-        )
-        def expand(cur: DataFrame, lvl: int) -> DataFrame:
-            planes = _planes_at(self.hyperplanes, lvl).select(
-                "tree_id", F.col("path").alias("prefix"), "coeffs", "constant"
-            )
-            fr = (
-                cur.join(planes, ["tree_id", "prefix"])
-                .withColumn(
-                    "q_bit",
-                    _plane_side(F.col("q_vec"), F.col("coeffs"), F.col("constant")),
-                )
-                .withColumn(
-                    "q_margin",
-                    F.abs(V.dot(F.col("q_vec"), F.col("coeffs")) + F.col("constant"))
-                    / V.magnitude(F.col("coeffs")),
-                )
-            )
-            return fr.select(
-                "query_id",
-                "tree_id",
-                "q_vec",
-                F.explode(F.array(F.lit("0"), F.lit("1"))).alias("cbit"),
-                "prefix",
-                "dev",
-                "cost",
-                "q_bit",
-                "q_margin",
-            ).select(
-                "query_id",
-                "tree_id",
-                "q_vec",
-                F.concat("prefix", "cbit").alias("prefix"),
-                F.concat(
-                    "dev", F.when(F.col("cbit") == F.col("q_bit"), "0").otherwise("1")
-                ).alias("dev"),
-                (
-                    F.col("cost")
-                    + F.when(F.col("cbit") == F.col("q_bit"), F.lit(0.0)).otherwise(
-                        F.col("q_margin")
-                    )
-                ).alias("cost"),
-            )
-
-        # rounds are strided: ``stride`` levels expand lazily inside one
-        # round (frontier grows ≤ beam·2^stride per pair in between), then
-        # ONE prune + checkpoint. Per-round fixed overhead (shuffles,
-        # checkpoint, the isEmpty probe) dominated the per-level version at
-        # small scale; striding divides it by the stride without changing
-        # the settled/pruned state at stride boundaries. The trade is fold
-        # work: margins are folded on every intra-stride row, and the
-        # un-pruned frontier doubles per level, so fold volume grows
-        # (2^stride)/stride-fold — stride 2 measured best at 1M (the fold,
-        # not round overhead, is the serving-scale term).
-        depth = int(self.params["depth"])
-        lvl = 0
-        while lvl < depth:
-            if frontier.isEmpty():
-                break
-            hi = min(lvl + stride, depth)
-            cur = frontier
-            new_settled: list[DataFrame] = []
-            for L in range(lvl, hi):
-                children = expand(cur, L)
-                lvl_leaves = paths.filter(
-                    F.length("path") == L + 1
-                ).withColumnRenamed("path", "prefix")
-                lvl_inner = inner.filter(F.length("path") == L + 1).withColumnRenamed(
-                    "path", "prefix"
-                )
-                new_settled.append(
-                    children.join(lvl_leaves, ["tree_id", "prefix"], "left_semi").select(
-                        "query_id",
-                        "tree_id",
-                        F.col("prefix").alias("path"),
-                        "dev",
-                        "cost",
-                    )
-                )
-                cur = children.join(lvl_inner, ["tree_id", "prefix"], "left_semi")
-            for ns in new_settled:
-                settled = settled.unionByName(ns)
-            settled = (
-                settled.withColumn("_r", F.row_number().over(wpair))
-                .filter(F.col("_r") <= n_probes)
-                .drop("_r")
-                .localCheckpoint()
-            )
-            # bound: a pair with n_probes settled leaves only keeps frontier
-            # nodes whose (cost | dev) can still beat its worst settled one
-            thr = settled.groupBy("query_id", "tree_id").agg(
-                F.count(F.lit(1)).alias("_ns"),
-                F.max("cost").alias("_mxc"),
-                F.max("dev").alias("_mxd"),
-            )
-            viable = (
-                F.col("_ns").isNull()
-                | (F.col("_ns") < n_probes)
-                | (
-                    F.col("cost") <= F.col("_mxc")
-                    if probe_mode == "margin"
-                    else F.col("dev") <= F.col("_mxd")
-                )
-            )
-            frontier = (
-                cur.join(thr, ["query_id", "tree_id"], "left")
-                .filter(viable)
-                .drop("_ns", "_mxc", "_mxd")
-                .withColumn("_r", F.row_number().over(wpair))
-                .filter(F.col("_r") <= beam)
-                .drop("_r")
-                .localCheckpoint()
-            )
-            lvl = hi
-        if keep_keys:  # callers ordering downstream (budgeted fill)
-            return settled.select("query_id", "tree_id", "path", "dev", "cost")
-        return settled.select("query_id", "tree_id", "path")
-
-    def _backup_fill_candidates(
-        self, under: DataFrame, leaves: DataFrame, k: int, probe_mode: str = "dfs"
-    ) -> DataFrame:
-        """Budgeted whole-tree visit for underfilled (query, tree) pairs —
-        the fill leg of :meth:`_search_declarative` (the planned search
-        walks the pack instead, :func:`_plan_leaves`).
-
-        The reference's recursion (lsh.rs:203-215) visits leaves in
-        lexicographic order of their deviation string and takes
-        min(leaf_size, remaining_budget) nearest members from each, where
-        Σ taken over earlier leaves = min(k, Σ their sizes) — so a member is
-        admitted iff its within-leaf distance rank ≤ k − cum_size_before.
-        Cost is bounded by (underfilled pairs) × (planes per tree); filled
-        pairs never reach here, and at production max_node_size ≥ k
-        underflow is the rare edge, not the norm.
-
-        The frontier descent enumerates the leaves with n_probes=k — exact
-        for the budgeted admission, because every admitted leaf contributes
-        ≥ 1 member, so the admitted set is always within the k best-ordered
-        leaves, as long as the frontier's beam cap (4·n_probes) never binds
-        after the settled bound activates (the documented guard against
-        adversarial margin landscapes). Parity with the planned search is
-        gated in test_lsh_backup.py."""
-        sizes = leaves.groupBy("tree_id", "path").agg(F.count(F.lit(1)).alias("leaf_n"))
-        order = [F.asc("dev")] if probe_mode == "dfs" else [F.asc("cost"), F.asc("dev")]
-        wdev = W.partitionBy("query_id", "tree_id").orderBy(*order)
-        ordered = self._leaf_order_frontier(
-            under, leaves, probe_mode, n_probes=k, keep_keys=True
-        )
-        adm = (
-            ordered
-            .join(sizes, ["tree_id", "path"])
-            .withColumn(
-                "cum_before",
-                F.coalesce(
-                    F.sum("leaf_n").over(wdev.rowsBetween(W.unboundedPreceding, -1)),
-                    F.lit(0),
-                ),
-            )
-            .filter(F.col("cum_before") < k)
-            .withColumn("cap", F.lit(k) - F.col("cum_before"))
-            .select("query_id", "tree_id", "path", "cap")
-        )
-        wleaf = W.partitionBy("query_id", "tree_id", "path").orderBy(
-            F.asc("_d"), F.asc("id")
-        )
-        return (
-            # broadcast: `under` is the underfilled (query, tree) subset —
-            # rare by design (max_node_size ≥ k fills from the main leaf) —
-            # and the hint preserves the saved store's dynamic partition
-            # pruning
-            _join_leaves(
-                F.broadcast(adm.join(under, ["query_id", "tree_id"])),
-                leaves,
-                self._pp_len(),
-            )
-            .withColumn("_d", V.sq_euclidean(F.col("q_vec"), F.col("embedding")))
-            .withColumn("_lr", F.row_number().over(wleaf))
-            .filter(F.col("_lr") <= F.col("cap"))
-            .select("query_id", "q_vec", "id", "embedding")
-        )
 
     # ---------------- maintenance ----------------
 
@@ -1599,11 +1171,18 @@ class LSHForestIndex:
     # ---------------- persistence ----------------
 
     def save(self, path: str, pp_len: int | None = None) -> None:
-        """Persist the index. Leaves are written partitioned by
+        """Persist the index: the leaves, the hyperplanes (one unpartitioned
+        table, read back only to rebuild a pack), the plane pack in
+        ``pack/`` and ``manifest.json``. Leaves are written partitioned by
         (tree_id, _pp) — the path's first ``pp_len`` bits — so a loaded
-        index's serving joins dynamic-partition-prune to the probed leaf
-        buckets instead of scanning every tree's full leaf table (the IVF
+        index's serving scan prunes to the probed leaf buckets instead of
+        scanning every tree's full leaf table (the IVF
         partitionBy(cluster_id) discipline, ivfflat.py:save).
+
+        The pack is copied from the instance's own pack files when it has
+        them (no collect), else written by :func:`_write_pack`; each file is
+        published by ``os.replace``, so an instance that maps the store's
+        old pack (this one, saving over its own store) keeps serving it.
 
         ``pp_len`` dials bucket granularity: 2^pp_len buckets per tree.
         Wider prefixes prune more partitions per probe batch (the 1M×300
@@ -1639,19 +1218,11 @@ class LSHForestIndex:
             w = int(pp_len)
         if not 1 <= w <= 16:
             raise ValueError(f"pp_len must be in [1, 16], got {w}")
-        # hyperplanes partition by LEVEL (path length): both descent loops
-        # (assign_paths, _leaf_order_frontier) join one level per round, so
-        # a loaded index's per-level plane lookups partition-prune to one
-        # directory instead of scanning every level's (coeffs-heavy) rows
-        planes = self.hyperplanes
-        if "_lvl" not in planes.columns:
-            planes = planes.withColumn("_lvl", F.length("path").cast("int"))
-
-        # The two partitioned writes are independent — overlap their jobs
+        # The two writes and the pack are independent — overlap their jobs
         # from driver threads (guide §2.6, r15) so the small planes write
-        # back-fills the leaves write's task tail instead of running after
-        # it. Job descriptions are thread-local; both writes read
-        # checkpointed/derived frames, no shared lineage to race on.
+        # and the pack back-fill the leaves write's task tail instead of
+        # running after it. Job descriptions are thread-local; all three
+        # read checkpointed/derived frames, no shared lineage to race on.
         # (Leaves always re-derive _pp at the target width — a file-loaded
         # store's existing _pp column may carry a different width.)
         from concurrent.futures import ThreadPoolExecutor
@@ -1664,26 +1235,27 @@ class LSHForestIndex:
             ).parquet(f"{path}/leaves")
 
         def _write_planes() -> None:
-            planes.write.mode("overwrite").partitionBy("_lvl").parquet(
-                f"{path}/hyperplanes"
-            )
+            # a store saved partitioned by _lvl loads with that column
+            self.hyperplanes.drop("_lvl").hint("rebalance").write.mode(
+                "overwrite"
+            ).parquet(f"{path}/hyperplanes")
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(_write_leaves), pool.submit(_write_planes)]
+        def _write_pack_files() -> None:
+            # the pack is derived data; persisting it spares cold
+            # file-loaded serving the Arrow collect of the coeff table
+            # (measured 19-87 s at the 1M forest, BASELINE §r12)
+            src = self.__dict__.get("_pack_dir")
+            if src is None:
+                _write_pack(self.leaves, self.hyperplanes, f"{path}/pack")
+            else:
+                _copy_pack(src, f"{path}/pack")
+
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futs = [pool.submit(f) for f in (_write_leaves, _write_planes, _write_pack_files)]
             for f in futs:
                 f.result()
-        os.makedirs(path, exist_ok=True)
-        # Persist the hyperplane pack (derived data, bit-reconstructable):
-        # cold file-loaded serving otherwise pays the Arrow re-collect of
-        # the whole coeff table per session — measured 19-87 s at the 1M
-        # forest (BASELINE §r12) vs a local numpy read. Written only when
-        # the trie is inside the pack contract; absent file = loaded
-        # stores rebuild (or join-descend) exactly as before.
-        arrs = self._pack_arrays()
-        if arrs is not None:
-            np.savez(os.path.join(path, "pack.npz"), **arrs)
-        elif os.path.exists(os.path.join(path, "pack.npz")):
-            os.remove(os.path.join(path, "pack.npz"))  # stale from overwrite
+        if os.path.exists(f"{path}/pack.npz"):
+            os.remove(f"{path}/pack.npz")  # an older store's pack
         with open(f"{path}/manifest.json", "w") as f:
             json.dump(
                 {**self.params, "pp_len": w, "format_version": LSH_FORMAT_VERSION},
@@ -1721,6 +1293,12 @@ class LSHForestIndex:
         version = LSHForestIndex._saved_format_version(
             path, params.pop("format_version", None)
         )
+        if int(params["depth"]) > 62:
+            raise ValueError(
+                f"LSH index at {path!r} has depth {params['depth']}; node keys "
+                "are int64, so this build serves tries of at most 62 levels — "
+                "rebuild it with max_depth <= 62"
+            )
         if version != LSH_FORMAT_VERSION:
             raise ValueError(
                 f"LSH index at {path!r} has on-disk format_version {version}, "
@@ -1738,11 +1316,11 @@ class LSHForestIndex:
             _read_planes(spark, path),
             params,
         )
-        pack_path = os.path.join(path, "pack.npz")
-        if os.path.exists(pack_path):
-            # persisted plane pack: _planes_pack() reads it instead of
-            # re-collecting the coeff table (cold-start fix, VERDICT r13)
-            idx._pack_path = pack_path
+        if _has_pack(f"{path}/pack"):
+            # _planes_pack() maps the persisted pack instead of collecting
+            # the coeff table; an older store (a pack.npz, or none) has its
+            # pack rebuilt by the writer on first use
+            idx._pack_dir = f"{path}/pack"
         return idx
 
     @staticmethod

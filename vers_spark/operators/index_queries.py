@@ -530,10 +530,9 @@ def lsh_multiprobe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver plans the first 2 leaves of each (query, tree) pair's
     margin-ordered walk of the plane pack and one pass reads them — the
     same call as lsh_search_multiprobe, so the two rows must agree. The
-    branch-and-bound frontier descent (lsh._leaf_order_frontier) serves
-    only tries the pack cannot hold, and is pytest-gated row-identical to
-    the planned walk
-    (test_lsh_backup.test_multiprobe_frontier_parity_with_full)."""
+    name is kept from the retired branch-and-bound frontier engine; the
+    planned walk is pytest-gated against a local replay of the visit
+    (test_lsh_backup.test_multiprobe_margin_parity_with_local_replay)."""
     idx = _lsh(spark, sf_dir, trees=2, max_node=8)
     emb = load_table(spark, sf_dir, "embeddings")
     return idx.search_multiprobe(
@@ -544,8 +543,8 @@ def lsh_multiprobe_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lsh_saved(spark: SparkSession, sf_dir: str, trees: int, max_node: int) -> LSHForestIndex:
     """Build → save → LOAD an LSH store, memoized per config: every serve
     afterwards goes through the FILE-LOADED path — the (tree_id, _pp)-
-    partitioned leaf scan with dynamic partition pruning and the persisted
-    pack.npz plane pack (lsh.py:save/load) — the deployed train-once/
+    partitioned leaf scan with static partition pruning and the persisted,
+    memory-mapped plane pack in pack/ (lsh.py:save/load) — the deployed train-once/
     serve-many tier, which until r14 was exercised only by plan gates and
     1M tools, never by a driver row or bench line (VERDICT r13 missing #2).
     Only the store PATH is memoized; the load runs on every call."""

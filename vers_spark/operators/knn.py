@@ -56,8 +56,7 @@ from vers_spark.functions import vector_np as VN
 
 # Queries per exact_knn call up to which the query side is broadcast. Above
 # it the join is left unhinted: a caller-supplied frame must not be pulled
-# through driver memory by a forced broadcast. Same value as the index
-# serving paths' cap (lsh._BROADCAST_QUERY_CAP).
+# through driver memory by a forced broadcast.
 _BROADCAST_QUERY_CAP = 65536
 
 # exact_knn_blocked's BLAS shortlist per query and Arrow batch, in multiples
