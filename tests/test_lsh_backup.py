@@ -198,27 +198,9 @@ def test_multiprobe_margin_parity_with_local_replay(spark, emb, small_forest):
             )
 
 
-def test_search_parity_with_replay_across_inputs(spark, emb, small_forest, tmp_path):
-    """The planned search equals the local replay on every input shape the
-    planner treats apart: a FILE-LOADED store (literal _pp pruning plus the
-    planned-pair filter, the mapped pack), ``allowed_ids`` (the replay runs
-    over the filtered leaves: an emptied leaf neither contributes nor ends
-    the walk), ``backup_fill=False`` (main leaves only), margin-order fill,
-    and depth-0 forests, which pack as an empty trie whose only leaf is the
-    root — in session and file-loaded."""
-    k = 10
-    queries = emb.filter(F.col("vec_id") < 15)
-    qrows = _qrows(queries)
-    keep = emb.filter(F.col("label") % 3 == 0).select("vec_id")
-    keep_ids = {int(r["vec_id"]) for r in keep.collect()}
-    small_forest.save(str(tmp_path / "small"))
-    loaded = LSHForestIndex.load(spark, str(tmp_path / "small"))
-    deg = LSHForestIndex.build(emb, num_trees=1, max_node_size=10**9)
-    assert deg.params["depth"] == 0
-    deg.save(str(tmp_path / "deg"))
-    deg_loaded = LSHForestIndex.load(spark, str(tmp_path / "deg"))
-    trees, filtered = _local_index(small_forest), _local_index(small_forest, keep_ids)
-    deg_trees, deg_filtered = _local_index(deg), _local_index(deg, keep_ids)
+def _replay_fills(k):
+    """The per-tree candidate rules of the local replay: budgeted DFS fill,
+    main leaf only, margin-order fill and a 2-probe margin visit."""
 
     def dfs(planes, leaves, qv):
         return _reference_tree_result(planes, leaves, qv, k)
@@ -232,9 +214,58 @@ def test_search_parity_with_replay_across_inputs(spark, emb, small_forest, tmp_p
     def probes2(planes, leaves, qv):
         return _multiprobe_tree_cands(planes, leaves, qv, 2, "margin")
 
+    return dfs, main_only, margin, probes2
+
+
+def test_backup_fill_frontier_parity(spark, emb, small_forest):
+    """The backup fill of the in-session forced-fill forest equals the
+    local replay in both probe orders (the DFS recursion and the
+    margin-order fill over the best-ordered leaves), with and without
+    ``allowed_ids``: the replay runs over the filtered leaves, so an
+    emptied leaf neither contributes nor ends the walk. Every query gets
+    an answer."""
+    k = 10
+    queries = emb.filter(F.col("vec_id") < 15)
+    qrows = _qrows(queries)
+    keep = emb.filter(F.col("label") % 3 == 0).select("vec_id")
+    keep_ids = {int(r["vec_id"]) for r in keep.collect()}
+    trees, filtered = _local_index(small_forest), _local_index(small_forest, keep_ids)
+    dfs, _, margin, _ = _replay_fills(k)
+    for allowed, tr in ((None, trees), (keep, filtered)):
+        for mode, tree_cands in (("dfs", dfs), ("margin", margin)):
+            got = small_forest.search(
+                queries, k=k, backup_fill=True, probe_mode=mode, allowed_ids=allowed
+            )
+            label = f"{mode} allowed_ids={allowed is not None}"
+            assert got.select("query_id").distinct().count() == 15, label
+            _assert_replay(got, qrows, tr, k, tree_cands, label)
+
+
+def test_planned_search_equals_declarative_plan(spark, emb, small_forest, tmp_path):
+    """Beyond the in-session forest above, the planned search equals the
+    local replay (the reference now that the declarative plan is gone) on
+    the other inputs the planner treats apart: a FILE-LOADED store (literal
+    _pp pruning plus the planned-pair filter, the mapped pack), with
+    ``allowed_ids`` and margin order, ``backup_fill=False`` (main leaves
+    only), file-loaded multiprobe, and depth-0 forests, which pack as an
+    empty trie whose only leaf is the root — in session and file-loaded."""
+    k = 10
+    queries = emb.filter(F.col("vec_id") < 15)
+    qrows = _qrows(queries)
+    keep = emb.filter(F.col("label") % 3 == 0).select("vec_id")
+    keep_ids = {int(r["vec_id"]) for r in keep.collect()}
+    small_forest.save(str(tmp_path / "small"))
+    loaded = LSHForestIndex.load(spark, str(tmp_path / "small"))
+    deg = LSHForestIndex.build(emb, num_trees=1, max_node_size=10**9)
+    assert deg.params["depth"] == 0
+    deg.save(str(tmp_path / "deg"))
+    deg_loaded = LSHForestIndex.load(spark, str(tmp_path / "deg"))
+    trees, filtered = _local_index(small_forest), _local_index(small_forest, keep_ids)
+    deg_trees, deg_filtered = _local_index(deg), _local_index(deg, keep_ids)
+    dfs, main_only, margin, probes2 = _replay_fills(k)
+
     cases = [
         ("file-loaded", lambda: loaded.search(queries, k=k), trees, dfs),
-        ("allowed_ids", lambda: small_forest.search(queries, k=k, allowed_ids=keep), filtered, dfs),
         (
             "file-loaded allowed_ids margin",
             lambda: loaded.search(queries, k=k, allowed_ids=keep, probe_mode="margin"),
@@ -248,7 +279,6 @@ def test_search_parity_with_replay_across_inputs(spark, emb, small_forest, tmp_p
             filtered,
             main_only,
         ),
-        ("margin fill", lambda: small_forest.search(queries, k=k, probe_mode="margin"), trees, margin),
         ("file-loaded multiprobe", lambda: loaded.search_multiprobe(queries, k=k), trees, probes2),
         ("depth 0", lambda: deg.search(queries, k=k), deg_trees, dfs),
         (
